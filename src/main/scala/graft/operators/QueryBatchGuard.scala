@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
-/** The operator-face twin of the routed plans' `RelationQueryGuard`
-  * ([[graft.plans]]): the ANN operator entry points ([[IvfPq
+/** The operator-face twin of the routed plans' query-side cap
+  * ([[graft.plans.AnnTopKExec]]): the ANN operator entry points ([[IvfPq
   * .knnOverIndex]], [[Sq8Ann.searchEncoded]]) collect their query
   * batch driver-side to resolve probes / broadcast the query block —
   * bounded BY DESIGN (the blocked drivers slice to ≤ blockSize ids;

@@ -4,20 +4,21 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet, Descending, ExprId, Expression, LessThan, LessThanOrEqual, Literal, NamedExpression, RowNumber, SortOrder, UnsafeProjection, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet, Descending, ExprId, Expression, GenericInternalRow, LessThan, LessThanOrEqual, Literal, NamedExpression, RowNumber, SortDirection, SortOrder, UnsafeProjection, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
+import org.apache.spark.sql.functions.{broadcast, col, expr, lit, row_number, typedlit}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 
 import graft.functions.expressions.{VecChamferExpr, VecCosineExpr, VecDotExpr, VecL2SqExpr, VecMaxSimExpr}
-import graft.index.{BeamSearch, CsrGraph, Metrics, VectorStore, VisitedSet}
+import graft.index.{BeamQueue, BeamSearch, CsrGraph, Metrics, VectorStore, VisitedSet}
 
 /** SQL auto-routing of exhaustive top-k similarity queries to the ANN
   * index — the deferred `SparkStrategy` tier of SURVEY §7.4 / §2.7:
@@ -30,17 +31,18 @@ import graft.index.{BeamSearch, CsrGraph, Metrics, VectorStore, VisitedSet}
   *
   * [[AnnTopKRule]] (an optimizer `Rule[LogicalPlan]`) pattern-matches the
   * `GlobalLimit(LocalLimit(Sort(desc score, Project(id, vec_dot AS
-  * score))))` shape over a corpus registered in [[AnnIndexRegistry]] and
-  * replaces the whole subtree with a logical [[AnnSearchNode]];
-  * [[AnnStrategy]] plans it as [[AnnSearchExec]], which runs the G8 beam
-  * search over the broadcast RoarGraph and then scores the candidates
-  * EXACTLY (double-promoted dot over the raw vectors) — so returned
-  * scores equal the original expression's values and only the candidate
-  * SET is approximate. OPT-IN via `spark.graft.ann.rewrite` (default
-  * off: silently trading exact for approximate results is never a
-  * default).
+  * score))))` shape (and its filtered, set-scorer and query-relation
+  * variants) over a corpus registered in [[AnnIndexRegistry]] and
+  * replaces the whole subtree with a logical [[AnnTopKNode]];
+  * [[AnnStrategy]] plans it as [[AnnTopKExec]], which generates
+  * candidates from the registered tier (e.g. the G8 beam search over the
+  * broadcast RoarGraph) and then scores them EXACTLY with the query's
+  * own expression — so returned scores equal the original expression's
+  * values and only the candidate SET is approximate. OPT-IN via
+  * `spark.graft.ann.rewrite` (default off: silently trading exact for
+  * approximate results is never a default).
   */
-object AnnIndexRegistry {
+object AnnIndexRegistry extends org.apache.spark.internal.Logging {
 
   /** `searchVecs` is the metric-normalized store the graph was built on;
     * `rawVecs` keeps the unnormalized vectors for exact rescoring. */
@@ -101,18 +103,33 @@ object AnnIndexRegistry {
     case _ => None
   }
 
+  /** The fingerprint every registration keys on; only a bare scan has
+    * one. */
+  private def corpusFingerprint(corpus: DataFrame): String =
+    scanFingerprint(corpus.queryExecution.optimizedPlan).getOrElse(
+      sys.error("ANN registration requires a bare scan corpus (no " +
+        "Filter/Join/expression-Project above the relation): " +
+        corpus.queryExecution.optimizedPlan.nodeName))
+
+  /** `spark.graft.ann.relation.exact`: the relation routes' saturating
+    * certificate mode. */
+  private[plans] def relationExact(s: SparkSession): Boolean =
+    s.conf.getOption("spark.graft.ann.relation.exact").exists(_.toBoolean)
+
+  /** A query batch as the (`q_id`, `q_vec`) frame the generators read. */
+  private def queryFrame(s: SparkSession,
+                         qs: Seq[(Long, Array[Float])]): DataFrame = {
+    import s.implicits._
+    qs.map { case (id, v) => (id, v.toSeq) }.toDF("q_id", "q_vec")
+  }
+
   /** Register an index over `corpus` (a bare scan) exposing
     * (`idCol`, `vecCol`). The rule only routes queries whose Project sits
     * DIRECTLY on this same relation — same-named columns on another table,
     * or a Filter/Sample between the Project and the scan, never match. */
-  def register(corpus: org.apache.spark.sql.DataFrame, idCol: String,
-               vecCol: String, entry: Entry): Unit = {
-    val fp = scanFingerprint(corpus.queryExecution.optimizedPlan).getOrElse(
-      sys.error("ANN registration requires a bare scan corpus (no " +
-        "Filter/Join/expression-Project above the relation): " +
-        corpus.queryExecution.optimizedPlan.nodeName))
-    entries.put((idCol, vecCol, entry.metricName), (fp, entry))
-  }
+  def register(corpus: DataFrame, idCol: String, vecCol: String,
+               entry: Entry): Unit =
+    entries.put((idCol, vecCol, entry.metricName), (corpusFingerprint(corpus), entry))
 
   def lookup(idCol: String, vecCol: String, kind: String): Option[Entry] =
     routeMetrics(kind).iterator
@@ -162,7 +179,7 @@ object AnnIndexRegistry {
         * coarse scan) and should override. */
       costHint: Double = 1.0,
       /** Optional BATCHED generator serving the single-vector
-        * query-RELATION route (`SvJoinTopKNode`): candidates for EVERY
+        * query-RELATION route (`SvJoinTopK`): candidates for EVERY
         * collected query vector in ONE distributed job — (q_id, d_id)
         * rows, at least the k best per query (more is fine, the
         * rescore bounds the answer). null (the default) = this tier
@@ -321,14 +338,10 @@ object AnnIndexRegistry {
     * join is shared by every route. */
   def registerTier(corpus: org.apache.spark.sql.DataFrame, idCol: String,
                    vecCol: String, entry: CandidateTierEntry): Unit = {
-    val fp = scanFingerprint(corpus.queryExecution.optimizedPlan).getOrElse(
-      sys.error("ANN registration requires a bare scan corpus (no " +
-        "Filter/Join/expression-Project above the relation): " +
-        corpus.queryExecution.optimizedPlan.nodeName))
+    val fp = corpusFingerprint(corpus)
     val key = (idCol, vecCol, entry.metricName)
     def saturating(s: SparkSession): Boolean =
-      s.conf.getOption("spark.graft.ann.relation.exact")
-        .exists(_.toBoolean) ||
+      relationExact(s) ||
       s.conf.getOption("spark.graft.ann.filtered.exact")
         .exists(_.toBoolean)
     def timed(s: SparkSession, nQueries: Int)(
@@ -454,12 +467,10 @@ object AnnIndexRegistry {
     def scaledFetch(s: SparkSession, k: Int, path: String): Int =
       BudgetPolicy.scaledL(s, math.max(entry.nCand, 4 * k),
         regRows.toDouble, IvfPq.indexRows(s, path).toDouble)
-    def liveData(s: SparkSession) = {
-      import org.apache.spark.sql.functions.{col, expr}
+    def liveData(s: SparkSession) =
       (if (refresh != null) refresh() else entry.data)
         .select(col(entry.dataIdCol).as("d_id"),
           col(entry.dataVecCol).as("d_vec"))
-    }
     registerTier(corpus, idCol, vecCol, CandidateTierEntry(
       name, entry.data, entry.dataIdCol, entry.dataVecCol,
       entry.metricName,
@@ -471,17 +482,12 @@ object AnnIndexRegistry {
           scaledFetch(s, k, path))
       },
       candidatesBatch = (s, qs, k) => {
-        import s.implicits._
-        import org.apache.spark.sql.functions.{col, expr}
-        val q = qs.map { case (id, v) => (id, v.toSeq) }
-          .toDF("q_id", "q_vec")
         // `relation.exact=true` = the saturating certificate regime:
         // probe EVERY cell and keep every row — a generator bounded by
         // nProbe can never claim corpus saturation otherwise (the same
         // reachability-vs-saturation distinction the filtered route
         // enforces); g8_sql_ivfpq_saturated hash-proves this mode
-        val exact = s.conf.getOption("spark.graft.ann.relation.exact")
-          .getOrElse("false").toBoolean
+        val exact = relationExact(s)
         val data = liveData(s)
         val path = livePath(s)
         val (nProbe, fetch) =
@@ -493,7 +499,7 @@ object AnnIndexRegistry {
               IvfPq.indexRows(s, path)), Int.MaxValue.toLong).toInt
             (entry.centroids.length, n)
           } else (entry.nProbe, scaledFetch(s, k, path))
-        graft.operators.IvfPq.knnOverIndexBlocked(s, q, path,
+        graft.operators.IvfPq.knnOverIndexBlocked(s, queryFrame(s, qs), path,
             data, entry.centroids, entry.codebooks,
             k = fetch, nProbe = nProbe, nCand = fetch)
           .select(col("q_id"), col("d_id"))
@@ -578,25 +584,15 @@ object AnnIndexRegistry {
     // beam (l = 2·rows, all hits returned), the same certificate
     // regime as the graph tier's l = 2n (g8_sql_sharded_saturated
     // hash-proves it end-to-end).
-    val warnedNoRefresh = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val warnNoRefresh =
+      noRefreshWarning("sharded", idCol, vecCol, "registerSharded")
     def liveState(s: SparkSession, k: Int)
         : (graft.index.ShardedIndexRef, Int, Int) = {
       val live = resolve(s)
-      // growth without a refresh thunk is HALF a contract: the index
-      // serves the delta candidates but the rescore join against the
-      // registration-snapshot corpus drops their rows — say so loudly
-      // once instead of letting delta docs vanish silently
-      if (live.nDeltas > ref.nDeltas && refresh == null &&
-          warnedNoRefresh.compareAndSet(false, true))
-        System.err.println(
-          s"graft WARN: sharded registration ($idCol,$vecCol) discovered " +
-          s"${live.nDeltas - ref.nDeltas} post-registration delta(s) but " +
-          "has no refresh thunk — delta rows will be searched but " +
-          "dropped by the rescore join; pass refresh= to registerSharded")
+      if (live.nDeltas > ref.nDeltas && refresh == null)
+        warnNoRefresh(live.nDeltas - ref.nDeltas)
       val rows = ShardedIndex.totalRowsCached(s, live)
-      val exact = s.conf.getOption("spark.graft.ann.relation.exact")
-        .getOrElse("false").toBoolean
-      if (exact) {
+      if (relationExact(s)) {
         val cap = math.min(rows, (Int.MaxValue / 2).toLong).toInt.max(1)
         (live, 2 * cap, cap)
       } else {
@@ -606,33 +602,21 @@ object AnnIndexRegistry {
         (live, math.max(effL, 4 * k), 4 * k)
       }
     }
+    // the relation route's batch form: ONE per-shard search job for
+    // every collected query vector; a literal query is its one-row case
+    def search(s: SparkSession, qs: Seq[(Long, Array[Float])], k: Int) = {
+      val (live, l, kc) = liveState(s, k)
+      ShardedIndex.searchSingleDf(s, queryFrame(s, qs), live, l = l, k = kc)
+        .select(col("q_id"), col("d_id"))
+    }
     registerTier(corpus, idCol, vecCol, CandidateTierEntry(
       name, corpus, idCol, vecCol, metricName, dim,
-      (s, qv, k) => {
-        import s.implicits._
-        import org.apache.spark.sql.functions.{col, expr}
-        val q = Seq((0L, qv.toSeq)).toDF("q_id", "q_vec")
-        val (live, l, kc) = liveState(s, k)
-        graft.index.ShardedIndex
-          .searchSingleDf(s, q, live, l = l, k = kc)
-          .select(col("d_id"))
-      },
+      (s, qv, k) => search(s, Seq((0L, qv)), k).select(col("d_id")),
       // beam search touches O(searchL · degree) vectors per shard — a
       // tiny read fraction once shards are resident; the honest cost is
       // shard residency churn, approximated by a small constant
       costHint = 0.02,
-      // the relation route's batch form: ONE per-shard search job for
-      // every collected query vector
-      candidatesBatch = (s, qs, k) => {
-        import s.implicits._
-        import org.apache.spark.sql.functions.{col, expr}
-        val q = qs.map { case (id, v) => (id, v.toSeq) }
-          .toDF("q_id", "q_vec")
-        val (live, l, kc) = liveState(s, k)
-        graft.index.ShardedIndex
-          .searchSingleDf(s, q, live, l = l, k = kc)
-          .select(col("q_id"), col("d_id"))
-      },
+      candidatesBatch = search,
       dataRefresh = refresh,
       certificateOnly = name != "sharded",
       costSidecar = sidecar))
@@ -706,31 +690,35 @@ object AnnIndexRegistry {
       else BudgetPolicy.scaledL(s, base, regRows.toDouble,
         ParquetMeta.rowsCached(s, s"${livePath(s)}/codes").toDouble)
     }
+    def coarse(s: SparkSession, qs: Seq[(Long, Array[Float])], k: Int) =
+      graft.operators.Sq8Ann.coarseCandidates(queryFrame(s, qs),
+          liveEncoded(s), bounds, fetch(s, k), excludeSelf = false,
+          byL2 = metricName == "l2")
+        .select(col("q_id"), col("d_id"))
     registerTier(corpus, idCol, vecCol, CandidateTierEntry(
       "sq8", corpus, idCol, vecCol, metricName, bounds.dim,
-      (s, qv, k) => {
-        import s.implicits._
-        import org.apache.spark.sql.functions.{col, expr}
-        val q = Seq((0L, qv.toSeq)).toDF("q_id", "q_vec")
-        graft.operators.Sq8Ann.coarseCandidates(q, liveEncoded(s), bounds,
-          fetch(s, k), excludeSelf = false,
-          byL2 = metricName == "l2")
-          .select(col("d_id"))
-      },
-      candidatesBatch = (s, qs, k) => {
-        import s.implicits._
-        import org.apache.spark.sql.functions.{col, expr}
-        val q = qs.map { case (id, v) => (id, v.toSeq) }
-          .toDF("q_id", "q_vec")
-        graft.operators.Sq8Ann.coarseCandidates(q, liveEncoded(s), bounds,
-          fetch(s, k), excludeSelf = false,
-          byL2 = metricName == "l2")
-          .select(col("q_id"), col("d_id"))
-      },
+      (s, qv, k) => coarse(s, Seq((0L, qv)), k).select(col("d_id")),
+      candidatesBatch = coarse,
       // full coarse scan over byte codes = 1/4 of the float bytes
       costHint = 0.25,
       dataRefresh = refresh,
       costSidecar = sidecar))
+  }
+
+  /** Growth without a refresh thunk is HALF a contract: the index serves
+    * the post-registration delta candidates, but the rescore join against
+    * the registration-snapshot corpus drops their rows. The returned
+    * check says so loudly, once per registration, instead of letting
+    * delta rows vanish silently. */
+  private def noRefreshWarning(face: String, idCol: String, vecCol: String,
+                               registerFn: String): Int => Unit = {
+    val warned = new java.util.concurrent.atomic.AtomicBoolean(false)
+    newDeltas =>
+      if (warned.compareAndSet(false, true))
+        logWarning(s"$face registration ($idCol,$vecCol) discovered " +
+          s"$newDeltas post-registration delta(s) but has no refresh " +
+          "thunk — delta rows will be searched but dropped by the " +
+          s"rescore join; pass refresh= to $registerFn")
   }
 
   def lookupTier(idCol: String, vecCol: String, kind: String,
@@ -782,9 +770,9 @@ object AnnIndexRegistry {
     * (tests/test_search_multivector_rerank.cpp:276-339) made reachable
     * from SQL. `data` is the set-level relation (one row per set:
     * id + `array<array<float>>` members, sub-vectors in q_sub order);
-    * `candidates` runs the G9 per-sub-vector search and returns AT
-    * LEAST the k best candidate `dset_id`s; the route rescores that
-    * bounded set with the query's OWN chamfer expression against
+    * `candidatesBatch` runs the G9 per-sub-vector search and returns AT
+    * LEAST the k best candidate `dset_id`s per query set; the route
+    * rescores that bounded set with the query's OWN chamfer expression against
     * `data`, so the registered generator controls RECALL only — scores
     * equal the exhaustive plan's bit-for-bit. `dim` = sub-vector
     * dimension (gates literal shape); `name` surfaces as the node's
@@ -792,16 +780,13 @@ object AnnIndexRegistry {
   case class MvEntry(
       name: String, data: org.apache.spark.sql.DataFrame,
       dataIdCol: String, dataVecCol: String, dim: Int,
-      /** (spark, querySubVectors, k) → DataFrame with a `dset_id`
-        * column. Driver-side at execute time; must launch distributed
-        * work, never collect the corpus. */
-      candidates: (SparkSession, Array[Array[Float]], Int) => org.apache.spark.sql.DataFrame,
-      /** BATCHED form serving the query-RELATION route: candidates for
-        * EVERY query set in ONE distributed job. Input is the bounded
+      /** Candidates for EVERY query set in ONE distributed job (a
+        * literal query set is the one-set case). Input is the bounded
         * collected query side (id, sub-vectors in sub order); output a
         * DataFrame with (`qset_id`, `dset_id`) — at least the k best
         * candidate sets per query set (more is fine, the rescore
-        * bounds the answer). */
+        * bounds the answer). Driver-side at execute time; must launch
+        * distributed work, never collect the corpus. */
       candidatesBatch: (SparkSession, Seq[(Long, Array[Array[Float]])], Int) => org.apache.spark.sql.DataFrame,
       /** Optional FRESH re-read of the set corpus for the rescoring
         * join — same contract as [[CandidateTierEntry.dataRefresh]]:
@@ -822,13 +807,25 @@ object AnnIndexRegistry {
 
   /** Register the multivector tier over `corpusSets` (a bare scan of
     * the set-level relation) — same fingerprint proof as [[register]]. */
-  def registerMv(corpusSets: org.apache.spark.sql.DataFrame, idCol: String,
-                 vecCol: String, entry: MvEntry): Unit = {
-    val fp = scanFingerprint(corpusSets.queryExecution.optimizedPlan).getOrElse(
-      sys.error("ANN registration requires a bare scan corpus (no " +
-        "Filter/Join/expression-Project above the relation): " +
-        corpusSets.queryExecution.optimizedPlan.nodeName))
-    mvEntries.put((idCol, vecCol, fp), entry)
+  def registerMv(corpusSets: DataFrame, idCol: String, vecCol: String,
+                 entry: MvEntry): Unit =
+    mvEntries.put((idCol, vecCol, corpusFingerprint(corpusSets)), entry)
+
+  /** Both multivector generators: ONE adaptive multivector search job
+    * for every query set in the batch — the relation route's whole point
+    * (a literal query set is its one-set case). `search(subVectors,
+    * minPq, maxPq)` runs the engine's searchMultiDf at `budget`;
+    * candidate sets = hit sub-vector ids / c. */
+  private def mvBatch(s: SparkSession, qsets: Seq[(Long, Array[Array[Float]])],
+                      c: Int, budget: Int)(
+      search: (DataFrame, Int, Int) => DataFrame): DataFrame = {
+    import s.implicits._
+    val qdf = qsets.flatMap { case (qid, vs) =>
+      vs.zipWithIndex.map { case (v, i) => (qid, i, v.toSeq) }
+    }.toDF("qset_id", "q_sub", "q_vec")
+    search(qdf, math.max(10, budget / math.max(c, 1)), math.max(200, budget * 2))
+      .select(col("qset_id"), expr(s"d_id div $c").as("dset_id"))
+      .distinct()
   }
 
   /** [[registerMv]] with the G9 broadcast-RoarGraph generator: the
@@ -840,33 +837,12 @@ object AnnIndexRegistry {
                      graphB: Broadcast[CsrGraph],
                      vecsB: Broadcast[VectorStore],
                      metricName: String, c: Int, dim: Int,
-                     budget: Int = 120, name: String = "mv_roar"): Unit = {
-    // ONE distributed searchMultiDf job serves every query set in the
-    // batch — the relation route's whole point (the literal route is
-    // the single-set special case of the same generator)
-    def batch(s: SparkSession, qsets: Seq[(Long, Array[Array[Float]])],
-              k: Int): org.apache.spark.sql.DataFrame = {
-      import s.implicits._
-      import org.apache.spark.sql.functions.{col, expr}
-      val qdf = qsets.flatMap { case (qid, vs) =>
-        vs.zipWithIndex.map { case (v, i) => (qid, i, v.toSeq) }
-      }.toDF("qset_id", "q_sub", "q_vec")
-      BeamSearch.searchMultiDf(s, qdf, graphB, vecsB, metricName,
-          minPq = math.max(10, budget / math.max(c, 1)),
-          maxPq = math.max(200, budget * 2), budget = budget,
-          adaptive = true)
-        .select(col("qset_id"),
-          expr(s"d_id div $c").as("dset_id"))
-        .distinct()
-    }
+                     budget: Int = 120, name: String = "mv_roar"): Unit =
     registerMv(corpusSets, idCol, vecCol, MvEntry(
       name, corpusSets, idCol, vecCol, dim,
-      (s, qset, k) => {
-        import org.apache.spark.sql.functions.{col, expr}
-        batch(s, Seq((0L, qset)), k).select(col("dset_id"))
-      },
-      batch))
-  }
+      (s, qsets, _) => mvBatch(s, qsets, c, budget)((qdf, minPq, maxPq) =>
+        BeamSearch.searchMultiDf(s, qdf, graphB, vecsB, metricName,
+          minPq = minPq, maxPq = maxPq, budget = budget, adaptive = true))))
 
   /** [[registerMv]] with the persisted SHARDED graph tier as the
     * generator — the SQL flagship past the broadcast ceiling: the same
@@ -891,42 +867,22 @@ object AnnIndexRegistry {
     // recall survives a month of delta-ingest without re-registration
     val regPerShard = ShardedIndex.totalRowsCached(corpusSets.sparkSession,
       ref).toDouble / math.max(ref.nShards + ref.nDeltas, 1)
-    val warnedNoRefresh = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val warnNoRefresh =
+      noRefreshWarning("mv_sharded", idCol, vecCol, "registerMvSharded")
     def batch(s: SparkSession, qsets: Seq[(Long, Array[Array[Float]])],
-              k: Int): org.apache.spark.sql.DataFrame = {
-      import s.implicits._
-      import org.apache.spark.sql.functions.{col, expr}
-      val qdf = qsets.flatMap { case (qid, vs) =>
-        vs.zipWithIndex.map { case (v, i) => (qid, i, v.toSeq) }
-      }.toDF("qset_id", "q_sub", "q_vec")
+              k: Int): DataFrame = {
       val live = ShardedIndex.discover(s, ref)
-      if (live.nDeltas > ref.nDeltas && refresh == null &&
-          warnedNoRefresh.compareAndSet(false, true))
-        System.err.println(
-          s"graft WARN: mv_sharded registration ($idCol,$vecCol) " +
-          s"discovered ${live.nDeltas - ref.nDeltas} post-registration " +
-          "delta(s) but has no refresh thunk — delta sets will be " +
-          "searched but dropped by the rescore join; pass refresh= to " +
-          "registerMvSharded")
+      if (live.nDeltas > ref.nDeltas && refresh == null)
+        warnNoRefresh(live.nDeltas - ref.nDeltas)
       val perShard = ShardedIndex.totalRowsCached(s, live).toDouble /
         math.max(live.nShards + live.nDeltas, 1)
       val effBudget = BudgetPolicy.scaledL(s, budget, regPerShard, perShard)
-      graft.index.ShardedIndex.searchMultiDf(s, qdf, live,
-          minPq = math.max(10, effBudget / math.max(c, 1)),
-          maxPq = math.max(200, effBudget * 2), budget = effBudget,
-          adaptive = true)
-        .select(col("qset_id"),
-          expr(s"d_id div $c").as("dset_id"))
-        .distinct()
+      mvBatch(s, qsets, c, effBudget)((qdf, minPq, maxPq) =>
+        ShardedIndex.searchMultiDf(s, qdf, live, minPq = minPq,
+          maxPq = maxPq, budget = effBudget, adaptive = true))
     }
     registerMv(corpusSets, idCol, vecCol, MvEntry(
-      name, corpusSets, idCol, vecCol, dim,
-      (s, qset, k) => {
-        import org.apache.spark.sql.functions.{col, expr}
-        batch(s, Seq((0L, qset)), k).select(col("dset_id"))
-      },
-      batch,
-      dataRefresh = refresh))
+      name, corpusSets, idCol, vecCol, dim, batch, dataRefresh = refresh))
   }
 
   def lookupMvFor(idCol: String, vecCol: String,
@@ -941,31 +897,6 @@ object AnnIndexRegistry {
   }
 }
 
-/** Logical stand-in for an index-backed top-k search. `kind` = the
-  * routed query spelling: "dot" (graft_vec_dot DESC), "l2"
-  * (graft_vec_l2sq ASC), "cos" (graft_vec_cosine DESC — the most
-  * common similarity spelling). `tier` picks the physical answer:
-  * "graph" = broadcast RoarGraph beam search (one task);
-  * "ivfpq" = partition-pruned distributed probe over the codes-only
-  * index (the corpus-outgrew-the-broadcast-ceiling path).
-  * `fingerprint` pins the corpus relation the rule proved at plan time;
-  * doExecute re-verifies it so a registry re-registration for the same
-  * (idCol, vecCol, metric) over a DIFFERENT relation between planning
-  * and execution fails loudly instead of answering from the wrong
-  * corpus. */
-case class AnnSearchNode(output: Seq[Attribute], idName: String,
-                         vecName: String, queryVec: Array[Float], k: Int,
-                         idFirst: Boolean,
-                         kind: String = "dot",
-                         tier: String = "graph",
-                         fingerprint: String = "",
-                         mvDim: Int = 0,
-                         mvScore: String = "chamfer") extends LeafNode {
-  override def maxRows: Option[Long] = Some(k.toLong)
-  override def computeStats(): Statistics =
-    Statistics(sizeInBytes = k.toLong * 16)
-}
-
 /** Opaque carrier for a `LogicalPlan` fragment inside another node's
   * fields: NOT a `TreeNode`, so Catalyst's child traversal and
   * expression transforms never descend into it — the fragment rides
@@ -977,99 +908,73 @@ case class OpaqueSubplan(plan: LogicalPlan, tag: String) {
   override def toString: String = tag
 }
 
-/** Logical stand-in for the FILTERED top-k search —
+/** Logical stand-in for every routed top-k similarity search. All SQL
+  * spellings run one pipeline — candidate tier → optional escalating
+  * filter → exact rescore with the query's own expression → per-query
+  * top-k — and the node is described by three things:
   *
-  * ```sql
-  * SELECT id, graft_vec_*(vec, <literal>) AS score
-  * FROM corpus WHERE <pred> ORDER BY score {DESC|ASC} LIMIT k
-  * ```
+  *  - the QUERY side, always `child`: any subplan for the rank-window
+  *    spelling over Join(query relation, corpus) — one statement for ANY
+  *    number of queries, the reference harness's real multiplicity (10k
+  *    queries per sweep, `tests/test_search_roargraph.cpp`,
+  *    `tests/test_search_multivector_rerank.cpp:276`) — or a one-row
+  *    `LocalRelation` holding a query literal. `queryId`/`queryVec` pin
+  *    its id and vector (or vector-set) columns by exprId; as
+  *    Expression-typed fields they surface in this node's `references`,
+  *    so no later rule can prune them out from under the exec.
+  *  - the `scorer`: "dot" / "cos" (graft_vec_dot / graft_vec_cosine
+  *    DESC), "l2" (graft_vec_l2sq ASC), "chamfer" / "maxsim" (the set
+  *    scorers, DESC).
+  *  - an optional carried `filter`: the whole `Filter(pred, scan)`
+  *    subtree of a literal query with a WHERE clause — the filtered-ANN
+  *    shape every metadata-constrained retrieval runs (lang = 'en',
+  *    source = ..., id ranges), re-executed by [[AnnTopKExec]].
   *
-  * — the filtered-ANN shape every metadata-constrained retrieval runs
-  * (lang = 'en', source = ..., id ranges). `filtered` carries the whole
-  * `Filter(pred, scan)` subtree opaquely; execution generates an
-  * ESCALATING candidate stream from the routed tier (graph beam /
-  * candidate generator), keeps candidates that pass the predicate (the
-  * carried subplan re-executes with full parquet pushdown, constrained
-  * to the candidate ids), rescores them with the query's OWN expression
-  * and stops as soon as k survivors exist — or the tier saturates, at
-  * which point the answer is EXACT (every corpus row the tier can reach
-  * was considered). `spark.graft.ann.filtered.exact=true` jumps straight
-  * to the saturating fetch (the certificate mode, mirroring
-  * g9_sql_saturated). Before any search, a bounded probe
-  * (`limit(preFilterMax+1).count()` on the pushed-down filtered scan)
-  * detects SELECTIVE predicates: at most
-  * `spark.graft.ann.filtered.preFilterMax` surviving rows (default 2k;
-  * 0 disables) short-circuits to scoring them ALL — exact by
-  * construction and cheaper than beam + escalation, the classic
-  * brute-force-when-selective strategy. Scores always equal the
-  * exhaustive plan's — bit-for-bit — only the candidate SET is
-  * approximate below saturation. */
-case class AnnFilteredTopKNode(output: Seq[Attribute], idName: String,
-                               vecName: String, queryVec: Array[Float],
-                               k: Int, idFirst: Boolean, kind: String,
-                               tier: String, fingerprint: String,
-                               filtered: OpaqueSubplan) extends LeafNode {
-  override def maxRows: Option[Long] = Some(k.toLong)
-  override def computeStats(): Statistics =
-    Statistics(sizeInBytes = k.toLong * 16)
-}
-
-/** Logical stand-in for the query-RELATION flagship route: per-query-set
-  * top-k over Join(query relation, registered set corpus) by chamfer
-  * DESC, one statement for ANY number of query sets — the reference
-  * harness's real multiplicity (10k query sets per sweep,
-  * `tests/test_search_multivector_rerank.cpp:276`). UNARY: the query
-  * side stays in the plan as `child` (any subplan — relation, filter,
-  * aggregate — planned and executed normally, then collected: it is
-  * the bounded side of a top-k search by definition); only the
-  * corpus-scoring join + rank window are replaced. `qsetId`/`qVecId`
-  * pin the child's id and `array<array<float>>` columns by exprId;
-  * `fingerprint` pins the corpus relation proven at plan time. */
-case class MvJoinTopKNode(output: Seq[Attribute], child: LogicalPlan,
-                          qsetAttr: Attribute, qVecAttr: Attribute,
-                          dsetName: String, dVecName: String, k: Int,
-                          tier: String, fingerprint: String, mvDim: Int,
-                          score: String = "chamfer")
+  * `tier` is the physical generator the rule chose ("graph" = the
+  * broadcast RoarGraph; otherwise a registered candidate or multivector
+  * tier's name). `fingerprint` pins the corpus relation the rule proved
+  * at plan time; the exec re-verifies it, so a registry re-registration
+  * for the same (idCol, vecCol, metric) over a DIFFERENT relation between
+  * planning and execution fails loudly instead of answering from the
+  * wrong corpus. `output` is the corpus id and the score of a literal
+  * query, in the user's projection order, or (query id, corpus id,
+  * score) of a relation query. */
+case class AnnTopKNode(output: Seq[Attribute], child: LogicalPlan,
+                       queryId: Attribute, queryVec: Attribute,
+                       idName: String, vecName: String, k: Int,
+                       scorer: String, tier: String, fingerprint: String,
+                       filter: Option[OpaqueSubplan] = None)
     extends UnaryNode {
-  // qsetAttr/qVecAttr are Expression-typed fields, so they surface in
-  // this node's `references` — no later rule can prune the query-side
-  // vec column out from under the exec
-  override protected def withNewChildInternal(c: LogicalPlan): MvJoinTopKNode =
+  override protected def withNewChildInternal(c: LogicalPlan): AnnTopKNode =
     copy(child = c)
-  override def maxRows: Option[Long] =
-    child.maxRows.map(q => q * k.toLong)
-  // the corpus-side id and the chamfer score are PRODUCED here (their
-  // source subtree was replaced); without this the node prints with the
-  // missing-input `!` marker
+
+  /** A literal query's id is not part of the answer. */
+  def literal: Boolean = !output.exists(_.exprId == queryId.exprId)
+  def setScorer: Boolean = AnnTopKNode.isSetScorer(scorer)
+
+  /** The SQL shape this node answers — the physical node's name. */
+  def shape: String =
+    if (!literal) { if (setScorer) "MvJoinTopK" else "SvJoinTopK" }
+    else if (filter.isDefined) "AnnFilteredTopK"
+    else "AnnSearch"
+
+  override def maxRows: Option[Long] = child.maxRows.map(_ * k.toLong)
+  // a literal answer is at most k (id, score) rows, whatever its child
+  override def stats: Statistics =
+    if (literal) Statistics(sizeInBytes = k.toLong * 16) else super.stats
+  // the corpus id and the score are PRODUCED here (their source subtree
+  // was replaced); without this the node prints with the missing-input
+  // `!` marker
   override def producedAttributes: AttributeSet =
     AttributeSet(output.filterNot(child.outputSet.contains))
 }
 
-/** Logical stand-in for the SINGLE-VECTOR query-relation route:
-  * per-query top-k over Join(query relation, registered corpus) by
-  * `graft_vec_cosine`/`graft_vec_dot` DESC or `graft_vec_l2sq` ASC —
-  * one statement for ANY number of query vectors (the reference
-  * harness's G8 multiplicity, `tests/test_search_roargraph.cpp`: 10k
-  * queries per sweep). Same unary posture as [[MvJoinTopKNode]]: the
-  * query side survives as `child` (any subplan, executed then
-  * collected — the bounded side of a top-k search by definition);
-  * the corpus-scoring join + rank window are replaced. `kind` is the
-  * matched spelling ("cos"/"dot"/"l2"); `tier` the chosen physical
-  * generator ("graph" or a batch-capable candidate tier). */
-case class SvJoinTopKNode(output: Seq[Attribute], child: LogicalPlan,
-                          qAttr: Attribute, qVecAttr: Attribute,
-                          dName: String, dVecName: String, k: Int,
-                          kind: String, tier: String, fingerprint: String)
-    extends UnaryNode {
-  override protected def withNewChildInternal(c: LogicalPlan): SvJoinTopKNode =
-    copy(child = c)
-  override def maxRows: Option[Long] =
-    child.maxRows.map(q => q * k.toLong)
-  override def producedAttributes: AttributeSet =
-    AttributeSet(output.filterNot(child.outputSet.contains))
+object AnnTopKNode {
+  def isSetScorer(scorer: String): Boolean =
+    scorer == "chamfer" || scorer == "maxsim"
 }
 
-/** Optimizer rule: exhaustive sort-limit over `graft_vec_dot` → ANN. */
+/** Optimizer rule: exhaustive sort-limit over a graft scorer → ANN. */
 object AnnTopKRule extends Rule[LogicalPlan] {
 
   /** NULL-bearing literals (a null array, or `array(1.0F, NULL, …)`)
@@ -1099,33 +1004,6 @@ object AnnTopKRule extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  private def dotOf(e: Expression): Option[(AttributeReference, Array[Float])] =
-    e match {
-      case VecDotExpr(a: AttributeReference, l: Literal) =>
-        asFloatArray(l).map(v => (a, v))
-      case VecDotExpr(l: Literal, a: AttributeReference) =>
-        asFloatArray(l).map(v => (a, v))
-      case _ => None
-    }
-
-  private def l2Of(e: Expression): Option[(AttributeReference, Array[Float])] =
-    e match {
-      case VecL2SqExpr(a: AttributeReference, l: Literal) =>
-        asFloatArray(l).map(v => (a, v))
-      case VecL2SqExpr(l: Literal, a: AttributeReference) =>
-        asFloatArray(l).map(v => (a, v))
-      case _ => None
-    }
-
-  private def cosOf(e: Expression): Option[(AttributeReference, Array[Float])] =
-    e match {
-      case VecCosineExpr(a: AttributeReference, l: Literal) =>
-        asFloatArray(l).map(v => (a, v))
-      case VecCosineExpr(l: Literal, a: AttributeReference) =>
-        asFloatArray(l).map(v => (a, v))
-      case _ => None
-    }
-
   private def asFloatMatrix(l: Literal): Option[Array[Array[Float]]] =
     if (l.value == null) None
     else l.dataType match {
@@ -1142,22 +1020,88 @@ object AnnTopKRule extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** The flagship set-level shape: a set-scoring function of a QUERY-set
-    * literal (first argument — both functions are asymmetric) against
-    * the set column. Returns the attr, the literal matrix, and which
-    * scorer ("chamfer" | "maxsim") so the rescore runs the query's own
-    * function. */
-  private def setScoreOf(e: Expression)
-      : Option[(AttributeReference, Array[Array[Float]], String)] = e match {
-    case VecChamferExpr(l: Literal, a: AttributeReference) =>
-      asFloatMatrix(l).map(m => (a, m, "chamfer"))
-    case VecMaxSimExpr(l: Literal, a: AttributeReference) =>
-      asFloatMatrix(l).map(m => (a, m, "maxsim"))
+  /** The routed scorer an ORDER BY expression spells, with its two
+    * operands. Only nearest-first directions route — dot / cosine / set
+    * scorers DESC (similarity) and l2² ASC (nearest); dot or cosine ASC
+    * and l2 DESC are farthest-point queries no ANN index answers, left
+    * exhaustive by this direction⇄expression pairing. */
+  private def scorerOf(e: Expression, dir: SortDirection)
+      : Option[(String, Expression, Expression)] = (e, dir) match {
+    case (VecDotExpr(x, y), Descending) => Some(("dot", x, y))
+    case (VecCosineExpr(x, y), Descending) => Some(("cos", x, y))
+    case (VecL2SqExpr(x, y), Ascending) => Some(("l2", x, y))
+    case (VecChamferExpr(x, y), Descending) => Some(("chamfer", x, y))
+    case (VecMaxSimExpr(x, y), Descending) => Some(("maxsim", x, y))
     case _ => None
   }
 
-  /** The query-RELATION form of the flagship set-level query — ONE
-    * statement for any number of query sets:
+  /** A scorer of a corpus column against a query LITERAL: (scorer,
+    * corpus vector column, query vectors — one for a single-vector
+    * scorer). The set scorers are asymmetric, so their query set must be
+    * the FIRST argument; single-vector scorers take the literal on
+    * either side. */
+  private def literalQueryOf(e: Expression, dir: SortDirection)
+      : Option[(String, AttributeReference, Array[Array[Float]])] =
+    scorerOf(e, dir).flatMap {
+      case (s, l: Literal, a: AttributeReference) if AnnTopKNode.isSetScorer(s) =>
+        asFloatMatrix(l).filter(_.nonEmpty).map(m => (s, a, m))
+      case (s, _, _) if AnnTopKNode.isSetScorer(s) => None
+      case (s, a: AttributeReference, l: Literal) =>
+        asFloatArray(l).map(v => (s, a, Array(v)))
+      case (s, l: Literal, a: AttributeReference) =>
+        asFloatArray(l).map(v => (s, a, Array(v)))
+      case _ => None
+    }
+
+  /** Tier chooser of the single-vector shapes: the graph tier first
+    * (broadcast, one task); otherwise the cheapest registered candidate
+    * tier (see [[AnnIndexRegistry.registerTier]]).
+    * `spark.graft.ann.tier` forces a tier by name ("graph" = the
+    * broadcast graph; a name with no registration routes nowhere —
+    * exhaustive plan, failing safe).
+    *
+    * BROADCAST CEILING: the graph tier holds the whole corpus
+    * driver/executor-resident (VectorStore broadcast — the one
+    * documented scale ceiling, SURVEY §7.3). When the corpus relation's
+    * estimated bytes (parquet stats via plan statistics) exceed
+    * `spark.graft.ann.broadcastMaxBytes` (default 4g ≈ the reference's
+    * own 10M×200d in-RAM scale), the chooser SKIPS the graph entry and
+    * falls to the registered candidate tiers (sharded / IVF-PQ / SQ8) —
+    * the scale path — automatically. An explicit
+    * `spark.graft.ann.tier=graph` force overrides the ceiling: forcing a
+    * tier by name is the operator's assertion that they know the memory
+    * cost.
+    *
+    * A literal query's dimension gates every tier here: the exhaustive
+    * plan's expression throws on a mismatch, and the index path must not
+    * instead return truncated scores — bailing out makes both routes
+    * fail identically. A query RELATION's vectors exist only at runtime
+    * (`queryDim` None): the exec checks them and fails loudly, exactly
+    * like the exhaustive expression would; a relation instead needs a
+    * tier that registered a BATCH generator. */
+  private def chooseTier(idName: String, vecName: String, kind: String,
+                         corpus: LogicalPlan,
+                         queryDim: Option[Int]): Option[String] = {
+    val pref = SQLConf.get.getConfString("spark.graft.ann.tier", "").trim
+    val ceiling = org.apache.spark.network.util.JavaUtils
+      .byteStringAsBytes(SQLConf.get.getConfString(
+        "spark.graft.ann.broadcastMaxBytes", "4g"))
+    val graphEntry = AnnIndexRegistry
+      .lookupFor(idName, vecName, kind, corpus)
+      .filter(e => queryDim.forall(_ == e.rawVecsB.value.dim))
+    val graph = graphEntry
+      .filter(_ => corpus.stats.sizeInBytes <= BigInt(ceiling))
+      .map(_ => "graph")
+    def tiers(p: Option[String]) = AnnIndexRegistry
+      .lookupTierFor(idName, vecName, kind, corpus, p)
+      .filter(t => queryDim.fold(t.candidatesBatch != null)(_ == t.dim))
+      .map(_.name)
+    if (pref == "graph") graphEntry.map(_ => "graph")
+    else if (pref.nonEmpty) tiers(Some(pref))
+    else graph.orElse(tiers(None))
+  }
+
+  /** The query-RELATION form — ONE statement for any number of queries:
     *
     * {{{
     * SELECT qset_id, dset_id, score FROM (
@@ -1170,19 +1114,19 @@ object AnnTopKRule extends Rule[LogicalPlan] {
     * WHERE rnk <= k
     * }}}
     *
+    * (or a single-vector scorer over a registered vector corpus).
     * Matched against the POST-optimizer shape (this rule runs in the
     * user batch): Project over Filter(rnk ≤ k) over Window(row_number
-    * partitioned by the query-side id, ordered chamfer DESC
-    * [, corpus-id ASC]) over [WindowGroupLimit] over Project(chamfer
-    * score/order aliases) over an unconditioned Inner/Cross Join whose
-    * CORPUS side fingerprints to a registered [[AnnIndexRegistry
-    * .MvEntry]]. The query side is arbitrary and survives as the
-    * rewritten node's child. The outer projection may compute anything
-    * over the three routed columns (round, tags, renames); referencing
-    * anything else (rnk, raw vec sets) bails out to the exhaustive
-    * plan. ASC chamfer order (farthest sets) never matches. */
-  private def rewriteMvJoin(p: Project, outerList: Seq[NamedExpression],
-                            cond: Expression, w: Window): Option[LogicalPlan] = {
+    * partitioned by the query-side id, ordered by the scorer
+    * [, corpus-id ASC]) over [WindowGroupLimit] over Project(score/order
+    * aliases) over an unconditioned Inner/Cross Join whose CORPUS side
+    * fingerprints to a registered tier. The query side is arbitrary and
+    * survives as the rewritten node's child. The outer projection may
+    * compute anything over the three routed columns (round, tags,
+    * renames); referencing anything else (rnk, raw vectors) bails out to
+    * the exhaustive plan. */
+  private def rewriteJoin(p: Project, outerList: Seq[NamedExpression],
+                          cond: Expression, w: Window): Option[LogicalPlan] = {
     val header = w.windowExpressions match {
       case Seq(al @ Alias(WindowExpression(RowNumber(),
           WindowSpecDefinition(Seq(part: AttributeReference), os, _)), _)) =>
@@ -1226,20 +1170,9 @@ object AnnTopKRule extends Rule[LogicalPlan] {
       w0Child <- plist.collectFirst {
         case a @ Alias(child, _) if a.exprId == w0Attr.exprId => child
       }
-      qdTriple <- w0Child match {
-        case VecChamferExpr(qv: AttributeReference, dv: AttributeReference)
-            if w0Dir == Descending => Some((qv, dv, "chamfer"))
-        case VecMaxSimExpr(qv: AttributeReference, dv: AttributeReference)
-            if w0Dir == Descending => Some((qv, dv, "maxsim"))
-        case VecCosineExpr(qv: AttributeReference, dv: AttributeReference)
-            if w0Dir == Descending => Some((qv, dv, "cos"))
-        case VecDotExpr(qv: AttributeReference, dv: AttributeReference)
-            if w0Dir == Descending => Some((qv, dv, "dot"))
-        case VecL2SqExpr(qv: AttributeReference, dv: AttributeReference)
-            if w0Dir == Ascending => Some((qv, dv, "l2"))
-        case _ => None
+      (scorer, qVec, dVec) <- scorerOf(w0Child, w0Dir).collect {
+        case (s, qv: AttributeReference, dv: AttributeReference) => (s, qv, dv)
       }
-      (qVec, dVec, scoreName) = qdTriple
       sides <-
         if (join.left.outputSet.contains(qVec) &&
             join.right.outputSet.contains(dVec))
@@ -1265,45 +1198,75 @@ object AnnTopKRule extends Rule[LogicalPlan] {
       if outerList.forall(_.references.subsetOf(AttributeSet(
         Seq(qsetAttr, dsetAttr, scoreAlias.toAttribute))))
       fp <- AnnIndexRegistry.scanFingerprint(dSide)
-      node <- scoreName match {
-        case "chamfer" | "maxsim" =>
+      tier <-
+        if (AnnTopKNode.isSetScorer(scorer))
           AnnIndexRegistry.lookupMvFor(dsetAttr.name, dVec.name, dSide)
-            .map(entry => MvJoinTopKNode(
-              Seq(qsetAttr, dsetAttr, scoreAlias.toAttribute), qSide,
-              qsetAttr, qVec, dsetAttr.name, dVec.name, k,
-              entry.name, fp, entry.dim, scoreName): LogicalPlan)
-        case kind =>
-          // SINGLE-VECTOR relation route: same tier family as the
-          // literal arm — graph first (broadcast ceiling honored),
-          // otherwise a candidate tier that registered a BATCH
-          // generator. Query dims gate at execute time (the query side
-          // is a relation — its vectors exist only at runtime; a
-          // mismatch fails loudly, exactly like the exhaustive plan's
-          // expression would).
-          val pref = SQLConf.get
-            .getConfString("spark.graft.ann.tier", "").trim
-          val ceiling = org.apache.spark.network.util.JavaUtils
-            .byteStringAsBytes(SQLConf.get.getConfString(
-              "spark.graft.ann.broadcastMaxBytes", "4g"))
-          val graphEntry = AnnIndexRegistry
-            .lookupFor(dsetAttr.name, dVec.name, kind, dSide)
-          val graph = graphEntry
-            .filter(_ => dSide.stats.sizeInBytes <= BigInt(ceiling))
-            .map(_ => "graph")
-          def tiers(p: Option[String]) = AnnIndexRegistry
-            .lookupTierFor(dsetAttr.name, dVec.name, kind, dSide, p)
-            .filter(_.candidatesBatch != null)
             .map(_.name)
-          val tier =
-            if (pref == "graph") graphEntry.map(_ => "graph")
-            else if (pref.nonEmpty) tiers(Some(pref))
-            else graph.orElse(tiers(None))
-          tier.map(t => SvJoinTopKNode(
-            Seq(qsetAttr, dsetAttr, scoreAlias.toAttribute), qSide,
-            qsetAttr, qVec, dsetAttr.name, dVec.name, k,
-            kind, t, fp): LogicalPlan)
+        else chooseTier(dsetAttr.name, dVec.name, scorer, dSide, None)
+    } yield p.copy(child = AnnTopKNode(
+      Seq(qsetAttr, dsetAttr, scoreAlias.toAttribute), qSide, qsetAttr,
+      qVec, dsetAttr.name, dVec.name, k, scorer, tier, fp))
+  }
+
+  /** The literal form: `SELECT id, <scorer>(vec, <query literal>) AS
+    * score FROM corpus [WHERE pred] ORDER BY score LIMIT k`. The literal
+    * becomes the node's query side as a one-row `LocalRelation` (read by
+    * `executeTake` without a Spark job). The identity check proves the
+    * Project sits directly on the REGISTERED relation — a
+    * Sample/Join/expression-Project in between, or a different table
+    * that happens to share column names, bails out to the exhaustive
+    * plan rather than silently searching the whole registered corpus.
+    *
+    * FILTERED shape: a deterministic predicate between the projection
+    * and the scan routes too, for single-vector scorers (post-filter
+    * with escalation). The whole Filter subtree is carried and
+    * re-executed, so the predicate may reference ANY corpus column
+    * (including the vector itself); nondeterministic predicates bail out
+    * (they cannot be re-evaluated in a second scan without changing the
+    * answer). */
+  private def rewriteLiteral(k: Int, sortKey: AttributeReference,
+                             dir: SortDirection,
+                             projList: Seq[NamedExpression],
+                             projChild: LogicalPlan): Option[LogicalPlan] = {
+    val (filterCond, scanChild) = projChild match {
+      case Filter(c, fc)
+          if c.deterministic && SQLConf.get.getConfString(
+            "spark.graft.ann.filtered", "true").toBoolean =>
+        (Some(c), fc)
+      case _ => (None, projChild)
+    }
+    for {
+      scoreExpr <- projList.collectFirst {
+        case a @ Alias(child, _) if a.exprId == sortKey.exprId => child
       }
-    } yield p.copy(child = node)
+      (scorer, vecAttr, query) <- literalQueryOf(scoreExpr, dir)
+      idAttr <- projList.collectFirst {
+        case a: AttributeReference if a.exprId != sortKey.exprId => a
+      }
+      if idAttr.dataType == LongType
+      // the set route has no filtered variant
+      if filterCond.isEmpty || !AnnTopKNode.isSetScorer(scorer)
+      tier <-
+        if (AnnTopKNode.isSetScorer(scorer))
+          AnnIndexRegistry.lookupMvFor(idAttr.name, vecAttr.name, scanChild)
+            .filter(e => query.forall(_.length == e.dim)).map(_.name)
+        else chooseTier(idAttr.name, vecAttr.name, scorer, scanChild,
+          Some(query.head.length))
+      fp <- AnnIndexRegistry.scanFingerprint(scanChild)
+    } yield {
+      val (qType, qData) =
+        if (AnnTopKNode.isSetScorer(scorer))
+          (ArrayType(ArrayType(FloatType, false), false),
+            new GenericArrayData(query.map(ArrayData.toArrayData).toSeq))
+        else (ArrayType(FloatType, false), ArrayData.toArrayData(query.head))
+      val qId = AttributeReference("__graft_qid", LongType, nullable = false)()
+      val qVec = AttributeReference("__graft_query", qType, nullable = false)()
+      AnnTopKNode(projList.map(_.toAttribute),
+        LocalRelation(Seq(qId, qVec), Seq(InternalRow(0L, qData))), qId, qVec,
+        idAttr.name, vecAttr.name, k, scorer, tier, fp,
+        filterCond.map(c =>
+          OpaqueSubplan(projChild, "pred=" + c.toString.take(120))))
+    }
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -1312,170 +1275,155 @@ object AnnTopKRule extends Rule[LogicalPlan] {
     }
     plan.transformDown {
       case p @ Project(outerList, Filter(cond, w: Window)) =>
-        rewriteMvJoin(p, outerList, cond, w).getOrElse(p)
-      // dot/cosine DESC (similarity) and l2² ASC (nearest) all route;
-      // dot/cosine ASC / l2 DESC are farthest-point queries no ANN index
-      // answers — left exhaustive by the direction⇄expression pairing
-      // below. A Project pushed between the limit and the sort
-      // (Catalyst's project-through-limit — e.g. a user wrapping the
-      // routed query to stamp a tag column or re-round the score) is
-      // TRANSPARENT: the rule matches through it and re-wraps it over
-      // the search node, so the common "SELECT extras FROM (<routed
-      // top-k>)" shape still routes.
+        rewriteJoin(p, outerList, cond, w).getOrElse(p)
+      // A Project pushed between the limit and the sort (Catalyst's
+      // project-through-limit — e.g. a user wrapping the routed query to
+      // stamp a tag column or re-round the score) is TRANSPARENT: the
+      // rule matches through it and re-wraps it over the search node, so
+      // the common "SELECT extras FROM (<routed top-k>)" shape still
+      // routes.
       case limit @ GlobalLimit(Literal(k: Int, _), LocalLimit(_, body)) =>
         val unwrapped = body match {
           case s: Sort => Some((None: Option[Project], s))
           case p @ Project(_, s: Sort) => Some((Some(p), s))
           case _ => None
         }
-        unwrapped match {
-          case Some((wrapper,
+        unwrapped.flatMap {
+          case (wrapper,
               Sort(Seq(SortOrder(sortKey: AttributeReference, dir, _, _)), true,
-                Project(projList, projChild), _)))
-              if projList.length == 2 =>
-        // FILTERED shape: a deterministic predicate between the
-        // projection and the scan routes too (post-filter with
-        // escalation — AnnFilteredTopKNode). The whole Filter subtree
-        // is carried and re-executed, so the predicate may reference
-        // ANY corpus column (including the vector itself); only
-        // nondeterministic predicates bail out (they cannot be
-        // re-evaluated in a second scan without changing the answer).
-        val (filterCond, scanChild) = projChild match {
-          case Filter(c, fc)
-              if c.deterministic && SQLConf.get.getConfString(
-                "spark.graft.ann.filtered", "true").toBoolean =>
-            (Some(c), fc)
-          case _ => (None, projChild)
-        }
-        val rewritten = for {
-          scoreAlias <- projList.collectFirst {
-            case a @ Alias(child, _) if a.exprId == sortKey.exprId => (a, child)
-          }
-          (vecAttr, qv, kind) <- dir match {
-            case Descending =>
-              dotOf(scoreAlias._2).map { case (a, v) => (a, v, "dot") }
-                .orElse(cosOf(scoreAlias._2).map { case (a, v) =>
-                  (a, v, "cos") })
-            case Ascending =>
-              l2Of(scoreAlias._2).map { case (a, v) => (a, v, "l2") }
-            case _ => None
-          }
-          idAttr <- projList.collectFirst {
-            case a: AttributeReference if a.exprId != sortKey.exprId => a
-          }
-          if idAttr.dataType == LongType
-          // identity check: the Project must sit directly on the
-          // REGISTERED relation — a Filter/Sample/Join in between, or a
-          // different table that happens to share column names, bails out
-          // to the exhaustive plan rather than silently searching the
-          // whole registered corpus. Graph tier first (broadcast, one
-          // task); otherwise the cheapest registered candidate tier by
-          // costHint. `spark.graft.ann.tier` forces a tier by name
-          // ("graph" = the broadcast graph; a name with no registration
-          // routes nowhere — exhaustive plan, failing safe).
-          // dim-mismatch gates on both: the exhaustive plan's expression
-          // throws on it; the index path must not instead return
-          // truncated scores — bail out so both routes fail identically.
-          //
-          // BROADCAST CEILING: the graph tier holds the whole corpus
-          // driver/executor-resident (VectorStore broadcast — the one
-          // documented scale ceiling, SURVEY §7.3). When the corpus
-          // relation's estimated bytes (parquet stats via plan
-          // statistics) exceed `spark.graft.ann.broadcastMaxBytes`
-          // (default 4g ≈ the reference's own 10M×200d in-RAM scale),
-          // the chooser SKIPS the graph entry and falls to the
-          // registered candidate tiers (sharded / IVF-PQ / SQ8) —
-          // the scale path — automatically. An explicit
-          // `spark.graft.ann.tier=graph` force overrides the ceiling:
-          // forcing a tier by name is the operator's assertion that
-          // they know the memory cost.
-          tier <- {
-            val pref = SQLConf.get
-              .getConfString("spark.graft.ann.tier", "").trim
-            val ceiling = org.apache.spark.network.util.JavaUtils
-              .byteStringAsBytes(SQLConf.get.getConfString(
-                "spark.graft.ann.broadcastMaxBytes", "4g"))
-            val graphEntry = AnnIndexRegistry
-              .lookupFor(idAttr.name, vecAttr.name, kind, scanChild)
-              .filter(_.rawVecsB.value.dim == qv.length)
-            val graph = graphEntry
-              .filter(_ => scanChild.stats.sizeInBytes <= BigInt(ceiling))
-              .map(_ => "graph")
-            def tiers(p: Option[String]) = AnnIndexRegistry
-              .lookupTierFor(idAttr.name, vecAttr.name, kind, scanChild, p)
-              .filter(_.dim == qv.length)
-              .map(_.name)
-            if (pref == "graph") graphEntry.map(_ => "graph")
-            else if (pref.nonEmpty) tiers(Some(pref))
-            else graph.orElse(tiers(None))
-          }
-          fp <- AnnIndexRegistry.scanFingerprint(scanChild)
-        } yield filterCond match {
-          case None =>
-            AnnSearchNode(projList.map(_.toAttribute), idAttr.name,
-              vecAttr.name, qv, k,
-              idFirst = projList.head.exprId == idAttr.exprId, kind = kind,
-              tier = tier, fingerprint = fp): LogicalPlan
-          case Some(cond) =>
-            AnnFilteredTopKNode(projList.map(_.toAttribute), idAttr.name,
-              vecAttr.name, qv, k,
-              idFirst = projList.head.exprId == idAttr.exprId, kind = kind,
-              tier = tier, fingerprint = fp,
-              filtered = OpaqueSubplan(projChild,
-                "pred=" + cond.toString.take(120))): LogicalPlan
-        }
-        // the SET-LEVEL flagship shape: chamfer(query-set literal,
-        // vec_set) DESC LIMIT k over a registered set relation; ASC is
-        // a farthest-set query no index answers — left exhaustive
-        val mvRewritten = for {
-          scoreAlias <- projList.collectFirst {
-            case a @ Alias(child, _) if a.exprId == sortKey.exprId => (a, child)
-          }
-          if dir == Descending
-          (vecAttr, qsets, scoreName) <- setScoreOf(scoreAlias._2)
-          idAttr <- projList.collectFirst {
-            case a: AttributeReference if a.exprId != sortKey.exprId => a
-          }
-          if idAttr.dataType == LongType
-          entry <- AnnIndexRegistry
-            .lookupMvFor(idAttr.name, vecAttr.name, projChild)
-          if qsets.nonEmpty && qsets.forall(_.length == entry.dim)
-          fp <- AnnIndexRegistry.scanFingerprint(projChild)
-        } yield AnnSearchNode(projList.map(_.toAttribute), idAttr.name,
-          vecAttr.name, qsets.flatten, k,
-          idFirst = projList.head.exprId == idAttr.exprId,
-          kind = "mv", tier = entry.name, fingerprint = fp,
-          mvDim = entry.dim, mvScore = scoreName)
-        rewritten.orElse(mvRewritten)
-          .map[LogicalPlan](n =>
-            wrapper.map(w => w.copy(child = n): LogicalPlan).getOrElse(n))
-          .getOrElse(limit)
-          case _ => limit
-        }
+                Project(projList, projChild), _)) if projList.length == 2 =>
+            rewriteLiteral(k, sortKey, dir, projList, projChild)
+              .map(n => wrapper.map(w => w.copy(child = n): LogicalPlan)
+                .getOrElse(n))
+          case _ => None
+        }.getOrElse(limit)
     }
   }
 }
 
-/** Physical planning for [[AnnSearchNode]]. */
+/** Physical planning for [[AnnTopKNode]]. */
 object AnnStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    case n: AnnSearchNode => AnnSearchExec(n) :: Nil
-    case n: AnnFilteredTopKNode => AnnFilteredTopKExec(n) :: Nil
-    case n: MvJoinTopKNode => MvJoinTopKExec(n, planLater(n.child)) :: Nil
-    case n: SvJoinTopKNode => SvJoinTopKExec(n, planLater(n.child)) :: Nil
+    case n: AnnTopKNode => AnnTopKExec(n, planLater(n.child)) :: Nil
     case _ => Nil
   }
 }
 
-/** Shared guard for the relation routes' COLLECTED query side: the
-  * query relation is the bounded side of a top-k search by definition,
-  * but "bounded" must be enforced, not assumed — a runaway subplan
-  * would otherwise OOM the driver inside executeCollect.
-  * `spark.graft.ann.relation.maxQueries` (default 100000) caps it;
-  * `executeTake(cap+1)` stops reading early instead of materializing
-  * the overflow. */
-private[plans] object RelationQueryGuard {
-  def apply(child: SparkPlan): Array[InternalRow] = {
+/** Physical side of [[AnnTopKNode]], one pipeline for every routed shape
+  * (the plan shows the shape — `AnnSearch`, `AnnFilteredTopK`,
+  * `SvJoinTopK` or `MvJoinTopK` — as the node name):
+  *
+  *  1. COLLECT the planned query side — the bounded side of a top-k
+  *     search by definition, the same posture as a broadcast exchange
+  *     materializing its child. "Bounded" is enforced, not assumed: a
+  *     runaway subplan would otherwise OOM the driver, so
+  *     `spark.graft.ann.relation.maxQueries` (default 100000) caps it and
+  *     `executeTake(cap+1)` stops reading early. NULL queries or
+  *     components, duplicate query ids and dimension mismatches fail
+  *     loudly: a candidate route cannot reproduce what the exhaustive
+  *     plan does with them.
+  *  2. Re-resolve the planned tier and prove it still serves the planned
+  *     corpus relation.
+  *  3. Generate candidates. A literal query on the graph tier searches
+  *     inside ONE task off the broadcast graph; a query relation runs ONE
+  *     distributed batched search for every query (graph
+  *     `searchSingleDf`, or the tier's registered batch generator); a
+  *     candidate or multivector tier runs its registered generator.
+  *     Escalation happens only when a filter is carried (below).
+  *  4. Rescore the bounded candidates EXACTLY with the query's own
+  *     expression — off the broadcast RAW store on the graph tier (zero
+  *     corpus reads), otherwise against the registered full-precision
+  *     relation (candidates broadcast; the corpus read once, never
+  *     shuffled, never resident). Scores equal the exhaustive plan's
+  *     bit-for-bit; only the candidate SET is approximate.
+  *  5. Keep the top k per query — ties on the corpus id ASC, exactly the
+  *     matched ORDER BY — and emit them.
+  *
+  * NULL-scored corpus rows are dropped by the relation and filtered
+  * shapes: the exhaustive sort orders them last, so they only matter
+  * when non-null rows run out, which a candidate route cannot reproduce
+  * anyway.
+  *
+  * FILTERED shape — escalating post-filter. Before any search, a bounded
+  * probe (`limit(preFilterMax+1).count()` on the pushed-down filtered
+  * scan) detects SELECTIVE predicates: at most
+  * `spark.graft.ann.filtered.preFilterMax` surviving rows (default 2k; 0
+  * disables) short-circuits to scoring them ALL — exact by construction
+  * and cheaper than beam + escalation, the classic
+  * brute-force-when-selective strategy. Otherwise each round fetches a
+  * candidate stream of target size `c` from the routed tier (graph beam
+  * with l=c, or the registered generator; initial c =
+  * `spark.graft.ann.filtered.overfetch`·k, default 8), re-executes the
+  * carried `Filter(pred, scan)` subplan CONSTRAINED to those candidate
+  * ids (an IN filter that reaches the parquet scan for bounded id sets,
+  * a broadcast-candidates join above that), rescores survivors, and
+  * answers when k survivors exist. No k survivors → `c` quadruples and
+  * the round repeats; when the tier SATURATES (the beam exhausted the
+  * reachable set, or the generator returned fewer than asked) the answer
+  * is exact over everything the tier can reach and escalation stops.
+  * Tier REACHABILITY is not corpus coverage — a generator tier (IVF-PQ,
+  * SQ8) is bounded by its probe parameters and a graph beam by
+  * connectivity — so two backstops keep the route honest: (1)
+  * `spark.graft.ann.filtered.exact=true` (the certificate mode: the
+  * answer then equals the exhaustive plan's, which knn_sql_filtered
+  * hash-proves) jumps straight to the saturating fetch on the graph
+  * tier, and over a NON-graph tier skips the generator entirely and
+  * scores the full filtered scan (a generator's saturating fetch proves
+  * nothing about unprobed cells); (2) when escalation ends with fewer
+  * than k survivors, the exec falls back to that same exhaustive
+  * filtered scan (metric `numExhaustiveFallback`) instead of silently
+  * under-returning rows the exhaustive plan would have found. Cost model
+  * at scale: each round is one column-pruned, predicate+id-pushed scan
+  * plus O(c) exact distances — the predicate's selectivity sets how many
+  * rounds run (selective predicates escalate toward the saturating
+  * fetch, which equals the exhaustive plan's cost; permissive predicates
+  * answer in round one at a tiny fraction of it). */
+case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
+    extends UnaryExecNode {
+  import AnnTopKExec._
+
+  override def nodeName: String = node.shape
+  override def output: Seq[Attribute] = node.output
+  override protected def withNewChildInternal(c: SparkPlan): AnnTopKExec =
+    copy(child = c)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numQueries" -> SQLMetrics.createMetric(sparkContext,
+      "queries collected"),
+    "numCandidates" -> SQLMetrics.createMetric(sparkContext,
+      "candidates searched or rescored"),
+    "numSurvivors" -> SQLMetrics.createMetric(sparkContext,
+      "rows in the answer"),
+    "numRounds" -> SQLMetrics.createMetric(sparkContext,
+      "escalation rounds (0 = pre-filter short-circuit)"),
+    "numPreFilterRows" -> SQLMetrics.createMetric(sparkContext,
+      "filtered rows scored exhaustively by the short-circuit"),
+    "numExhaustiveFallback" -> SQLMetrics.createMetric(sparkContext,
+      "1 when <k survivors forced the exhaustive filtered fallback"))
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val queries = collectQueries()
+    metrics("numQueries").add(queries.size)
+    val rows =
+      if (queries.isEmpty) answer(Array.empty)
+      else {
+        val tier = resolveTier()
+        for ((qid, vs) <- queries; v <- vs)
+          require(v.length == tier.dim,
+            s"query $qid dim ${v.length} != corpus dim ${tier.dim}")
+        (tier, node.filter) match {
+          case (_, Some(f)) => answer(filteredTopK(tier, queries.head, f.plan))
+          case (GraphTier(e), None) if node.literal => graphTask(e, queries.head)
+          case (GraphTier(e), None) => answer(topK(graphRescored(e, queries)))
+          case (g: Generator, None) => answer(topK(generatorRescored(g, queries)))
+        }
+      }
+    emit(rows, node.output, node.queryId.exprId)
+  }
+
+  /** Step 1: the collected, validated query side — (id, vectors); a
+    * single-vector query is a one-vector set. */
+  private def collectQueries(): Seq[(Long, Array[Array[Float]])] = {
     val cap = SQLConf.get.getConfString(
       "spark.graft.ann.relation.maxQueries", "100000").toInt
     val taken = child.executeTake(cap + 1)
@@ -1483,459 +1431,277 @@ private[plans] object RelationQueryGuard {
       sys.error(s"query relation exceeds spark.graft.ann.relation" +
         s".maxQueries=$cap — the routed plan collects the query side; " +
         "raise the cap or run with spark.graft.ann.rewrite=false")
-    taken
-  }
-}
-
-/** Physical side of the query-relation flagship route: execute the
-  * planned query-side child and COLLECT it (the bounded side — the
-  * same posture as a broadcast exchange materializing its child), run
-  * the registered generator's BATCHED candidate search (one
-  * distributed job for every query set), then rescore the bounded
-  * (qset, dset) candidate pairs with the query's OWN chamfer
-  * expression against the corpus relation — candidates and query sets
-  * broadcast, the corpus read once, never shuffled, never resident.
-  * Scores equal the exhaustive plan's bit-for-bit; only the candidate
-  * SET per query is approximate. Per-query top-k runs on the bounded
-  * candidates via the bounded-heap aggregator (ties: id ASC — the
-  * matched ORDER BY's tiebreak). */
-case class MvJoinTopKExec(node: MvJoinTopKNode, child: SparkPlan)
-    extends UnaryExecNode {
-  override def output: Seq[Attribute] = node.output
-  override protected def withNewChildInternal(c: SparkPlan): MvJoinTopKExec =
-    copy(child = c)
-
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "numQueries" -> SQLMetrics.createMetric(sparkContext,
-      "query sets collected"))
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val entry = AnnIndexRegistry
-      .lookupMv(node.dsetName, node.dVecName, node.fingerprint)
-      .getOrElse(sys.error(
-        s"multivector tier for (${node.dsetName}, ${node.dVecName}, " +
-          s"${node.fingerprint}) vanished"))
-    val qIdx = child.output.indexWhere(_.exprId == node.qsetAttr.exprId)
-    val vIdx = child.output.indexWhere(_.exprId == node.qVecAttr.exprId)
+    val qIdx = child.output.indexWhere(_.exprId == node.queryId.exprId)
+    val vIdx = child.output.indexWhere(_.exprId == node.queryVec.exprId)
     require(qIdx >= 0 && vIdx >= 0,
       "query-side columns vanished from the planned child")
-    val qsets = RelationQueryGuard(child).iterator.map { r =>
+    def floats(a: ArrayData, what: String): Array[Float] = {
+      var j = 0
+      while (j < a.numElements()) {
+        require(!a.isNullAt(j), s"NULL component in $what")
+        j += 1
+      }
+      a.toFloatArray()
+    }
+    val queries = taken.toSeq.map { r =>
       require(!r.isNullAt(qIdx) && !r.isNullAt(vIdx),
-        "NULL query set: the routed plan cannot reproduce NULL-score " +
-          "ordering — run with spark.graft.ann.rewrite=false")
+        s"NULL ${if (node.setScorer) "query set" else "query vector"}: " +
+          "the routed plan cannot reproduce NULL-score ordering — run " +
+          "with spark.graft.ann.rewrite=false")
       val arr = r.getArray(vIdx)
-      val subs = new Array[Array[Float]](arr.numElements())
-      var i = 0
-      while (i < subs.length) {
-        require(!arr.isNullAt(i), "NULL sub-vector in query set")
-        val sub = arr.getArray(i)
-        var j = 0
-        while (j < sub.numElements()) {
-          require(!sub.isNullAt(j), "NULL component in query sub-vector")
-          j += 1
+      val vecs =
+        if (!node.setScorer) Array(floats(arr, "query vector"))
+        else Array.tabulate(arr.numElements()) { i =>
+          require(!arr.isNullAt(i), "NULL sub-vector in query set")
+          floats(arr.getArray(i), "query sub-vector")
         }
-        val fa = sub.toFloatArray()
-        require(fa.length == node.mvDim,
-          s"query sub-vector dim ${fa.length} != corpus dim ${node.mvDim}")
-        subs(i) = fa
-        i += 1
-      }
-      (r.getLong(qIdx), subs)
-    }.toSeq
-    metrics("numQueries").add(qsets.size)
-    val out: Array[(Long, Long, Double)] =
-      if (qsets.isEmpty) Array.empty
-      else {
-        import org.apache.spark.sql.functions.{broadcast, col}
-        import graft.functions.VectorFunctions.{chamferScore, maxSimScore}
-        val spark = entry.data.sparkSession
-        import spark.implicits._
-        val cands = entry.candidatesBatch(spark, qsets, node.k)
-        val qdf = qsets.map { case (id, vs) => (id, vs.map(_.toSeq).toSeq) }
-          .toDF("__graft_qid", "__graft_qset")
-        val scored = entry.liveData
-          .join(broadcast(cands.select(col("qset_id").as("__graft_qid"),
-              col("dset_id").as("__graft_cand_id"))),
-            col(entry.dataIdCol) === col("__graft_cand_id"))
-          .join(broadcast(qdf), Seq("__graft_qid"))
-          .select(col("__graft_qid"),
-            col(entry.dataIdCol).cast("long").as("__graft_did"),
-            (if (node.score == "maxsim")
-               maxSimScore(col("__graft_qset"), col(entry.dataVecCol))
-             else chamferScore(col("__graft_qset"), col(entry.dataVecCol)))
-              .cast("double").as("__graft_score"))
-          // a NULL-scored corpus set (null members) is ordered last by
-          // the exhaustive DESC sort — it can only appear in a top-k
-          // when non-null sets run out, which a candidate route cannot
-          // reproduce anyway; drop them
-          .filter(col("__graft_score").isNotNull)
-        graft.operators.TopK.perGroupAgg(scored, Seq(col("__graft_qid")),
-            col("__graft_score"), col("__graft_did"), node.k,
-            idName = "__graft_did")
-          .select(col("__graft_qid"), col("__graft_did"), col("score"))
-          .as[(Long, Long, Double)].collect()
-      }
-    val schema = node.output.map(_.dataType).toArray
-    sparkContext.parallelize(out.toIndexedSeq, 1).mapPartitions { it =>
-      val proj = UnsafeProjection.create(schema)
-      it.map { case (q, d, s) => proj(InternalRow(q, d, s)) }
+      (r.getLong(qIdx), vecs)
     }
-  }
-}
-
-/** G8 search + exact rescoring, emitted as a one-partition scan. A
-  * candidate tier ("ivfpq" or any [[AnnIndexRegistry.registerTier]]
-  * plug-in) instead answers via a sub-query at execute time — the
-  * registered generator produces a bounded candidate-id set (for the
-  * built-in IVF-PQ: a partition-pruned ADC scan of the codes index),
-  * then exact rescoring with the routed query's OWN expression against
-  * the base table (a broadcast-candidates join: the corpus is read,
-  * never shuffled, never resident) — and emits the collected k rows.
-  * Running the candidate job from the driver inside doExecute is the
-  * same pattern as a broadcast exchange materializing its child. */
-case class AnnSearchExec(node: AnnSearchNode) extends LeafExecNode {
-  override def output: Seq[Attribute] = node.output
-
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "numCandidates" -> SQLMetrics.createMetric(sparkContext,
-      "candidate ids considered"))
-
-  private def tierRows(entry: AnnIndexRegistry.CandidateTierEntry): Array[(Long, Double)] = {
-    import org.apache.spark.sql.functions.{broadcast, col, typedlit}
-    import graft.functions.VectorFunctions.{vecCosine, vecDot, vecL2Sq}
-    val spark = entry.data.sparkSession
-    import spark.implicits._
-    val cands = entry.candidates(spark, node.queryVec, node.k)
-    val qLit = typedlit(node.queryVec)
-    val score = node.kind match {
-      case "l2" => vecL2Sq(col(entry.dataVecCol), qLit)
-      case "cos" => vecCosine(col(entry.dataVecCol), qLit)
-      case _ => vecDot(col(entry.dataVecCol), qLit)
-    }
-    // candidate ids under a reserved alias: a corpus whose id column is
-    // itself named d_id would otherwise make the join condition ambiguous
-    val scored = entry.liveData
-      .join(broadcast(cands.select(col("d_id").as("__graft_cand_id"))),
-        col(entry.dataIdCol) === col("__graft_cand_id"))
-      .select(col(entry.dataIdCol).cast("long").as("id"),
-        score.cast("double").as("score"))
-    val ordered =
-      if (node.kind == "l2") scored.orderBy(col("score").asc, col("id").asc)
-      else scored.orderBy(col("score").desc, col("id").asc)
-    ordered.limit(node.k).as[(Long, Double)].collect()
+    // the rescore keys queries by id (broadcast map / join): duplicate
+    // ids would silently collapse or merge — fail loudly instead (the
+    // exhaustive plan ranks duplicate rows independently, which a keyed
+    // candidate route cannot reproduce)
+    require(queries.map(_._1).distinct.lengthCompare(queries.length) == 0,
+      s"duplicate ${node.queryId.name} in the query relation: the routed " +
+        "plan keys candidates by query id — run with " +
+        "spark.graft.ann.rewrite=false")
+    queries
   }
 
-  /** Set-level route: run the registered G9 candidate generator, then
-    * rescore the bounded candidate set with the query's OWN chamfer
-    * expression against the set relation (broadcast-candidates join —
-    * the corpus is read, never shuffled, never resident). Scores equal
-    * the exhaustive plan's bit-for-bit; only the candidate SET is
-    * approximate. */
-  private def mvRows(entry: AnnIndexRegistry.MvEntry): Array[(Long, Double)] = {
-    import org.apache.spark.sql.functions.{broadcast, col, typedlit}
-    import graft.functions.VectorFunctions.{chamferScore, maxSimScore}
-    val spark = entry.data.sparkSession
-    import spark.implicits._
-    val qsets = node.queryVec.grouped(node.mvDim).toArray
-    val cands = entry.candidates(spark, qsets, node.k)
-    val qLit = typedlit(qsets.map(_.toSeq).toSeq)
-    val score =
-      if (node.mvScore == "maxsim") maxSimScore(qLit, col(entry.dataVecCol))
-      else chamferScore(qLit, col(entry.dataVecCol))
-    val scored = entry.liveData
-      .join(broadcast(cands.select(col("dset_id").as("__graft_cand_id"))),
-        col(entry.dataIdCol) === col("__graft_cand_id"))
-      .select(col(entry.dataIdCol).cast("long").as("id"),
-        score.cast("double").as("score"))
-    scored.orderBy(col("score").desc, col("id").asc)
-      .limit(node.k).as[(Long, Double)].collect()
-  }
-
-  /** The rule proved at plan time that the query's relation IS the
-    * registered corpus; a re-registration for the same (idCol, vecCol,
-    * metric) over a different relation between planning and execution
-    * would silently answer from the wrong corpus — fail loudly instead. */
-  private def checkFingerprint(storedFp: String, what: String): Unit =
-    if (node.fingerprint.nonEmpty && storedFp != node.fingerprint)
-      sys.error(s"$what for (${node.idName}, ${node.vecName}) was " +
-        "re-registered over a different relation after planning " +
-        s"(planned ${node.fingerprint}, registry has $storedFp)")
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    if (node.kind == "mv") {
-      // fingerprint is part of the registry key now, so the lookup
+  /** Step 2: the planned tier, re-resolved from the registry and proven
+    * to still serve the planned corpus relation. */
+  private def resolveTier(): Tier = {
+    def vanished(what: String): Nothing =
+      sys.error(s"$what for (${node.idName}, ${node.vecName}) vanished")
+    def checkFingerprint(storedFp: String, what: String): Unit =
+      if (node.fingerprint.nonEmpty && storedFp != node.fingerprint)
+        sys.error(s"$what for (${node.idName}, ${node.vecName}) was " +
+          "re-registered over a different relation after planning " +
+          s"(planned ${node.fingerprint}, registry has $storedFp)")
+    if (node.setScorer)
+      // the fingerprint is part of the multivector key, so the lookup
       // itself proves the planned relation is still the registered one
-      val entry = AnnIndexRegistry
-        .lookupMv(node.idName, node.vecName, node.fingerprint)
-        .getOrElse(sys.error(
-          s"multivector tier for (${node.idName}, ${node.vecName}, " +
-            s"${node.fingerprint}) vanished"))
-      val rows = mvRows(entry)
-      val idFirst = node.idFirst
-      val schema = node.output.map(_.dataType).toArray
-      return sparkContext.parallelize(rows.toIndexedSeq, 1).mapPartitions { it =>
-        val proj = UnsafeProjection.create(schema)
-        it.map { case (id, s) =>
-          proj(if (idFirst) InternalRow(id, s) else InternalRow(s, id))
-        }
-      }
-    }
-    if (node.tier != "graph") {
-      val (storedFp, entry) = AnnIndexRegistry
-        .lookupTierWithFp(node.idName, node.vecName, node.kind,
-          preferred = Some(node.tier))
-        .getOrElse(sys.error(
-          s"candidate tier '${node.tier}' for (${node.idName}, " +
-            s"${node.vecName}) vanished"))
-      checkFingerprint(storedFp, "candidate tier")
-      val rows = tierRows(entry)
-      val idFirst = node.idFirst
-      val schema = node.output.map(_.dataType).toArray
-      return sparkContext.parallelize(rows.toIndexedSeq, 1).mapPartitions { it =>
-        val proj = UnsafeProjection.create(schema)
-        it.map { case (id, s) =>
-          proj(if (idFirst) InternalRow(id, s) else InternalRow(s, id))
-        }
-      }
-    }
-    val (graphFp, entry) =
-      AnnIndexRegistry.lookupWithFp(node.idName, node.vecName, node.kind)
-        .getOrElse(sys.error(
-          s"ANN index for (${node.idName}, ${node.vecName}) vanished"))
-    checkFingerprint(graphFp, "ANN index")
-    val qv = node.queryVec
-    val k = node.k
-    val idFirst = node.idFirst
-    val kind = node.kind
-    val schema = node.output.map(_.dataType).toArray
-    val candMetric = metrics("numCandidates")
-    sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
-      val graph = entry.graphB.value
-      val searchVecs = entry.searchVecsB.value
-      val raw = entry.rawVecsB.value
-      val metric = Metrics(entry.metricName)
-      val q = if (metric.normalizeAtLoad) VectorStore.normalized(qv) else qv
-      val visited = new VisitedSet(graph.n)
-      val l = math.max(entry.searchL, 4 * k)
-      val (queue, _, _) = BeamSearch.searchSingle(graph, searchVecs, metric,
-        q, l, visited)
-      candMetric.add(queue.size)
-      // exact rescoring over RAW vectors — scores == the original
-      // expression's values (graft_vec_dot, graft_vec_l2sq or
-      // graft_vec_cosine; cosine mirrors VecCosineExpr's fused loop, so
-      // values are bit-identical to the exhaustive plan's)
-      require(raw.dim == qv.length,
-        s"query dim ${qv.length} != corpus dim ${raw.dim}")
-      val scored = (0 until queue.size).map { i =>
-        val id = queue.id(i)
-        val off = raw.offset(id)
-        val n = raw.dim
-        var s = 0.0
-        var j = 0
-        kind match {
-          case "l2" =>
-            while (j < n) {
-              val d = raw.data(off + j).toDouble - qv(j).toDouble
-              s += d * d
-              j += 1
-            }
-          case "cos" =>
-            var dot = 0.0
-            var na = 0.0
-            var nb = 0.0
-            while (j < n) {
-              val u = raw.data(off + j).toDouble
-              val v = qv(j).toDouble
-              dot += u * v; na += u * u; nb += v * v
-              j += 1
-            }
-            s = dot / (math.sqrt(na) * math.sqrt(nb))
-          case _ =>
-            while (j < n) { s += raw.data(off + j).toDouble * qv(j).toDouble; j += 1 }
-        }
-        (id.toLong, s)
-      }.sortBy { case (id, s) => (if (kind == "l2") s else -s, id) }.take(k)
-      val proj = UnsafeProjection.create(schema)
-      scored.iterator.map { case (id, s) =>
-        val row = if (idFirst) InternalRow(id, s) else InternalRow(s, id)
-        proj(row)
-      }
-    }
-  }
-}
-
-/** Physical side of the FILTERED top-k route: escalating post-filter.
-  *
-  * Each round fetches a candidate stream of target size `c` from the
-  * routed tier (graph beam with l=c, or the registered candidate
-  * generator), re-executes the carried `Filter(pred, scan)` subplan
-  * CONSTRAINED to those candidate ids (an IN filter that reaches the
-  * parquet scan for bounded id sets, a broadcast-candidates join above
-  * that — the corpus is never resident and never shuffled), rescores
-  * survivors with the query's OWN expression, and answers when k
-  * survivors exist. No k survivors → `c` quadruples and the round
-  * repeats; when the tier SATURATES (the beam exhausted the reachable
-  * set, or the generator returned fewer than asked) the answer is exact
-  * over everything the tier can reach and escalation stops. Tier
-  * REACHABILITY is not corpus coverage — a generator tier (IVF-PQ, SQ8)
-  * is bounded by its probe parameters and a graph beam by connectivity —
-  * so two backstops keep the route honest: (1) exact mode over a
-  * NON-graph tier skips the generator entirely and scores the full
-  * filtered scan (the pre-filter path — exact by construction, since a
-  * generator's saturating fetch proves nothing about unprobed cells);
-  * (2) when escalation ends with fewer than k survivors, the exec falls
-  * back to the same exhaustive filtered scan (conf
-  * `spark.graft.ann.filtered.fallbackExhaustive`, default true, metric
-  * `numExhaustiveFallback`) instead of silently under-returning rows
-  * the exhaustive plan would have found. Cost model
-  * at scale: each round is one column-pruned, predicate+id-pushed scan
-  * plus O(c) exact distances — the predicate's selectivity sets how many
-  * rounds run (selective predicates escalate toward the saturating fetch,
-  * which equals the exhaustive plan's cost; permissive predicates answer
-  * in round one at a tiny fraction of it).
-  *
-  * Conf knobs (read from the executing session at execute time):
-  * `spark.graft.ann.filtered.overfetch` (initial c = overfetch·k,
-  * default 8), `.maxRounds` (default 6), `.exact` (jump straight to the
-  * saturating fetch — the certificate mode: the answer then equals the
-  * exhaustive plan's, which knn_sql_filtered hash-proves), `.isinMax`
-  * (IN-pushdown vs broadcast-join switchover, default 100000).
-  *
-  * NULL-scored survivors (null vector cells) are dropped — the same
-  * posture as MvJoinTopKExec: the exhaustive DESC sort orders them last,
-  * so they only matter when non-null rows run out, which a candidate
-  * route cannot reproduce anyway. */
-case class AnnFilteredTopKExec(node: AnnFilteredTopKNode) extends LeafExecNode {
-  override def output: Seq[Attribute] = node.output
-
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "numRounds" -> SQLMetrics.createMetric(sparkContext,
-      "escalation rounds (0 = pre-filter short-circuit)"),
-    "numCandidates" -> SQLMetrics.createMetric(sparkContext,
-      "candidate ids fetched (all rounds)"),
-    "numSurvivors" -> SQLMetrics.createMetric(sparkContext,
-      "rows in the answer"),
-    "numPreFilterRows" -> SQLMetrics.createMetric(sparkContext,
-      "filtered rows scored exhaustively by the short-circuit"),
-    "numExhaustiveFallback" -> SQLMetrics.createMetric(sparkContext,
-      "1 when <k survivors forced the exhaustive filtered fallback"))
-
-  private def checkFingerprint(storedFp: String, what: String): Unit =
-    if (node.fingerprint.nonEmpty && storedFp != node.fingerprint)
-      sys.error(s"$what for (${node.idName}, ${node.vecName}) was " +
-        "re-registered over a different relation after planning " +
-        s"(planned ${node.fingerprint}, registry has $storedFp)")
-
-  /** One candidate fetch of target size `c` → (ids, saturated). */
-  private def candidateIds(c: Int): (Array[Long], Boolean) = node.tier match {
-    case "graph" =>
-      val (fp, entry) =
-        AnnIndexRegistry.lookupWithFp(node.idName, node.vecName, node.kind)
-          .getOrElse(sys.error(
-            s"ANN index for (${node.idName}, ${node.vecName}) vanished"))
+      AnnIndexRegistry.lookupMv(node.idName, node.vecName, node.fingerprint)
+        .map(Generator.of)
+        .getOrElse(vanished(s"multivector tier '${node.tier}'"))
+    else if (node.tier == "graph") {
+      val (fp, e) = AnnIndexRegistry
+        .lookupWithFp(node.idName, node.vecName, node.scorer)
+        .getOrElse(vanished("ANN index"))
       checkFingerprint(fp, "ANN index")
-      val graph = entry.graphB.value
-      val searchVecs = entry.searchVecsB.value
-      require(entry.rawVecsB.value.dim == node.queryVec.length,
-        s"query dim ${node.queryVec.length} != corpus dim " +
-          s"${entry.rawVecsB.value.dim}")
-      val metric = Metrics(entry.metricName)
-      val q = if (metric.normalizeAtLoad) VectorStore.normalized(node.queryVec)
-              else node.queryVec
-      // l = 2n saturates: the beam then explores every reachable node
-      // (the same regime g9_sql_saturated certifies for the mv route)
-      val l = math.min(math.max(c.toLong, entry.searchL.toLong), 2L * graph.n).toInt
-      val visited = new VisitedSet(graph.n)
-      val (queue, _, _) = BeamSearch.searchSingle(graph, searchVecs, metric,
-        q, l, visited)
-      val ids = Array.tabulate(queue.size)(i => queue.id(i).toLong)
-      (ids, l >= graph.n || queue.size < l)
-    case t =>
-      val (fp, entry) = AnnIndexRegistry
-        .lookupTierWithFp(node.idName, node.vecName, node.kind,
-          preferred = Some(t))
-        .getOrElse(sys.error(
-          s"candidate tier '$t' for (${node.idName}, ${node.vecName}) " +
-            "vanished"))
+      GraphTier(e)
+    } else {
+      val (fp, e) = AnnIndexRegistry
+        .lookupTierWithFp(node.idName, node.vecName, node.scorer,
+          preferred = Some(node.tier))
+        .getOrElse(vanished(s"candidate tier '${node.tier}'"))
       checkFingerprint(fp, "candidate tier")
-      val s = entry.data.sparkSession
-      import s.implicits._
-      import org.apache.spark.sql.functions.{col, expr}
-      val ids = entry.candidates(s, node.queryVec, c)
-        .select(col("d_id").cast("long")).distinct().as[Long].collect()
-      (ids, ids.length < c)
-  }
-
-  /** Top-k among `ids` that survive the carried predicate (`ids` null
-    * = the pre-filter short-circuit: EVERY filtered row scores), scored
-    * with the routed query's own expression. */
-  private def topkRows(filtered: org.apache.spark.sql.DataFrame,
-                       ids: Array[Long], isinMax: Int): Array[(Long, Double)] = {
-    import org.apache.spark.sql.functions.{broadcast, col, typedlit}
-    import graft.functions.VectorFunctions.{vecCosine, vecDot, vecL2Sq}
-    val s = filtered.sparkSession
-    import s.implicits._
-    val qLit = typedlit(node.queryVec)
-    val score = node.kind match {
-      case "l2" => vecL2Sq(col(node.vecName), qLit)
-      case "cos" => vecCosine(col(node.vecName), qLit)
-      case _ => vecDot(col(node.vecName), qLit)
+      Generator.of(e)
     }
-    val constrained =
-      if (ids == null) filtered
-      else if (ids.length <= isinMax)
-        filtered.where(col(node.idName).isInCollection(ids.toSeq))
-      else
-        filtered.join(
-          broadcast(ids.toSeq.toDF("__graft_cand_id")),
-          col(node.idName) === col("__graft_cand_id"))
-    val scored = constrained
-      .select(col(node.idName).cast("long").as("id"),
-        score.cast("double").as("score"))
-      .filter(col("score").isNotNull)
-    val ordered =
-      if (node.kind == "l2") scored.orderBy(col("score").asc, col("id").asc)
-      else scored.orderBy(col("score").desc, col("id").asc)
-    ordered.limit(node.k).as[(Long, Double)].collect()
   }
 
-  override protected def doExecute(): RDD[InternalRow] = {
+  /** Literal query on the graph tier: beam search and exact rescore run
+    * inside ONE task off the broadcast graph. */
+  private def graphTask(e: AnnIndexRegistry.Entry,
+                        query: (Long, Array[Array[Float]]))
+      : RDD[(Long, Long, Double)] = {
+    val (qid, qv) = (query._1, query._2.head)
+    val (k, kind) = (node.k, node.scorer)
+    val candidates = metrics("numCandidates")
+    val survivors = metrics("numSurvivors")
+    sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
+      val queue = beam(e, qv, math.max(e.searchL, 4 * k))
+      candidates.add(queue.size)
+      val raw = e.rawVecsB.value
+      val top = Array.tabulate(queue.size)(i => queue.id(i))
+        .map(id => (id.toLong, exactScore(kind, raw, id, qv)))
+        .sortBy { case (id, s) => (if (kind == "l2") s else -s, id) }
+        .take(k)
+      survivors.add(top.length)
+      top.iterator.map { case (id, s) => (qid, id, s) }
+    }
+  }
+
+  /** Query relation on the graph tier: ONE distributed `searchSingleDf`
+    * job for every query vector, exact rescore off the broadcast RAW
+    * store. `spark.graft.ann.relation.exact=true` saturates the beam
+    * (l = 2n — the g9_sql_saturated regime), making the answer exact
+    * end-to-end: the certificate mode g8_sql_saturated hash-proves. */
+  private def graphRescored(e: AnnIndexRegistry.Entry,
+                            queries: Seq[(Long, Array[Array[Float]])])
+      : DataFrame = {
     val spark = SparkSession.active
+    import spark.implicits._
+    val n = e.graphB.value.n
+    val l =
+      if (AnnIndexRegistry.relationExact(spark)) 2 * n
+      else math.min(math.max(e.searchL, 4 * node.k), 2 * n)
+    val vecs = queries.map { case (id, vs) => (id, vs.head) }
+    val hits = BeamSearch.searchSingleDf(spark,
+      vecs.map { case (id, v) => (id, v.toSeq) }.toDF("q_id", "q_vec"),
+      e.graphB, e.searchVecsB, e.metricName, l, k = l)
+    val rawB = e.rawVecsB
+    val qMapB = spark.sparkContext.broadcast(vecs.toMap)
+    val kind = node.scorer
+    val candidates = metrics("numCandidates")
+    hits.select(col("q_id"), col("d_id")).as[(Long, Long)]
+      .mapPartitions { it =>
+        val raw = rawB.value
+        val qm = qMapB.value
+        it.map { case (qid, did) =>
+          candidates.add(1)
+          (qid, did, exactScore(kind, raw, did.toInt, qm(qid)))
+        }
+      }.toDF("__graft_qid", "__graft_did", "__graft_score")
+  }
+
+  /** Candidate or multivector tier: the generator's bounded candidates
+    * (one query's, or the whole relation's in ONE batched job) joined
+    * against the full-precision corpus and scored with the query's own
+    * expression. */
+  private def generatorRescored(g: Generator,
+                                queries: Seq[(Long, Array[Array[Float]])])
+      : DataFrame = {
+    val spark = SparkSession.active
+    import spark.implicits._
+    val did = col(g.idCol).cast("long").as("__graft_did")
+    val corpusVec = col(g.vecCol)
+    def scored(df: DataFrame, qidCol: org.apache.spark.sql.Column,
+               query: org.apache.spark.sql.Column) =
+      df.select(qidCol, did, scoreOf(query, corpusVec).cast("double")
+        .as("__graft_score"))
+    if (node.literal) {
+      val (qid, vs) = queries.head
+      val cands = g.one(spark, vs, node.k)
+      scored(g.live().join(broadcast(cands),
+          col(g.idCol) === col("__graft_cand_id")),
+        lit(qid).as("__graft_qid"), queryLiteral(vs))
+    } else {
+      val cands = g.batch(spark, queries, node.k)
+      val qdf =
+        if (node.setScorer)
+          queries.map { case (id, vs) => (id, vs.map(_.toSeq).toSeq) }
+            .toDF("__graft_qid", "__graft_query")
+        else
+          queries.map { case (id, vs) => (id, vs.head.toSeq) }
+            .toDF("__graft_qid", "__graft_query")
+      scored(g.live()
+          .join(broadcast(cands), col(g.idCol) === col("__graft_cand_id"))
+          .join(broadcast(qdf), Seq("__graft_qid")),
+        col("__graft_qid"), col("__graft_query"))
+    }
+  }
+
+  /** The literal route's query as a typed literal column. */
+  private def queryLiteral(vs: Array[Array[Float]]): org.apache.spark.sql.Column =
+    if (node.setScorer) typedlit(vs.map(_.toSeq).toSeq) else typedlit(vs.head)
+
+  /** The routed query's OWN scoring expression, query operand first. */
+  private def scoreOf(query: org.apache.spark.sql.Column,
+                      corpus: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column = {
+    import graft.functions.VectorFunctions._
+    node.scorer match {
+      case "l2" => vecL2Sq(query, corpus)
+      case "cos" => vecCosine(query, corpus)
+      case "chamfer" => chamferScore(query, corpus)
+      case "maxsim" => maxSimScore(query, corpus)
+      case _ => vecDot(query, corpus)
+    }
+  }
+
+  /** Step 5: the k best rows of a (`__graft_qid`, `__graft_did`,
+    * `__graft_score`) frame per query — one TakeOrdered for a literal
+    * query; for a relation, the bounded-heap aggregator (set scorers) or
+    * a rank window (single-vector scorers). */
+  private def topK(scored: DataFrame): Array[(Long, Long, Double)] = {
+    val spark = scored.sparkSession
+    import spark.implicits._
+    val (qid, did, score) =
+      (col("__graft_qid"), col("__graft_did"), col("__graft_score"))
+    val order = Seq(if (node.scorer == "l2") score.asc else score.desc,
+      did.asc)
+    val top =
+      if (node.literal) scored.orderBy(order: _*).limit(node.k)
+      else if (node.setScorer)
+        graft.operators.TopK.perGroupAgg(scored.filter(score.isNotNull),
+            Seq(qid), score, did, node.k, idName = "__graft_did")
+          .select(qid, did, col("score"))
+      else
+        scored.filter(score.isNotNull)
+          .withColumn("__graft_rnk", row_number().over(
+            org.apache.spark.sql.expressions.Window.partitionBy(qid)
+              .orderBy(order: _*)))
+          .filter(col("__graft_rnk") <= node.k)
+          .select(qid, did, score)
+    top.as[(Long, Long, Double)].collect()
+  }
+
+  /** FILTERED shape (see the class doc): pre-filter probe, then
+    * escalating candidate rounds against the re-executed carried
+    * `Filter(pred, scan)` subplan, then the exhaustive backstop. */
+  private def filteredTopK(tier: Tier, query: (Long, Array[Array[Float]]),
+                           plan: LogicalPlan): Array[(Long, Long, Double)] = {
+    val spark = SparkSession.active
+    import spark.implicits._
     def conf(key: String, dflt: String): String =
       spark.conf.getOption(key).getOrElse(dflt)
     val exact = conf("spark.graft.ann.filtered.exact", "false").toBoolean
     val overfetch = conf("spark.graft.ann.filtered.overfetch", "8").toInt
-    val maxRounds = conf("spark.graft.ann.filtered.maxRounds", "6").toInt
-    val isinMax = conf("spark.graft.ann.filtered.isinMax", "100000").toInt
-    // pre-filter short-circuit ceiling: when the predicate keeps at most
-    // this many rows, score them ALL instead of beam-searching — cheaper
-    // (the candidate route re-executes the same filtered scan per round
-    // anyway, plus the search) and EXACT by construction, the classic
-    // brute-force-when-selective strategy every filtered-ANN system
-    // runs. Default 2k; "0" disables the probe entirely.
     val preFilterMax = math.min(
       conf("spark.graft.ann.filtered.preFilterMax",
         (2L * node.k).toString).toLong,
       Int.MaxValue.toLong - 1) // the probe limit below must fit an Int
-    val fallbackExhaustive =
-      conf("spark.graft.ann.filtered.fallbackExhaustive", "true").toBoolean
-    val filtered = org.apache.spark.sql.GraftColumnBridge
-      .ofRows(spark, node.filtered.plan)
+    val (qid, qv) = (query._1, query._2.head)
+    val filtered = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, plan)
+    val id = col(node.idName)
+
+    /** Top-k among `ids` that survive the carried predicate (`ids` null
+      * = every filtered row scores). */
+    def survivors(ids: Array[Long]): Array[(Long, Long, Double)] = {
+      val constrained =
+        if (ids == null) filtered
+        else if (ids.length <= IsinMax) filtered.where(id.isInCollection(ids.toSeq))
+        else filtered.join(broadcast(ids.toSeq.toDF("__graft_cand_id")),
+          id === col("__graft_cand_id"))
+      topK(constrained
+        .select(lit(qid).as("__graft_qid"), id.cast("long").as("__graft_did"),
+          scoreOf(queryLiteral(query._2), col(node.vecName)).cast("double")
+            .as("__graft_score"))
+        .filter(col("__graft_score").isNotNull))
+    }
+
+    /** One candidate fetch of target size `c` → (ids, saturated). */
+    def fetch(c: Int): (Array[Long], Boolean) = tier match {
+      case GraphTier(e) =>
+        // l = 2n saturates: the beam then explores every reachable node
+        // (the same regime g9_sql_saturated certifies for the mv route)
+        val n = e.graphB.value.n
+        val l = math.min(math.max(c.toLong, e.searchL.toLong), 2L * n).toInt
+        val queue = beam(e, qv, l)
+        (Array.tabulate(queue.size)(i => queue.id(i).toLong),
+          l >= n || queue.size < l)
+      case g: Generator =>
+        val ids = g.one(spark, query._2, c)
+          .select(col("__graft_cand_id").cast("long")).distinct()
+          .as[Long].collect()
+        (ids, ids.length < c)
+    }
+
     // the probe stops reading at preFilterMax+1 rows (LocalLimit
     // short-circuit over the pushed-down scan) — bounded cost even when
     // the predicate is permissive
     val probeCnt =
       if (preFilterMax <= 0) Long.MaxValue
-      else filtered.select(org.apache.spark.sql.functions.col(node.idName))
-        .limit((preFilterMax + 1).toInt).count()
-    var rows: Array[(Long, Double)] = Array.empty
+      else filtered.select(id).limit((preFilterMax + 1).toInt).count()
+    var rows: Array[(Long, Long, Double)] = Array.empty
     var round = 0
     if (probeCnt <= preFilterMax || (exact && node.tier != "graph")) {
       // exact mode over a GENERATOR tier scores the full filtered scan:
       // a generator's "returned fewer than asked" is probe-parameter
       // exhaustion, not corpus saturation — only the graph beam's
       // l >= 2n regime proves it explored everything reachable
-      rows = topkRows(filtered, null, isinMax)
+      rows = survivors(null)
       if (probeCnt <= preFilterMax) metrics("numPreFilterRows").add(probeCnt)
       else metrics("numExhaustiveFallback").add(1)
     } else {
@@ -1946,214 +1712,144 @@ case class AnnFilteredTopKExec(node: AnnFilteredTopKNode) extends LeafExecNode {
       var done = false
       while (!done) {
         round += 1
-        val (ids, saturated) = candidateIds(c)
+        val (ids, saturated) = fetch(c)
         metrics("numCandidates").add(ids.length)
-        rows = topkRows(filtered, ids, isinMax)
-        done = rows.length >= node.k || saturated || round >= maxRounds ||
+        rows = survivors(ids)
+        done = rows.length >= node.k || saturated || round >= MaxRounds ||
           c >= maxC
         if (!done) c = math.min(c.toLong * 4, maxC.toLong).toInt
       }
-      if (rows.length < node.k && fallbackExhaustive) {
+      if (rows.length < node.k) {
         // the tier ran out of reach (generator probe bound, graph
-        // connectivity, maxRounds) with fewer than k survivors — the
+        // connectivity, MaxRounds) with fewer than k survivors — the
         // exhaustive plan would keep scanning, so match it: one full
         // filtered scan, still pushed-down and column-pruned
-        rows = topkRows(filtered, null, isinMax)
+        rows = survivors(null)
         metrics("numExhaustiveFallback").add(1)
       }
     }
     metrics("numRounds").add(round)
+    rows
+  }
+
+  /** A collected answer as the one-partition RDD the emitter reads. */
+  private def answer(rows: Array[(Long, Long, Double)])
+      : RDD[(Long, Long, Double)] = {
     metrics("numSurvivors").add(rows.length)
-    val idFirst = node.idFirst
-    val schema = node.output.map(_.dataType).toArray
-    sparkContext.parallelize(rows.toIndexedSeq, 1).mapPartitions { it =>
-      val proj = UnsafeProjection.create(schema)
-      it.map { case (id, s) =>
-        proj(if (idFirst) InternalRow(id, s) else InternalRow(s, id))
-      }
-    }
+    sparkContext.parallelize(rows.toIndexedSeq, 1)
   }
 }
 
-/** Physical side of the single-vector query-relation route: execute and
-  * COLLECT the planned query side (bounded), run ONE batched candidate
-  * job for every query vector (graph tier: distributed
-  * `BeamSearch.searchSingleDf` over the broadcast graph; candidate
-  * tiers: their registered BATCH generator), rescore the bounded
-  * (query, candidate) pairs with the routed query's OWN expression, and
-  * rank-window to k per query — ties on the corpus id ASC, exactly the
-  * matched ORDER BY. Graph-tier rescoring runs against the broadcast
-  * RAW vector store (zero corpus reads); tier rescoring joins the
-  * bounded candidates against the registered full-precision relation
-  * (read once, never shuffled, never resident). Scores equal the
-  * exhaustive plan's bit-for-bit; only the candidate SET per query is
-  * approximate. `spark.graft.ann.relation.exact=true` saturates the
-  * graph beam (l = 2n — the g9_sql_saturated regime), making the
-  * answer exact end-to-end: the certificate mode g8_sql_saturated
-  * hash-proves. NULL-scored corpus rows are dropped (the
-  * MvJoinTopKExec posture). */
-case class SvJoinTopKExec(node: SvJoinTopKNode, child: SparkPlan)
-    extends UnaryExecNode {
-  override def output: Seq[Attribute] = node.output
-  override protected def withNewChildInternal(c: SparkPlan): SvJoinTopKExec =
-    copy(child = c)
+object AnnTopKExec {
+  /** Filtered shape: candidate-id sets up to this size constrain the
+    * re-executed scan with an IN filter (which reaches the parquet scan);
+    * larger ones with a broadcast-candidates join. */
+  private val IsinMax = 100000
+  /** Filtered shape: escalation rounds before the exhaustive backstop. */
+  private val MaxRounds = 6
 
-  override lazy val metrics: Map[String, SQLMetric] = Map(
-    "numQueries" -> SQLMetrics.createMetric(sparkContext,
-      "query vectors collected"),
-    "numCandidates" -> SQLMetrics.createMetric(sparkContext,
-      "candidate pairs rescored (graph tier)"))
+  /** A resolved routed tier; `dim` is the corpus (sub-)vector dimension. */
+  private sealed trait Tier { def dim: Int }
 
-  private def checkFingerprint(storedFp: String, what: String): Unit =
-    if (node.fingerprint.nonEmpty && storedFp != node.fingerprint)
-      sys.error(s"$what for (${node.dName}, ${node.dVecName}) was " +
-        "re-registered over a different relation after planning " +
-        s"(planned ${node.fingerprint}, registry has $storedFp)")
+  private final case class GraphTier(e: AnnIndexRegistry.Entry) extends Tier {
+    def dim: Int = e.rawVecsB.value.dim
+  }
 
-  override protected def doExecute(): RDD[InternalRow] = {
-    val qIdx = child.output.indexWhere(_.exprId == node.qAttr.exprId)
-    val vIdx = child.output.indexWhere(_.exprId == node.qVecAttr.exprId)
-    require(qIdx >= 0 && vIdx >= 0,
-      "query-side columns vanished from the planned child")
-    val queries: Seq[(Long, Array[Float])] =
-      RelationQueryGuard(child).iterator.map { r =>
-        require(!r.isNullAt(qIdx) && !r.isNullAt(vIdx),
-          "NULL query vector: the routed plan cannot reproduce " +
-            "NULL-score ordering — run with spark.graft.ann.rewrite=false")
-        val arr = r.getArray(vIdx)
-        var j = 0
-        while (j < arr.numElements()) {
-          require(!arr.isNullAt(j), "NULL component in query vector")
+  /** A candidate or multivector tier, normalized: `one` yields a single
+    * query's candidate ids under `__graft_cand_id`; `batch` the
+    * (`__graft_qid`, `__graft_cand_id`) pairs of a whole query relation
+    * in one distributed job; both are rescored against `live()`, the
+    * (possibly refreshed) full-precision corpus. */
+  private final case class Generator(
+      live: () => DataFrame, idCol: String, vecCol: String, dim: Int,
+      one: (SparkSession, Array[Array[Float]], Int) => DataFrame,
+      batch: (SparkSession, Seq[(Long, Array[Array[Float]])], Int) => DataFrame)
+      extends Tier
+
+  private object Generator {
+    def of(e: AnnIndexRegistry.CandidateTierEntry): Generator =
+      Generator(() => e.liveData, e.dataIdCol, e.dataVecCol, e.dim,
+        (s, q, n) => e.candidates(s, q.head, n)
+          .select(col("d_id").as("__graft_cand_id")),
+        (s, qs, k) => {
+          require(e.candidatesBatch != null,
+            s"tier '${e.name}' has no batch generator")
+          e.candidatesBatch(s, qs.map { case (id, vs) => (id, vs.head) }, k)
+            .select(col("q_id").as("__graft_qid"),
+              col("d_id").as("__graft_cand_id"))
+        })
+
+    def of(e: AnnIndexRegistry.MvEntry): Generator =
+      Generator(() => e.liveData, e.dataIdCol, e.dataVecCol, e.dim,
+        (s, q, n) => e.candidatesBatch(s, Seq((0L, q)), n)
+          .select(col("dset_id").as("__graft_cand_id")),
+        (s, qs, k) => e.candidatesBatch(s, qs, k)
+          .select(col("qset_id").as("__graft_qid"),
+            col("dset_id").as("__graft_cand_id")))
+  }
+
+  /** One beam search of `q` over a graph entry (driver- or task-side). */
+  private def beam(e: AnnIndexRegistry.Entry, q: Array[Float],
+                   l: Int): BeamQueue = {
+    val graph = e.graphB.value
+    val metric = Metrics(e.metricName)
+    BeamSearch.searchSingle(graph, e.searchVecsB.value, metric,
+      if (metric.normalizeAtLoad) VectorStore.normalized(q) else q, l,
+      new VisitedSet(graph.n))._1
+  }
+
+  /** Exact dot / cosine / l2² of corpus row `id` against `q` over the RAW
+    * vectors, double-accumulated in array order like VecDotExpr,
+    * VecCosineExpr's fused loop and VecL2SqExpr — so routed scores are
+    * bit-identical to the exhaustive plan's. */
+  private def exactScore(kind: String, raw: VectorStore, id: Int,
+                         q: Array[Float]): Double = {
+    val off = raw.offset(id)
+    val n = raw.dim
+    var s = 0.0
+    var j = 0
+    kind match {
+      case "l2" =>
+        while (j < n) {
+          val d = raw.data(off + j).toDouble - q(j).toDouble
+          s += d * d
           j += 1
         }
-        (r.getLong(qIdx), arr.toFloatArray())
-      }.toSeq
-    // the rescore keys queries by id (broadcast map): duplicate ids
-    // would silently collapse — fail loudly instead (the exhaustive
-    // plan ranks duplicate rows independently, which a keyed candidate
-    // route cannot reproduce)
-    require(queries.map(_._1).distinct.lengthCompare(queries.length) == 0,
-      "duplicate q_id in the query relation: the routed plan keys " +
-        "candidates by query id — run with spark.graft.ann.rewrite=false")
-    metrics("numQueries").add(queries.size)
-    val out: Array[(Long, Long, Double)] =
-      if (queries.isEmpty) Array.empty
-      else {
-        val spark = SparkSession.active
-        import spark.implicits._
-        import org.apache.spark.sql.functions.{broadcast, col, row_number}
-        val kind = node.kind
-        val scored: org.apache.spark.sql.DataFrame =
-          if (node.tier == "graph") {
-            val (fp, entry) = AnnIndexRegistry
-              .lookupWithFp(node.dName, node.dVecName, kind)
-              .getOrElse(sys.error(
-                s"ANN index for (${node.dName}, ${node.dVecName}) vanished"))
-            checkFingerprint(fp, "ANN index")
-            val dim = entry.rawVecsB.value.dim
-            queries.foreach { case (qid, v) =>
-              require(v.length == dim,
-                s"query $qid dim ${v.length} != corpus dim $dim")
-            }
-            val saturate = spark.conf
-              .getOption("spark.graft.ann.relation.exact")
-              .getOrElse("false").toBoolean
-            val n = entry.graphB.value.n
-            val l =
-              if (saturate) 2 * n
-              else math.min(math.max(entry.searchL, 4 * node.k), 2 * n)
-            val qdf = queries.map { case (id, v) => (id, v.toSeq) }
-              .toDF("q_id", "q_vec")
-            val hits = BeamSearch.searchSingleDf(spark, qdf, entry.graphB,
-              entry.searchVecsB, entry.metricName, l, k = l)
-            // exact rescore off the broadcast RAW store — zero corpus
-            // reads; same per-kind double loops as the literal route
-            val rawB = entry.rawVecsB
-            val qMapB = spark.sparkContext.broadcast(queries.toMap)
-            val candMetric = metrics("numCandidates")
-            hits.select(col("q_id"), col("d_id")).as[(Long, Long)]
-              .mapPartitions { it =>
-                val raw = rawB.value
-                val qm = qMapB.value
-                it.map { case (qid, did) =>
-                  candMetric.add(1)
-                  val qv = qm(qid)
-                  val off = raw.offset(did.toInt)
-                  val nd = raw.dim
-                  var s = 0.0
-                  var j = 0
-                  kind match {
-                    case "l2" =>
-                      while (j < nd) {
-                        val d = raw.data(off + j).toDouble - qv(j).toDouble
-                        s += d * d
-                        j += 1
-                      }
-                    case "cos" =>
-                      var dot = 0.0; var na = 0.0; var nb = 0.0
-                      while (j < nd) {
-                        val u = qv(j).toDouble
-                        val v = raw.data(off + j).toDouble
-                        dot += u * v; na += u * u; nb += v * v
-                        j += 1
-                      }
-                      s = dot / (math.sqrt(na) * math.sqrt(nb))
-                    case _ =>
-                      while (j < nd) {
-                        s += qv(j).toDouble * raw.data(off + j).toDouble
-                        j += 1
-                      }
-                  }
-                  (qid, did, s)
-                }
-              }.toDF("__graft_qid", "__graft_did", "__graft_score")
-          } else {
-            val (fp, entry) = AnnIndexRegistry
-              .lookupTierWithFp(node.dName, node.dVecName, kind,
-                preferred = Some(node.tier))
-              .getOrElse(sys.error(
-                s"candidate tier '${node.tier}' for (${node.dName}, " +
-                  s"${node.dVecName}) vanished"))
-            checkFingerprint(fp, "candidate tier")
-            require(entry.candidatesBatch != null,
-              s"tier '${node.tier}' has no batch generator")
-            queries.foreach { case (qid, v) =>
-              require(v.length == entry.dim,
-                s"query $qid dim ${v.length} != corpus dim ${entry.dim}")
-            }
-            import graft.functions.VectorFunctions.{vecCosine, vecDot, vecL2Sq}
-            val cands = entry.candidatesBatch(spark, queries, node.k)
-            val qdf = queries.map { case (id, v) => (id, v.toSeq) }
-              .toDF("__graft_qid", "__graft_qvec")
-            val scoreCol = kind match {
-              case "l2" => vecL2Sq(col("__graft_qvec"), col(entry.dataVecCol))
-              case "cos" => vecCosine(col("__graft_qvec"), col(entry.dataVecCol))
-              case _ => vecDot(col("__graft_qvec"), col(entry.dataVecCol))
-            }
-            entry.liveData
-              .join(broadcast(cands.select(col("q_id").as("__graft_qid"),
-                  col("d_id").as("__graft_cand_id"))),
-                col(entry.dataIdCol) === col("__graft_cand_id"))
-              .join(broadcast(qdf), Seq("__graft_qid"))
-              .select(col("__graft_qid"),
-                col(entry.dataIdCol).cast("long").as("__graft_did"),
-                scoreCol.cast("double").as("__graft_score"))
-          }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("__graft_qid"))
-          .orderBy(
-            if (kind == "l2") col("__graft_score").asc else col("__graft_score").desc,
-            col("__graft_did").asc)
-        scored.filter(col("__graft_score").isNotNull)
-          .withColumn("__graft_rnk", row_number().over(w))
-          .filter(col("__graft_rnk") <= node.k)
-          .select(col("__graft_qid"), col("__graft_did"), col("__graft_score"))
-          .as[(Long, Long, Double)].collect()
-      }
-    val schema = node.output.map(_.dataType).toArray
-    sparkContext.parallelize(out.toIndexedSeq, 1).mapPartitions { it =>
+      case "cos" =>
+        var dot = 0.0
+        var na = 0.0
+        var nb = 0.0
+        while (j < n) {
+          val u = q(j).toDouble
+          val v = raw.data(off + j).toDouble
+          dot += u * v; na += u * u; nb += v * v
+          j += 1
+        }
+        s = dot / (math.sqrt(na) * math.sqrt(nb))
+      case _ =>
+        while (j < n) { s += q(j).toDouble * raw.data(off + j).toDouble; j += 1 }
+    }
+    s
+  }
+
+  /** Step 5's single emitter: (query id, corpus id, score) triples as
+    * rows of `output` — the query id where the node emits it, the bigint
+    * corpus id, the double score (the only types the rule routes). It
+    * lives here, not on the exec, so the task closure captures only the
+    * slot map and the schema, never the exec and the logical subplans
+    * its node carries. */
+  private def emit(rows: RDD[(Long, Long, Double)], output: Seq[Attribute],
+                   queryId: ExprId): RDD[InternalRow] = {
+    val slots = output.map(a =>
+      if (a.exprId == queryId) 0 else if (a.dataType == LongType) 1 else 2)
+      .toArray
+    val schema = output.map(_.dataType).toArray
+    rows.mapPartitions { it =>
       val proj = UnsafeProjection.create(schema)
-      it.map { case (q, d, s) => proj(InternalRow(q, d, s)) }
+      it.map { case (q, d, s) =>
+        val v = Array[Any](q, d, s)
+        proj(new GenericInternalRow(slots.map(v)))
+      }
     }
   }
 }

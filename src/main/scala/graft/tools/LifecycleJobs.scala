@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -33,44 +32,13 @@ object LifecycleJobs {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val markers = new java.util.concurrent.atomic.AtomicInteger
-    val MarkerDesc = "graft_jobs_barrier"
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (MarkerDesc == j.properties.getProperty("spark.job.description"))
-          markers.incrementAndGet()
-        else jobs.incrementAndGet()
-    })
-    // Deterministic listener drain: the async bus delivers events FIFO
-    // per listener, so a MARKER job submitted after a step's last
-    // action is observed by the listener only after every one of the
-    // step's own job-start events — a fixed sleep attributed jobs to
-    // the wrong step on a loaded host (the committed per-step table
-    // must be exact, it is adjudicated). The marker is excluded from
-    // the count by its job description. Bounded wait: a bus that takes
-    // >30 s to deliver one event is a hang worth failing loudly on.
-    def barrier(): Unit = {
-      val before = markers.get()
-      spark.sparkContext.setJobDescription(MarkerDesc)
-      try spark.range(1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (markers.get() == before) {
-        if (System.nanoTime() > deadline)
-          sys.error("listener bus did not deliver the barrier marker in 30 s")
-        Thread.sleep(5)
-      }
-    }
+    // exact per-step counts: the committed per-step table is adjudicated,
+    // and a fixed sleep attributed jobs to the wrong step on a loaded host
+    val counter = new graft.JobCounter(spark)
     val rows = collection.mutable.ArrayBuffer.empty[(String, String, Int, Double)]
     def step[T](cert: String, name: String)(body: => T): T = {
-      barrier() // stragglers from the prior step land before the snapshot
-      val j0 = jobs.get()
-      val t0 = System.nanoTime()
-      val r = body
-      val secs = (System.nanoTime() - t0) / 1e9 // timed BEFORE the flush
-      barrier() // flush this step's events before reading the counter
-      rows += ((cert, name, jobs.get() - j0, secs))
+      val (r, jobs, secs) = counter.measure(body)
+      rows += ((cert, name, jobs, secs))
       r
     }
 

@@ -9,9 +9,9 @@ import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
 import graft.queries.IndexQueries
 
 /** The opt-in ANN auto-routing: ORDER BY graft_vec_dot(...) DESC LIMIT k
-  * over a registered corpus plans as AnnSearchExec, returns exact scores,
-  * and recalls >=0.9 of the exhaustive answer. Inert when the conf is off
-  * or no index is registered. */
+  * over a registered corpus plans as AnnTopKExec (the AnnSearch shape),
+  * returns exact scores, and recalls >=0.9 of the exhaustive answer.
+  * Inert when the conf is off or no index is registered. */
 class AnnRewriteSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -225,7 +225,7 @@ class AnnRewriteSpec extends AnyFunSuite {
       assert(routed.toSeq === exact.toSeq,
         "saturated filtered route must equal the exhaustive plan")
       val ex = df.queryExecution.executedPlan.collectFirst {
-        case e: graft.plans.AnnFilteredTopKExec => e
+        case e: graft.plans.AnnTopKExec => e
       }.get
       assert(ex.metrics("numRounds").value >= 1L,
         "short-circuit fired despite preFilterMax=0")
@@ -254,7 +254,7 @@ class AnnRewriteSpec extends AnyFunSuite {
       assert(routed.toSeq === exact.toSeq,
         "pre-filter short-circuit must equal the exhaustive plan")
       val ex = df.queryExecution.executedPlan.collectFirst {
-        case e: graft.plans.AnnFilteredTopKExec => e
+        case e: graft.plans.AnnTopKExec => e
       }.get
       assert(ex.metrics("numRounds").value === 0L, "escalation ran")
       assert(ex.metrics("numCandidates").value === 0L, "tier was searched")
@@ -350,7 +350,7 @@ class AnnRewriteSpec extends AnyFunSuite {
 
   private def routedTier(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.queryExecution.optimizedPlan.collect {
-      case n: graft.plans.AnnSearchNode => n.tier
+      case n: graft.plans.AnnTopKNode => n.tier
     }
 
   test("IVF-PQ tier: l2 query routes when no graph matches, hash-equals exhaustive") {
@@ -385,7 +385,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     try {
       val df = spark.sql(fSql)
       val tiers = df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.AnnFilteredTopKNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       }
       assert(tiers === Seq("ivfpq"), "filtered query not on the ivfpq tier")
       val rows = df.collect()
@@ -437,7 +437,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     try {
       val df = spark.sql(fSql)
       assert(df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.AnnFilteredTopKNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       } === Seq("ivfpq"))
       // a 1-of-16-cell probe "saturates" at a fraction of the corpus;
       // exact mode must NOT trust it — the answer must still equal the
@@ -469,23 +469,17 @@ class AnnRewriteSpec extends AnyFunSuite {
     try {
       val df = spark.sql(fSql)
       assert(df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.AnnFilteredTopKNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       } === Seq("ivfpq"))
       assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
         === exact, "fallback did not recover the exhaustive answer")
       val exec = df.queryExecution.executedPlan.collect {
-        case e: graft.plans.AnnFilteredTopKExec => e
+        case e: graft.plans.AnnTopKExec => e
       }.head
       assert(exec.metrics("numExhaustiveFallback").value === 1L,
         "exhaustive fallback did not fire")
-      // fallback is opt-out: with it off, the route honestly
-      // under-returns (tier reachability is the answer's ceiling)
-      spark.conf.set("spark.graft.ann.filtered.fallbackExhaustive", "false")
-      assert(spark.sql(fSql).collect().length < 20,
-        "starved probe unexpectedly reached k survivors")
     } finally {
       spark.conf.unset("spark.graft.ann.filtered.preFilterMax")
-      spark.conf.unset("spark.graft.ann.filtered.fallbackExhaustive")
       spark.conf.set("spark.graft.ann.rewrite", "false")
     }
   }
@@ -519,7 +513,7 @@ class AnnRewriteSpec extends AnyFunSuite {
         s"""SELECT gvid, graft_vec_cosine(gvec, $q) AS score
            |FROM grow_corpus ORDER BY score DESC LIMIT 5""".stripMargin)
       assert(df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.AnnSearchNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       } === Seq("sharded"), "not routed to the sharded tier")
       df.collect().head.getLong(0)
     }
@@ -590,7 +584,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     try {
       val df = spark.sql(fsql("fvid % 3 = 0", 10))
       assert(df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.AnnFilteredTopKNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       } === Seq("sharded"), "filtered query not routed to the sharded tier")
       val loads0 = ShardedIndex.shardLoadCount
       val approx = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
@@ -653,7 +647,7 @@ class AnnRewriteSpec extends AnyFunSuite {
         s"""SELECT pvid, graft_vec_l2sq(pvec, $q) AS score
            |FROM ivfpq_grow_corpus ORDER BY score ASC LIMIT 5""".stripMargin)
       assert(df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.AnnSearchNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       } === Seq("ivfpq"), "not routed to the ivfpq tier")
       df.collect().head.getLong(0)
     }
@@ -721,7 +715,7 @@ class AnnRewriteSpec extends AnyFunSuite {
         s"""SELECT gvid8, graft_vec_cosine(gvec8, $q) AS score
            |FROM sq8_grow_corpus ORDER BY score DESC LIMIT 5""".stripMargin)
       assert(df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.AnnSearchNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       } === Seq("sq8"), "not routed to the sq8 tier")
       df.collect().head.getLong(0)
     }
@@ -1155,7 +1149,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     setup
     // the flagship's RELATION spelling: per-query-set top-k as the
     // standard rank-window idiom over Join(query relation, set corpus),
-    // routed to ONE batched beam-search job (MvJoinTopKExec). At
+    // routed to ONE batched beam-search job (the MvJoinTopK shape). At
     // saturating budget the routed answer must EQUAL the exhaustive
     // window plan's — the whole-route exactness certificate.
     val e = Tables.embeddings(spark, sfDir)
@@ -1264,7 +1258,7 @@ class AnnRewriteSpec extends AnyFunSuite {
       val routed = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
       assert(routed === exact, "saturated maxsim route != exhaustive")
-      // the LITERAL spelling routes to AnnSearchExec with the maxsim
+      // the LITERAL spelling routes to the AnnSearch shape with the maxsim
       // rescorer and equals the exhaustive answer at saturation too
       val qLit = e.filter(col("vec_id") >= C && col("vec_id") < 2 * C)
         .orderBy("vec_id").select("embedding").collect()
@@ -1337,6 +1331,18 @@ class AnnRewriteSpec extends AnyFunSuite {
         else Option(t.getMessage).toSeq ++ messages(t.getCause)
       assert(messages(ex).exists(_.contains("NULL query set")),
         s"unexpected failure: ${messages(ex)}")
+      // a DUPLICATE query-set id: the rescore keys candidates by id, so
+      // both sets would merge into one search group with one budget —
+      // refused exactly like the single-vector route's duplicate q_id
+      corpus.filter(col("dset_id") < 2)
+        .select((col("dset_id") / 2).cast("long").as("qset_id"),
+          col("vec_set"))
+        .createOrReplaceTempView("mv_dup_queries")
+      val dup = spark.sql(relSql.replace("mv_null_queries", "mv_dup_queries"))
+      assert(dup.queryExecution.executedPlan.toString.contains("MvJoinTopK"))
+      val dupEx = intercept[Exception](dup.collect())
+      assert(messages(dupEx).exists(_.contains("duplicate qset_id")),
+        s"unexpected failure: ${messages(dupEx)}")
     } finally spark.conf.set("spark.graft.ann.rewrite", "false")
   }
 
@@ -1858,7 +1864,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     setup
     // the G8 harness multiplicity from SQL: per-query top-k as the
     // standard rank-window idiom over Join(query relation, corpus),
-    // routed to ONE batched beam-search job (SvJoinTopKExec) + exact
+    // routed to ONE batched beam-search job (the SvJoinTopK shape) + exact
     // rescore off the broadcast raw store
     Tables.embeddings(spark, sfDir).filter(col("vec_id") < 12)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -1915,11 +1921,22 @@ class AnnRewriteSpec extends AnyFunSuite {
       val fdf = spark.sql(filteredSql(queryLit, "vec_id >= 100"))
       val rows = fdf.collect()
       val fexec = fdf.queryExecution.executedPlan.collectFirst {
-        case e: graft.plans.AnnFilteredTopKExec => e
-      }.getOrElse(fail("AnnFilteredTopKExec not in plan"))
+        case e: graft.plans.AnnTopKExec => e
+      }.getOrElse(fail("AnnFilteredTopK not in plan"))
       assert(fexec.metrics("numRounds").value >= 1L)
       assert(fexec.metrics("numCandidates").value > 0L)
+      assert(fexec.metrics("numQueries").value === 1L)
       assert(fexec.metrics("numSurvivors").value === rows.length.toLong)
+      // literal route: the one-task search reports the same metric set
+      val ldf = spark.sql(sql(queryLit))
+      val lrows = ldf.collect()
+      val lexec = ldf.queryExecution.executedPlan.collectFirst {
+        case e: graft.plans.AnnTopKExec => e
+      }.getOrElse(fail("AnnSearch not in plan"))
+      assert(lexec.nodeName === "AnnSearch")
+      assert(lexec.metrics("numQueries").value === 1L)
+      assert(lexec.metrics("numCandidates").value > 0L)
+      assert(lexec.metrics("numSurvivors").value === lrows.length.toLong)
       // sv relation route: query count + rescored pairs
       Tables.embeddings(spark, sfDir).filter(col("vec_id") < 12)
         .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
@@ -1934,12 +1951,48 @@ class AnnRewriteSpec extends AnyFunSuite {
           |  FROM metrics_queries q CROSS JOIN ann_corpus d) t
           |WHERE rnk <= 5""".stripMargin
       val sdf = spark.sql(relSql)
-      sdf.collect()
+      val srows = sdf.collect()
       val sexec = sdf.queryExecution.executedPlan.collectFirst {
-        case e: graft.plans.SvJoinTopKExec => e
-      }.getOrElse(fail("SvJoinTopKExec not in plan"))
+        case e: graft.plans.AnnTopKExec => e
+      }.getOrElse(fail("SvJoinTopK not in plan"))
       assert(sexec.metrics("numQueries").value === 12L)
       assert(sexec.metrics("numCandidates").value > 0L)
+      assert(sexec.metrics("numSurvivors").value === srows.length.toLong)
+      // mv relation route: query sets collected + answer rows
+      val emb = Tables.embeddings(spark, sfDir)
+      emb.select((col("vec_id") / 4).cast("long").as("dset_id"),
+          (col("vec_id") % 4).cast("int").as("d_sub"), col("embedding"))
+        .groupBy("dset_id")
+        .agg(transform(
+          array_sort(collect_list(struct(col("d_sub"), col("embedding")))),
+          x => x.getField("embedding")).as("vec_set"))
+        .write.mode("overwrite").parquet("target/tmp/ann_metrics_sets")
+      val sets = spark.read.parquet("target/tmp/ann_metrics_sets")
+      sets.createOrReplaceTempView("metrics_sets")
+      sets.filter(col("dset_id") < 3)
+        .select(col("dset_id").as("qset_id"), col("vec_set"))
+        .createOrReplaceTempView("metrics_mv_queries")
+      val idx = GraphBuild.build(spark, emb, emb, IndexQueries.FixtureParams)
+      AnnIndexRegistry.registerMvRoar(sets, "dset_id", "vec_set",
+        spark.sparkContext.broadcast(idx.graph),
+        spark.sparkContext.broadcast(idx.vecs),
+        idx.params.metric, 4, idx.vecs.dim)
+      val mdf = spark.sql(
+        """SELECT qset_id, dset_id, score FROM (
+          |  SELECT q.qset_id, d.dset_id,
+          |         graft_chamfer_score(q.vec_set, d.vec_set) AS score,
+          |         row_number() OVER (PARTITION BY q.qset_id
+          |           ORDER BY graft_chamfer_score(q.vec_set, d.vec_set) DESC,
+          |                    d.dset_id ASC) AS rnk
+          |  FROM metrics_mv_queries q CROSS JOIN metrics_sets d) t
+          |WHERE rnk <= 5""".stripMargin)
+      val mrows = mdf.collect()
+      val mexec = mdf.queryExecution.executedPlan.collectFirst {
+        case x: graft.plans.AnnTopKExec => x
+      }.getOrElse(fail("MvJoinTopK not in plan"))
+      assert(mexec.nodeName === "MvJoinTopK")
+      assert(mexec.metrics("numQueries").value === 3L)
+      assert(mexec.metrics("numSurvivors").value === mrows.length.toLong)
       // the query-side cap: a relation past maxQueries fails loudly
       // instead of collecting unboundedly into the driver
       spark.conf.set("spark.graft.ann.relation.maxQueries", "5")
@@ -1976,7 +2029,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     try {
       val df = spark.sql(relSql)
       val tiers = df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.SvJoinTopKNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       }
       assert(tiers === Seq("ivfpq"), "sv relation not on the ivfpq tier")
       val routed = df.collect()
@@ -2035,7 +2088,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     try {
       val df = spark.sql(relSql)
       val tiers = df.queryExecution.optimizedPlan.collect {
-        case n: graft.plans.SvJoinTopKNode => n.tier
+        case n: graft.plans.AnnTopKNode => n.tier
       }
       assert(tiers === Seq("sharded"), "sv relation not on the sharded tier")
       val routed = df.collect()
