@@ -32,8 +32,10 @@ case class QSim(qSub: Int, sim: Double)
   * `graft.operators.SetSim` as the DuckDB-checkable relational spec)
   * shuffles the O(c²) sim triples three times; this Aggregator buffers the
   * ≤ c_q·c_d cells per (query-set, data-set) group — a few dozen doubles —
-  * and computes the exact two-pass LSE at finish, so the whole rerank is
-  * ONE shuffle with map-side partial aggregation.
+  * and computes the exact two-pass LSE at finish ([[ChamferAggregator.score]]),
+  * so scoring sim triples is ONE shuffle with map-side partial
+  * aggregation. The exhaustive scans use it; the index-backed rerank
+  * (`Rerank`) scores whole set pairs with the same finish instead.
   */
 class ChamferAggregator(cQ: Int,
                         temperature: Double = ChamferAggregator.Temperature,
@@ -55,37 +57,9 @@ class ChamferAggregator(cQ: Int,
       if (t.qSub >= nI) nI = t.qSub + 1
       if (t.dSub >= nJ) nJ = t.dSub + 1
     }
-    val m = Array.ofDim[Double](nI, nJ)
-    buf.foreach(t => m(t.qSub)(t.dSub) = t.sim)
-
-    val ts = temperature * txtScale
-    // term1: row-wise stable LSE over j at scale τ·s, summed over i.
-    var term1Sum = 0.0
-    var i = 0
-    while (i < nI) {
-      var mx = Double.NegativeInfinity
-      var j = 0
-      while (j < nJ) { val x = ts * m(i)(j); if (x > mx) mx = x; j += 1 }
-      var se = 0.0
-      j = 0
-      while (j < nJ) { se += math.exp(ts * m(i)(j) - mx); j += 1 }
-      term1Sum += math.log(se) + mx
-      i += 1
-    }
-    // term2: column-wise stable LSE over i at scale τ, summed over j.
-    var term2Sum = 0.0
-    var j = 0
-    while (j < nJ) {
-      var mx = Double.NegativeInfinity
-      var i2 = 0
-      while (i2 < nI) { val x = temperature * m(i2)(j); if (x > mx) mx = x; i2 += 1 }
-      var se = 0.0
-      i2 = 0
-      while (i2 < nI) { se += math.exp(temperature * m(i2)(j) - mx); i2 += 1 }
-      term2Sum += math.log(se) + mx
-      j += 1
-    }
-    (term1Sum / (cQ * ts) + term2Sum / (cQ * temperature)) / denominator
+    val m = new Array[Double](nI * nJ)
+    buf.foreach(t => m(t.qSub * nJ + t.dSub) = t.sim)
+    ChamferAggregator.score(m, nI, nJ, cQ, temperature, txtScale, denominator)
   }
 
   override def bufferEncoder: Encoder[mutable.ArrayBuffer[SubSim]] =
@@ -98,6 +72,45 @@ object ChamferAggregator {
   val Temperature = 16.0
   val TxtScale = 1.0
   val Denominator = 2.0
+
+  /** THE smooth-Chamfer finish, shared by this aggregator,
+    * `graft_chamfer_score` and the rerank's pair expression: `m` is the
+    * row-major nI×nJ cosine matrix (cell (i, j) = query sub i × data sub
+    * j, zero where a sub id is absent). Row-wise stable LSE over j at
+    * scale τ·s summed over i, column-wise stable LSE over i at scale τ
+    * summed over j, both divided by the query cardinality `cQ`. */
+  def score(m: Array[Double], nI: Int, nJ: Int, cQ: Double,
+            temperature: Double = Temperature,
+            txtScale: Double = TxtScale,
+            denominator: Double = Denominator): Double = {
+    val ts = temperature * txtScale
+    var term1Sum = 0.0
+    var i = 0
+    while (i < nI) {
+      val row = i * nJ
+      var mx = Double.NegativeInfinity
+      var j = 0
+      while (j < nJ) { val x = ts * m(row + j); if (x > mx) mx = x; j += 1 }
+      var se = 0.0
+      j = 0
+      while (j < nJ) { se += math.exp(ts * m(row + j) - mx); j += 1 }
+      term1Sum += math.log(se) + mx
+      i += 1
+    }
+    var term2Sum = 0.0
+    var j = 0
+    while (j < nJ) {
+      var mx = Double.NegativeInfinity
+      var i2 = 0
+      while (i2 < nI) { val x = temperature * m(i2 * nJ + j); if (x > mx) mx = x; i2 += 1 }
+      var se = 0.0
+      i2 = 0
+      while (i2 < nI) { se += math.exp(temperature * m(i2 * nJ + j) - mx); i2 += 1 }
+      term2Sum += math.log(se) + mx
+      j += 1
+    }
+    (term1Sum / (cQ * ts) + term2Sum / (cQ * temperature)) / denominator
+  }
 
   /** Column form: `chamfer(q_sub, d_sub, sim)` per (qset, dset) group. */
   def column(cQ: Int,

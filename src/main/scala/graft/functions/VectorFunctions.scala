@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.functions._
 
-import graft.functions.expressions.{VecChamferExpr, VecCosineExpr, VecDotExpr, VecL2SqExpr, VecLshBandKeysExpr, VecMaxSimExpr, VecNormExpr, VecProjectExpr}
+import graft.functions.expressions.{VecChamferExpr, VecChamferPairExpr, VecCosineExpr, VecDotExpr, VecL2SqExpr, VecLshBandKeysExpr, VecMaxSimExpr, VecNormExpr, VecProjectExpr}
 
 /** Column-level vector kernels over `array<float>` columns.
   *
@@ -99,6 +99,13 @@ object VectorFunctions {
     * SQL face is `graft_chamfer_score`; see [[VecChamferExpr]]. */
   def chamferScore(q: Column, d: Column): Column =
     expr2(VecChamferExpr.apply)(q, d)
+
+  /** Smooth-Chamfer score of a gathered (query set, candidate set) pair,
+    * each `array<struct<sub, vec, norm>>` — the rerank's fused scorer,
+    * [[VecChamferPairExpr]]. `cQ > 0`: fixed query cardinality; `0`: each
+    * query set's own. */
+  def chamferPair(q: Column, d: Column, cQ: Int): Column =
+    expr2(VecChamferPairExpr(_, _, cQ))(q, d)
 
   /** Summed-max similarity (MaxSim) of two vector sets — the fused
     * [[VecMaxSimExpr]] (SQL: `graft_maxsim_score`); query set first. */

@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+import graft.functions.ChamferAggregator
+
 /** Native Catalyst expressions for the hot vector kernels — the codegen
   * tier of SURVEY §7.4's ledger (the reference's AVX-512 kernels,
   * `/root/reference/include/efanna2e/distance.h:21-225`).
@@ -447,19 +449,20 @@ case class VecProjectExpr(vec: Expression, seedsFlat: Seq[Double], dim: Int)
   * by this expression, and the ANN rewrite routes that exact shape to
   * the G9 kernel + chamfer-rescore tail.
   *
-  * Arithmetic mirrors [[graft.functions.ChamferAggregator]] term for
-  * term (pairwise cosine in promoted doubles, two stable LSE passes at
-  * τ=16/txtScale=1, cQ = query-set cardinality, denominator 2), so the
-  * routed plan's exact rescoring equals this expression's values
+  * Pairwise cosine in promoted doubles, then the one shared finish,
+  * [[graft.functions.ChamferAggregator.score]] (two stable LSE passes
+  * at τ=16/txtScale=1, cQ = query-set cardinality, denominator 2), so
+  * the routed plan's exact rescoring equals this expression's values
   * bit-for-bit. The first argument is the QUERY set (cQ and the row
   * LSE come from it) — the function is NOT symmetric.
   *
   * Codegen calls [[scoreOf]] through a reference object (the
   * [[VecProjectExpr]] pattern): the O(c²·dim) kernel stays one JVM
-  * method, rows stay inside whole-stage codegen. The distributed hot
-  * path for corpus-wide rerank remains the single-shuffle
-  * ChamferAggregator; this expression serves the SQL surface and the
-  * bounded candidate rescore. */
+  * method, rows stay inside whole-stage codegen. This expression serves
+  * the SQL surface and the routed plan's bounded candidate rescore; the
+  * DataFrame rerank (`Rerank.chamferTopK`) scores its gathered set pairs
+  * with [[VecChamferPairExpr]], and the exhaustive scans aggregate sim
+  * triples with the ChamferAggregator — all three share one finish. */
 case class VecChamferExpr(left: Expression, right: Expression)
     extends BinaryExpression with VecElemType {
 
@@ -503,7 +506,7 @@ case class VecChamferExpr(left: Expression, right: Expression)
     val dn = d.map(norm)
     val nI = q.length
     val nJ = d.length
-    val m = Array.ofDim[Double](nI, nJ)
+    val m = new Array[Double](nI * nJ)
     var i = 0
     while (i < nI) {
       var j = 0
@@ -511,38 +514,12 @@ case class VecChamferExpr(left: Expression, right: Expression)
         var dot = 0.0
         var k = 0
         while (k < dim) { dot += q(i)(k) * d(j)(k); k += 1 }
-        m(i)(j) = dot / (qn(i) * dn(j))
+        m(i * nJ + j) = dot / (qn(i) * dn(j))
         j += 1
       }
       i += 1
     }
-    val temperature = 16.0
-    val ts = temperature * 1.0 // txtScale = 1
-    var term1Sum = 0.0
-    i = 0
-    while (i < nI) {
-      var mx = Double.NegativeInfinity
-      var j = 0
-      while (j < nJ) { val x = ts * m(i)(j); if (x > mx) mx = x; j += 1 }
-      var se = 0.0
-      j = 0
-      while (j < nJ) { se += math.exp(ts * m(i)(j) - mx); j += 1 }
-      term1Sum += math.log(se) + mx
-      i += 1
-    }
-    var term2Sum = 0.0
-    var j = 0
-    while (j < nJ) {
-      var mx = Double.NegativeInfinity
-      var i2 = 0
-      while (i2 < nI) { val x = temperature * m(i2)(j); if (x > mx) mx = x; i2 += 1 }
-      var se = 0.0
-      i2 = 0
-      while (i2 < nI) { se += math.exp(temperature * m(i2)(j) - mx); i2 += 1 }
-      term2Sum += math.log(se) + mx
-      j += 1
-    }
-    (term1Sum / (nI * ts) + term2Sum / (nI * temperature)) / 2.0
+    ChamferAggregator.score(m, nI, nJ, nI)
   }
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
@@ -556,6 +533,108 @@ case class VecChamferExpr(left: Expression, right: Expression)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecChamferExpr =
+    copy(left = l, right = r)
+}
+
+/** Smooth-Chamfer score of one (query set, candidate set) pair of the
+  * DataFrame rerank ([[graft.operators.Rerank]]), from the two sets as
+  * gathered rows: each side is `array<struct<sub: int, vec:
+  * array<float|double>, norm: double>>`, one element per member, with
+  * the member's sub id and its precomputed `graft_vec_norm`.
+  *
+  * It builds the same nI×nJ matrix the ChamferAggregator builds from
+  * sim triples — nI/nJ = largest sub id + 1, cell (q_sub, d_sub) =
+  * `graft_vec_dot(q, d) / (q_norm · d_norm)`, zero where a sub id is
+  * absent — and finishes with the same
+  * [[graft.functions.ChamferAggregator.score]], so scores are
+  * bit-identical to the triple path. Denominator rule: `cQ > 0` divides
+  * by that fixed query cardinality; `cQ == 0` scores at cardinality 1
+  * and divides by the query set's own number of distinct sub ids (the
+  * variable-cardinality rerank). Elements are in any order. */
+case class VecChamferPairExpr(left: Expression, right: Expression, cQ: Int)
+    extends BinaryExpression {
+
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = DoubleType
+
+  private def isFloat(dt: DataType): Boolean = dt match {
+    case ArrayType(st: StructType, _)
+        if st.fieldNames.toSeq == Seq("sub", "vec", "norm") => st("vec").dataType match {
+      case ArrayType(FloatType, _) => true
+      case ArrayType(DoubleType, _) => false
+      case other => throw new IllegalArgumentException(
+        s"chamfer pair: expected a float or double vector, got $other")
+    }
+    case other => throw new IllegalArgumentException(
+      s"chamfer pair: expected array<struct<sub, vec, norm>>, got $other")
+  }
+
+  private lazy val qFloat = isFloat(left.dataType)
+  private lazy val dFloat = isFloat(right.dataType)
+
+  private def elem(v: ArrayData, isFloat: Boolean, k: Int): Double =
+    if (isFloat) v.getFloat(k).toDouble else v.getDouble(k)
+
+  /** Largest sub id + 1. */
+  private def nSubs(a: ArrayData): Int = {
+    var n = 0
+    var r = 0
+    while (r < a.numElements()) {
+      val sub = a.getStruct(r, 3).getInt(0)
+      if (sub >= n) n = sub + 1
+      r += 1
+    }
+    n
+  }
+
+  def scoreOf(qa: ArrayData, da: ArrayData): Double = {
+    val (qf, df) = (qFloat, dFloat)
+    val nI = nSubs(qa)
+    val nJ = nSubs(da)
+    val m = new Array[Double](nI * nJ)
+    var i = 0
+    while (i < qa.numElements()) {
+      val q = qa.getStruct(i, 3)
+      val qv = q.getArray(1)
+      val row = q.getInt(0) * nJ
+      var j = 0
+      while (j < da.numElements()) {
+        val d = da.getStruct(j, 3)
+        val dv = d.getArray(1)
+        val n = qv.numElements()
+        if (n != dv.numElements()) throw new IllegalArgumentException(
+          s"chamfer pair: vector dimension mismatch ($n vs ${dv.numElements()})")
+        var dot = 0.0
+        var k = 0
+        while (k < n) { dot += elem(qv, qf, k) * elem(dv, df, k); k += 1 }
+        val norms = q.getDouble(2) * d.getDouble(2)
+        // the triple path's SQL division fails on a zero divisor too
+        if (norms == 0.0) throw new ArithmeticException("chamfer pair: zero-norm vector")
+        m(row + d.getInt(0)) = dot / norms
+        j += 1
+      }
+      i += 1
+    }
+    if (cQ > 0) ChamferAggregator.score(m, nI, nJ, cQ)
+    else {
+      val subs = new java.util.BitSet(nI)
+      i = 0
+      while (i < qa.numElements()) { subs.set(qa.getStruct(i, 3).getInt(0)); i += 1 }
+      ChamferAggregator.score(m, nI, nJ, 1) / subs.cardinality()
+    }
+  }
+
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    scoreOf(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("chamferPair", this,
+      classOf[VecChamferPairExpr].getName)
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = $ref.scoreOf($a, $b);")
+  }
+
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): VecChamferPairExpr =
     copy(left = l, right = r)
 }
 

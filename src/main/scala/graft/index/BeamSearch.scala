@@ -3,7 +3,7 @@ package graft.index
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** One search hit emitted by the kernels (similarity = −distance). */
@@ -23,7 +23,8 @@ case class MultiHit(qset_id: Long, q_sub: Int, d_id: Long, sim: Double,
   * `:2496`, growth step `:2459-2461`).
   *
   * Spark realization: the graph + packed vectors are broadcast once per
-  * job; query rows flow through `mapPartitions`/`flatMapGroups` and each
+  * job; query rows flow through `mapPartitions` (query sets as runs of
+  * rows, see `perQuerySet`) and each
   * task runs the sequential kernel with task-local [[BeamQueue]]s and an
   * epoch-tagged [[VisitedSet]] — share-nothing, unlike the reference's
   * OpenMP threads over shared mutable state.
@@ -102,7 +103,8 @@ object BeamSearch {
       : Array[(Array[Int], Array[Float], Int, Int)] = {
     val c = queries.length
     val l = math.max(1, budget / c)
-    val queues = Array.fill(c)(new BeamQueue(maxPq))
+    // entries past index l are never expanded or emitted
+    val queues = Array.fill(c)(new BeamQueue(math.min(maxPq, l)))
     val cmps = new Array[Int](c)
     val hops = new Array[Int](c)
     visited.nextEpoch()
@@ -201,7 +203,6 @@ object BeamSearch {
                   visitLogs: Array[ArrayBuffer[Int]] = null): Array[(Array[Int], Array[Float], Int, Int)] = {
     val c = queries.length
     require(visitedPool.length >= c, "visitedPool smaller than subquery count")
-    val queues = Array.fill(c)(new BeamQueue(maxPq))
     val cmps = new Array[Int](c)
     val hops = new Array[Int](c)
     val curSize = new Array[Int](c)
@@ -213,6 +214,14 @@ object BeamSearch {
       java.util.Arrays.fill(curSize, math.max(1, budget / c))
       sumSize = budget
     }
+    // No entry at an index >= the largest size a queue can reach is ever
+    // read, expanded or emitted, so the queue holds no more. Adaptively a
+    // queue only grows while every other one keeps at least minPq of the
+    // budget (and stays below maxPq).
+    val reach = math.max(1,
+      if (adaptive) math.max(minPq, budget - (c - 1) * minPq)
+      else budget / c)
+    val queues = Array.fill(c)(new BeamQueue(math.min(maxPq, reach)))
     val grow = math.max(1, (0.1 * budget).toInt)
 
     // Each subquery keeps its own visited tags ACROSS adaptive re-search
@@ -404,28 +413,60 @@ object BeamSearch {
     }.toDF()
   }
 
+  /** The query-set prelude of the multivector wrappers (G9, G10, G12):
+    * `querySets` = (qset_id, q_sub, q_vec); `search` runs once per set
+    * with the set's id, its sub ids in ascending order and their vectors
+    * (normalized when the metric wants it).
+    *
+    * The sets are hash-distributed by `qset_id` over `numPartitions`
+    * partitions (default: the session's default parallelism). An
+    * explicit partition count keeps AQE's byte-based coalescing off this
+    * exchange: query sets are a few MB, so a coalesced grouping shuffle
+    * ran the whole batch's kernel in ONE task. A batch of N sets now runs
+    * on min(N, numPartitions) tasks. Rows are sorted by (qset_id, q_sub)
+    * within each partition, so each set is one run of adjacent rows. */
+  private def perQuerySet[T: Encoder](querySets: DataFrame, metricName: String,
+                                      numPartitions: Int)(
+      search: (Long, Array[Int], Array[Array[Float]]) => Iterator[T]): Dataset[T] = {
+    val spark = querySets.sparkSession
+    import spark.implicits._
+    val parts =
+      if (numPartitions > 0) numPartitions
+      else spark.sparkContext.defaultParallelism
+    querySets.select(col("qset_id"), col("q_sub"), col("q_vec"))
+      .repartition(parts, col("qset_id"))
+      .sortWithinPartitions("qset_id", "q_sub")
+      .as[(Long, Int, Array[Float])]
+      .mapPartitions { rows =>
+        val metric = Metrics(metricName)
+        val it = rows.buffered
+        Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
+          val qsetId = it.head._1
+          val subs = ArrayBuffer.empty[Int]
+          val qs = ArrayBuffer.empty[Array[Float]]
+          while (it.hasNext && it.head._1 == qsetId) {
+            val (_, sub, v) = it.next()
+            subs += sub
+            qs += (if (metric.normalizeAtLoad) VectorStore.normalized(v) else v)
+          }
+          search(qsetId, subs.toArray, qs.toArray)
+        }
+      }
+  }
+
   /** DataFrame wrapper for G10: shared-visited-list variant. Output shape
     * matches [[searchMultiDf]]. */
   def searchMultiSharedDf(spark: SparkSession, querySets: DataFrame,
                           graphB: Broadcast[CsrGraph], vecsB: Broadcast[VectorStore],
                           metricName: String, maxPq: Int, budget: Int): DataFrame = {
     import spark.implicits._
-    val ds = querySets.select(col("qset_id"), col("q_sub"), col("q_vec"))
-      .as[(Long, Int, Array[Float])]
-    ds.groupByKey(_._1).flatMapGroups { (qsetId, rows) =>
+    perQuerySet(querySets, metricName, 0) { (qsetId, subs, qs) =>
       val graph = graphB.value
-      val vecs = vecsB.value
-      val metric = Metrics(metricName)
-      val subs = rows.toArray.sortBy(_._2)
-      val qs = subs.map { case (_, _, v) =>
-        if (metric.normalizeAtLoad) VectorStore.normalized(v) else v
-      }
       val pool = VisitedPools.get(graph.n, 2)
-      val res = searchMultiShared(graph, vecs, metric, qs, maxPq, budget,
-        pool(0), pool(1))
-      res.iterator.zipWithIndex.flatMap { case ((ids, dists, cmps, hops), si) =>
-        val qSub = subs(si)._2
-        ids.indices.map { r =>
+      val res = searchMultiShared(graph, vecsB.value, Metrics(metricName), qs,
+        maxPq, budget, pool(0), pool(1))
+      res.iterator.zip(subs.iterator).flatMap { case ((ids, dists, cmps, hops), qSub) =>
+        ids.indices.iterator.map { r =>
           MultiHit(qsetId, qSub, ids(r).toLong, -dists(r).toDouble, cmps, hops)
         }
       }
@@ -439,24 +480,16 @@ object BeamSearch {
                        metricName: String, minPq: Int, maxPq: Int, budget: Int,
                        adaptive: Boolean): DataFrame = {
     import spark.implicits._
-    val ds = querySets.select(col("qset_id"), col("q_sub"), col("q_vec"))
-      .as[(Long, Int, Array[Float])]
-    ds.groupByKey(_._1).mapGroups { (qsetId, rows) =>
+    perQuerySet(querySets, metricName, 0) { (qsetId, _, qs) =>
       val graph = graphB.value
-      val vecs = vecsB.value
-      val metric = Metrics(metricName)
-      val subs = rows.toArray.sortBy(_._2)
-      val qs = subs.map { case (_, _, v) =>
-        if (metric.normalizeAtLoad) VectorStore.normalized(v) else v
-      }
       val visitedPool = VisitedPools.get(graph.n, qs.length)
       val logs = Array.fill(qs.length)(new ArrayBuffer[Int])
-      searchMulti(graph, vecs, metric, qs, minPq, maxPq, budget, adaptive,
-        visitedPool, logs)
+      searchMulti(graph, vecsB.value, Metrics(metricName), qs, minPq, maxPq,
+        budget, adaptive, visitedPool, logs)
       val total = logs.map(_.length.toLong).sum
       val unique = logs.iterator.flatten.toSet.size.toLong
-      (qsetId, unique, total,
-        math.rint(unique.toDouble / total * 1e6) / 1e6)
+      Iterator.single((qsetId, unique, total,
+        math.rint(unique.toDouble / total * 1e6) / 1e6))
     }.toDF("qset_id", "n_unique", "n_total", "unique_frac")
   }
 
@@ -464,29 +497,23 @@ object BeamSearch {
     * Groups each set's subvectors into one kernel call. Output:
     * (qset_id, q_sub, d_id, sim, cmps, hops) — all beam contents.
     * `deadB` as in [[searchSingleDf]]: erased ids stay traversable but
-    * never appear among the emitted beam contents. */
+    * never appear among the emitted beam contents. `numPartitions` as in
+    * [[perQuerySet]]; a caller holding the query sets in local memory caps
+    * it at their number, so a one-set batch stays one kernel task. */
   def searchMultiDf(spark: SparkSession, querySets: DataFrame,
                     graphB: Broadcast[CsrGraph], vecsB: Broadcast[VectorStore],
                     metricName: String, minPq: Int, maxPq: Int, budget: Int,
                     adaptive: Boolean,
-                    deadB: Broadcast[java.util.BitSet] = null): DataFrame = {
+                    deadB: Broadcast[java.util.BitSet] = null,
+                    numPartitions: Int = 0): DataFrame = {
     import spark.implicits._
-    val ds = querySets.select(col("qset_id"), col("q_sub"), col("q_vec"))
-      .as[(Long, Int, Array[Float])]
-    ds.groupByKey(_._1).flatMapGroups { (qsetId, rows) =>
+    perQuerySet(querySets, metricName, numPartitions) { (qsetId, subs, qs) =>
       val graph = graphB.value
-      val vecs = vecsB.value
       val dead = if (deadB == null) null else deadB.value
-      val metric = Metrics(metricName)
-      val subs = rows.toArray.sortBy(_._2)
-      val qs = subs.map { case (_, _, v) =>
-        if (metric.normalizeAtLoad) VectorStore.normalized(v) else v
-      }
       val visitedPool = VisitedPools.get(graph.n, qs.length)
-      val res = searchMulti(graph, vecs, metric, qs, minPq, maxPq, budget,
-        adaptive, visitedPool)
-      res.iterator.zipWithIndex.flatMap { case ((ids, dists, cmps, hops), si) =>
-        val qSub = subs(si)._2
+      val res = searchMulti(graph, vecsB.value, Metrics(metricName), qs, minPq,
+        maxPq, budget, adaptive, visitedPool)
+      res.iterator.zip(subs.iterator).flatMap { case ((ids, dists, cmps, hops), qSub) =>
         ids.indices.iterator
           .filter(r => dead == null || !dead.get(ids(r)))
           .map { r =>

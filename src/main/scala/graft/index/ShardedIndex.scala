@@ -438,14 +438,16 @@ object ShardedIndex {
   /** G9 multivector adaptive search across all shards: per-shard
     * [[BeamSearch.searchMultiDf]] with the SAME budget, local ids mapped
     * back to global (g = local · nShards + shard), results unioned for
-    * the caller's rerank/top-k merge. Output: (qset_id, d_id). */
+    * the caller's rerank/top-k merge. Output: (qset_id, d_id).
+    * `numPartitions` as in [[BeamSearch.searchMultiDf]]. */
   def searchMultiDf(spark: SparkSession, querySets: DataFrame,
                     ref: ShardedIndexRef, minPq: Int, maxPq: Int,
-                    budget: Int, adaptive: Boolean): DataFrame = {
+                    budget: Int, adaptive: Boolean,
+                    numPartitions: Int = 0): DataFrame = {
     val base = (0 until ref.nShards).map { s => () =>
       withShard(spark, ref.metric, shardDir(ref, s)) { (gB, vB, deadB) =>
         BeamSearch.searchMultiDf(spark, querySets, gB, vB, ref.metric,
-          minPq, maxPq, budget, adaptive, deadB)
+          minPq, maxPq, budget, adaptive, deadB, numPartitions)
           .select(col("qset_id"),
             (col("d_id") * ref.nShards + s).as("d_id"))
       }
@@ -454,7 +456,7 @@ object ShardedIndex {
       val dir = deltaDir(ref, j)
       withShard(spark, ref.metric, dir) { (gB, vB, deadB) =>
         BeamSearch.searchMultiDf(spark, querySets, gB, vB, ref.metric,
-          minPq, maxPq, budget, adaptive, deadB)
+          minPq, maxPq, budget, adaptive, deadB, numPartitions)
           .join(broadcast(deltaIds(spark, dir)), Seq("d_id"))
           .select(col("qset_id"), col("gid").as("d_id"))
       }

@@ -1,15 +1,34 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
 
 /** The relational rerank tail shared by every index-backed search path
   * (`Rerank`, `/root/reference/src/multivector_reranker.cpp:38-98`):
-  * P9 candidate→set dedup, J2 member gather, A1 smooth-Chamfer scoring
-  * (single-shuffle aggregator), W1 bounded-heap top-k with
-  * oracle-stable quantized ranking. */
+  * P9 candidate→set dedup, J2 member gather, A1 smooth-Chamfer scoring,
+  * W1 bounded-heap top-k with oracle-stable quantized ranking.
+  *
+  * Each (query set, candidate set) pair is scored ONCE, as one dense
+  * matrix (the reference's shape, `multivector_reranker.cpp:330-430`):
+  * the candidate pairs are deduplicated on a `qset_id` partitioning,
+  * joined to the candidate set's members gathered as one row per set
+  * and to the broadcast query set gathered the same way, and scored by
+  * one codegen'd expression, [[graft.functions.expressions
+  * .VecChamferPairExpr]]. Its finish is the ChamferAggregator's, so the
+  * scores equal the sim-triple formulation (c_q·c_d cosine rows folded by
+  * `SetSim.smoothChamferAgg`) bit for bit, without expanding or
+  * shuffling those rows.
+  *
+  * The pair exchange has an explicit partition count (the session's
+  * default parallelism), which AQE's byte-based coalescing leaves alone:
+  * with a coalesced exchange the scoring of a whole batch ran in one
+  * task. AQE broadcasts the smaller side of the member join. When that
+  * is the gathered corpus (a large batch), the scoring joins and the
+  * top-k keep the pairs' partitioning, so the batch is scored and ranked
+  * on every core with no further exchange; a batch smaller than the
+  * corpus broadcasts its pairs and streams the corpus instead. */
 object Rerank {
 
   /** @param emb        corpus (vec_id, embedding), fixed cardinality `c`
@@ -18,60 +37,43 @@ object Rerank {
     * @param cQ         chamfer denominator (query cardinality); defaults
     *                   to the number of subqueries `c` */
   def chamferTopK(emb: DataFrame, querySets: DataFrame, cands: DataFrame,
-                  c: Int, k: Int, cQ: Int = -1): DataFrame = {
-    val denom = if (cQ > 0) cQ else c
-    val candSets = cands.select(col("qset_id"),
-      (col("d_id") / c).cast("long").as("dset_id")).distinct()
-    val members = emb.select(
-      (col("vec_id") / c).cast("long").as("dset_id"),
-      (col("vec_id") % c).cast("int").as("d_sub"),
-      col("embedding").as("d_vec"))
-      .withColumn("d_norm", vecNorm(col("d_vec")))
-    val qv = querySets.withColumn("q_norm", vecNorm(col("q_vec")))
-    val triples = candSets
-      .join(members, Seq("dset_id"))
-      .join(broadcast(qv), Seq("qset_id"))
-      .select(col("qset_id"), col("dset_id"), col("q_sub"), col("d_sub"),
-        (vecDot(col("q_vec"), col("d_vec")) /
-          (col("q_norm") * col("d_norm"))).as("sim"))
-    val scored = SetSim.smoothChamferAgg(triples, denom)
-      .withColumn("score", round(col("score"), 9))
-    TopK.perGroupAgg(scored, Seq(col("qset_id")),
-        col("score"), col("dset_id"), k, idName = "dset_id")
-      .select(col("qset_id"), col("rank"), col("dset_id"),
-        round(col("score"), 6).as("score"))
-  }
+                  c: Int, k: Int, cQ: Int = -1): DataFrame =
+    rerank(emb, querySets, cands, c, k, if (cQ > 0) cQ else c)
 
   /** Variable-cardinality-QUERY twin of [[chamferTopK]]: query sets are
     * RAGGED (each qset_id brings its own number of q_sub rows — the S7
     * mapping surface end-to-end, `multivector_reranker.cpp:767-809`
     * feeding `:377-430`), and the chamfer denominator is each set's OWN
-    * cardinality. Both chamfer terms scale linearly in 1/c_q, so the
-    * per-set denominator rides the UNCHANGED single-shuffle aggregator
-    * (run at cQ=1) with one broadcast join of the output-sized per-set
-    * cardinality table — no new shuffle, same 100 TB shape as the
-    * fixed-c path. Data side stays the fixed-`c` corpus grid. */
+    * cardinality (its number of distinct q_sub ids): the pair is scored
+    * at cardinality 1, then divided by it — both chamfer terms scale
+    * linearly in 1/c_q. Data side stays the fixed-`c` corpus grid. */
   def chamferTopKVarc(emb: DataFrame, querySets: DataFrame,
-                      cands: DataFrame, c: Int, k: Int): DataFrame = {
-    val candSets = cands.select(col("qset_id"),
-      (col("d_id") / c).cast("long").as("dset_id")).distinct()
-    val members = emb.select(
-      (col("vec_id") / c).cast("long").as("dset_id"),
-      (col("vec_id") % c).cast("int").as("d_sub"),
-      col("embedding").as("d_vec"))
-      .withColumn("d_norm", vecNorm(col("d_vec")))
-    val qv = querySets.withColumn("q_norm", vecNorm(col("q_vec")))
-    val triples = candSets
-      .join(members, Seq("dset_id"))
-      .join(broadcast(qv), Seq("qset_id"))
-      .select(col("qset_id"), col("dset_id"), col("q_sub"), col("d_sub"),
-        (vecDot(col("q_vec"), col("d_vec")) /
-          (col("q_norm") * col("d_norm"))).as("sim"))
-    val cardQ = querySets.groupBy("qset_id")
-      .agg(countDistinct(col("q_sub")).cast("double").as("c_q"))
-    val scored = SetSim.smoothChamferAgg(triples, 1)
-      .join(broadcast(cardQ), Seq("qset_id"))
-      .withColumn("score", round(col("score") / col("c_q"), 9))
+                      cands: DataFrame, c: Int, k: Int): DataFrame =
+    rerank(emb, querySets, cands, c, k, 0)
+
+  /** One gathered set member: (sub id, vector, its norm). */
+  private def member(sub: Column, vec: Column): Column =
+    struct(sub.as("sub"), vec.as("vec"), vecNorm(vec).as("norm"))
+
+  /** `cQ` as in [[graft.functions.expressions.VecChamferPairExpr]]. */
+  private def rerank(emb: DataFrame, querySets: DataFrame, cands: DataFrame,
+                     c: Int, k: Int, cQ: Int): DataFrame = {
+    val parts = cands.sparkSession.sparkContext.defaultParallelism
+    val pairs = cands.select(col("qset_id"),
+        (col("d_id") / c).cast("long").as("dset_id"))
+      .repartition(parts, col("qset_id"))
+      .distinct()
+    val candSets = emb
+      .groupBy((col("vec_id") / c).cast("long").as("dset_id"))
+      .agg(collect_list(member((col("vec_id") % c).cast("int"),
+        col("embedding"))).as("d_set"))
+    val qSets = querySets.groupBy(col("qset_id"))
+      .agg(collect_list(member(col("q_sub"), col("q_vec"))).as("q_set"))
+    val scored = pairs
+      .join(candSets, Seq("dset_id"))
+      .join(broadcast(qSets), Seq("qset_id"))
+      .select(col("qset_id"), col("dset_id"),
+        round(chamferPair(col("q_set"), col("d_set"), cQ), 9).as("score"))
     TopK.perGroupAgg(scored, Seq(col("qset_id")),
         col("score"), col("dset_id"), k, idName = "dset_id")
       .select(col("qset_id"), col("rank"), col("dset_id"),

@@ -814,16 +814,19 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
   /** Both multivector generators: ONE adaptive multivector search job
     * for every query set in the batch — the relation route's whole point
     * (a literal query set is its one-set case). `search(subVectors,
-    * minPq, maxPq)` runs the engine's searchMultiDf at `budget`;
-    * candidate sets = hit sub-vector ids / c. */
+    * minPq, maxPq, numPartitions)` runs the engine's searchMultiDf at
+    * `budget`, on no more partitions than there are query sets (a
+    * one-set statement stays one kernel task); candidate sets = hit
+    * sub-vector ids / c. */
   private def mvBatch(s: SparkSession, qsets: Seq[(Long, Array[Array[Float]])],
                       c: Int, budget: Int)(
-      search: (DataFrame, Int, Int) => DataFrame): DataFrame = {
+      search: (DataFrame, Int, Int, Int) => DataFrame): DataFrame = {
     import s.implicits._
     val qdf = qsets.flatMap { case (qid, vs) =>
       vs.zipWithIndex.map { case (v, i) => (qid, i, v.toSeq) }
     }.toDF("qset_id", "q_sub", "q_vec")
-    search(qdf, math.max(10, budget / math.max(c, 1)), math.max(200, budget * 2))
+    search(qdf, math.max(10, budget / math.max(c, 1)), math.max(200, budget * 2),
+        math.max(1, math.min(qsets.size, s.sparkContext.defaultParallelism)))
       .select(col("qset_id"), expr(s"d_id div $c").as("dset_id"))
       .distinct()
   }
@@ -840,9 +843,10 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
                      budget: Int = 120, name: String = "mv_roar"): Unit =
     registerMv(corpusSets, idCol, vecCol, MvEntry(
       name, corpusSets, idCol, vecCol, dim,
-      (s, qsets, _) => mvBatch(s, qsets, c, budget)((qdf, minPq, maxPq) =>
+      (s, qsets, _) => mvBatch(s, qsets, c, budget)((qdf, minPq, maxPq, parts) =>
         BeamSearch.searchMultiDf(s, qdf, graphB, vecsB, metricName,
-          minPq = minPq, maxPq = maxPq, budget = budget, adaptive = true))))
+          minPq = minPq, maxPq = maxPq, budget = budget, adaptive = true,
+          numPartitions = parts))))
 
   /** [[registerMv]] with the persisted SHARDED graph tier as the
     * generator — the SQL flagship past the broadcast ceiling: the same
@@ -877,9 +881,10 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
       val perShard = ShardedIndex.totalRowsCached(s, live).toDouble /
         math.max(live.nShards + live.nDeltas, 1)
       val effBudget = BudgetPolicy.scaledL(s, budget, regPerShard, perShard)
-      mvBatch(s, qsets, c, effBudget)((qdf, minPq, maxPq) =>
+      mvBatch(s, qsets, c, effBudget)((qdf, minPq, maxPq, parts) =>
         ShardedIndex.searchMultiDf(s, qdf, live, minPq = minPq,
-          maxPq = maxPq, budget = effBudget, adaptive = true))
+          maxPq = maxPq, budget = effBudget, adaptive = true,
+          numPartitions = parts))
     }
     registerMv(corpusSets, idCol, vecCol, MvEntry(
       name, corpusSets, idCol, vecCol, dim, batch, dataRefresh = refresh))

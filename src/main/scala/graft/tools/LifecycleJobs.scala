@@ -37,8 +37,8 @@ object LifecycleJobs {
     val counter = new graft.JobCounter(spark)
     val rows = collection.mutable.ArrayBuffer.empty[(String, String, Int, Double)]
     def step[T](cert: String, name: String)(body: => T): T = {
-      val (r, jobs, secs) = counter.measure(body)
-      rows += ((cert, name, jobs, secs))
+      val (r, counts, secs) = counter.measure(body)
+      rows += ((cert, name, counts.jobs, secs))
       r
     }
 

@@ -18,13 +18,13 @@ object PlanDump {
     val picks = Seq(
       "j1_knn_cosine" -> "exact kNN: broadcast queries x streamed corpus, ObjectHashAggregate top-k",
       "a1_smooth_chamfer_topk" -> "fullscan rerank: one chamfer shuffle + one top-k shuffle",
-      "g9_multivector_search" -> "index-backed search: kernel scan + relational rerank tail",
+      "g9_multivector_search" -> "index-backed search: kernel scan over qset_id-partitioned query sets + rerank tail scoring each candidate set pair once (fused chamfer expression, broadcast gathered sets, top-k on the same partitioning)",
       "dedup_minhash_pairs" -> "banded LSH near-dup: equi-join on band keys, no all-pairs",
       "knn_lsh" -> "random-hyperplane ANN: id-only band equi-join, vectors joined back once per side",
       "dedup_embedding_threshold" -> "thresholded embedding near-dup: 12-bit band self-join on ids, vector join-back, cos >= tau",
       "dedup_embedding_cosine" -> "exact global top-N pairs: blocked kernel (no join), TakeOrderedAndProject merge",
       "dedup_clusters" -> "cluster resolution tail: doc table LEFT JOIN checkpointed star labels (the large/small-star rounds run as their own bounded jobs before this plan)",
-      "g9_varc" -> "ragged-query G9: kernel scan + varc rerank (cQ=1 aggregator, broadcast per-set cardinality divide)",
+      "g9_varc" -> "ragged-query G9: kernel scan + varc rerank (each candidate set pair scored once by the fused chamfer expression, denominator = the query set's own cardinality)",
       "w1_topk_per_group" -> "per-group top-k scale path: ObjectHashAggregate bounded heap, O(groups*k) exchange",
       "knn_pq" -> "PQ ANN: one-pass encode kernel + broadcast-LUT ADC scan, candidates broadcast into the full-precision rerank scan",
       "knn_ivfpq_seeded" -> "composed IVF-PQ over the seeded codes-only index: PartitionFilters prune unprobed cells at the scan, masked ADC kernel, bounded exact rerank",
@@ -55,7 +55,7 @@ object PlanDump {
       "g8_sql_versioned_seqlog" -> "the versioned lifecycle committed through the SEQLOG (conditional-put) protocol: the served plan is identical to the rename-mode versioned face — the commit protocol is manifest-resolution-side only, invisible to the query DAG",
       "g9_sql_versioned_grace" -> "the mv flagship answered by the GRACE generation (pre-flip ref on a grown index): per-shard beams over gen0+delta, exact chamfer rescore — what a reader holding the old manifest runs mid-compaction",
       "text_bm25_versioned" -> "the lexical face's serve-through-compaction certificate: grace-generation postings scan (bucket-pruned), broadcast tombstone anti-join, gross-minus-tombstone constants, shared bm25Rank tail — the fixture's build/append/delete/compact jobs run before this plan",
-      "g9_varc_saturated" -> "the ragged flagship's exactness certificate: saturated per-subquery beams (kernel scan), varc rerank with the cQ=1 aggregator and broadcast per-set cardinality divide — the plan must equal g9_varc's with a bigger beam constant, nothing else",
+      "g9_varc_saturated" -> "the ragged flagship's exactness certificate: saturated per-subquery beams (kernel scan), varc rerank (fused pair scorer, own-cardinality denominator) — the plan must equal g9_varc's with a bigger beam constant, nothing else",
       "s14_random_vectors_seeded" -> "the seeded-source twin: pure integer-hash projection (no scan, no libm), one vec_id-partitioned window pair for the ordered sum-of-squares — the only exchange is the window's hash partitioning",
       "g10_shared_saturated" -> "the shared-visited kernel's exactness certificate: saturated shared beams (every expanded node scored against all c subqueries), exact-cosine rescore of the per-subquery slice, rank window",
       "g8_sharded_delta_saturated" -> "the delta face's exactness certificate: saturated per-shard beams over base + renumbered delta expose the whole grown corpus, exact kNN ranks exactly what the tier exposed",

@@ -105,11 +105,19 @@ class PlanSpec extends AnyFunSuite {
       s"rerank tail lost its broadcast joins:\n$p")
     assert(!p.contains("SortMergeJoin"),
       "rerank tail degraded to a sort-merge join")
-    for (agg <- Seq("partial_chamferaggregator", "partial_topkaggregator"))
-      assert(p.contains(agg), s"$agg missing — an exchange is unbounded")
+    // each candidate set pair is scored ONCE by the fused chamfer
+    // expression: no chamfer aggregate, and no exchange of sim triples
+    // (or of anything else) keyed by (qset, dset)
+    assert(!p.contains("chamferaggregator"),
+      s"rerank expands sim triples into a chamfer aggregate again:\n$p")
+    assert(!p.linesIterator.exists(l => l.contains("Exchange hashpartitioning(") &&
+        l.contains("qset_id") && l.contains("dset_id")),
+      s"rerank shuffles rows keyed by (qset, dset):\n$p")
+    assert(p.contains("partial_topkaggregator"),
+      "partial_topkaggregator missing — an exchange is unbounded")
     assert(p.contains("PushedFilters: [IsNotNull(vec_id), LessThan(vec_id"),
       "query-side filter not pushed to the scan")
-    assertCodegen(p, "vecdotexpr")
+    assertCodegen(p, "vecchamferpairexpr")
   }
 
   test("text_bm25_query: broadcast stats/df joins, micro-quantized long partial sums, bounded top-k") {

@@ -10,12 +10,14 @@ import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
 import graft.queries.IndexQueries
 
 /** Exact Spark-job counts per routed SQL statement, one per routed
-  * shape. Job counts do not depend on host load, so they gate the
-  * routed operator's Spark work exactly the way `PlanSpec` gates plan
-  * shapes: a refactor that adds a collect, a broadcast or a shuffle
-  * stage to a shape changes its count here. Each statement runs once
-  * unmeasured (planning caches, footer reads) and is then counted,
-  * planning included, through the [[JobCounter]] marker barrier. */
+  * shape, and task counts for the multivector shapes. These counts do
+  * not depend on host load, so they gate the routed operator's Spark
+  * work exactly the way `PlanSpec` gates plan shapes: a refactor that
+  * adds a collect, a broadcast or a shuffle stage to a shape changes its
+  * count here, and one that spreads a one-set search over more tasks
+  * changes its task count. Each statement runs once unmeasured (planning
+  * caches, footer reads) and is then counted, planning included, through
+  * the [[JobCounter]] marker barrier. */
 class RoutedJobsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -89,18 +91,22 @@ class RoutedJobsSpec extends AnyFunSuite {
     spark.table(table).filter(col(idCol) === id).select(vecCol).first()
       .getSeq[Float](0).map(x => s"${x}F").mkString("array(", ", ", ")")
 
-  /** Spark jobs of one routed statement (planning + collect), after one
+  /** Spark work of one routed statement (planning + collect), after one
     * unmeasured warm run; asserts the statement actually routed. */
-  private def jobsOf(sqlText: String, shape: String): Int = {
+  private def countsOf(sqlText: String, shape: String): JobCounter.Counts = {
     def run(): DataFrame = { val df = spark.sql(sqlText); df.collect(); df }
     val warm = run()
     val plan = warm.queryExecution.executedPlan.toString
     assert(plan.contains(shape), s"statement not routed to $shape:\n$plan")
     val counter = new JobCounter(spark)
-    val jobs = try counter.measure(run())._2 finally counter.close()
-    info(s"$shape: $jobs jobs")
-    jobs
+    val counts = try counter.measure(run())._2 finally counter.close()
+    info(s"$shape: ${counts.jobs} jobs, ${counts.stages} stages, " +
+      s"${counts.tasks} tasks")
+    counts
   }
+
+  private def jobsOf(sqlText: String, shape: String): Int =
+    countsOf(sqlText, shape).jobs
 
   private def routed[T](confs: (String, String)*)(body: => T): T = {
     spark.conf.set("spark.graft.ann.rewrite", "true")
@@ -142,10 +148,15 @@ class RoutedJobsSpec extends AnyFunSuite {
       .map(_.getSeq[Float](0).map(x => s"${x}F").mkString("array(", ", ", ")"))
       .mkString("array(", ", ", ")")
     routed() {
-      assert(jobsOf(
+      val n = countsOf(
         s"""SELECT jsid, graft_chamfer_score($qLit, jset) AS score
            |FROM jobs_sets ORDER BY score DESC LIMIT 10""".stripMargin,
-        "AnnSearch") === 5)
+        "AnnSearch")
+      // the one query set is searched on one partition, which already
+      // satisfies the candidate dedup's distribution: no dedup shuffle
+      assert(n.jobs === 4)
+      assert(n.stages === 4)
+      assert(n.tasks === 7)
     }
   }
 
@@ -191,7 +202,7 @@ class RoutedJobsSpec extends AnyFunSuite {
   test("multivector relation route: one batched search for every query set") {
     fixture
     routed() {
-      assert(jobsOf(
+      val n = countsOf(
         """SELECT qset_id, jsid, score FROM (
           |  SELECT q.qset_id, d.jsid,
           |         graft_chamfer_score(q.jset, d.jset) AS score,
@@ -200,7 +211,11 @@ class RoutedJobsSpec extends AnyFunSuite {
           |                    d.jsid ASC) AS rnk
           |  FROM jobs_mv_queries q CROSS JOIN jobs_sets d) t
           |WHERE rnk <= 10""".stripMargin,
-        "MvJoinTopK") === 9)
+        "MvJoinTopK")
+      assert(n.jobs === 9)
+      assert(n.stages === 9)
+      // the three query sets are searched by three kernel tasks
+      assert(n.tasks === 16)
     }
   }
 }
