@@ -413,10 +413,36 @@ object BeamSearch {
     }.toDF()
   }
 
+  /** `qs` normalized when the metric wants it (the graph's vectors were
+    * normalized at load). */
+  private def prepared(metric: VectorMetric,
+                       qs: Array[Array[Float]]): Array[Array[Float]] =
+    if (metric.normalizeAtLoad) qs.map(VectorStore.normalized) else qs
+
+  /** The G9 search of ONE query set as every caller runs it — the task
+    * of [[searchMultiDf]] and the routed multivector tier's driver-side
+    * one-set path: `qs` are the set's raw vectors in sub order, normalized
+    * here when the metric wants it, searched with the calling thread's
+    * pooled visited sets. Ids set in `dead` stay traversable but are
+    * dropped from the returned beams (the posture of [[searchSingleDf]]).
+    * Returns per-subquery (ids, dists, cmps, hops) like [[searchMulti]]. */
+  def searchSet(graph: CsrGraph, vecs: VectorStore, metric: VectorMetric,
+                qs: Array[Array[Float]], minPq: Int, maxPq: Int, budget: Int,
+                adaptive: Boolean, dead: java.util.BitSet = null)
+      : Array[(Array[Int], Array[Float], Int, Int)] = {
+    val res = searchMulti(graph, vecs, metric, prepared(metric, qs), minPq,
+      maxPq, budget, adaptive, VisitedPools.get(graph.n, qs.length))
+    if (dead == null) res
+    else res.map { case (ids, dists, cmps, hops) =>
+      val live = ids.indices.filterNot(r => dead.get(ids(r))).toArray
+      (live.map(ids), live.map(dists), cmps, hops)
+    }
+  }
+
   /** The query-set prelude of the multivector wrappers (G9, G10, G12):
     * `querySets` = (qset_id, q_sub, q_vec); `search` runs once per set
-    * with the set's id, its sub ids in ascending order and their vectors
-    * (normalized when the metric wants it).
+    * with the set's id, its sub ids in ascending order and their raw
+    * vectors.
     *
     * The sets are hash-distributed by `qset_id` over `numPartitions`
     * partitions (default: the session's default parallelism). An
@@ -425,8 +451,7 @@ object BeamSearch {
     * ran the whole batch's kernel in ONE task. A batch of N sets now runs
     * on min(N, numPartitions) tasks. Rows are sorted by (qset_id, q_sub)
     * within each partition, so each set is one run of adjacent rows. */
-  private def perQuerySet[T: Encoder](querySets: DataFrame, metricName: String,
-                                      numPartitions: Int)(
+  private def perQuerySet[T: Encoder](querySets: DataFrame, numPartitions: Int)(
       search: (Long, Array[Int], Array[Array[Float]]) => Iterator[T]): Dataset[T] = {
     val spark = querySets.sparkSession
     import spark.implicits._
@@ -438,7 +463,6 @@ object BeamSearch {
       .sortWithinPartitions("qset_id", "q_sub")
       .as[(Long, Int, Array[Float])]
       .mapPartitions { rows =>
-        val metric = Metrics(metricName)
         val it = rows.buffered
         Iterator.continually(it).takeWhile(_.hasNext).flatMap { _ =>
           val qsetId = it.head._1
@@ -447,7 +471,7 @@ object BeamSearch {
           while (it.hasNext && it.head._1 == qsetId) {
             val (_, sub, v) = it.next()
             subs += sub
-            qs += (if (metric.normalizeAtLoad) VectorStore.normalized(v) else v)
+            qs += v
           }
           search(qsetId, subs.toArray, qs.toArray)
         }
@@ -460,10 +484,11 @@ object BeamSearch {
                           graphB: Broadcast[CsrGraph], vecsB: Broadcast[VectorStore],
                           metricName: String, maxPq: Int, budget: Int): DataFrame = {
     import spark.implicits._
-    perQuerySet(querySets, metricName, 0) { (qsetId, subs, qs) =>
+    perQuerySet(querySets, 0) { (qsetId, subs, qs) =>
       val graph = graphB.value
+      val metric = Metrics(metricName)
       val pool = VisitedPools.get(graph.n, 2)
-      val res = searchMultiShared(graph, vecsB.value, Metrics(metricName), qs,
+      val res = searchMultiShared(graph, vecsB.value, metric, prepared(metric, qs),
         maxPq, budget, pool(0), pool(1))
       res.iterator.zip(subs.iterator).flatMap { case ((ids, dists, cmps, hops), qSub) =>
         ids.indices.iterator.map { r =>
@@ -480,11 +505,12 @@ object BeamSearch {
                        metricName: String, minPq: Int, maxPq: Int, budget: Int,
                        adaptive: Boolean): DataFrame = {
     import spark.implicits._
-    perQuerySet(querySets, metricName, 0) { (qsetId, _, qs) =>
+    perQuerySet(querySets, 0) { (qsetId, _, qs) =>
       val graph = graphB.value
+      val metric = Metrics(metricName)
       val visitedPool = VisitedPools.get(graph.n, qs.length)
       val logs = Array.fill(qs.length)(new ArrayBuffer[Int])
-      searchMulti(graph, vecsB.value, Metrics(metricName), qs, minPq, maxPq,
+      searchMulti(graph, vecsB.value, metric, prepared(metric, qs), minPq, maxPq,
         budget, adaptive, visitedPool, logs)
       val total = logs.map(_.length.toLong).sum
       val unique = logs.iterator.flatten.toSet.size.toLong
@@ -507,18 +533,13 @@ object BeamSearch {
                     deadB: Broadcast[java.util.BitSet] = null,
                     numPartitions: Int = 0): DataFrame = {
     import spark.implicits._
-    perQuerySet(querySets, metricName, numPartitions) { (qsetId, subs, qs) =>
-      val graph = graphB.value
-      val dead = if (deadB == null) null else deadB.value
-      val visitedPool = VisitedPools.get(graph.n, qs.length)
-      val res = searchMulti(graph, vecsB.value, Metrics(metricName), qs, minPq,
-        maxPq, budget, adaptive, visitedPool)
+    perQuerySet(querySets, numPartitions) { (qsetId, subs, qs) =>
+      val res = searchSet(graphB.value, vecsB.value, Metrics(metricName), qs,
+        minPq, maxPq, budget, adaptive, if (deadB == null) null else deadB.value)
       res.iterator.zip(subs.iterator).flatMap { case ((ids, dists, cmps, hops), qSub) =>
-        ids.indices.iterator
-          .filter(r => dead == null || !dead.get(ids(r)))
-          .map { r =>
-            MultiHit(qsetId, qSub, ids(r).toLong, -dists(r).toDouble, cmps, hops)
-          }
+        ids.indices.iterator.map { r =>
+          MultiHit(qsetId, qSub, ids(r).toLong, -dists(r).toDouble, cmps, hops)
+        }
       }
     }.toDF()
   }

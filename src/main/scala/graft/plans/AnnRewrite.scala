@@ -780,19 +780,29 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
   case class MvEntry(
       name: String, data: org.apache.spark.sql.DataFrame,
       dataIdCol: String, dataVecCol: String, dim: Int,
-      /** Candidates for EVERY query set in ONE distributed job (a
-        * literal query set is the one-set case). Input is the bounded
-        * collected query side (id, sub-vectors in sub order); output a
-        * DataFrame with (`qset_id`, `dset_id`) — at least the k best
-        * candidate sets per query set (more is fine, the rescore
-        * bounds the answer). Driver-side at execute time; must launch
-        * distributed work, never collect the corpus. */
+      /** Candidates for every query set of a statement in ONE
+        * distributed job. Input is the bounded collected query side
+        * (id, sub-vectors in sub order); output a DataFrame with
+        * (`qset_id`, `dset_id`) — at least the k best candidate sets per
+        * query set (more is fine, the rescore bounds the answer). Called
+        * on the driver at execute time; it launches distributed work and
+        * never collects the corpus. The routed statement uses it unless
+        * `driverCandidates` serves the statement (below). */
       candidatesBatch: (SparkSession, Seq[(Long, Array[Array[Float]])], Int) => org.apache.spark.sql.DataFrame,
       /** Optional FRESH re-read of the set corpus for the rescoring
         * join — same contract as [[CandidateTierEntry.dataRefresh]]:
         * a grow-in-place set relation needs it or post-registration
         * sets never rescore. */
-      dataRefresh: () => org.apache.spark.sql.DataFrame = null) {
+      dataRefresh: () => org.apache.spark.sql.DataFrame = null,
+      /** Optional driver-side search of ONE query set (sub-vectors in
+        * sub order) → its distinct candidate `dset_id`s, the same set
+        * `candidatesBatch` yields for it. When present, a statement that
+        * carries exactly one query set (a set literal, or a query
+        * relation with one row) searches in the driver's own thread
+        * with no Spark job: a one-set batch runs on a single kernel task
+        * anyway, and a job costs more than the ~1 ms kernel. Null for
+        * tiers whose search must run on executors. */
+      driverCandidates: Array[Array[Float]] => Array[Long] = null) {
     /** The relation to rescore against (see
       * [[CandidateTierEntry.liveData]]). */
     def liveData: org.apache.spark.sql.DataFrame =
@@ -811,13 +821,17 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
                  entry: MvEntry): Unit =
     mvEntries.put((idCol, vecCol, corpusFingerprint(corpusSets)), entry)
 
-  /** Both multivector generators: ONE adaptive multivector search job
-    * for every query set in the batch — the relation route's whole point
-    * (a literal query set is its one-set case). `search(subVectors,
-    * minPq, maxPq, numPartitions)` runs the engine's searchMultiDf at
-    * `budget`, on no more partitions than there are query sets (a
-    * one-set statement stays one kernel task); candidate sets = hit
-    * sub-vector ids / c. */
+  /** The beam queue bounds (minPq, maxPq) of a routed multivector search
+    * at `budget` over a corpus of `c`-vector sets — one derivation for the
+    * distributed batch and the driver-side one-set search. */
+  private def mvQueueBounds(budget: Int, c: Int): (Int, Int) =
+    (math.max(10, budget / math.max(c, 1)), math.max(200, budget * 2))
+
+  /** Both multivector batch generators: ONE adaptive multivector search
+    * job for every query set in the batch — the relation route's whole
+    * point. `search(subVectors, minPq, maxPq, numPartitions)` runs the
+    * engine's searchMultiDf at `budget`, on no more partitions than there
+    * are query sets; candidate sets = hit sub-vector ids / c. */
   private def mvBatch(s: SparkSession, qsets: Seq[(Long, Array[Array[Float]])],
                       c: Int, budget: Int)(
       search: (DataFrame, Int, Int, Int) => DataFrame): DataFrame = {
@@ -825,7 +839,8 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
     val qdf = qsets.flatMap { case (qid, vs) =>
       vs.zipWithIndex.map { case (v, i) => (qid, i, v.toSeq) }
     }.toDF("qset_id", "q_sub", "q_vec")
-    search(qdf, math.max(10, budget / math.max(c, 1)), math.max(200, budget * 2),
+    val (minPq, maxPq) = mvQueueBounds(budget, c)
+    search(qdf, minPq, maxPq,
         math.max(1, math.min(qsets.size, s.sparkContext.defaultParallelism)))
       .select(col("qset_id"), expr(s"d_id div $c").as("dset_id"))
       .distinct()
@@ -834,19 +849,29 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
   /** [[registerMv]] with the G9 broadcast-RoarGraph generator: the
     * adaptive multivector beam search over the SUB-vector graph (the
     * g9_multivector_search kernel), candidate sets = hit sub-vector
-    * ids / c. */
+    * ids / c. Several query sets search in one distributed job; a
+    * statement with ONE query set searches on the driver
+    * ([[MvEntry.driverCandidates]]) off the broadcast values the
+    * driver already holds, with the same kernel call
+    * (`BeamSearch.searchSet`) and queue bounds. */
   def registerMvRoar(corpusSets: org.apache.spark.sql.DataFrame,
                      idCol: String, vecCol: String,
                      graphB: Broadcast[CsrGraph],
                      vecsB: Broadcast[VectorStore],
                      metricName: String, c: Int, dim: Int,
-                     budget: Int = 120, name: String = "mv_roar"): Unit =
+                     budget: Int = 120, name: String = "mv_roar"): Unit = {
+    val (minPq, maxPq) = mvQueueBounds(budget, c)
     registerMv(corpusSets, idCol, vecCol, MvEntry(
       name, corpusSets, idCol, vecCol, dim,
       (s, qsets, _) => mvBatch(s, qsets, c, budget)((qdf, minPq, maxPq, parts) =>
         BeamSearch.searchMultiDf(s, qdf, graphB, vecsB, metricName,
           minPq = minPq, maxPq = maxPq, budget = budget, adaptive = true,
-          numPartitions = parts))))
+          numPartitions = parts)),
+      driverCandidates = qs =>
+        BeamSearch.searchSet(graphB.value, vecsB.value, Metrics(metricName),
+            qs, minPq, maxPq, budget, adaptive = true)
+          .flatMap(_._1).map(id => (id / c).toLong).distinct))
+  }
 
   /** [[registerMv]] with the persisted SHARDED graph tier as the
     * generator — the SQL flagship past the broadcast ceiling: the same
@@ -1334,6 +1359,10 @@ object AnnStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   *     distributed batched search for every query (graph
   *     `searchSingleDf`, or the tier's registered batch generator); a
   *     candidate or multivector tier runs its registered generator.
+  *     ONE query set on a multivector tier with a driver-side search
+  *     (the broadcast RoarGraph tier) is searched here on the driver,
+  *     and a single id-filtered, column-pruned scan rescores it: the
+  *     statement runs two Spark jobs, that scan and the emit.
   *     Escalation happens only when a filter is carried (below).
   *  4. Rescore the bounded candidates EXACTLY with the query's own
   *     expression — off the broadcast RAW store on the graph tier (zero
@@ -1347,7 +1376,7 @@ object AnnStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   * NULL-scored corpus rows are dropped by the relation and filtered
   * shapes: the exhaustive sort orders them last, so they only matter
   * when non-null rows run out, which a candidate route cannot reproduce
-  * anyway.
+  * anyway. The literal shapes keep them, ordered last.
   *
   * FILTERED shape — escalating post-filter. Before any search, a bounded
   * probe (`limit(preFilterMax+1).count()` on the pushed-down filtered
@@ -1397,6 +1426,8 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
       "queries collected"),
     "numCandidates" -> SQLMetrics.createMetric(sparkContext,
       "candidates searched or rescored"),
+    "numDriverSearches" -> SQLMetrics.createMetric(sparkContext,
+      "query sets searched on the driver"),
     "numSurvivors" -> SQLMetrics.createMetric(sparkContext,
       "rows in the answer"),
     "numRounds" -> SQLMetrics.createMetric(sparkContext,
@@ -1420,6 +1451,9 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
           case (_, Some(f)) => answer(filteredTopK(tier, queries.head, f.plan))
           case (GraphTier(e), None) if node.literal => graphTask(e, queries.head)
           case (GraphTier(e), None) => answer(topK(graphRescored(e, queries)))
+          case (g: Generator, None)
+              if g.driverSearch != null && queries.lengthCompare(1) == 0 =>
+            answer(driverSearched(g, queries.head))
           case (g: Generator, None) => answer(topK(generatorRescored(g, queries)))
         }
       }
@@ -1509,7 +1543,7 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     * inside ONE task off the broadcast graph. */
   private def graphTask(e: AnnIndexRegistry.Entry,
                         query: (Long, Array[Array[Float]]))
-      : RDD[(Long, Long, Double)] = {
+      : RDD[ScoredRow] = {
     val (qid, qv) = (query._1, query._2.head)
     val (k, kind) = (node.k, node.scorer)
     val candidates = metrics("numCandidates")
@@ -1523,7 +1557,7 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
         .sortBy { case (id, s) => (if (kind == "l2") s else -s, id) }
         .take(k)
       survivors.add(top.length)
-      top.iterator.map { case (id, s) => (qid, id, s) }
+      top.iterator.map { case (id, s) => (qid, id, Double.box(s)) }
     }
   }
 
@@ -1597,6 +1631,27 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     }
   }
 
+  /** One query set on a tier that searches on the driver
+    * ([[AnnIndexRegistry.MvEntry.driverCandidates]]): its distinct
+    * candidate sets come from the kernel run in this thread, and ONE scan
+    * of the live corpus — filtered to those ids, column-pruned — scores
+    * them with the query's own expression. The top k is an order-by +
+    * limit (a TakeOrderedAndProject: no exchange); the relation shape
+    * first drops NULL scores as its multi-set path does, the literal
+    * shape keeps them, ordered last like the exhaustive plan. */
+  private def driverSearched(g: Generator, query: (Long, Array[Array[Float]]))
+      : Array[ScoredRow] = {
+    val (qid, vs) = query
+    val ids = g.driverSearch(vs)
+    metrics("numDriverSearches").add(1)
+    metrics("numCandidates").add(ids.length)
+    val scored = g.live().where(col(g.idCol).isInCollection(ids))
+      .select(lit(qid).as("__graft_qid"), col(g.idCol).cast("long").as("__graft_did"),
+        scoreOf(queryLiteral(vs), col(g.vecCol)).cast("double").as("__graft_score"))
+    topK(if (node.literal) scored else scored.filter(col("__graft_score").isNotNull),
+      oneQuery = true)
+  }
+
   /** The literal route's query as a typed literal column. */
   private def queryLiteral(vs: Array[Array[Float]]): org.apache.spark.sql.Column =
     if (node.setScorer) typedlit(vs.map(_.toSeq).toSeq) else typedlit(vs.head)
@@ -1616,10 +1671,12 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
   }
 
   /** Step 5: the k best rows of a (`__graft_qid`, `__graft_did`,
-    * `__graft_score`) frame per query — one TakeOrdered for a literal
-    * query; for a relation, the bounded-heap aggregator (set scorers) or
-    * a rank window (single-vector scorers). */
-  private def topK(scored: DataFrame): Array[(Long, Long, Double)] = {
+    * `__graft_score`) frame per query — one TakeOrdered for a frame of
+    * one query (a literal query by default); for a relation, the
+    * bounded-heap aggregator (set scorers) or a rank window
+    * (single-vector scorers). */
+  private def topK(scored: DataFrame, oneQuery: Boolean = node.literal)
+      : Array[ScoredRow] = {
     val spark = scored.sparkSession
     import spark.implicits._
     val (qid, did, score) =
@@ -1627,7 +1684,7 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     val order = Seq(if (node.scorer == "l2") score.asc else score.desc,
       did.asc)
     val top =
-      if (node.literal) scored.orderBy(order: _*).limit(node.k)
+      if (oneQuery) scored.orderBy(order: _*).limit(node.k)
       else if (node.setScorer)
         graft.operators.TopK.perGroupAgg(scored.filter(score.isNotNull),
             Seq(qid), score, did, node.k, idName = "__graft_did")
@@ -1639,14 +1696,14 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
               .orderBy(order: _*)))
           .filter(col("__graft_rnk") <= node.k)
           .select(qid, did, score)
-    top.as[(Long, Long, Double)].collect()
+    top.as[ScoredRow].collect()
   }
 
   /** FILTERED shape (see the class doc): pre-filter probe, then
     * escalating candidate rounds against the re-executed carried
     * `Filter(pred, scan)` subplan, then the exhaustive backstop. */
   private def filteredTopK(tier: Tier, query: (Long, Array[Array[Float]]),
-                           plan: LogicalPlan): Array[(Long, Long, Double)] = {
+                           plan: LogicalPlan): Array[ScoredRow] = {
     val spark = SparkSession.active
     import spark.implicits._
     def conf(key: String, dflt: String): String =
@@ -1663,7 +1720,7 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
 
     /** Top-k among `ids` that survive the carried predicate (`ids` null
       * = every filtered row scores). */
-    def survivors(ids: Array[Long]): Array[(Long, Long, Double)] = {
+    def survivors(ids: Array[Long]): Array[ScoredRow] = {
       val constrained =
         if (ids == null) filtered
         else if (ids.length <= IsinMax) filtered.where(id.isInCollection(ids.toSeq))
@@ -1699,7 +1756,7 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     val probeCnt =
       if (preFilterMax <= 0) Long.MaxValue
       else filtered.select(id).limit((preFilterMax + 1).toInt).count()
-    var rows: Array[(Long, Long, Double)] = Array.empty
+    var rows: Array[ScoredRow] = Array.empty
     var round = 0
     if (probeCnt <= preFilterMax || (exact && node.tier != "graph")) {
       // exact mode over a GENERATOR tier scores the full filtered scan:
@@ -1738,8 +1795,7 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
   }
 
   /** A collected answer as the one-partition RDD the emitter reads. */
-  private def answer(rows: Array[(Long, Long, Double)])
-      : RDD[(Long, Long, Double)] = {
+  private def answer(rows: Array[ScoredRow]): RDD[ScoredRow] = {
     metrics("numSurvivors").add(rows.length)
     sparkContext.parallelize(rows.toIndexedSeq, 1)
   }
@@ -1753,6 +1809,10 @@ object AnnTopKExec {
   /** Filtered shape: escalation rounds before the exhaustive backstop. */
   private val MaxRounds = 6
 
+  /** One answer row: (query id, corpus id, score). The score is boxed:
+    * a literal shape keeps NULL scores, ordered last. */
+  private type ScoredRow = (Long, Long, java.lang.Double)
+
   /** A resolved routed tier; `dim` is the corpus (sub-)vector dimension. */
   private sealed trait Tier { def dim: Int }
 
@@ -1763,12 +1823,15 @@ object AnnTopKExec {
   /** A candidate or multivector tier, normalized: `one` yields a single
     * query's candidate ids under `__graft_cand_id`; `batch` the
     * (`__graft_qid`, `__graft_cand_id`) pairs of a whole query relation
-    * in one distributed job; both are rescored against `live()`, the
-    * (possibly refreshed) full-precision corpus. */
+    * in one distributed job; `driverSearch` (null unless the tier has
+    * one) a single query's distinct candidate ids, searched on the
+    * driver. All are rescored against `live()`, the (possibly refreshed)
+    * full-precision corpus. */
   private final case class Generator(
       live: () => DataFrame, idCol: String, vecCol: String, dim: Int,
       one: (SparkSession, Array[Array[Float]], Int) => DataFrame,
-      batch: (SparkSession, Seq[(Long, Array[Array[Float]])], Int) => DataFrame)
+      batch: (SparkSession, Seq[(Long, Array[Array[Float]])], Int) => DataFrame,
+      driverSearch: Array[Array[Float]] => Array[Long] = null)
       extends Tier
 
   private object Generator {
@@ -1790,7 +1853,8 @@ object AnnTopKExec {
           .select(col("dset_id").as("__graft_cand_id")),
         (s, qs, k) => e.candidatesBatch(s, qs, k)
           .select(col("qset_id").as("__graft_qid"),
-            col("dset_id").as("__graft_cand_id")))
+            col("dset_id").as("__graft_cand_id")),
+        e.driverCandidates)
   }
 
   /** One beam search of `q` over a graph entry (driver- or task-side). */
@@ -1843,7 +1907,7 @@ object AnnTopKExec {
     * lives here, not on the exec, so the task closure captures only the
     * slot map and the schema, never the exec and the logical subplans
     * its node carries. */
-  private def emit(rows: RDD[(Long, Long, Double)], output: Seq[Attribute],
+  private def emit(rows: RDD[ScoredRow], output: Seq[Attribute],
                    queryId: ExprId): RDD[InternalRow] = {
     val slots = output.map(a =>
       if (a.exprId == queryId) 0 else if (a.dataType == LongType) 1 else 2)

@@ -1993,6 +1993,41 @@ class AnnRewriteSpec extends AnyFunSuite {
       assert(mexec.nodeName === "MvJoinTopK")
       assert(mexec.metrics("numQueries").value === 3L)
       assert(mexec.metrics("numSurvivors").value === mrows.length.toLong)
+      // several query sets search in one distributed job
+      assert(mexec.metrics("numDriverSearches").value === 0L)
+      // one query set searches on the driver, in either spelling; its
+      // distinct candidate sets are what the rescoring scan reads
+      val qLit = sets.filter(col("dset_id") === 1L).select("vec_set").first()
+        .getSeq[scala.collection.Seq[Float]](0)
+        .map(_.map(x => s"${x}F").mkString("array(", ", ", ")"))
+        .mkString("array(", ", ", ")")
+      sets.filter(col("dset_id") === 1L)
+        .select(col("dset_id").as("qset_id"), col("vec_set"))
+        .createOrReplaceTempView("metrics_mv_one_query")
+      for ((oneSql, shape) <- Seq(
+          (s"""SELECT dset_id, graft_chamfer_score($qLit, vec_set) AS score
+              |FROM metrics_sets ORDER BY score DESC LIMIT 5""".stripMargin,
+            "AnnSearch"),
+          ("""SELECT qset_id, dset_id, score FROM (
+             |  SELECT q.qset_id, d.dset_id,
+             |         graft_chamfer_score(q.vec_set, d.vec_set) AS score,
+             |         row_number() OVER (PARTITION BY q.qset_id
+             |           ORDER BY graft_chamfer_score(q.vec_set, d.vec_set) DESC,
+             |                    d.dset_id ASC) AS rnk
+             |  FROM metrics_mv_one_query q CROSS JOIN metrics_sets d) t
+             |WHERE rnk <= 5""".stripMargin, "MvJoinTopK"))) {
+        val odf = spark.sql(oneSql)
+        val orows = odf.collect()
+        val oexec = odf.queryExecution.executedPlan.collectFirst {
+          case x: graft.plans.AnnTopKExec => x
+        }.getOrElse(fail(s"$shape not in plan"))
+        assert(oexec.nodeName === shape)
+        assert(oexec.metrics("numQueries").value === 1L)
+        assert(oexec.metrics("numDriverSearches").value === 1L, shape)
+        assert(oexec.metrics("numCandidates").value >= orows.length.toLong)
+        assert(oexec.metrics("numSurvivors").value === orows.length.toLong)
+        assert(orows.length === 5)
+      }
       // the query-side cap: a relation past maxQueries fails loudly
       // instead of collecting unboundedly into the driver
       spark.conf.set("spark.graft.ann.relation.maxQueries", "5")

@@ -152,11 +152,11 @@ class RoutedJobsSpec extends AnyFunSuite {
         s"""SELECT jsid, graft_chamfer_score($qLit, jset) AS score
            |FROM jobs_sets ORDER BY score DESC LIMIT 10""".stripMargin,
         "AnnSearch")
-      // the one query set is searched on one partition, which already
-      // satisfies the candidate dedup's distribution: no dedup shuffle
-      assert(n.jobs === 4)
-      assert(n.stages === 4)
-      assert(n.tasks === 7)
+      // the one query set is searched on the driver: one scan of the set
+      // corpus rescores its candidates, one job emits the answer
+      assert(n.jobs === 2)
+      assert(n.stages === 2)
+      assert(n.tasks === 2)
     }
   }
 
@@ -196,6 +196,33 @@ class RoutedJobsSpec extends AnyFunSuite {
           |  FROM jobs_sv_queries q CROSS JOIN jobs_graph d) t
           |WHERE rnk <= 10""".stripMargin,
         "SvJoinTopK") === 4)
+    }
+  }
+
+  test("multivector relation route, one local query set: the interactive client's statement") {
+    fixture
+    import spark.implicits._
+    // one row of local data, as an interactive client sends it
+    spark.table("jobs_sets").filter(col("jsid") === 1L)
+      .select(col("jsid").as("qset_id"), col("jset")).collect()
+      .map(r => (r.getLong(0), r.getSeq[scala.collection.Seq[Float]](1).map(_.toSeq)))
+      .toSeq.toDF("qset_id", "jset").createOrReplaceTempView("jobs_mv_one_query")
+    routed() {
+      val n = countsOf(
+        """SELECT qset_id, jsid, score FROM (
+          |  SELECT q.qset_id, d.jsid,
+          |         graft_chamfer_score(q.jset, d.jset) AS score,
+          |         row_number() OVER (PARTITION BY q.qset_id
+          |           ORDER BY graft_chamfer_score(q.jset, d.jset) DESC,
+          |                    d.jsid ASC) AS rnk
+          |  FROM jobs_mv_one_query q CROSS JOIN jobs_sets d) t
+          |WHERE rnk <= 10""".stripMargin,
+        "MvJoinTopK")
+      // read without a job, searched on the driver, then the literal
+      // shape's two jobs
+      assert(n.jobs === 2)
+      assert(n.stages === 2)
+      assert(n.tasks === 2)
     }
   }
 
