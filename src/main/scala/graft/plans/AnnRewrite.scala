@@ -44,34 +44,58 @@ import graft.index.{BeamQueue, BeamSearch, CsrGraph, Metrics, VectorStore, Visit
   */
 object AnnIndexRegistry extends org.apache.spark.internal.Logging {
 
+  /** What a registration routes to: the broadcast graph ([[Entry]]), a
+    * candidate tier ([[CandidateTierEntry]]) or a multivector tier
+    * ([[MvEntry]]). */
+  sealed trait Routable
+
   /** `searchVecs` is the metric-normalized store the graph was built on;
     * `rawVecs` keeps the unnormalized vectors for exact rescoring. */
   case class Entry(graphB: Broadcast[CsrGraph], searchVecsB: Broadcast[VectorStore],
                    rawVecsB: Broadcast[VectorStore], metricName: String,
-                   searchL: Int)
+                   searchL: Int) extends Routable
 
-  // keyed by (idCol, vecCol, EXACT metric name): an entry built on "l2"
-  // serves ORDER-BY-l2²-ASC queries; dot-DESC prefers an "ip" entry and
-  // falls back to "cosine". The exact-name key means registering a
-  // cosine-metric AND an ip-metric index on the same columns keeps both
-  // (they used to silently overwrite under a collapsed 'ip' kind); the
-  // cosine fallback is sound for SCORES always (exact rescoring) but its
-  // candidate geometry matches dot ordering only on a normalized corpus
-  // — registering a cosine graph for dot routing is the registrant's
-  // assertion that the corpus is normalized enough, and the recall gates
-  // are the check.
-  private val entries = new TrieMap[(String, String, String), (String, Entry)]
+  /** One registration: the entry, and for a candidate tier its measured
+    * coarse cost — `cost`, the EWMA of observed seconds per query;
+    * `sidecar`, the path it persists to (null = in memory only); and
+    * `lastPersist`, the nanos of the last sidecar write (the write
+    * throttle's state). */
+  private case class Registration(entry: Routable, cost: Option[Double] = None,
+                                  sidecar: String = null,
+                                  lastPersist: Option[Long] = None)
+
+  /** (idCol, vecCol, metric, corpus fingerprint, slot). The slot is
+    * "graph" for the graph tier, the tier name for a candidate tier and
+    * "set" (metric "set") for the multivector tier. */
+  private type Key = (String, String, String, String, String)
+
+  /** Every registration. The corpus fingerprint is part of the key, so a
+    * lookup IS the proof that a query scans the registered relation:
+    * registrations over two relations that share column names, metric
+    * and tier name stay apart, each routable for its own relation — and
+    * so do their measured costs (timings from a small corpus must not
+    * steer routing on a large one). The exact metric name is part of the
+    * key too: an entry built on "l2" serves ORDER-BY-l2²-ASC queries;
+    * dot-DESC prefers an "ip" entry and falls back to "cosine", so a
+    * cosine-metric AND an ip-metric index on the same columns both stay.
+    * The cosine fallback is sound for SCORES always (exact rescoring) but
+    * its candidate geometry matches dot ordering only on a normalized
+    * corpus — registering a cosine graph for dot routing is the
+    * registrant's assertion that the corpus is normalized enough, and
+    * the recall gates are the check. */
+  private val registrations = new TrieMap[Key, Registration]
 
   /** Query kind → acceptable index metrics, in preference order.
     * "l2" = ORDER BY graft_vec_l2sq ASC; "cos" = ORDER BY
     * graft_vec_cosine DESC (served ONLY by cosine-metric entries —
     * their normalized geometry IS cosine ordering, no corpus caveat);
-    * "dot" = ORDER BY graft_vec_dot DESC ("ip" preferred; a cosine
-    * entry is the registrant's normalized-corpus assertion, see the
-    * entries comment above). */
+    * the set scorers = the multivector tier; "dot" = ORDER BY
+    * graft_vec_dot DESC ("ip" preferred; a cosine entry is the
+    * registrant's normalized-corpus assertion, see [[registrations]]). */
   private def routeMetrics(kind: String): Seq[String] = kind match {
     case "l2" => Seq("l2")
     case "cos" => Seq("cosine")
+    case "chamfer" | "maxsim" | "set" => Seq("set")
     case _ => Seq("ip", "cosine")
   }
 
@@ -129,23 +153,30 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
     * or a Filter/Sample between the Project and the scan, never match. */
   def register(corpus: DataFrame, idCol: String, vecCol: String,
                entry: Entry): Unit =
-    entries.put((idCol, vecCol, entry.metricName), (corpusFingerprint(corpus), entry))
+    put((idCol, vecCol, entry.metricName, corpusFingerprint(corpus), "graph"),
+      entry)
 
-  def lookup(idCol: String, vecCol: String, kind: String): Option[Entry] =
+  /** Install `entry` at `key`. A re-registration at the same key keeps
+    * the cost measured in this session; otherwise the cost starts from
+    * `seed` (a candidate tier's persisted sidecar). */
+  private def put(key: Key, entry: Routable, sidecar: String = null,
+                  seed: => Option[Double] = None): Unit = {
+    lazy val seeded = seed // updateWith may retry; read the sidecar once
+    registrations.updateWith(key) {
+      case Some(r) => Some(r.copy(entry = entry, sidecar = sidecar,
+        cost = r.cost.orElse(seeded)))
+      case None => Some(Registration(entry, seeded, sidecar))
+    }
+  }
+
+  /** The registration in one `slot` ("graph", a tier name, or "set")
+    * over the relation fingerprinted `fp`, under the first metric that
+    * serves `kind`: the key itself proves the relation. */
+  def lookupSlot(idCol: String, vecCol: String, kind: String, fp: String,
+                 slot: String): Option[Routable] =
     routeMetrics(kind).iterator
-      .flatMap(m => entries.get((idCol, vecCol, m))).map(_._2)
-      .nextOption()
-
-  /** Lookup that also proves `child` IS the registered corpus relation. */
-  def lookupFor(idCol: String, vecCol: String, kind: String,
-                child: LogicalPlan): Option[Entry] =
-    routeMetrics(kind).iterator.flatMap { m =>
-      for {
-        (fp, entry) <- entries.get((idCol, vecCol, m))
-        childFp <- scanFingerprint(child)
-        if childFp == fp
-      } yield entry
-    }.nextOption()
+      .flatMap(m => registrations.get((idCol, vecCol, m, fp, slot)))
+      .map(_.entry).nextOption()
 
   /** The PLUGGABLE candidate tier behind the SQL route — any ANN
     * candidate generator (IVF-PQ, LSH, random-projection, user-defined)
@@ -196,7 +227,7 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
       /** True for certificate fixtures registered under a nonstandard
         * name (deleted / grown twins): reachable only by explicit
         * `spark.graft.ann.tier` preference, never by the cost race —
-        * see [[chooseTier]]. */
+        * see [[lookupTierFor]]. */
       certificateOnly: Boolean = false,
       /** Optional path of a tiny persisted-EWMA sidecar (written
         * best-effort beside the tier's index): [[registerTier]] seeds
@@ -204,7 +235,7 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
         * the PREVIOUS session's learned order instead of re-learning
         * from static hints; [[recordMeasuredCost]] keeps it current.
         * null = in-memory only (data-backed tiers with no path). */
-      costSidecar: String = null) {
+      costSidecar: String = null) extends Routable {
     /** The relation to rescore against: refreshed when the registrant
       * declared the corpus grow-in-place, else the registration
       * snapshot. */
@@ -212,91 +243,66 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
       if (dataRefresh != null) dataRefresh() else data
   }
 
-  /** All candidate tiers per (idCol, vecCol, metric), keyed by tier
-    * name — MULTIPLE tiers may now serve one corpus (e.g. an IVF-PQ
-    * codes index AND an SQ8 byte index); the chooser picks by cost. */
-  private val tierEntries =
-    new TrieMap[(String, String, String), Map[String, (String, CandidateTierEntry)]]
-
-  /** MEASURED coarse-stage cost per (key, corpus fingerprint, tier
-    * name): EWMA of observed seconds-per-query for the tier's
-    * candidate generator, recorded by the instrumented wrappers
-    * [[registerTier]] installs. The static
+  /** MEASURED coarse-stage cost of a registered candidate tier: EWMA
+    * of observed seconds-per-query for the tier's generator, recorded by
+    * the instrumented wrappers [[registerTier]] installs. The static
     * [[CandidateTierEntry.costHint]] is an a-priori bytes-fraction
     * estimate; once every open competitor for a key has real
     * measurements the chooser prefers those (same units, honestly
     * comparable), so a mis-estimated hint cannot keep routing queries
-    * to the slower tier. The FINGERPRINT in the key scopes every
-    * measurement to the registered relation, like the tier entries
-    * themselves: two corpora sharing column names, metric, and tier
-    * name must not pool one EWMA — timings from a small corpus would
-    * steer routing on a large one. Saturating certificate modes
+    * to the slower tier. A record for a key with no registration is
+    * dropped: it could never steer routing. Saturating certificate modes
     * (`relation.exact` / `filtered.exact`) never record — their costs
-    * reflect saturation, not production probes. */
-  private val measuredCosts =
-    new TrieMap[((String, String, String, String), String), Double]
-
+    * reflect saturation, not production probes.
+    *
+    * Persistence is best-effort: a serving session's learned routing
+    * order survives restart (seeded back at [[registerTier]]) instead of
+    * every fresh session re-learning from static hints. THROTTLED — the
+    * sidecar needs approximate freshness only, and an unthrottled write
+    * is a full remote PUT per measured query batch on the serving hot
+    * path: the first measurement persists immediately (a short-lived
+    * session still seeds), later ones at most once per
+    * `spark.graft.ann.costSidecarMinIntervalMs` (default 30 s; 0
+    * restores write-every-record). */
   private[graft] def recordMeasuredCost(idCol: String, vecCol: String,
                                         metric: String, fp: String,
                                         tier: String,
                                         secPerQuery: Double): Unit = {
-    val k = ((idCol, vecCol, metric, fp), tier)
-    val updated = measuredCosts.updateWith(k) {
-      case Some(prev) => Some(0.7 * prev + 0.3 * secPerQuery) // EWMA
-      case None => Some(secPerQuery)
-    }
-    // best-effort persistence: a serving session's learned routing
-    // order survives restart (seeded back at registerTier) instead of
-    // every fresh session re-learning from static hints. THROTTLED —
-    // the sidecar needs approximate freshness only, and an unthrottled
-    // write is a full remote PUT per measured query batch on the
-    // serving hot path: the first measurement persists immediately (a
-    // short-lived session still seeds), later ones at most once per
-    // `spark.graft.ann.costSidecarMinIntervalMs` (default 30 s; 0
-    // restores write-every-record).
-    for (u <- updated; sc <- costSidecars.get(k)) {
-      val intervalMs =
-        try SparkSession.active.conf
-          .get("spark.graft.ann.costSidecarMinIntervalMs", "30000").toLong
-        catch { case scala.util.control.NonFatal(_) => 30000L }
-      val now = System.nanoTime()
-      val due = sidecarLastPersist.get(k)
-        .forall(last => now - last >= intervalMs * 1000000L)
-      if (due) {
-        sidecarLastPersist.put(k, now)
-        writeCostSidecar(sc, u)
-      }
-    }
+    val intervalMs =
+      try SparkSession.active.conf
+        .get("spark.graft.ann.costSidecarMinIntervalMs", "30000").toLong
+      catch { case scala.util.control.NonFatal(_) => 30000L }
+    val now = System.nanoTime()
+    var write: Option[(String, Double)] = None
+    registrations.updateWith((idCol, vecCol, metric, fp, tier))(_.map { r =>
+      val cost = r.cost.fold(secPerQuery)(0.7 * _ + 0.3 * secPerQuery) // EWMA
+      val due = r.sidecar != null &&
+        r.lastPersist.forall(now - _ >= intervalMs * 1000000L)
+      write = if (due) Some((r.sidecar, cost)) else None
+      r.copy(cost = Some(cost), lastPersist = if (due) Some(now) else r.lastPersist)
+    })
+    write.foreach { case (path, v) => writeCostSidecar(path, v) }
   }
-
-  /** Last sidecar persist (nanos) per measured-cost key — the write
-    * throttle's state. */
-  private val sidecarLastPersist =
-    new TrieMap[((String, String, String, String), String), Long]
 
   private[graft] def measuredCost(idCol: String, vecCol: String,
                                   metric: String, fp: String,
                                   tier: String): Option[Double] =
-    measuredCosts.get(((idCol, vecCol, metric, fp), tier))
+    registrations.get((idCol, vecCol, metric, fp, tier)).flatMap(_.cost)
 
-  /** The registered corpus fingerprint for (key, tier name) — lets
-    * callers (and specs) address the fingerprint-scoped measured-cost
-    * store without recomputing the scan fingerprint. */
+  /** A registered corpus fingerprint for (idCol, vecCol, metric, tier
+    * name) — lets specs address the fingerprint-scoped measured costs
+    * without recomputing the scan fingerprint. */
   private[graft] def registeredFp(idCol: String, vecCol: String,
                                   metric: String,
                                   tier: String): Option[String] =
-    tierEntries.get((idCol, vecCol, metric)).flatMap(_.get(tier))
-      .map(_._1)
+    registrations.keysIterator.collectFirst {
+      case (`idCol`, `vecCol`, `metric`, fp, `tier`) => fp
+    }
 
-  private[graft] def clearMeasuredCosts(): Unit = {
-    measuredCosts.clear()
-    sidecarLastPersist.clear()
-  }
-
-  /** Persisted-EWMA sidecar path per measured-cost key, installed by
-    * [[registerTier]] for path-backed tiers. */
-  private val costSidecars =
-    new TrieMap[((String, String, String, String), String), String]
+  /** Forget every measured cost (and sidecar write time); the
+    * registrations stay. */
+  private[graft] def clearMeasuredCosts(): Unit =
+    registrations.mapValuesInPlace((_, r) => r.copy(cost = None, lastPersist = None))
 
   private def writeCostSidecar(path: String, v: Double): Unit =
     try {
@@ -309,7 +315,8 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
 
   private def readCostSidecar(spark: SparkSession,
                               path: String): Option[Double] =
-    try {
+    if (path == null) None
+    else try {
       val p = new org.apache.hadoop.fs.Path(path)
       val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!f.exists(p)) None
@@ -323,13 +330,15 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
 
   /** Register a candidate tier over `corpus` (a bare scan) — same
     * fingerprint proof as [[register]], so only queries over THIS
-    * relation route to it. Tiers accumulate per (idCol, vecCol,
-    * metric); re-registering the same tier NAME replaces it. Selection:
+    * relation route to it. Several tiers may serve one corpus (e.g. an
+    * IVF-PQ codes index AND an SQ8 byte index); re-registering the same
+    * tier NAME over the same relation replaces it. Selection:
     * `spark.graft.ann.tier` forces a name ("graph" forces the broadcast
     * graph; a name with no registration = no routing, exhaustive plan);
     * otherwise the lowest cost wins — measured ([[recordMeasuredCost]])
     * once every competitor has one, [[CandidateTierEntry.costHint]]
-    * until then.
+    * until then. A path-backed tier seeds its measured cost from its
+    * persisted sidecar unless this session already measured one.
     *
     * The generator functions are INSTRUMENTED here: each invocation
     * eagerly materializes the (bounded, output-sized) candidate set via
@@ -338,8 +347,8 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
     * join is shared by every route. */
   def registerTier(corpus: org.apache.spark.sql.DataFrame, idCol: String,
                    vecCol: String, entry: CandidateTierEntry): Unit = {
+    require(entry.name != "graph", "tier name 'graph' is the broadcast graph's")
     val fp = corpusFingerprint(corpus)
-    val key = (idCol, vecCol, entry.metricName)
     def saturating(s: SparkSession): Boolean =
       relationExact(s) ||
       s.conf.getOption("spark.graft.ann.filtered.exact")
@@ -363,56 +372,38 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
         if (entry.candidatesBatch == null) null
         else (s, qs, k) =>
           timed(s, qs.size)(entry.candidatesBatch(s, qs, k)))
-    if (entry.costSidecar != null) {
-      val ck = ((idCol, vecCol, entry.metricName, fp), entry.name)
-      costSidecars.put(ck, entry.costSidecar)
-      // seed from the persisted EWMA so the first queries of a fresh
-      // session route on the prior session's measured order — but
-      // never clobber a measurement this session already took
-      if (!measuredCosts.contains(ck))
-        readCostSidecar(corpus.sparkSession, entry.costSidecar)
-          .foreach(measuredCosts.putIfAbsent(ck, _))
-    }
-    tierEntries.updateWith(key) {
-      case Some(m) => Some(m + (entry.name -> ((fp, instrumented))))
-      case None => Some(Map(entry.name -> ((fp, instrumented))))
-    }
+    put((idCol, vecCol, entry.metricName, fp, entry.name), instrumented,
+      entry.costSidecar,
+      readCostSidecar(corpus.sparkSession, entry.costSidecar))
   }
 
-  /** Pick among a key's registered tiers: the `preferred` name when
-    * given; else min measured cost when EVERY open competitor has a
-    * measurement (seconds are only comparable to seconds — one
-    * measured tier must not race its seconds against another's
-    * bytes-fraction estimate); else min (costHint, name). */
-  private def chooseTier(key: (String, String, String),
-                         m: Map[String, (String, CandidateTierEntry)],
-                         preferred: Option[String])
-      : Option[(String, CandidateTierEntry)] =
-    preferred match {
-      case Some(name) => m.get(name)
-      case None =>
-        // certificate registrations (nonstandard names — deleted /
-        // grown fixtures) are reachable ONLY by explicit
-        // spark.graft.ann.tier preference: the registry is
-        // process-global, so letting a masked certificate tier win the
-        // cost race would silently apply its deletions/fixture state
-        // to unrelated queries
-        val open = m.filterNot(_._2._2.certificateOnly)
-        if (open.isEmpty) None
-        else {
-          // fingerprint-scoped lookup: each tier's measurements are
-          // keyed by ITS registered relation, like the entry itself
-          val measured = open.iterator.map { case (n, (fp, _)) =>
-            n -> measuredCosts.get(((key._1, key._2, key._3, fp), n))
-          }.toMap
-          if (open.size > 1 && measured.valuesIterator.forall(_.isDefined))
-            Some(open.minBy { case (name, _) =>
-              (measured(name).get, name) }._2)
-          else
-            Some(open.minBy { case (name, (_, e)) =>
-              (e.costHint, name) }._2)
-        }
-    }
+  /** The candidate tier that serves a `kind` query over the relation
+    * fingerprinted `fp`: the `preferred` name when given; else, among
+    * the open tiers (certificate registrations are reachable ONLY by
+    * explicit preference — the registry is process-global, so letting a
+    * masked certificate tier win the cost race would silently apply its
+    * deletions/fixture state to unrelated queries), min measured cost
+    * when EVERY open competitor has a measurement (seconds are only
+    * comparable to seconds — one measured tier must not race its
+    * seconds against another's bytes-fraction estimate); else min
+    * (costHint, name). */
+  def lookupTierFor(idCol: String, vecCol: String, kind: String, fp: String,
+                    preferred: Option[String] = None)
+      : Option[CandidateTierEntry] = preferred match {
+    case Some(name) => lookupSlot(idCol, vecCol, kind, fp, name)
+      .collect { case e: CandidateTierEntry => e }
+    case None => routeMetrics(kind).iterator.flatMap { m =>
+      val open = registrations.iterator.collect {
+        case ((`idCol`, `vecCol`, `m`, `fp`, _),
+            Registration(e: CandidateTierEntry, cost, _, _))
+            if !e.certificateOnly => (e, cost)
+      }.toSeq
+      if (open.isEmpty) None
+      else if (open.size > 1 && open.forall(_._2.isDefined))
+        Some(open.minBy { case (e, c) => (c.get, e.name) }._1)
+      else Some(open.minBy { case (e, _) => (e.costHint, e.name) }._1)
+    }.nextOption()
+  }
 
   /** [[registerTier]] with the built-in IVF-PQ generator: candidates by
     * partition-pruned probe + ADC over a
@@ -721,43 +712,6 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
           s"rescore join; pass refresh= to $registerFn")
   }
 
-  def lookupTier(idCol: String, vecCol: String, kind: String,
-                 preferred: Option[String] = None): Option[CandidateTierEntry] =
-    lookupTierWithFp(idCol, vecCol, kind, preferred).map(_._2)
-
-  /** [[lookupTier]] plus the registered corpus fingerprint — execute-time
-    * callers re-verify it against the fingerprint proven at plan time,
-    * and pass the planned tier NAME as `preferred` so execution resolves
-    * the same tier the chooser picked. */
-  def lookupTierWithFp(idCol: String, vecCol: String, kind: String,
-                       preferred: Option[String] = None)
-      : Option[(String, CandidateTierEntry)] =
-    routeMetrics(kind).iterator
-      .flatMap(m => tierEntries.get((idCol, vecCol, m))
-        .flatMap(chooseTier((idCol, vecCol, m), _, preferred)))
-      .nextOption()
-
-  /** [[lookup]] plus the registered corpus fingerprint. */
-  def lookupWithFp(idCol: String, vecCol: String,
-                   kind: String): Option[(String, Entry)] =
-    routeMetrics(kind).iterator
-      .flatMap(m => entries.get((idCol, vecCol, m)))
-      .nextOption()
-
-  def lookupTierFor(idCol: String, vecCol: String, kind: String,
-                    child: LogicalPlan,
-                    preferred: Option[String] = None)
-      : Option[CandidateTierEntry] =
-    routeMetrics(kind).iterator.flatMap { m =>
-      for {
-        byName <- tierEntries.get((idCol, vecCol, m))
-        childFp <- scanFingerprint(child)
-        // only tiers registered over THIS relation compete for the query
-        (_, entry) <- chooseTier((idCol, vecCol, m),
-          byName.filter { case (_, (fp, _)) => fp == childFp }, preferred)
-      } yield entry
-    }.nextOption()
-
   /** The SET-LEVEL (multivector) tier behind the flagship SQL shape
     *
     * ```sql
@@ -802,24 +756,22 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
         * with no Spark job: a one-set batch runs on a single kernel task
         * anyway, and a job costs more than the ~1 ms kernel. Null for
         * tiers whose search must run on executors. */
-      driverCandidates: Array[Array[Float]] => Array[Long] = null) {
+      driverCandidates: Array[Array[Float]] => Array[Long] = null)
+      extends Routable {
     /** The relation to rescore against (see
       * [[CandidateTierEntry.liveData]]). */
     def liveData: org.apache.spark.sql.DataFrame =
       if (dataRefresh != null) dataRefresh() else data
   }
 
-  // keyed by (idCol, vecCol, corpus fingerprint): several set relations
-  // (e.g. the standard route and a saturating-budget twin over a second
-  // parquet copy) register independently and resolve by the relation a
-  // query actually scans
-  private val mvEntries = new TrieMap[(String, String, String), MvEntry]
-
   /** Register the multivector tier over `corpusSets` (a bare scan of
-    * the set-level relation) — same fingerprint proof as [[register]]. */
+    * the set-level relation) — same fingerprint proof as [[register]]:
+    * several set relations (e.g. the standard route and a
+    * saturating-budget twin over a second parquet copy) register
+    * independently and resolve by the relation a query actually scans. */
   def registerMv(corpusSets: DataFrame, idCol: String, vecCol: String,
                  entry: MvEntry): Unit =
-    mvEntries.put((idCol, vecCol, corpusFingerprint(corpusSets)), entry)
+    put((idCol, vecCol, "set", corpusFingerprint(corpusSets), "set"), entry)
 
   /** The beam queue bounds (minPq, maxPq) of a routed multivector search
     * at `budget` over a corpus of `c`-vector sets — one derivation for the
@@ -915,16 +867,12 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
       name, corpusSets, idCol, vecCol, dim, batch, dataRefresh = refresh))
   }
 
+  /** The multivector tier registered over the relation `child` scans. */
   def lookupMvFor(idCol: String, vecCol: String,
                   child: LogicalPlan): Option[MvEntry] =
-    scanFingerprint(child).flatMap(fp => mvEntries.get((idCol, vecCol, fp)))
-
-  def lookupMv(idCol: String, vecCol: String, fp: String): Option[MvEntry] =
-    mvEntries.get((idCol, vecCol, fp))
-
-  def clear(): Unit = {
-    entries.clear(); tierEntries.clear(); mvEntries.clear()
-  }
+    scanFingerprint(child)
+      .flatMap(lookupSlot(idCol, vecCol, "set", _, "set"))
+      .collect { case e: MvEntry => e }
 }
 
 /** Opaque carrier for a `LogicalPlan` fragment inside another node's
@@ -963,12 +911,12 @@ case class OpaqueSubplan(plan: LogicalPlan, tag: String) {
   * `tier` is the physical generator the rule chose ("graph" = the
   * broadcast RoarGraph; otherwise a registered candidate or multivector
   * tier's name). `fingerprint` pins the corpus relation the rule proved
-  * at plan time; the exec re-verifies it, so a registry re-registration
-  * for the same (idCol, vecCol, metric) over a DIFFERENT relation between
-  * planning and execution fails loudly instead of answering from the
-  * wrong corpus. `output` is the corpus id and the score of a literal
-  * query, in the user's projection order, or (query id, corpus id,
-  * score) of a relation query. */
+  * at plan time; it is part of the registry key the exec resolves, so a
+  * registration of the same (idCol, vecCol, metric) over a DIFFERENT
+  * relation between planning and execution never answers this plan.
+  * `output` is the corpus id and the score of a literal query, in the
+  * user's projection order, or (query id, corpus id, score) of a
+  * relation query. */
 case class AnnTopKNode(output: Seq[Attribute], child: LogicalPlan,
                        queryId: Attribute, queryVec: Attribute,
                        idName: String, vecName: String, k: Int,
@@ -1110,20 +1058,21 @@ object AnnTopKRule extends Rule[LogicalPlan] {
     * like the exhaustive expression would; a relation instead needs a
     * tier that registered a BATCH generator. */
   private def chooseTier(idName: String, vecName: String, kind: String,
-                         corpus: LogicalPlan,
+                         corpus: LogicalPlan, fp: String,
                          queryDim: Option[Int]): Option[String] = {
     val pref = SQLConf.get.getConfString("spark.graft.ann.tier", "").trim
     val ceiling = org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(SQLConf.get.getConfString(
         "spark.graft.ann.broadcastMaxBytes", "4g"))
     val graphEntry = AnnIndexRegistry
-      .lookupFor(idName, vecName, kind, corpus)
-      .filter(e => queryDim.forall(_ == e.rawVecsB.value.dim))
+      .lookupSlot(idName, vecName, kind, fp, "graph")
+      .collect { case e: AnnIndexRegistry.Entry
+        if queryDim.forall(_ == e.rawVecsB.value.dim) => e }
     val graph = graphEntry
       .filter(_ => corpus.stats.sizeInBytes <= BigInt(ceiling))
       .map(_ => "graph")
     def tiers(p: Option[String]) = AnnIndexRegistry
-      .lookupTierFor(idName, vecName, kind, corpus, p)
+      .lookupTierFor(idName, vecName, kind, fp, p)
       .filter(t => queryDim.fold(t.candidatesBatch != null)(_ == t.dim))
       .map(_.name)
     if (pref == "graph") graphEntry.map(_ => "graph")
@@ -1232,7 +1181,7 @@ object AnnTopKRule extends Rule[LogicalPlan] {
         if (AnnTopKNode.isSetScorer(scorer))
           AnnIndexRegistry.lookupMvFor(dsetAttr.name, dVec.name, dSide)
             .map(_.name)
-        else chooseTier(dsetAttr.name, dVec.name, scorer, dSide, None)
+        else chooseTier(dsetAttr.name, dVec.name, scorer, dSide, fp, None)
     } yield p.copy(child = AnnTopKNode(
       Seq(qsetAttr, dsetAttr, scoreAlias.toAttribute), qSide, qsetAttr,
       qVec, dsetAttr.name, dVec.name, k, scorer, tier, fp))
@@ -1276,13 +1225,13 @@ object AnnTopKRule extends Rule[LogicalPlan] {
       if idAttr.dataType == LongType
       // the set route has no filtered variant
       if filterCond.isEmpty || !AnnTopKNode.isSetScorer(scorer)
+      fp <- AnnIndexRegistry.scanFingerprint(scanChild)
       tier <-
         if (AnnTopKNode.isSetScorer(scorer))
           AnnIndexRegistry.lookupMvFor(idAttr.name, vecAttr.name, scanChild)
             .filter(e => query.forall(_.length == e.dim)).map(_.name)
-        else chooseTier(idAttr.name, vecAttr.name, scorer, scanChild,
+        else chooseTier(idAttr.name, vecAttr.name, scorer, scanChild, fp,
           Some(query.head.length))
-      fp <- AnnIndexRegistry.scanFingerprint(scanChild)
     } yield {
       val (qType, qData) =
         if (AnnTopKNode.isSetScorer(scorer))
@@ -1336,6 +1285,22 @@ object AnnStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case n: AnnTopKNode => AnnTopKExec(n, planLater(n.child)) :: Nil
     case _ => Nil
+  }
+}
+
+object AnnRewrite {
+  /** Make `s` able to route: the graft SQL functions plus [[AnnTopKRule]]
+    * and [[AnnStrategy]] (installed once per session). Routing itself
+    * stays opt-in via `spark.graft.ann.rewrite`. */
+  def install(s: SparkSession): Unit = {
+    graft.functions.GraftFunctions.register(s)
+    val cls = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    if (!cls.experimental.extraOptimizations.contains(AnnTopKRule)) {
+      cls.experimental.extraOptimizations =
+        cls.experimental.extraOptimizations :+ AnnTopKRule
+      cls.experimental.extraStrategies =
+        cls.experimental.extraStrategies :+ AnnStrategy
+    }
   }
 }
 
@@ -1507,37 +1472,18 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     queries
   }
 
-  /** Step 2: the planned tier, re-resolved from the registry and proven
-    * to still serve the planned corpus relation. */
-  private def resolveTier(): Tier = {
-    def vanished(what: String): Nothing =
-      sys.error(s"$what for (${node.idName}, ${node.vecName}) vanished")
-    def checkFingerprint(storedFp: String, what: String): Unit =
-      if (node.fingerprint.nonEmpty && storedFp != node.fingerprint)
-        sys.error(s"$what for (${node.idName}, ${node.vecName}) was " +
-          "re-registered over a different relation after planning " +
-          s"(planned ${node.fingerprint}, registry has $storedFp)")
-    if (node.setScorer)
-      // the fingerprint is part of the multivector key, so the lookup
-      // itself proves the planned relation is still the registered one
-      AnnIndexRegistry.lookupMv(node.idName, node.vecName, node.fingerprint)
-        .map(Generator.of)
-        .getOrElse(vanished(s"multivector tier '${node.tier}'"))
-    else if (node.tier == "graph") {
-      val (fp, e) = AnnIndexRegistry
-        .lookupWithFp(node.idName, node.vecName, node.scorer)
-        .getOrElse(vanished("ANN index"))
-      checkFingerprint(fp, "ANN index")
-      GraphTier(e)
-    } else {
-      val (fp, e) = AnnIndexRegistry
-        .lookupTierWithFp(node.idName, node.vecName, node.scorer,
-          preferred = Some(node.tier))
-        .getOrElse(vanished(s"candidate tier '${node.tier}'"))
-      checkFingerprint(fp, "candidate tier")
-      Generator.of(e)
+  /** Step 2: the planned tier, re-resolved from the registry. The
+    * planned fingerprint is part of the key, so the lookup itself proves
+    * the registration still serves the planned corpus relation. */
+  private def resolveTier(): Tier =
+    AnnIndexRegistry.lookupSlot(node.idName, node.vecName, node.scorer,
+        node.fingerprint, if (node.setScorer) "set" else node.tier) match {
+      case Some(e: AnnIndexRegistry.Entry) => GraphTier(e)
+      case Some(e: AnnIndexRegistry.CandidateTierEntry) => Generator.of(e)
+      case Some(e: AnnIndexRegistry.MvEntry) => Generator.of(e)
+      case None => sys.error(s"tier '${node.tier}' for (${node.idName}, " +
+        s"${node.vecName}) over the planned relation vanished")
     }
-  }
 
   /** Literal query on the graph tier: beam search and exact rescore run
     * inside ONE task off the broadcast graph. */

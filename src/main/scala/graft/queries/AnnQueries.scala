@@ -858,63 +858,37 @@ object AnnQueries extends QueryPack {
        |  FROM graft_mv_queries q CROSS JOIN $setsView d) t
        |WHERE rnk <= $k""".stripMargin
 
-  /** Dedicated CHILD session for routed SQL statements: shares the
-    * SparkContext (broadcasts, cached blocks) but owns its SQLConf, so
-    * `spark.graft.ann.rewrite=true` lives HERE for the child's
-    * lifetime and the CALLER's session conf is never touched — a later
+  /** The routed CHILD session statements run in (see
+    * [[Fixtures.childSession]]): `spark.graft.ann.rewrite=true` lives
+    * there and the CALLER's session conf is never touched — a later
     * query registering its own relation on the main session can never
     * be silently routed, and the driver run leaves the main session's
     * conf exactly as it found it (QuerySmokeSpec asserts). */
-  private val routedSessions = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, SparkSession]()
-
   private def routedSession(s: SparkSession): SparkSession =
-    routedSessions.computeIfAbsent(s, _ => {
-      val child = s.newSession()
-      child.conf.set("spark.graft.ann.rewrite", "true")
-      child
-    })
+    Fixtures.childSession(s, "spark.graft.ann.rewrite" -> "true")
 
-  /** Second routed child for the filtered-ANN CERTIFICATE query: same
-    * shared SparkContext, but `spark.graft.ann.filtered.exact=true` so
-    * every filtered route in it jumps straight to the saturating fetch
-    * (exact answers). A separate session — not a set/unset on the shared
-    * routed one — because the conf is read at EXECUTE time and the
-    * standard rows-only variant may execute arbitrarily later. */
-  private val exactSessions = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, SparkSession]()
-
+  /** Second routed child for the filtered-ANN CERTIFICATE query:
+    * `spark.graft.ann.filtered.exact=true` so every filtered route in it
+    * jumps straight to the saturating fetch (exact answers). A separate
+    * session — not a set/unset on the shared routed one — because the
+    * conf is read at EXECUTE time and the standard rows-only variant may
+    * execute arbitrarily later. The single-vector relation route's
+    * saturating mode rides the same certificate session: l = 2n beams,
+    * exact end-to-end. */
   private def exactFilteredSession(s: SparkSession): SparkSession =
-    exactSessions.computeIfAbsent(s, _ => {
-      val child = s.newSession()
-      child.conf.set("spark.graft.ann.rewrite", "true")
-      child.conf.set("spark.graft.ann.filtered.exact", "true")
-      // the single-vector relation route's saturating mode rides the
-      // same certificate session: l = 2n beams, exact end-to-end
-      child.conf.set("spark.graft.ann.relation.exact", "true")
-      child
-    })
+    Fixtures.childSession(s, "spark.graft.ann.rewrite" -> "true",
+      "spark.graft.ann.filtered.exact" -> "true",
+      "spark.graft.ann.relation.exact" -> "true")
 
   /** Per-TIER certificate sessions (sharded / ivfpq): exact-mode child
     * with the tier FORCED by conf, so the relation route answers from
     * that tier's saturating batch generator (every shard's beam at
     * l = 2·rows / every IVF cell probed) instead of the broadcast
     * graph — the per-tier twins of [[exactFilteredSession]]. */
-  private val tierExactSessions = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), SparkSession]()
-
   private def tierExactSession(s: SparkSession, tier: String): SparkSession =
-    tierExactSessions.computeIfAbsent((s, tier), _ => {
-      val child = s.newSession()
-      child.conf.set("spark.graft.ann.rewrite", "true")
-      child.conf.set("spark.graft.ann.relation.exact", "true")
-      child.conf.set("spark.graft.ann.tier", tier)
-      child
-    })
-
-  private val filteredShardedSessions =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Boolean),
-      SparkSession]()
+    Fixtures.childSession(s, "spark.graft.ann.rewrite" -> "true",
+      "spark.graft.ann.relation.exact" -> "true",
+      "spark.graft.ann.tier" -> tier)
 
   /** knn_sql_filtered_sharded's session: rewrite on, sharded tier
     * FORCED, pre-filter short-circuit OFF (the tier must serve), exact
@@ -926,23 +900,11 @@ object AnnQueries extends QueryPack {
     * hash-green certificate (knn_sql_filtered_sharded_exact). */
   private def svFilteredShardedSetup(s: SparkSession, dir: String,
                                      exact: Boolean = false): SparkSession = {
-    import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
-    val rs = filteredShardedSessions.computeIfAbsent((s, exact), _ => {
-      val child = s.newSession()
-      child.conf.set("spark.graft.ann.rewrite", "true")
-      child.conf.set("spark.graft.ann.tier", "sharded")
-      child.conf.set("spark.graft.ann.filtered.preFilterMax", "0")
-      if (exact) child.conf.set("spark.graft.ann.filtered.exact", "true")
-      child
-    })
-    graft.functions.GraftFunctions.register(rs)
-    val cls = rs.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cls.experimental.extraOptimizations.contains(AnnTopKRule)) {
-      cls.experimental.extraOptimizations =
-        cls.experimental.extraOptimizations :+ AnnTopKRule
-      cls.experimental.extraStrategies =
-        cls.experimental.extraStrategies :+ AnnStrategy
-    }
+    import graft.plans.AnnIndexRegistry
+    val rs = Fixtures.childSession(s, "spark.graft.ann.rewrite" -> "true",
+      "spark.graft.ann.tier" -> "sharded",
+      "spark.graft.ann.filtered.preFilterMax" -> "0",
+      "spark.graft.ann.filtered.exact" -> exact.toString)
     val emb = Tables.embeddings(rs, dir)
     val dim = emb.select(size(col("embedding"))).first().getInt(0)
     AnnIndexRegistry.registerSharded(emb, "vec_id", "embedding",
@@ -958,16 +920,8 @@ object AnnQueries extends QueryPack {
     * cached per dir), (re)point the views. Idempotent per call. */
   private def svTierSqlSetup(s: SparkSession, dir: String,
                              tier: String): SparkSession = {
-    import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
+    import graft.plans.AnnIndexRegistry
     val rs = tierExactSession(s, tier)
-    graft.functions.GraftFunctions.register(rs)
-    val cls = rs.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cls.experimental.extraOptimizations.contains(AnnTopKRule)) {
-      cls.experimental.extraOptimizations =
-        cls.experimental.extraOptimizations :+ AnnTopKRule
-      cls.experimental.extraStrategies =
-        cls.experimental.extraStrategies :+ AnnStrategy
-    }
     val emb = Tables.embeddings(rs, dir)
     val dim = emb.select(size(col("embedding"))).first().getInt(0)
     // the relation the statement scans — and the registration's rescore
@@ -1100,23 +1054,12 @@ object AnnQueries extends QueryPack {
     * with IndexQueries — one build per JVM per dir) over the embeddings
     * relation with raw vectors for exact rescoring, and (re)point the
     * `graft_emb` view. Idempotent per (session, dir). */
-  private val svRawCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[graft.index.VectorStore]]()
-
   private def svSqlSetup(s: SparkSession, dir: String,
                          exact: Boolean): SparkSession = {
-    import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
+    import graft.plans.AnnIndexRegistry
     val rs = if (exact) exactFilteredSession(s) else routedSession(s)
-    graft.functions.GraftFunctions.register(rs)
-    val cls = rs.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cls.experimental.extraOptimizations.contains(AnnTopKRule)) {
-      cls.experimental.extraOptimizations =
-        cls.experimental.extraOptimizations :+ AnnTopKRule
-      cls.experimental.extraStrategies =
-        cls.experimental.extraStrategies :+ AnnStrategy
-    }
     val (graphB, vecsB) = IndexQueries.fixtureHandles(rs, dir)
-    val rawB = svRawCache.computeIfAbsent(dir, _ =>
+    val rawB = Fixtures.memo("sv_raw", dir)(
       rs.sparkContext.broadcast(graft.index.VectorStore.fromDf(
         Tables.embeddings(rs, dir), "vec_id", "embedding",
         graft.index.Metrics.InnerProduct)))
@@ -1157,27 +1100,12 @@ object AnnQueries extends QueryPack {
     * `graft_mv_sets_sat`, and the `graft_mv_queries` query-set relation
     * — and the registry at THIS dir's relations, on the ROUTED child
     * session; cheap and idempotent, so dir switches stay consistent.
-    * Cache invariant as [[ivfPqCache]]: paths and broadcasts only.
     * Returns the routed session statements should run in. */
-  private val mvSqlCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, String, String,
-      org.apache.spark.broadcast.Broadcast[graft.index.CsrGraph],
-      org.apache.spark.broadcast.Broadcast[graft.index.VectorStore],
-      String, Int)]()
-
   private def mvSqlSetup(s: SparkSession, dir: String): SparkSession = {
-    import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
+    import graft.plans.AnnIndexRegistry
     val rs = routedSession(s)
-    graft.functions.GraftFunctions.register(rs)
-    val cls = rs.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cls.experimental.extraOptimizations.contains(AnnTopKRule)) {
-      cls.experimental.extraOptimizations =
-        cls.experimental.extraOptimizations :+ AnnTopKRule
-      cls.experimental.extraStrategies =
-        cls.experimental.extraStrategies :+ AnnStrategy
-    }
     val (path, satPath, satShPath, satVgPath, graphB, vecsB, metric, dim) =
-      mvSqlCache.computeIfAbsent(dir, _ => {
+      Fixtures.memo("mv_sql", dir) {
         val e = Tables.embeddings(rs, dir)
         val sets = e.select((col("vec_id") / C).cast("long").as("dset_id"),
             (col("vec_id") % C).cast("int").as("d_sub"), col("embedding"))
@@ -1185,28 +1113,18 @@ object AnnQueries extends QueryPack {
           .agg(transform(
             array_sort(collect_list(struct(col("d_sub"), col("embedding")))),
             x => x.getField("embedding")).as("vec_set"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft_mv_sets_")
-        val sat = java.nio.file.Files.createTempDirectory("graft_mv_sat_")
-        val satSh = java.nio.file.Files.createTempDirectory("graft_mv_satsh_")
-        val satVg = java.nio.file.Files.createTempDirectory("graft_mv_satvg_")
-        sys.addShutdownHook {
-          import java.nio.file.{Files, Path}
-          import java.util.Comparator
-          Seq(tmp, sat, satSh, satVg).foreach(d =>
-            Files.walk(d).sorted(Comparator.reverseOrder[Path]())
-              .forEach(p => Files.deleteIfExists(p)))
-        }
-        sets.write.mode("overwrite").parquet(tmp.toString)
-        sets.write.mode("overwrite").parquet(sat.toString)
-        sets.write.mode("overwrite").parquet(satSh.toString)
-        sets.write.mode("overwrite").parquet(satVg.toString)
+        val Seq(tmp, sat, satSh, satVg) =
+          Seq("graft_mv_sets_", "graft_mv_sat_", "graft_mv_satsh_",
+            "graft_mv_satvg_").map(Fixtures.tempDir)
+        Seq(tmp, sat, satSh, satVg)
+          .foreach(sets.write.mode("overwrite").parquet(_))
         val idx = graft.index.GraphBuild.build(rs, e, e,
           IndexQueries.FixtureParams)
-        (tmp.toString, sat.toString, satSh.toString, satVg.toString,
+        (tmp, sat, satSh, satVg,
           rs.sparkContext.broadcast(idx.graph),
           rs.sparkContext.broadcast(idx.vecs), idx.params.metric,
           idx.vecs.dim)
-      })
+      }
     val sets = rs.read.parquet(path)
     sets.createOrReplaceTempView("graft_mv_sets")
     AnnIndexRegistry.registerMvRoar(sets, "dset_id", "vec_set",
@@ -1259,34 +1177,20 @@ object AnnQueries extends QueryPack {
 
   /** One IVF-PQ index build per fixture dir (the offline half); every
     * query call after the first only probes it. Same lifecycle pattern
-    * as IndexQueries' sharded handles — and the same INVARIANT: cache
-    * only paths/arrays/broadcasts, never a localCheckpoint-backed
-    * DataFrame (Bench.dropLeakedBlocks would strand it). */
-  private val ivfPqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Float]], graft.operators.PqAnn.Codebooks)]()
-
+    * as IndexQueries' sharded handles. */
   private def ivfPqIndex(s: SparkSession, dir: String)
       : (String, Array[Array[Float]], graft.operators.PqAnn.Codebooks) =
-    ivfPqCache.computeIfAbsent(dir, _ => {
+    Fixtures.memo("ivfpq", dir) {
       import graft.operators.{IvfAnn, IvfPq, PqAnn}
       val d = Tables.embeddings(s, dir)
         .select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
       val sample = IvfAnn.collectSample(d, 2000, 42L)
       val centroids = IvfAnn.trainCentroids(sample, 16, seed = 42L)
       val cbs = PqAnn.trainCodebooks(sample, nSub = 8, ncode = 32, seed = 42L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_")
-      // this JVM is the only consumer (in-memory cache): reap on exit
-      // so repeated bench/verify runs don't accumulate orphaned indexes
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(tmp).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val path = tmp.toString
+      val path = Fixtures.tempDir("graft_ivfpq_")
       IvfPq.writeIndex(s, d, path, centroids, cbs)
       (path, centroids, cbs)
-    })
+    }
 
   /** The GROWN IVF-PQ index per fixture dir: built single-shot on the
     * FIRST HALF of the corpus only (same quantizer training as
@@ -1295,14 +1199,9 @@ object AnnQueries extends QueryPack {
     * AFTER the tier registration, so the certificate query's serving
     * path reads an index produced by build+append — incremental index
     * maintenance proven through the routed SQL machinery. */
-  private val ivfPqGrownCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Float]], graft.operators.PqAnn.Codebooks, Long)]()
-  private val ivfPqGrownAppended =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   private def ivfPqGrownIndex(s: SparkSession, dir: String)
       : (String, Array[Array[Float]], graft.operators.PqAnn.Codebooks, Long) =
-    ivfPqGrownCache.computeIfAbsent(dir, _ => {
+    Fixtures.memo("ivfpq_grown", dir) {
       import graft.operators.{IvfAnn, IvfPq, PqAnn}
       val d = Tables.embeddings(s, dir)
         .select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
@@ -1315,22 +1214,15 @@ object AnnQueries extends QueryPack {
       val sample = IvfAnn.collectSample(d.filter(col("d_id") < half), 2000, 42L)
       val centroids = IvfAnn.trainCentroids(sample, 16, seed = 42L)
       val cbs = PqAnn.trainCodebooks(sample, nSub = 8, ncode = 32, seed = 42L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_grown_")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(tmp).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val path = tmp.toString
+      val path = Fixtures.tempDir("graft_ivfpq_grown_")
       IvfPq.writeIndex(s, d.filter(col("d_id") < half), path, centroids, cbs)
       (path, centroids, cbs, half)
-    })
+    }
 
   private def ivfPqGrownAppend(s: SparkSession, dir: String, path: String,
       centroids: Array[Array[Float]], cbs: graft.operators.PqAnn.Codebooks,
       half: Long): Unit =
-    if (ivfPqGrownAppended.add(s"$dir@$path")) {
+    Fixtures.memo("ivfpq_grown_append", dir, path) {
       val d = Tables.embeddings(s, dir)
         .select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
       graft.operators.IvfPq.appendIndex(s, d.filter(col("d_id") >= half),
@@ -1346,26 +1238,16 @@ object AnnQueries extends QueryPack {
     * post-flip live dir, centroids, codebooks); the grace dir is
     * asserted intact — a reader that resolved the pre-flip manifest
     * still holds it. */
-  private val ivfPqVersionedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, Array[Array[Float]], graft.operators.PqAnn.Codebooks)]()
-
   private def ivfPqVersionedHandles(s: SparkSession, dir: String)
       : (String, String, Array[Array[Float]], graft.operators.PqAnn.Codebooks) =
-    ivfPqVersionedCache.computeIfAbsent(dir, _ => {
+    Fixtures.memo("ivfpq_versioned", dir) {
       import graft.operators.{IvfAnn, IvfPq, PqAnn}
       val d = Tables.embeddings(s, dir)
         .select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
       val sample = IvfAnn.collectSample(d, 2000, 42L)
       val centroids = IvfAnn.trainCentroids(sample, 16, seed = 42L)
       val cbs = PqAnn.trainCodebooks(sample, nSub = 8, ncode = 32, seed = 42L)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_ver_")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(tmp).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val root = tmp.toString
+      val root = Fixtures.tempDir("graft_ivfpq_ver_")
       IvfPq.buildVersioned(s, d, root, centroids, cbs)
       val tranche = Tables.embeddings(s, dir)
         .filter(col("vec_id") % 13 === 0).select(col("vec_id").as("d_id"))
@@ -1378,15 +1260,12 @@ object AnnQueries extends QueryPack {
       require(java.nio.file.Files.exists(java.nio.file.Paths.get(pre)),
         "IVF-PQ grace generation was retired at the first flip")
       (pre, live, centroids, cbs)
-    })
+    }
 
   /** One SEEDED IVF-PQ index per fixture dir — the [[ivfPqIndex]]
     * lifecycle with both quantizers training-free (md5-ranked seeds):
     * nlist=16 cells, nSub=8 × ncode=16 codebooks, all reproducible in
     * the oracle's `row_number` CTE. */
-  private val ivfPqSeededCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[Array[Float]], graft.operators.PqAnn.Codebooks)]()
-
   /** COMMITTED trained-codes fixture for the g9_ivfpq certificate arm
     * (r19 verdict task 4): when `fixtures/ivfpq_<sfname>_{codebooks,
     * codes}.parquet` exist for this dir (generated once by
@@ -1397,12 +1276,9 @@ object AnnQueries extends QueryPack {
     * serving arithmetic downstream (ADC scan, exact rerank, chamfer)
     * is the production code verbatim — only the quantizer SOURCE is
     * pinned, which is precisely the stage DuckDB cannot retrain. */
-  private val ivfPqFixtureCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[(DataFrame, graft.operators.PqAnn.Codebooks)]]()
-
   private def ivfPqCommittedFixture(s: SparkSession, dir: String)
       : Option[(DataFrame, graft.operators.PqAnn.Codebooks)] =
-    ivfPqFixtureCache.computeIfAbsent(dir, _ => scala.util.Try {
+    Fixtures.memo("ivfpq_committed", dir)(scala.util.Try {
       val base = new java.io.File(dir).getName
       val cbPath = s"$fixturesDir/ivfpq_${base}_codebooks.parquet"
       val codesPath = s"$fixturesDir/ivfpq_${base}_codes.parquet"
@@ -1428,23 +1304,16 @@ object AnnQueries extends QueryPack {
 
   private def ivfPqSeededIndex(s: SparkSession, dir: String)
       : (String, Array[Array[Float]], graft.operators.PqAnn.Codebooks) =
-    ivfPqSeededCache.computeIfAbsent(dir, _ => {
+    Fixtures.memo("ivfpq_seeded", dir) {
       import graft.operators.{IvfAnn, IvfPq, PqAnn}
       val d = Tables.embeddings(s, dir)
         .select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
       val centroids = IvfAnn.seededCentroids(d, 16)
       val cbs = PqAnn.seededCodebooks(d, nSub = 8, ncode = 16)
-      val tmp = java.nio.file.Files.createTempDirectory("graft_ivfpq_seed_")
-      sys.addShutdownHook {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(tmp).sorted(Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-      }
-      val path = tmp.toString
+      val path = Fixtures.tempDir("graft_ivfpq_seed_")
       IvfPq.writeIndexSeeded(s, d, path, centroids, cbs)
       (path, centroids, cbs)
-    })
+    }
 
   private def dotSqlAB(a: String, b: String) =
     s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"

@@ -29,27 +29,19 @@ object IndexQueries extends QueryPack {
     BuildParams(mSq = 20, mPjbp = 8, lPjpq = 40, metric = "cosine")
 
   /** One built index (+ its broadcasts) per fixture dir per JVM — Verify
-    * and Bench run many queries over the same session.
-    *
-    * INVARIANT (Bench.dropLeakedBlocks depends on it): cached handles
-    * hold broadcasts, disk paths, or plain plans — NEVER a
-    * localCheckpoint-backed DataFrame. The bench harness unpersists
-    * every persistent RDD between timed queries; a lineage-truncated
-    * RDD evicted that way is unrecomputable, so a checkpointed handle
-    * cached here would fail with missing-checkpoint-block errors only
-    * in Bench/ScaleSmoke runs. */
+    * and Bench run many queries over the same session. Every fixture of
+    * this pack lives in [[Fixtures.memo]] (and under its invariant). */
   private case class Handles(idx: RoarIndex, graphB: Broadcast[CsrGraph],
                              vecsB: Broadcast[VectorStore])
-  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Handles]()
 
   private def handles(s: SparkSession, dir: String): Handles =
-    cache.computeIfAbsent(dir, _ => {
+    Fixtures.memo("roar", dir) {
       val emb = Tables.embeddings(s, dir)
       val idx = GraphBuild.build(s, emb, emb, FixtureParams)
       Handles(idx,
         s.sparkContext.broadcast(idx.graph),
         s.sparkContext.broadcast(idx.vecs))
-    })
+    }
 
   /** The fixture index's (graph, search-vector) broadcasts, shared with
     * the other query packs (AnnQueries' single-vector SQL route) so each
@@ -63,17 +55,13 @@ object IndexQueries extends QueryPack {
   /** One persisted sharded index per (dir, nShards) — the scale-tier twin
     * of [[handles]]. The descriptor is data-free: the index lives on disk
     * and each search loads one shard at a time (ShardedIndex lifecycle). */
-  private val shardedCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), ShardedIndexRef]()
-
   private[queries] def shardedHandles(s: SparkSession, dir: String,
                                       nShards: Int): ShardedIndexRef =
-    shardedCache.computeIfAbsent((dir, nShards), _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sharded_").toString
+    Fixtures.memo("sharded", dir, nShards) {
+      val path = Fixtures.tempDir("graft_sharded_")
       ShardedIndex.buildPersisted(s, Tables.embeddings(s, dir),
         FixtureParams, nShards, path)
-    })
+    }
 
   /** One takedown-TRANCHE-deleted sharded index per dir — the full
     * corpus built fresh (never the shared [[shardedHandles]] fixture:
@@ -82,14 +70,10 @@ object IndexQueries extends QueryPack {
     * with an idempotent replay. Serves g8_sql_sharded_deleted: at
     * saturating budget the routed answer must hash-equal the exact
     * ranking over the SURVIVORS. */
-  private val shardedDeletedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ShardedIndexRef]()
-
   private[queries] def shardedDeletedHandles(s: SparkSession,
                                              dir: String): ShardedIndexRef =
-    shardedDeletedCache.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sharded_deleted_").toString
+    Fixtures.memo("sharded_deleted", dir) {
+      val path = Fixtures.tempDir("graft_sharded_deleted_")
       val emb = Tables.embeddings(s, dir)
       val ref = ShardedIndex.buildPersisted(s, emb, FixtureParams, 2, path)
       val tranche = emb.filter(col("vec_id") % 13 === 0)
@@ -99,7 +83,7 @@ object IndexQueries extends QueryPack {
       require(ShardedIndex.deleteFromIndex(s, path, tranche) == 0,
         "replayed takedown was not idempotent")
       ref
-    })
+    }
 
   /** One takedown-then-COMPACTED (purged) sharded index per dir — the
     * [[shardedDeletedHandles]] lifecycle taken one step further: after
@@ -110,14 +94,10 @@ object IndexQueries extends QueryPack {
     * must hash-equal the exact survivor ranking with the per-query
     * mask GONE — certifying the dead-sidecar emission filter through
     * the full SQL machinery, not just the operator face. */
-  private val shardedPurgedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ShardedIndexRef]()
-
   private[queries] def shardedPurgedHandles(s: SparkSession,
                                             dir: String): ShardedIndexRef =
-    shardedPurgedCache.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sharded_purged_").toString
+    Fixtures.memo("sharded_purged", dir) {
+      val path = Fixtures.tempDir("graft_sharded_purged_")
       val emb = Tables.embeddings(s, dir)
       val ref = ShardedIndex.buildPersisted(s, emb, FixtureParams, 2, path)
       val tranche = emb.filter(col("vec_id") % 13 === 0)
@@ -129,7 +109,7 @@ object IndexQueries extends QueryPack {
         java.nio.file.Paths.get(s"$path/_tombstones")),
         "purge did not retire the tombstone mask")
       purged
-    })
+    }
 
   /** One UPDATED sharded index per dir — the vector-tier twin of the
     * text_bm25_updated recipe: revisions of `vec_id % 17 = 0` land by
@@ -139,18 +119,14 @@ object IndexQueries extends QueryPack {
     * make the certificate sharp: an unmasked old id would tie the
     * revision's score with a LOWER id and steal its rank — any update
     * leak hash-mismatches. Serves g8_sql_sharded_updated. */
-  private val shardedUpdatedCache = new java.util.concurrent
-    .ConcurrentHashMap[String, (ShardedIndexRef, String)]()
-
   /** Returns (grown ref, updated-corpus parquet path): the corpus path
     * holds survivors ∪ revisions — the relation the certificate session
     * registers AND queries, so the rescore join sees the revision ids
     * the index serves. */
   private[queries] def shardedUpdatedHandles(s: SparkSession, dir: String)
       : (ShardedIndexRef, String) =
-    shardedUpdatedCache.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sharded_updated_").toString
+    Fixtures.memo("sharded_updated", dir) {
+      val path = Fixtures.tempDir("graft_sharded_updated_")
       val emb = Tables.embeddings(s, dir)
       val n = emb.count()
       val ref = ShardedIndex.buildPersisted(s, emb, FixtureParams, 2, path)
@@ -170,7 +146,7 @@ object IndexQueries extends QueryPack {
         .unionByName(revisions)
         .write.mode("overwrite").parquet(corpusPath)
       (grown, corpusPath)
-    })
+    }
 
   /** One generation-VERSIONED sharded index per dir, exercising the
     * serve-through-compaction contract end to end: build gen0, delete
@@ -182,14 +158,10 @@ object IndexQueries extends QueryPack {
     * live post-flip generation (dead-sidecar semantics, serves
     * g8_sql_versioned_live). Both must hash-match the same survivor
     * oracle. */
-  private val shardedVersionedCache = new java.util.concurrent
-    .ConcurrentHashMap[String, (ShardedIndexRef, ShardedIndexRef)]()
-
   private[queries] def shardedVersionedHandles(s: SparkSession, dir: String)
       : (ShardedIndexRef, ShardedIndexRef) =
-    shardedVersionedCache.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sharded_versioned_").toString
+    Fixtures.memo("sharded_versioned", dir) {
+      val root = Fixtures.tempDir("graft_sharded_versioned_")
       val emb = Tables.embeddings(s, dir)
       ShardedIndex.buildVersioned(s, emb, FixtureParams, 2, root)
       val tranche = emb.filter(col("vec_id") % 13 === 0)
@@ -204,7 +176,7 @@ object IndexQueries extends QueryPack {
         java.nio.file.Paths.get(pre.path)),
         "grace generation was retired at the first flip")
       (pre, live)
-    })
+    }
 
   /** The versioned lifecycle once more, committed through the SEQLOG
     * (conditional-put) protocol instead of the rename pointer — the
@@ -215,14 +187,10 @@ object IndexQueries extends QueryPack {
     * served answer must be byte-identical to the rename-mode run —
     * the commit protocol is invisible to query semantics. Serves
     * g8_sql_versioned_seqlog. */
-  private val shardedSeqlogCache = new java.util.concurrent
-    .ConcurrentHashMap[String, ShardedIndexRef]()
-
   private[queries] def shardedSeqlogHandles(s: SparkSession,
                                             dir: String): ShardedIndexRef =
-    shardedSeqlogCache.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sharded_seqlog_").toString
+    Fixtures.memo("sharded_seqlog", dir) {
+      val root = Fixtures.tempDir("graft_sharded_seqlog_")
       val emb = Tables.embeddings(s, dir)
       // the commit protocol is passed PER CALL (never via the
       // session-global spark.graft.gen.committer conf): the faces
@@ -245,7 +213,7 @@ object IndexQueries extends QueryPack {
           s"$root/MANIFEST")),
         "seqlog fixture did not commit through the CAS log")
       live
-    })
+    }
 
   /** One GROWTH-ONLY versioned sharded index per dir — gen0 built on
     * the first 80%, the rest appended as gen0's delta, then
@@ -256,15 +224,11 @@ object IndexQueries extends QueryPack {
     * must reproduce the standard exhaustive oracles. Serves the mv
     * flagship's serve-through-compaction certificate
     * (g9_sql_versioned_grace). */
-  private val shardedVersionedGrownCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ShardedIndexRef]()
-
   private[queries] def shardedVersionedGrownHandles(s: SparkSession,
                                                     dir: String)
       : ShardedIndexRef =
-    shardedVersionedGrownCache.computeIfAbsent(dir, _ => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sharded_vgrown_").toString
+    Fixtures.memo("sharded_vgrown", dir) {
+      val root = Fixtures.tempDir("graft_sharded_vgrown_")
       val e = Tables.embeddings(s, dir)
       val cut = e.count() * 4 / 5
       ShardedIndex.buildVersioned(s, e.filter(col("vec_id") < cut),
@@ -277,7 +241,7 @@ object IndexQueries extends QueryPack {
         live.path == s"$root/gen1",
         "versioned grown fixture did not flip generations")
       pre
-    })
+    }
 
   /** One delta-GROWN sharded index per dir — base built on the first 80%
     * of the corpus, the rest appended via [[ShardedIndex.appendDelta]]:
@@ -285,21 +249,17 @@ object IndexQueries extends QueryPack {
     * data-free-descriptor lifecycle (and the same no-localCheckpoint
     * cache invariant) as [[shardedHandles]]; IndexSpec holds the
     * recall-after-append, base-untouched, and compaction gates. */
-  private val deltaShardedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ShardedIndexRef]()
-
   private def deltaShardedHandles(s: SparkSession,
                                   dir: String): ShardedIndexRef =
-    deltaShardedCache.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_sharded_delta_").toString
+    Fixtures.memo("sharded_delta", dir) {
+      val path = Fixtures.tempDir("graft_sharded_delta_")
       val e = Tables.embeddings(s, dir)
       val cut = e.count() * 4 / 5
       val base = ShardedIndex.buildPersisted(s,
         e.filter(col("vec_id") < cut), FixtureParams, 2, path)
       ShardedIndex.appendDelta(s, e.filter(col("vec_id") >= cut), base,
         FixtureParams)
-    })
+    }
 
   /** Flagship-tier shard knob: 1 (default) = broadcast tier, >1 = sharded
     * tier (per-shard graphs + bounded merge — the 100 TB layout). */
@@ -653,8 +613,7 @@ object IndexQueries extends QueryPack {
       val nBase = n * 4 / 5
       val b1End = nBase + (n - nBase) / 2
       val basePath = lifecycleBase(ls, dir, nBase)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_lifecycle_").toString
+      val path = Fixtures.tempDir("graft_lifecycle_")
       copyDir(basePath, path)
       var ref = ShardedIndexRef(path, 1, FixtureParams.metric)
       val out = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
@@ -696,8 +655,7 @@ object IndexQueries extends QueryPack {
       val nBase = n * 4 / 5
       val b1End = nBase + (n - nBase) / 2
       val basePath = lifecycleBase(ls, dir, nBase)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_takedown_").toString
+      val path = Fixtures.tempDir("graft_takedown_")
       copyDir(basePath, path)
       val ref0 = ShardedIndexRef(path, 1, FixtureParams.metric)
       // stage 1: one streaming ingest batch (below the compact trigger)
@@ -780,31 +738,20 @@ object IndexQueries extends QueryPack {
   /** Low-partition child session for the ingest-lifecycle micro-jobs
     * (tiny data, many sequential jobs — empty-task overhead dominates
     * at the session default). One per parent session. */
-  private val lifecycleSessions = new java.util.concurrent.ConcurrentHashMap[
-    SparkSession, SparkSession]()
-
   private def lifecycleSession(s: SparkSession): SparkSession =
-    lifecycleSessions.computeIfAbsent(s, _ => {
-      val child = s.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", "8")
-      child
-    })
+    Fixtures.childSession(s, "spark.sql.shuffle.partitions" -> "8")
 
   /** One 1-shard lifecycle BASE index per dir per JVM (path-only cache —
     * the no-localCheckpoint invariant holds trivially). Callers must
     * COPY the directory before mutating (delta appends / compaction). */
-  private val lifecycleBaseCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def lifecycleBase(s: SparkSession, dir: String,
                             nBase: Long): String =
-    lifecycleBaseCache.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_lifecycle_base_").toString
+    Fixtures.memo("lifecycle_base", dir, nBase) {
+      val path = Fixtures.tempDir("graft_lifecycle_base_")
       ShardedIndex.buildPersisted(s,
         emb(s, dir).filter(col("vec_id") < nBase), FixtureParams, 1, path)
       path
-    })
+    }
 
   private def copyDir(src: String, dst: String): Unit = {
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}

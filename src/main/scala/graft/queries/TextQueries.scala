@@ -590,8 +590,7 @@ object TextQueries extends QueryPack {
           trigramsAll(s, dir).withColumn("h", md5(col("shingle"))),
           NumHashes, RowsPerBand)
         .localCheckpoint(false)
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_bandidx_").toString
+      val idx = Fixtures.tempDir("graft_bandidx_")
       MinHashLsh.writeBandIndex(
         allKeys.filter(col("doc_id") % 4 =!= 0), idx)
       MinHashLsh.incrementalPairs(
@@ -617,8 +616,7 @@ object TextQueries extends QueryPack {
           trigramsAll(s, dir).withColumn("h", md5(col("shingle"))),
           NumHashes, RowsPerBand)
         .localCheckpoint(false)
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_bandidx_compact_").toString
+      val idx = Fixtures.tempDir("graft_bandidx_compact_")
       def keysOf(pred: org.apache.spark.sql.Column) = allKeys.filter(pred)
       MinHashLsh.writeBandIndex(
         keysOf(col("doc_id") % 4 === 1 || col("doc_id") % 4 === 2), idx)
@@ -646,8 +644,7 @@ object TextQueries extends QueryPack {
           trigramsAll(s, dir).withColumn("h", md5(col("shingle"))),
           NumHashes, RowsPerBand)
         .localCheckpoint(false)
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_bandidx_del_").toString
+      val idx = Fixtures.tempDir("graft_bandidx_del_")
       def keysOf(pred: org.apache.spark.sql.Column) = allKeys.filter(pred)
       MinHashLsh.writeBandIndex(keysOf(col("doc_id") % 4 =!= 0), idx)
       val t1 = docs(s, dir)
@@ -1436,8 +1433,7 @@ object TextQueries extends QueryPack {
     "text_bm25_indexed" -> ((s, dir) => {
       import graft.operators.InvertedIndex
       val d = docs(s, dir)
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_invidx_").toString
+      val idx = Fixtures.tempDir("graft_invidx_")
       val half = d.agg(max(col("doc_id"))).first().getLong(0) / 2
       InvertedIndex.append(s, d.filter(col("doc_id") <= half), idx)
       InvertedIndex.append(s, d.filter(col("doc_id") > half), idx)
@@ -1460,8 +1456,7 @@ object TextQueries extends QueryPack {
     "text_bm25_deleted" -> ((s, dir) => {
       import graft.operators.InvertedIndex
       val d = docs(s, dir)
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_invidx_del_").toString
+      val idx = Fixtures.tempDir("graft_invidx_del_")
       val half = d.agg(max(col("doc_id"))).first().getLong(0) / 2
       InvertedIndex.append(s, d.filter(col("doc_id") <= half), idx)
       InvertedIndex.append(s, d.filter(col("doc_id") > half), idx)
@@ -1487,8 +1482,7 @@ object TextQueries extends QueryPack {
     "text_bm25_versioned" -> ((s, dir) => {
       import graft.operators.InvertedIndex
       val d = docs(s, dir)
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_invidx_vers_").toString
+      val root = Fixtures.tempDir("graft_invidx_vers_")
       val half = d.agg(max(col("doc_id"))).first().getLong(0) / 2
       InvertedIndex.buildVersioned(s, d.filter(col("doc_id") <= half), root)
       InvertedIndex.appendVersioned(s, d.filter(col("doc_id") > half), root)
@@ -1526,8 +1520,7 @@ object TextQueries extends QueryPack {
     "text_bm25_updated" -> ((s, dir) => {
       import graft.operators.InvertedIndex
       val d = docs(s, dir)
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_invidx_upd_").toString
+      val idx = Fixtures.tempDir("graft_invidx_upd_")
       InvertedIndex.append(s, d, idx)
       val off = d.agg(max(col("doc_id"))).first().getLong(0) + 1
       val old = d.filter(col("doc_id") % 13 === 0)

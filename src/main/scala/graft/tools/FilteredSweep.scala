@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 
 import graft.{ScaleSmoke, Tables}
 import graft.index.{GraphBuild, Metrics, VectorStore}
-import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
+import graft.plans.{AnnIndexRegistry, AnnRewrite}
 import graft.queries.IndexQueries
 
 /** Scale behavior of the FILTERED ANN route across predicate
@@ -41,14 +41,7 @@ object FilteredSweep {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    val cls = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    if (!cls.experimental.extraOptimizations.contains(AnnTopKRule)) {
-      cls.experimental.extraOptimizations =
-        cls.experimental.extraOptimizations :+ AnnTopKRule
-      cls.experimental.extraStrategies =
-        cls.experimental.extraStrategies :+ AnnStrategy
-    }
+    AnnRewrite.install(spark)
 
     val rows = new scala.collection.mutable.ArrayBuffer[String]
     rows += "factor\tn\tmod\tmatch_rows\toverfetch\texhaustive_s\trouted_s\tnosc_s\tstrategy\trecall"

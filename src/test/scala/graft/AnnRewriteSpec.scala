@@ -2163,4 +2163,150 @@ class AnnRewriteSpec extends AnyFunSuite {
       assert(df.count() === 10)
     } finally spark.conf.set("spark.graft.ann.rewrite", "false")
   }
+
+  test("a graph registration over another relation with the same columns leaves a planned statement on its own entry") {
+    setup
+    val q = queryLit
+    spark.conf.set("spark.graft.ann.rewrite", "true")
+    try {
+      val expected = spark.sql(sql(q)).collect()
+        .map(r => (r.getLong(0), r.getDouble(1)))
+      val df = spark.sql(sql(q))
+      assert(df.queryExecution.executedPlan.toString.contains("AnnSearch"))
+      // relation B: the first 250 corpus rows under the same column
+      // names, with its own graph, registered AFTER df was planned
+      val dir = "target/tmp/ann_graph_twin"
+      Tables.embeddings(spark, sfDir).filter(col("vec_id") < 250)
+        .write.mode("overwrite").parquet(dir)
+      val twin = spark.read.parquet(dir)
+      val idx = GraphBuild.build(spark, twin, twin, IndexQueries.FixtureParams)
+      AnnIndexRegistry.register(twin, "vec_id", "embedding",
+        AnnIndexRegistry.Entry(
+          spark.sparkContext.broadcast(idx.graph),
+          spark.sparkContext.broadcast(idx.vecs),
+          spark.sparkContext.broadcast(VectorStore.fromDf(twin, "vec_id",
+            "embedding", Metrics.InnerProduct)),
+          idx.params.metric, searchL = 80))
+      assert(df.collect().map(r => (r.getLong(0), r.getDouble(1))) === expected,
+        "the planned statement did not answer from its own relation's entry")
+      // both registrations stay routable, each for its own relation
+      assert(spark.sql(sql(q)).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))) === expected)
+      twin.createOrReplaceTempView("ann_graph_twin")
+      val onTwin = spark.sql(
+        s"""SELECT vec_id, graft_vec_dot(embedding, $q) AS score
+           |FROM ann_graph_twin ORDER BY score DESC LIMIT 10""".stripMargin)
+      assert(onTwin.queryExecution.executedPlan.toString.contains("AnnSearch"))
+      val ids = onTwin.collect().map(_.getLong(0))
+      assert(ids.length === 10 && ids.forall(_ < 250),
+        s"the twin statement answered outside its relation: ${ids.toSeq}")
+    } finally spark.conf.set("spark.graft.ann.rewrite", "false")
+  }
+
+  test("one candidate tier name registered over two relations routes each statement to its own relation") {
+    setup
+    val q = queryLit
+    def twin(name: String, rows: org.apache.spark.sql.Column) = {
+      val dir = s"target/tmp/ann_tier_twin_$name"
+      Tables.embeddings(spark, sfDir).filter(rows)
+        .select(col("vec_id").as("tvid"), col("embedding").as("tvec"))
+        .write.mode("overwrite").parquet(dir)
+      val corpus = spark.read.parquet(dir)
+      corpus.createOrReplaceTempView(s"tier_twin_$name")
+      // every row is a candidate: the routed answer must then equal the
+      // exhaustive one over the SAME relation exactly
+      AnnIndexRegistry.registerTier(corpus, "tvid", "tvec",
+        AnnIndexRegistry.CandidateTierEntry("twin_tier", corpus, "tvid",
+          "tvec", "ip", dim = 64,
+          candidates = (_, _, _) => corpus.select(col("tvid").as("d_id"))))
+    }
+    twin("a", col("vec_id") < 250)
+    twin("b", col("vec_id") >= 250)
+    def dotSql(name: String) =
+      s"""SELECT tvid, graft_vec_dot(tvec, $q) AS score
+         |FROM tier_twin_$name ORDER BY score DESC LIMIT 10""".stripMargin
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    try {
+      for (name <- Seq("a", "b")) {
+        spark.conf.set("spark.graft.ann.rewrite", "false")
+        val exhaustive = rows(spark.sql(dotSql(name)))
+        spark.conf.set("spark.graft.ann.rewrite", "true")
+        val df = spark.sql(dotSql(name))
+        assert(routedTier(df) === Seq("twin_tier"),
+          s"statement over relation $name was not routed")
+        assert(rows(df) === exhaustive,
+          s"statement over relation $name did not answer from its own relation")
+      }
+    } finally spark.conf.set("spark.graft.ann.rewrite", "false")
+  }
+
+  test("a sharded registration without a refresh thunk warns once when a delta appears; with one it never warns") {
+    setup
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import graft.index.ShardedIndex
+    val emb = Tables.embeddings(spark, sfDir)
+    /** WARN messages of the registry logger while two routed statements
+      * run over a sharded registration that grew by one delta after it
+      * was registered. */
+    def warnings(withRefresh: Boolean): Seq[String] = {
+      val tag = if (withRefresh) "refresh" else "norefresh"
+      val dir = s"target/tmp/ann_${tag}_corpus"
+      val idxPath = s"target/tmp/ann_${tag}_index"
+      emb.filter(col("vec_id") < 100)
+        .select(col("vec_id").as("rvid"), col("embedding").as("rvec"))
+        .write.mode("overwrite").parquet(dir)
+      val corpus = spark.read.parquet(dir)
+      corpus.createOrReplaceTempView(s"${tag}_corpus")
+      val ref = ShardedIndex.buildPersisted(spark,
+        emb.filter(col("vec_id") < 100).select(col("vec_id"), col("embedding")),
+        IndexQueries.FixtureParams, nShards = 1, idxPath)
+      AnnIndexRegistry.registerSharded(corpus, "rvid", "rvec", ref,
+        dim = 64, metricName = "cosine", searchL = 40,
+        refresh = if (withRefresh) () => spark.read.parquet(dir) else null)
+      ShardedIndex.appendDelta(spark,
+        emb.filter(col("vec_id") >= 100 && col("vec_id") < 200)
+          .select(col("vec_id"), col("embedding")),
+        ref, IndexQueries.FixtureParams)
+      val logger = LogManager.getLogger("graft.plans.AnnIndexRegistry")
+        .asInstanceOf[Logger]
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val appender = new AbstractAppender(s"capture_$tag", null, null, true,
+          Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit =
+          if (e.getLevel == Level.WARN)
+            seen.add(e.getMessage.getFormattedMessage)
+      }
+      appender.start()
+      val level = logger.getLevel
+      logger.setLevel(Level.WARN)
+      logger.addAppender(appender)
+      spark.conf.set("spark.graft.ann.rewrite", "true")
+      try {
+        for (vid <- Seq(7L, 150L)) {
+          val qv = emb.filter(col("vec_id") === vid).select("embedding")
+            .first().getSeq[Float](0).map(x => s"${x}F")
+            .mkString("array(", ", ", ")")
+          val df = spark.sql(
+            s"""SELECT rvid, graft_vec_cosine(rvec, $qv) AS score
+               |FROM ${tag}_corpus ORDER BY score DESC LIMIT 5""".stripMargin)
+          assert(routedTier(df) === Seq("sharded"))
+          df.collect()
+        }
+      } finally {
+        spark.conf.set("spark.graft.ann.rewrite", "false")
+        logger.removeAppender(appender)
+        logger.setLevel(level)
+        appender.stop()
+      }
+      seen.toArray(Array.empty[String]).toSeq
+    }
+    val without = warnings(withRefresh = false)
+    assert(without.size === 1, s"expected exactly one warning: $without")
+    assert(without.head.contains("registerSharded"), without.head)
+    assert(warnings(withRefresh = true).isEmpty)
+  }
 }

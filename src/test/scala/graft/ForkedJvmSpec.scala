@@ -67,6 +67,22 @@ class ForkedJvmSpec extends AnyFunSuite {
       java.nio.file.Paths.get(p)), "UTF-8")
   }
 
+  test("query-pack fixture temp dirs are deleted when their JVM exits") {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_fork_tempdir_").toString
+    val r = s"$dir/r"
+    val p = launch(dir, "tempdir", r)
+    try {
+      assert(p.waitFor(180, java.util.concurrent.TimeUnit.SECONDS),
+        "child JVM did not exit")
+      assert(p.exitValue() === 0)
+      val made = awaitFile(r, Seq(p))
+      assert(made.contains("graft_fork_reaped_"), made)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(made)),
+        s"fixture dir $made outlived its JVM")
+    } finally p.destroyForcibly()
+  }
+
   test("seqlog CAS across processes: two JVMs race one log slot; exactly one conditional put wins") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_fork_cas_").toString

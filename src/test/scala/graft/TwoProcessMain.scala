@@ -195,6 +195,15 @@ object TwoProcessMain {
           if (m != first) diverged = true
         }
         write(result, if (diverged) s"diverged after $n" else s"ok $n")
+      // tempdir <resultFile>: make a query-pack fixture dir (with a
+      // file inside), report its path, exit normally — the JVM-exit
+      // reaper must leave nothing behind
+      case "tempdir" =>
+        val Array(_, result) = args
+        val d = graft.queries.Fixtures.tempDir("graft_fork_reaped_")
+        java.nio.file.Files.write(java.nio.file.Paths.get(d, "part-0"),
+          "x".getBytes("UTF-8"))
+        write(result, d)
       case other => sys.error(s"TwoProcessMain: unknown mode $other")
     } finally spark.stop()
   }
