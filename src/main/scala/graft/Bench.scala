@@ -362,19 +362,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Bench measures the SERVING posture of the sharded tier: queries
-      // arrive as a stream, so the resident-shard cache is sized to the
-      // fixture's shard count (2) and per-call shard load amortizes away.
-      // Correctness runs keep the default (1 = strict minimal residency).
-      .config("spark.graft.index.residentShards", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench measures the SERVING posture of the sharded tier: queries
+    // arrive as a stream, so the resident-shard cache is sized to the
+    // fixture's shard count (2) and per-call shard load amortizes away.
+    // Correctness runs keep the default (1 = strict minimal residency).
+    val spark = Harness.session("spark.graft.index.residentShards" -> "2")
     // Untimed warmup: JIT/codegen/footer caches plus the ONE-TIME index
     // build (an offline job in production — searches are measured against
     // a built index, as in the reference) would otherwise be billed to

@@ -50,14 +50,7 @@ object ScaleFixtures {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val dstDir = args.lift(2).getOrElse("/tmp/graft_sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     ScaleSmoke.scaleTables(spark, srcDir, dstDir, factor)
     println(s"scaled $srcDir x$factor -> $dstDir")
     spark.stop()
@@ -199,17 +192,9 @@ object ScaleSmoke {
     val workDir = args.lift(2).getOrElse("/tmp/graft_sf1")
     val basePath = sys.env.getOrElse("SPARK_GRAFT_BASE_BENCH", "BENCH_LOCAL.json")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_SMOKE_OUT", "BENCH_SF1_SMOKE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // serving posture, same as Bench: resident cache sized to the
-      // fixture shard count so repeated sharded searches amortize loads
-      .config("spark.graft.index.residentShards", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // serving posture, same as Bench: resident cache sized to the
+    // fixture shard count so repeated sharded searches amortize loads
+    val spark = Harness.session("spark.graft.index.residentShards" -> "2")
 
     scaleTables(spark, srcDir, workDir, factor)
 
@@ -240,14 +225,14 @@ object ScaleSmoke {
       else SparkEntry.queries(name)(spark, workDir)
     val raw = collection.mutable.Map.empty[String, Vector[(Double, Boolean)]]
     for (_ <- 1 to 2; name <- names) {
-      val t0 = System.nanoTime()
-      val ok =
+      val (ok, sec) = Harness.timed {
         try { Bench.force(queryOf(name)); true }
         catch { case t: Throwable =>
           System.err.println(s"QUERY FAIL $name: ${t.getClass.getName}: ${t.getMessage}")
           false
         }
-      val rec = (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0, ok)
+      }
+      val rec = (if (ok) sec else -1.0, ok)
       raw(name) = raw.getOrElse(name, Vector.empty) :+ rec
       Bench.dropLeakedBlocks(spark) // see Bench: leaked checkpoint blocks
     }

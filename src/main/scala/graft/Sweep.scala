@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.index.{BeamSearch, GraphBuild, Hnsw}
 import graft.operators.{IvfAnn, KnnKernel, PqAnn, RandomProjection, Recall, Rerank}
-import graft.queries.{IndexQueries, VectorQueries}
-import graft.sources.Sinks
+import graft.queries.{Fixtures, IndexQueries, VectorQueries}
 
 /** M5 — experiment harness parity: the reference's budget-sweep runner
   * (`scripts/roargraph/run_roargraph_search_multivector_rerank_expr.sh`:
@@ -66,9 +65,9 @@ import graft.sources.Sinks
   * stage is materialized and timed separately from the chamfer rerank,
   * and `rerank_frac` = rerank / (search + rerank).
   *
-  * Usage: `runMain graft.Sweep [sfDir] [budgets-csv] [outDir] [params]` —
+  * Usage: `runMain graft.Sweep [sfDir] [budgets-csv] [out.tsv] [params]` —
   * defaults: sf0.01 fixtures, budgets 40,80,120,200, stdout TSV only.
-  * With outDir set, rows land as an S12 TSV sink. `params` picks the
+  * With out.tsv set, the rows also land in that file. `params` picks the
   * RoarGraph build knobs: `fixture` (default — the 2k-vector fixture
   * scale-down, 20/8/40) or `ref` (the reference's production knobs
   * 100/35/100, `build_roargraph_index.sh:27-29`) — graph DEGREE must
@@ -91,13 +90,8 @@ object Sweep {
       .split(",").map(_.trim.toInt).toSeq
     // "" = stdout only, so a positional caller can skip to the params
     // arg without the sink write failing after a long sweep
-    val outDir = args.lift(2).filter(_.nonEmpty)
-    val params = args.lift(3).getOrElse("fixture") match {
-      case "ref" => IndexQueries.FixtureParams.copy(
-        mSq = 100, mPjbp = 35, lPjpq = 100)
-      case _ => IndexQueries.FixtureParams
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val out = args.lift(2).filter(_.nonEmpty)
+    val params = Harness.buildParams(args.lift(3))
     val arms = sys.env.get("SPARK_GRAFT_SWEEP_ARMS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .getOrElse(AllArms)
@@ -105,23 +99,16 @@ object Sweep {
     // sweep TSV that downstream reads as "no regression data"
     require(arms.subsetOf(AllArms),
       s"unknown sweep arm(s) ${arms -- AllArms}; valid: ${AllArms.toSeq.sorted.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
-    val rows = run(spark, sfDir, budgets, params, arms)
-    println("arm\tbudget\trecall\trderr\tqps\tsearch_sec\trerank_frac")
-    rows.foreach { case (arm, b, r, e, q, t, f) =>
-      println(f"$arm\t$b\t$r%.4f\t$e%.5f\t$q%.1f\t$t%.3f\t$f%.3f") }
-    outDir.foreach { dir =>
-      import spark.implicits._
-      Sinks.writeTsv(
-        rows.toDF("arm", "budget", "recall", "rderr", "qps", "search_sec",
-          "rerank_frac"), dir)
-    }
+    val table = new Harness.Table("arm", "budget", "recall", "rderr", "qps",
+      "search_sec", "rerank_frac")
+    run(spark, sfDir, budgets, params, arms)
+      .foreach { case (arm, b, r, e, q, t, f) =>
+        table.add(arm, b, f"$r%.4f", f"$e%.5f", f"$q%.1f", f"$t%.3f",
+          f"$f%.3f")
+      }
+    out.foreach(table.write)
     spark.stop()
   }
 
@@ -182,16 +169,14 @@ object Sweep {
                 cands0: DataFrame): (String, Int, Double, Double, Double, Double, Double) = {
       // search stage timed on its own: materialize the candidate set
       // (localCheckpoint is eager) before the rerank plan sees it
-      val t0 = System.nanoTime()
-      val cands = cands0.localCheckpoint(true)
-      val searchSec = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val reranked = Rerank.chamferTopK(emb, querySets, cands, C, K).cache()
-      val res = reranked.groupBy(col("qset_id").as("query_id"))
-        .agg(transform(array_sort(collect_list(struct(col("rank"), col("dset_id")))),
-          x => x.getField("dset_id")).as("ids"))
-      val recalls = Recall.atK(res, gt, K).collect()
-      val rerankSec = (System.nanoTime() - t1) / 1e9
+      val (cands, searchSec) = Harness.timed(cands0.localCheckpoint(true))
+      val ((reranked, recalls), rerankSec) = Harness.timed {
+        val reranked = Rerank.chamferTopK(emb, querySets, cands, C, K).cache()
+        val res = reranked.groupBy(col("qset_id").as("query_id"))
+          .agg(transform(array_sort(collect_list(struct(col("rank"), col("dset_id")))),
+            x => x.getField("dset_id")).as("ids"))
+        (reranked, Recall.atK(res, gt, K).collect())
+      }
       val resLong = reranked.select(col("qset_id").as("query_id"), col("rank"),
         (-col("score")).as("dist"))
       val errRows = Recall.rderr(resLong, gtLong).collect()
@@ -216,8 +201,7 @@ object Sweep {
     lazy val ivfCentroids = IvfAnn.trainCentroids(
       IvfAnn.collectSample(corpus, 2000, 42L), 16, seed = 42L)
     lazy val ivfPqPath = {
-      val p = java.nio.file.Files
-        .createTempDirectory("graft_sweep_ivfpq_").toString
+      val p = Fixtures.tempDir("graft_sweep_ivfpq_")
       graft.operators.IvfPq.writeIndex(spark, corpus, p, ivfCentroids, pqCbs)
       p
     }
@@ -227,8 +211,7 @@ object Sweep {
     // with it total exploration, grows with the corpus), shared by
     // every budget row (resident LRU sized by conf)
     lazy val shardedRef = graft.index.ShardedIndex.buildPersistedAuto(
-      spark, emb, params, java.nio.file.Files
-        .createTempDirectory("graft_sweep_sharded_").toString,
+      spark, emb, params, Fixtures.tempDir("graft_sweep_sharded_"),
       targetShardRows = ShardTargetRows, minShards = 2)
 
     // mv_sharded arm offline half: the flagship's REGISTRATION growth
@@ -245,8 +228,8 @@ object Sweep {
       val n = emb.count()
       val cut = n / 2
       val base = graft.index.ShardedIndex.buildPersistedAuto(spark,
-        emb.filter(col("vec_id") < cut), params, java.nio.file.Files
-          .createTempDirectory("graft_sweep_mvsharded_").toString,
+        emb.filter(col("vec_id") < cut), params,
+        Fixtures.tempDir("graft_sweep_mvsharded_"),
         targetShardRows = ShardTargetRows, minShards = 2)
       val regPerShard = graft.index.ShardedIndex
         .totalRows(spark, base).toDouble / base.nShards

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -30,15 +29,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDirArg) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("spark.sql.session.timeZone" -> "UTC")
     // SPARK_GRAFT_VERIFY_ONLY=a,b,c → dump + oracle just those queries
     // (fast single-query oracle iteration, the Bench BENCH_ONLY twin);
     // unset = the full surface, as the driver runs it. Subset runs are

@@ -1,12 +1,8 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
-
-import graft.{ScaleSmoke, Tables}
+import graft.{Harness, Tables}
 import graft.index.{CsrGraph, GraphBuild, ShardedIndex}
-import graft.queries.IndexQueries
+import graft.queries.{Fixtures, IndexQueries}
 
 /** BUILD-side scale sweep — the offline half of the scale evidence. The
   * committed search sweeps (SWEEP_SF1/SF5/SF10) time the ONLINE path at
@@ -36,9 +32,9 @@ import graft.queries.IndexQueries
   *
   * Usage: `runMain graft.tools.BuildSweep [srcDir] [factors-csv] [out]`
   * — defaults /root/testdata/sf0.1, "1,2,5,10", SWEEP_BUILD.tsv.
-  * Scaled corpora are materialized once under /tmp/graft_buildsweep/<f>
-  * via [[ScaleSmoke.scaleTables]] (deterministic, similarity-breaking
-  * rotations) and reused across runs.
+  * Scaled corpora are materialized once by [[Harness.scaledDir]] under
+  * /tmp/graft_buildsweep/x<f> (`SPARK_GRAFT_BUILD_WORK` moves the root;
+  * deterministic, similarity-breaking rotations) and reused across runs.
   *
   * `SPARK_GRAFT_BUILD_ARMS` (csv, default all) restricts the arms —
   * the O(N²) `roar_exact` baseline is priced out past ~50k rows and a
@@ -47,6 +43,15 @@ import graft.queries.IndexQueries
   * survive — so the ladder accretes one expensive point at a time.
   */
 object BuildSweep {
+
+  private[graft] val Columns = Seq("arm", "factor", "n", "shards",
+    "build_sec", "avg_degree", "max_degree")
+  private[graft] val ArmOrder = Seq("roar_exact", "roar_ivf", "sharded")
+
+  /** Merge key: a re-run (arm, factor) replaces its row; rows sort
+    * factor-major, then in [[ArmOrder]] (the committed TSV's shape). */
+  private[graft] def mergeKey(c: String => String): (Int, Int) =
+    (c("factor").toInt, ArmOrder.indexOf(c("arm")))
 
   private def degStats(g: CsrGraph): (Double, Int) = {
     var maxd = 0
@@ -64,98 +69,52 @@ object BuildSweep {
     val factors = args.lift(1).getOrElse("1,2,5,10")
       .split(",").map(_.trim.toInt).toSeq
     val out = args.lift(2).getOrElse("SWEEP_BUILD.tsv")
-    val workDir = sys.env.getOrElse("SPARK_GRAFT_BUILD_WORK",
-      "/tmp/graft_buildsweep")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     // untimed warmup build (base corpus): JIT + codegen + shuffle-path
     // warmup, so the first timed row isn't JVM-cold-start inflated
     GraphBuild.build(spark, Tables.embeddings(spark, srcDir),
       Tables.embeddings(spark, srcDir), IndexQueries.FixtureParams)
 
-    val armOrder = Seq("roar_exact", "roar_ivf", "sharded")
     val arms = sys.env.get("SPARK_GRAFT_BUILD_ARMS")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(armOrder.toSet)
-    require(arms.subsetOf(armOrder.toSet),
-      s"unknown build arm(s) ${arms -- armOrder.toSet}")
+      .getOrElse(ArmOrder.toSet)
+    require(arms.subsetOf(ArmOrder.toSet),
+      s"unknown build arm(s) ${arms -- ArmOrder.toSet}")
 
-    val header = "arm\tfactor\tn\tshards\tbuild_sec\tavg_degree\tmax_degree"
-    val rows = new scala.collection.mutable.ArrayBuffer[String]
-
+    val table = new Harness.Table(Columns: _*)
     factors.foreach { f =>
-      val dir =
-        if (f == 1) srcDir
-        else {
-          val d = s"$workDir/x$f"
-          if (!Files.exists(Paths.get(d, "embeddings.parquet")))
-            ScaleSmoke.scaleTables(spark, srcDir, d, f)
-          d
-        }
-      val e = Tables.embeddings(spark, dir)
+      val e = Tables.embeddings(spark, Harness.scaledDir(spark, srcDir, f))
       val n = e.count()
       val params = IndexQueries.FixtureParams
 
-      def timed[T](body: => T): (T, Double) = {
-        val t0 = System.nanoTime()
-        val r = body
-        (r, (System.nanoTime() - t0) / 1e9)
-      }
-
       // arm: broadcast graph, exact kNN lists (the O(N²) baseline)
       if (arms("roar_exact")) {
-        val (idxExact, tExact) = timed(GraphBuild.build(spark, e, e, params))
-        val (avgE, maxE) = degStats(idxExact.graph)
-        rows += f"roar_exact\t$f\t$n\t1\t$tExact%.1f\t$avgE%.2f\t$maxE"
-        println(rows.last)
+        val (idx, t) = Harness.timed(GraphBuild.build(spark, e, e, params))
+        val (avg, max) = degStats(idx.graph)
+        table.add("roar_exact", f, n, 1, f"$t%.1f", f"$avg%.2f", max)
       }
 
       // arm: broadcast graph, IVF-bucketed kNN lists (the scale posture
       // for list generation)
       if (arms("roar_ivf")) {
-        val (idxIvf, tIvf) = timed(
+        val (idx, t) = Harness.timed(
           GraphBuild.build(spark, e, e, params.copy(knnSource = "ivf")))
-        val (avgI, maxI) = degStats(idxIvf.graph)
-        rows += f"roar_ivf\t$f\t$n\t1\t$tIvf%.1f\t$avgI%.2f\t$maxI"
-        println(rows.last)
+        val (avg, max) = degStats(idx.graph)
+        table.add("roar_ivf", f, n, 1, f"$t%.1f", f"$avg%.2f", max)
       }
 
       // arm: persisted sharded layout — shard count grows with the
       // corpus (≈5k vectors per shard), per-shard exact kNN
       if (arms("sharded")) {
         val nShards = math.max(2, math.ceil(n / 5000.0).toInt)
-        val shardPath = Files.createTempDirectory("graft_buildsweep_sh_")
-        val (_, tSh) = timed(ShardedIndex.buildPersisted(
-          spark, e, params, nShards, shardPath.toString))
-        rows += f"sharded\t$f\t$n\t$nShards\t$tSh%.1f\t-\t-"
-        println(rows.last)
+        val (_, t) = Harness.timed(ShardedIndex.buildPersisted(spark, e,
+          params, nShards, Fixtures.tempDir("graft_buildsweep_sh_")))
+        table.add("sharded", f, n, nShards, f"$t%.1f", "-", "-")
       }
     }
 
-    // merge with an existing ladder: new rows replace their
-    // (arm, factor) key, untouched rows survive; order = factor-major
-    // then the arm order above (the committed TSV's historical shape)
-    def key(line: String): (String, Int) = {
-      val c = line.split("\t"); (c(0), c(1).toInt)
-    }
-    val existing =
-      if (Files.exists(Paths.get(out)))
-        scala.io.Source.fromFile(out).getLines().drop(1)
-          .filter(_.nonEmpty).toSeq
-      else Seq.empty
-    val fresh = rows.map(r => key(r) -> r).toMap
-    val merged = (existing.filterNot(l => fresh.contains(key(l))) ++ rows)
-      .sortBy { l => val (a, f) = key(l); (f, armOrder.indexOf(a)) }
-    Files.write(Paths.get(out),
-      ((header +: merged).mkString("\n") + "\n").getBytes("UTF-8"))
-    println(s"wrote $out (${merged.size} rows)")
+    table.merge(out)(mergeKey)
     spark.stop()
   }
 }

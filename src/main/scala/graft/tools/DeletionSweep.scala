@@ -3,11 +3,10 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.index.{BuildParams, ShardedIndex, ShardedIndexRef}
 import graft.operators.{KnnJoin, Recall, TopK}
-import graft.queries.{IndexQueries, VectorQueries}
-import graft.sources.Sinks
+import graft.queries.{Fixtures, VectorQueries}
 
 /** Deleted-fraction RECALL sweep for the sharded graph tier — the
   * evidence the deletion lifecycle's certificates cannot give: every
@@ -42,7 +41,7 @@ import graft.sources.Sinks
   * fresh-rebuild bound. Committed output: SWEEP_DELETION.tsv.
   *
   * Usage: `runMain graft.tools.DeletionSweep [sfDir] [fractions-csv]
-  * [budgets-csv] [outDir] [params] [nShards] [mode]` — defaults
+  * [budgets-csv] [out.tsv] [params] [nShards] [mode]` — defaults
   * /tmp/graft_sf1 (20k rows), 0.1,0.3,0.5, budgets 40,80,200,
   * `fixture` knobs (`ref` = the reference's production 100/35/100 —
   * graph degree must scale with the corpus, same argument as
@@ -58,43 +57,32 @@ object DeletionSweep {
       .split(",").map(_.trim.toDouble).toSeq
     val budgets = args.lift(2).getOrElse("40,80,200")
       .split(",").map(_.trim.toInt).toSeq
-    val outDir = args.lift(3).filter(_.nonEmpty)
-    val params = args.lift(4).getOrElse("fixture") match {
-      case "ref" => IndexQueries.FixtureParams.copy(
-        mSq = 100, mPjbp = 35, lPjpq = 100)
-      case _ => IndexQueries.FixtureParams
-    }
+    val out = args.lift(3).filter(_.nonEmpty)
+    val params = Harness.buildParams(args.lift(4))
     val nShards = args.lift(5).map(_.toInt).getOrElse(2)
     val mode = args.lift(6).getOrElse("uniform")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graft.index.residentShards", nShards.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (mode == "skew") {
-      val rows = runSkewed(spark, sfDir, fractions, budgets, params, nShards)
-      println("frac_hot\tglobal_frac\tstage\tbudget\trecall\trecall_hot\tsearch_sec")
-      rows.foreach { case (fh, fg, st, b, r, rh, t) =>
-        println(f"$fh%.2f\t$fg%.4f\t$st\t$b\t$r%.4f\t$rh%.4f\t$t%.3f") }
-      outDir.foreach { dir =>
-        import spark.implicits._
-        Sinks.writeTsv(rows.toDF("frac_hot", "global_frac", "stage",
-          "budget", "recall", "recall_hot", "search_sec"), dir)
+    val spark = Harness.session(
+      "spark.graft.index.residentShards" -> nShards.toString)
+    val table =
+      if (mode == "skew") {
+        val t = new Harness.Table("frac_hot", "global_frac", "stage",
+          "budget", "recall", "recall_hot", "search_sec")
+        runSkewed(spark, sfDir, fractions, budgets, params, nShards)
+          .foreach { case (fh, fg, st, b, r, rh, sec) =>
+            t.add(f"$fh%.2f", f"$fg%.4f", st, b, f"$r%.4f", f"$rh%.4f",
+              f"$sec%.3f")
+          }
+        t
+      } else {
+        val t = new Harness.Table("frac", "stage", "budget", "recall",
+          "search_sec")
+        run(spark, sfDir, fractions, budgets, params, nShards)
+          .foreach { case (f, st, b, r, sec) =>
+            t.add(f"$f%.2f", st, b, f"$r%.4f", f"$sec%.3f")
+          }
+        t
       }
-    } else {
-      val rows = run(spark, sfDir, fractions, budgets, params, nShards)
-      println("frac\tstage\tbudget\trecall\tsearch_sec")
-      rows.foreach { case (f, st, b, r, t) =>
-        println(f"$f%.2f\t$st\t$b\t$r%.4f\t$t%.3f") }
-      outDir.foreach { dir =>
-        import spark.implicits._
-        Sinks.writeTsv(rows.toDF("frac", "stage", "budget", "recall",
-          "search_sec"), dir)
-      }
-    }
+    out.foreach(table.write)
     spark.stop()
   }
 
@@ -112,8 +100,7 @@ object DeletionSweep {
       .localCheckpoint(true)
 
     // ONE base build per sweep; each fraction mutates a cheap dir copy
-    val basePath = java.nio.file.Files
-      .createTempDirectory("graft_delsweep_base_").toString
+    val basePath = Fixtures.tempDir("graft_delsweep_base_")
     ShardedIndex.buildPersisted(spark, emb, params, nShards, basePath)
 
     def recallRows(fr: Double, stage: String, ref: ShardedIndexRef,
@@ -121,11 +108,9 @@ object DeletionSweep {
                    remap: DataFrame => DataFrame = identity)
         : Seq[(Double, String, Int, Double, Double)] =
       budgets.map { l =>
-        val t0 = System.nanoTime()
-        val hits = remap(ShardedIndex.searchSingleDf(spark, queries, ref,
-            l = l, k = 4 * K))
-          .localCheckpoint(true) // search stage timed on its own
-        val searchSec = (System.nanoTime() - t0) / 1e9
+        val (hits, searchSec) = Harness.timed( // search stage on its own
+          remap(ShardedIndex.searchSingleDf(spark, queries, ref,
+            l = l, k = 4 * K)).localCheckpoint(true))
         val res = TopK.perGroupAgg(hits, Seq(col("q_id")), col("score"),
             col("d_id"), K, idName = "d_id")
           .groupBy(col("q_id").as("query_id"))
@@ -137,9 +122,7 @@ object DeletionSweep {
       }
 
     val out = fractions.flatMap { f =>
-      val path = java.nio.file.Files
-        .createTempDirectory(f"graft_delsweep_${(f * 100).toInt}%d_")
-        .toString
+      val path = Fixtures.tempDir(f"graft_delsweep_${(f * 100).toInt}%d_")
       copyDir(basePath, path)
       val ref = ShardedIndexRef(path, nShards, params.metric)
       val tranche = emb
@@ -162,9 +145,8 @@ object DeletionSweep {
 
       // fresh-rebuild bound: survivors renumbered dense (the strided
       // contract), searched, mapped back to original gids for recall
-      val freshPath = java.nio.file.Files
-        .createTempDirectory(f"graft_delsweep_fresh_${(f * 100).toInt}%d_")
-        .toString
+      val freshPath =
+        Fixtures.tempDir(f"graft_delsweep_fresh_${(f * 100).toInt}%d_")
       import org.apache.spark.sql.expressions.Window
       val renum = survivors.withColumn("new_id",
           (row_number().over(Window.orderBy(col("vec_id"))) - 1)
@@ -210,8 +192,7 @@ object DeletionSweep {
     val queries = emb.filter(col("vec_id") < NQ * C)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
       .localCheckpoint(true)
-    val basePath = java.nio.file.Files
-      .createTempDirectory("graft_delskew_base_").toString
+    val basePath = Fixtures.tempDir("graft_delskew_base_")
     ShardedIndex.buildPersisted(spark, emb, params, nShards, basePath)
 
     def gtOf(survivors: DataFrame): DataFrame =
@@ -232,9 +213,7 @@ object DeletionSweep {
       Recall.atK(res, gt, K).agg(avg(col("recall"))).first().getDouble(0)
 
     hotFractions.flatMap { fh =>
-      val path = java.nio.file.Files
-        .createTempDirectory(f"graft_delskew_${(fh * 100).toInt}%d_")
-        .toString
+      val path = Fixtures.tempDir(f"graft_delskew_${(fh * 100).toInt}%d_")
       copyDir(basePath, path)
       val ref = ShardedIndexRef(path, nShards, params.metric)
       val inHot = col("vec_id") % nShards === 0
@@ -252,10 +231,9 @@ object DeletionSweep {
                remap: DataFrame => DataFrame = identity)
           : Seq[(Double, Double, String, Int, Double, Double, Double)] =
         budgets.map { l =>
-          val t0 = System.nanoTime()
-          val hits = remap(ShardedIndex.searchSingleDf(spark, queries, r,
-              l = l, k = 4 * K)).localCheckpoint(true)
-          val searchSec = (System.nanoTime() - t0) / 1e9
+          val (hits, searchSec) = Harness.timed(
+            remap(ShardedIndex.searchSingleDf(spark, queries, r,
+              l = l, k = 4 * K)).localCheckpoint(true))
           val rec = recallOf(topkOf(hits), gt)
           val recHot = recallOf(
             topkOf(hits.filter(col("d_id") % nShards === 0)), gtHot)
@@ -265,9 +243,8 @@ object DeletionSweep {
       val pre = rows("pre_compact", ref)
       val refC = ShardedIndex.compact(spark, ref, params)
       val post = rows("post_compact", refC)
-      val freshPath = java.nio.file.Files
-        .createTempDirectory(f"graft_delskew_fresh_${(fh * 100).toInt}%d_")
-        .toString
+      val freshPath =
+        Fixtures.tempDir(f"graft_delskew_fresh_${(fh * 100).toInt}%d_")
       import org.apache.spark.sql.expressions.Window
       val renum = survivors.withColumn("new_id",
           (row_number().over(Window.orderBy(col("vec_id"))) - 1)

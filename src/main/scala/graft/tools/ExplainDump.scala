@@ -2,6 +2,9 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.Harness
+import graft.queries.Fixtures
+
 /** Dump `.explain("formatted")` for named queries to files — the
   * before/after plan evidence for optimization rounds
   * (`plans/r<N>/<query>_<suffix>.txt`). Lifecycle queries mutate a temp
@@ -17,14 +20,7 @@ object ExplainDump {
       sys.error("usage: ExplainDump <sfDir> <outDir> <suffix> q1,q2,...")
     val Array(sfDir, outDir, suffix, qlist) = args.take(4)
     val names = qlist.split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // Internal plan probes — DataFrames of operator-internal jobs (e.g.
     // a compaction's fold) that no declared query returns but whose
@@ -36,20 +32,9 @@ object ExplainDump {
           import org.apache.spark.sql.functions._
           val d = graft.Tables.documents(s, sfDir)
             .select(col("doc_id"), col("text"))
-          val idxDir = java.nio.file.Files
-            .createTempDirectory("graft_explain_inv_")
-          // best-effort cleanup of the probe's temp index once the JVM
-          // exits (the plan is captured un-executed, so the dir is only
-          // read for schema/stats)
-          sys.addShutdownHook {
-            def rm(p: java.nio.file.Path): Unit = {
-              if (java.nio.file.Files.isDirectory(p))
-                java.nio.file.Files.list(p).forEach(rm(_))
-              java.nio.file.Files.deleteIfExists(p)
-            }
-            rm(idxDir)
-          }
-          val idx = idxDir.toString
+          // the plan is captured un-executed, so the probe's index is
+          // only read for schema/stats and can go at JVM exit
+          val idx = Fixtures.tempDir("graft_explain_inv_")
           graft.operators.InvertedIndex.append(s, d, idx)
           graft.operators.InvertedIndex.deleteDocs(s, idx,
             d.filter(col("doc_id") % 13 === 0).select("doc_id"))

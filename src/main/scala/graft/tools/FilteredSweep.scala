@@ -1,11 +1,8 @@
 package graft.tools
 
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.{ScaleSmoke, Tables}
+import graft.{Harness, Tables}
 import graft.index.{GraphBuild, Metrics, VectorStore}
 import graft.plans.{AnnIndexRegistry, AnnRewrite}
 import graft.queries.IndexQueries
@@ -23,7 +20,7 @@ import graft.queries.IndexQueries
   * Usage: `runMain graft.tools.FilteredSweep [srcDir] [factors-csv]
   * [out]` — defaults /root/testdata/sf0.1, "10,25",
   * SWEEP_FILTERED.tsv. Scaled corpora are shared with BuildSweep
-  * (/tmp/graft_buildsweep/x<f>).
+  * ([[Harness.scaledDir]]).
   */
 object FilteredSweep {
   def main(args: Array[String]): Unit = {
@@ -31,31 +28,13 @@ object FilteredSweep {
     val factors = args.lift(1).getOrElse("10,25")
       .split(",").map(_.trim.toInt).toSeq
     val out = args.lift(2).getOrElse("SWEEP_FILTERED.tsv")
-    val workDir = sys.env.getOrElse("SPARK_GRAFT_BUILD_WORK",
-      "/tmp/graft_buildsweep")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     AnnRewrite.install(spark)
 
-    val rows = new scala.collection.mutable.ArrayBuffer[String]
-    rows += "factor\tn\tmod\tmatch_rows\toverfetch\texhaustive_s\trouted_s\tnosc_s\tstrategy\trecall"
-
+    val table = new Harness.Table("factor", "n", "mod", "match_rows",
+      "overfetch", "exhaustive_s", "routed_s", "nosc_s", "strategy", "recall")
     factors.foreach { f =>
-      val dir =
-        if (f == 1) srcDir
-        else {
-          val d = s"$workDir/x$f"
-          if (!Files.exists(Paths.get(d, "embeddings.parquet")))
-            ScaleSmoke.scaleTables(spark, srcDir, d, f)
-          d
-        }
-      val e = Tables.embeddings(spark, dir)
+      val e = Tables.embeddings(spark, Harness.scaledDir(spark, srcDir, f))
       val n = e.count()
       val idx = GraphBuild.build(spark, e, e, IndexQueries.FixtureParams)
       val raw = VectorStore.fromDf(e, "vec_id", "embedding",
@@ -84,7 +63,7 @@ object FilteredSweep {
           s"""SELECT vec_id, graft_vec_cosine(embedding, $qLit) AS score
              |FROM fs_corpus WHERE vec_id % $m = 0
              |ORDER BY score DESC LIMIT 10""".stripMargin
-        def timed(rewrite: Boolean, overfetch: Int,
+        def query(rewrite: Boolean, overfetch: Int,
                   preFilterMax: Option[Int] = None): (Seq[Long], Double) = {
           spark.conf.set("spark.graft.ann.rewrite", rewrite.toString)
           spark.conf.set("spark.graft.ann.filtered.overfetch",
@@ -92,37 +71,32 @@ object FilteredSweep {
           preFilterMax.foreach(p =>
             spark.conf.set("spark.graft.ann.filtered.preFilterMax",
               p.toString))
-          try {
-            val t0 = System.nanoTime()
-            val ids = spark.sql(sql).collect().map(_.getLong(0)).toSeq
-            (ids, (System.nanoTime() - t0) / 1e9)
-          } finally {
+          try Harness.timed(spark.sql(sql).collect().map(_.getLong(0)).toSeq)
+          finally {
             spark.conf.set("spark.graft.ann.rewrite", "false")
             spark.conf.unset("spark.graft.ann.filtered.overfetch")
             spark.conf.unset("spark.graft.ann.filtered.preFilterMax")
           }
         }
-        timed(rewrite = true, 8) // warm the path once (JIT + broadcasts)
-        val (exact, tEx) = timed(rewrite = false, 8)
+        query(rewrite = true, 8) // warm the path once (JIT + broadcasts)
+        val (exact, tEx) = query(rewrite = false, 8)
         val matches = n / m + (if (n % m > 0) 1 else 0)
         // default probe ceiling is 2k = 20 for this statement
         val strategy = if (matches <= 20) "prefilter" else "escalate"
         Seq(8, 40, 200).foreach { of =>
-          val (routed, tRt) = timed(rewrite = true, of)
+          val (routed, tRt) = query(rewrite = true, of)
           // same point with the short-circuit DISABLED: isolates what
           // the probe buys (or costs) against pure escalation
-          val (_, tNoSc) = timed(rewrite = true, of, preFilterMax = Some(0))
+          val (_, tNoSc) = query(rewrite = true, of, preFilterMax = Some(0))
           val recall =
             if (exact.isEmpty) 1.0
             else (routed.toSet & exact.toSet).size.toDouble / exact.size
-          rows += f"$f\t$n\t$m\t$matches\t$of\t$tEx%.2f\t$tRt%.2f\t$tNoSc%.2f\t$strategy\t$recall%.4f"
-          println(rows.last)
+          table.add(f, n, m, matches, of, f"$tEx%.2f", f"$tRt%.2f",
+            f"$tNoSc%.2f", strategy, f"$recall%.4f")
         }
       }
     }
-    Files.write(Paths.get(out),
-      (rows.mkString("\n") + "\n").getBytes("UTF-8"))
-    println(s"wrote $out")
+    table.write(out)
     spark.stop()
   }
 }

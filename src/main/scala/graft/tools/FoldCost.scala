@@ -3,10 +3,10 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
+import graft.Harness.timed
 import graft.operators.{IvfAnn, IvfPq, MinHashLsh, PqAnn, SemDedup, Sq8Ann}
-import graft.queries.TextQueries
-import graft.sources.Sinks
+import graft.queries.{Fixtures, TextQueries}
 
 /** Wall-clock cost of the `compactVersioned` fold on the four faces
   * that gained generation-versioned lifecycles in round 15 — IVF-PQ
@@ -26,7 +26,7 @@ import graft.sources.Sinks
   * fold cost scales with the face's on-disk footprint, not with
   * tranche size.
   *
-  * Usage: `runMain graft.tools.FoldCost [sfDir] [delPct] [outDir]` —
+  * Usage: `runMain graft.tools.FoldCost [sfDir] [delPct] [out.tsv]` —
   * defaults /tmp/graft_sf1, 10, stdout-only. Committed artifact:
   * SWEEP_FOLD_FACES.tsv (run at /tmp/graft_sf10 = 100x).
   */
@@ -35,30 +35,14 @@ object FoldCost {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val delPct = args.lift(1).map(_.toInt).getOrElse(10)
-    val outDir = args.lift(2).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val rows = run(spark, sfDir, delPct)
-    println("face\trows\tdel_rows\tbuild_sec\tdelete_sec\tfold_sec")
-    rows.foreach { case (f, n, d, b, del, fold) =>
-      println(f"$f\t$n\t$d\t$b%.1f\t$del%.1f\t$fold%.1f") }
-    outDir.foreach { dir =>
-      import spark.implicits._
-      Sinks.writeTsv(rows.toDF("face", "rows", "del_rows", "build_sec",
-        "delete_sec", "fold_sec"), dir)
-    }
+    val out = args.lift(2).filter(_.nonEmpty)
+    val spark = Harness.session()
+    val table = new Harness.Table("face", "rows", "del_rows", "build_sec",
+      "delete_sec", "fold_sec")
+    run(spark, sfDir, delPct).foreach { case (f, n, d, b, del, fold) =>
+      table.add(f, n, d, f"$b%.1f", f"$del%.1f", f"$fold%.1f") }
+    out.foreach(table.write)
     spark.stop()
-  }
-
-  private def timed[T](body: => T): (T, Double) = {
-    val t0 = System.nanoTime()
-    val r = body
-    (r, (System.nanoTime() - t0) / 1e9)
   }
 
   def run(spark: SparkSession, sfDir: String, delPct: Int)
@@ -82,8 +66,7 @@ object FoldCost {
       import spark.implicits._
       (0L until n).filter(_ % 100 < delPct).toDF("id")
     }
-    def root(tag: String): String = java.nio.file.Files
-      .createTempDirectory(s"graft_fold_$tag").toString
+    def root(tag: String): String = Fixtures.tempDir(s"graft_fold_$tag")
 
     // IVF-PQ codes face: seeded quantizers (frozen across folds by
     // contract), one codes relation per generation

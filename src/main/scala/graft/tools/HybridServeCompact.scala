@@ -5,11 +5,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{ScaleSmoke, Tables}
+import graft.{Harness, ScaleSmoke, Tables}
 import graft.index.Generations
 import graft.operators.{HybridRetrieval, InvertedIndex}
-import graft.queries.TextQueries
-import graft.sources.Sinks
+import graft.queries.{Fixtures, TextQueries}
 
 /** Hybrid (BM25 + semantic) serve-through-compaction at 100× doc count
   * — the INVERTED face's maintenance-loop evidence at the same scale
@@ -34,7 +33,7 @@ import graft.sources.Sinks
   * maintenance loop costs a live hybrid reader.
   *
   * Usage: `runMain graft.tools.HybridServeCompact [srcDir] [factor]
-  * [workDir] [outDir] [minBatches]` — defaults /root/testdata/sf0.1,
+  * [workDir] [out.tsv] [minBatches]` — defaults /root/testdata/sf0.1,
   * 100, /tmp/graft_hybrid100, stdout-only, 3 batches per steady phase.
   * Committed artifact: SWEEP_HYBRID.tsv.
   */
@@ -48,27 +47,16 @@ object HybridServeCompact {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(100)
     val workDir = args.lift(2).getOrElse("/tmp/graft_hybrid100")
-    val outDir = args.lift(3).filter(_.nonEmpty)
+    val out = args.lift(3).filter(_.nonEmpty)
     val minBatches = args.lift(4).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
 
     ScaleSmoke.scaleDocuments(spark, srcDir, workDir, factor)
     val rows = run(spark, workDir, minBatches)
-    println("phase\tbatch\tlatency_sec\tmatch")
+    val table = new Harness.Table("phase", "batch", "latency_sec", "match")
     rows.foreach { case (ph, i, lat, ok) =>
-      println(f"$ph\t$i\t$lat%.3f\t${if (ok) 1 else 0}") }
-    outDir.foreach { dir =>
-      import spark.implicits._
-      Sinks.writeTsv(rows.map { case (ph, i, lat, ok) =>
-        (ph, i, lat, if (ok) 1 else 0) }
-        .toDF("phase", "batch", "latency_sec", "match"), dir)
-    }
+      table.add(ph, i, f"$lat%.3f", if (ok) 1 else 0) }
+    out.foreach(table.write)
     val bad = rows.filterNot(_._4)
     spark.stop()
     if (bad.nonEmpty) {
@@ -83,8 +71,7 @@ object HybridServeCompact {
       : Seq[(String, Int, Double, Boolean)] = {
     import spark.implicits._
     val d = Tables.documents(spark, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_hybrid_serve_").toString
+    val root = Fixtures.tempDir("graft_hybrid_serve_")
     val half = d.agg(max(col("doc_id"))).first().getLong(0) / 2
     InvertedIndex.buildVersioned(spark, d.filter(col("doc_id") <= half), root)
     InvertedIndex.appendVersioned(spark, d.filter(col("doc_id") > half), root)
@@ -159,9 +146,8 @@ object HybridServeCompact {
             val ph = phase.get()
             if (ph != "pause") {
               val exp = expected.get()
-              val t0 = System.nanoTime()
-              val got = fusedTop20(survivorsOnly = ph != "before")
-              val lat = (System.nanoTime() - t0) / 1e9
+              val (got, lat) =
+                Harness.timed(fusedTop20(survivorsOnly = ph != "before"))
               out.add((ph, i, lat, got == exp))
               i += 1
             }

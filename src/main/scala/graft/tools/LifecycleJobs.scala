@@ -1,10 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.operators.InvertedIndex
+import graft.queries.Fixtures
 
 /** Spark-JOB accounting for the two slowest bench floors — the
   * text_bm25_versioned (6.73 s) and text_bm25_deleted (5.94 s)
@@ -26,19 +26,17 @@ object LifecycleJobs {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(16)
     // exact per-step counts: the committed per-step table is adjudicated,
     // and a fixed sleep attributed jobs to the wrong step on a loaded host
     val counter = new graft.JobCounter(spark)
-    val rows = collection.mutable.ArrayBuffer.empty[(String, String, Int, Double)]
+    val table = new Harness.Table("certificate", "step", "jobs", "seconds")
+    val totals = collection.mutable.LinkedHashMap.empty[String, (Int, Double)]
     def step[T](cert: String, name: String)(body: => T): T = {
       val (r, counts, secs) = counter.measure(body)
-      rows += ((cert, name, counts.jobs, secs))
+      table.add(cert, name, counts.jobs, f"$secs%.2f")
+      val (jobs, sum) = totals.getOrElse(cert, (0, 0.0))
+      totals(cert) = (jobs + counts.jobs, sum + secs)
       r
     }
 
@@ -47,8 +45,7 @@ object LifecycleJobs {
 
     // ===== text_bm25_versioned: the exact fixture sequence =====
     locally {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_jobs_vers_").toString
+      val root = Fixtures.tempDir("graft_jobs_vers_")
       step("text_bm25_versioned", "buildVersioned(half1)") {
         InvertedIndex.buildVersioned(spark,
           d.filter(col("doc_id") <= half), root)
@@ -77,8 +74,7 @@ object LifecycleJobs {
 
     // ===== text_bm25_deleted: the exact fixture sequence =====
     locally {
-      val idx = java.nio.file.Files
-        .createTempDirectory("graft_jobs_del_").toString
+      val idx = Fixtures.tempDir("graft_jobs_del_")
       step("text_bm25_deleted", "append(half1)") {
         InvertedIndex.append(spark, d.filter(col("doc_id") <= half), idx)
       }
@@ -129,8 +125,7 @@ object LifecycleJobs {
       val e = e0.filter(col("vec_id") < n)
       val nBase = n * 4 / 5
       val b1End = nBase + (n - nBase) / 2
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_jobs_ingest_").toString
+      val path = Fixtures.tempDir("graft_jobs_ingest_")
       step("g8_ingest_lifecycle", "buildPersisted(base)") {
         ShardedIndex.buildPersisted(spark,
           e.filter(col("vec_id") < nBase), params, 1, path)
@@ -151,8 +146,7 @@ object LifecycleJobs {
           compactAt = 0.25)._1
       }
       // ===== takedown_lifecycle stages over the same base posture =====
-      val tpath = java.nio.file.Files
-        .createTempDirectory("graft_jobs_takedown_").toString
+      val tpath = Fixtures.tempDir("graft_jobs_takedown_")
       step("takedown_lifecycle", "buildPersisted(base)") {
         ShardedIndex.buildPersisted(spark,
           e.filter(col("vec_id") < nBase), params, 1, tpath)
@@ -180,10 +174,8 @@ object LifecycleJobs {
       }
     }
 
-    println("certificate\tstep\tjobs\tseconds")
-    rows.foreach { case (c, s, j, t) => println(f"$c\t$s\t$j\t$t%.2f") }
-    for (cert <- rows.map(_._1).distinct)
-      println(f"TOTALS\t$cert\t${rows.filter(_._1 == cert).map(_._3).sum}\t${rows.filter(_._1 == cert).map(_._4).sum}%.2f")
+    totals.foreach { case (cert, (jobs, sum)) =>
+      table.add("TOTALS", cert, jobs, f"$sum%.2f") }
     spark.stop()
   }
 }

@@ -3,10 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.index.{BuildParams, ShardedIndex}
-import graft.queries.IndexQueries
-import graft.sources.Sinks
+import graft.queries.Fixtures
 
 /** Wall-clock cost of a MASS-REVOCATION generation flip — the
   * 30%-of-corpus takedown wave that breaks the bounded-mask contract
@@ -24,7 +23,7 @@ import graft.sources.Sinks
   * distributive path completes at all.
   *
   * Usage: `runMain graft.tools.MassRevoke [sfDir] [nShards] [frac]
-  * [outDir] [params]` — defaults /tmp/graft_sf10, 20, 0.3,
+  * [out.tsv] [params]` — defaults /tmp/graft_sf10, 20, 0.3,
   * stdout-only, `fixture`. Committed artifact: SWEEP_REVOKE.tsv.
   */
 object MassRevoke {
@@ -33,29 +32,14 @@ object MassRevoke {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf10")
     val nShards = args.lift(1).map(_.toInt).getOrElse(20)
     val frac = args.lift(2).map(_.toDouble).getOrElse(0.3)
-    val outDir = args.lift(3).filter(_.nonEmpty)
-    val params = args.lift(4).getOrElse("fixture") match {
-      case "ref" => IndexQueries.FixtureParams.copy(
-        mSq = 100, mPjbp = 35, lPjpq = 100)
-      case _ => IndexQueries.FixtureParams
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graft.index.residentShards", nShards.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val rows = run(spark, sfDir, nShards, frac, params)
-    println("mode\trows\tdeleted\tcompact_sec")
-    rows.foreach { case (m, n, d, sec) =>
-      println(f"$m\t$n\t$d\t$sec%.1f") }
-    outDir.foreach { dir =>
-      import spark.implicits._
-      Sinks.writeTsv(rows.toDF("mode", "rows", "deleted", "compact_sec"),
-        dir)
-    }
+    val out = args.lift(3).filter(_.nonEmpty)
+    val params = Harness.buildParams(args.lift(4))
+    val spark = Harness.session(
+      "spark.graft.index.residentShards" -> nShards.toString)
+    val table = new Harness.Table("mode", "rows", "deleted", "compact_sec")
+    run(spark, sfDir, nShards, frac, params).foreach { case (m, n, d, sec) =>
+      table.add(m, n, d, f"$sec%.1f") }
+    out.foreach(table.write)
     spark.stop()
   }
 
@@ -67,15 +51,13 @@ object MassRevoke {
     val n = emb.count()
     val every = math.max(1L, math.round(1.0 / frac))
     def lifecycle(mode: String): (String, Long, Long, Double, String) = {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_revoke_$mode").toString
+      val root = Fixtures.tempDir(s"graft_revoke_$mode")
       ShardedIndex.buildVersioned(spark, emb, params, nShards, root)
       val wave = spark.range(0, n).filter(col("id") % every === 0)
         .select(col("id").as("gid"))
       val deleted = ShardedIndex.deleteVersioned(spark, root, wave)
-      val t0 = System.nanoTime()
-      val ref = ShardedIndex.compactVersioned(spark, root, params)
-      val sec = (System.nanoTime() - t0) / 1e9
+      val (ref, sec) =
+        Harness.timed(ShardedIndex.compactVersioned(spark, root, params))
       (mode, n, deleted, sec, ref.path)
     }
     spark.conf.set("spark.graft.ann.deadSidecar.maxDriverIds",

@@ -1,6 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+
+import graft.Harness
+import graft.queries.Fixtures
 
 /** Regenerates the committed mm-decode EXPECTED parquet fixtures that
   * back the `mm_image_decode` / `mm_video_decode` fixture-checksum
@@ -13,37 +19,34 @@ import org.apache.spark.sql.SparkSession
   * purpose: `runMain graft.tools.MmExpected [sfDir] [outDir]`.
   */
 object MmExpected {
+
+  /** `df` as ONE parquet file at `target`, sorted by every column, so a
+    * committed fixture is byte-stable across regenerations (parquet row
+    * order is part of the file, not of the compare — compare_oracle
+    * hashes sorted rows). */
+  private[tools] def writeSorted(df: DataFrame, target: String): Unit = {
+    val tmp = Fixtures.tempDir("graft_fixture_")
+    df.orderBy(df.columns.map(col).toIndexedSeq: _*)
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val part = Files.list(Paths.get(tmp))
+      .filter(p => p.getFileName.toString.endsWith(".parquet"))
+      .findFirst().orElseThrow()
+    Files.copy(part, Paths.get(target), StandardCopyOption.REPLACE_EXISTING)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("fixtures")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val spark = Harness.session(16)
+    Files.createDirectories(Paths.get(outDir))
     // mm_image/video_decode are pure functions of doc_id (synthetic
     // payloads); mm_frame_pipeline reads the documents TEXT, so its
     // fixture is pinned to the sf0.01 corpus — the driver's correctness
     // gate scale (the oracle compare never runs at another sf)
     for (q <- Seq("mm_image_decode", "mm_video_decode",
         "mm_frame_pipeline")) {
-      val tmp = java.nio.file.Files
-        .createTempDirectory(s"graft_mm_expected_").toString
-      // one sorted file so the committed artifact is byte-stable
-      // across regenerations (parquet row order is part of the file,
-      // not the compare — compare_oracle hashes sorted rows)
-      val df = graft.SparkEntry.queries(q)(spark, sfDir)
-      df.orderBy(df.columns.map(org.apache.spark.sql.functions.col)
-          .toIndexedSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().orElseThrow()
-      java.nio.file.Files.copy(part,
-        java.nio.file.Paths.get(s"$outDir/${q}_expected.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      writeSorted(graft.SparkEntry.queries(q)(spark, sfDir),
+        s"$outDir/${q}_expected.parquet")
       println(s"$q -> $outDir/${q}_expected.parquet")
     }
     spark.stop()

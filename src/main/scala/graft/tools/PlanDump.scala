@@ -2,19 +2,46 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.mutable
+import scala.util.matching.Regex
+
+import graft.Harness
 
 /** Writes the executed physical plans of representative queries to
   * docs/PLANS.md — the `.explain`-audit artifact: broadcast orientations,
-  * partial aggregations, bucketed candidate joins, pushed filters. */
+  * partial aggregations, bucketed candidate joins, pushed filters. The
+  * plans are [[normalize]]d, so two runs on one corpus write the same
+  * bytes and a diff shows only plan changes. */
 object PlanDump {
+
+  /** `plan` with its run-varying tokens made stable. Masked: fixture temp
+    * dirs (`<tmp>/graft_<prefix>*`, with no tail where Spark cut the path
+    * at `spark.sql.maxMetadataStringLength`, since where it cuts depends
+    * on the random suffix's length), `@<hex>` object hashes and lambda
+    * class names. Renumbered in order of first appearance: exprIds,
+    * `plan_id`s, AQE query-stage ids and codegen-stage ids (they number in
+    * the order the JVM or AQE happened to create them). */
+  def normalize(plan: String): String = {
+    val masked = plan
+      .replaceAll("""[^\s\[\](),=]*/(graft_\w*?)\d{6,}\b""", "<tmp>/$1*")
+      .replaceAll("""(<tmp>/graft_\w*\*)[^\s,\]]*?\.\.\.""", "$1...")
+      .replaceAll("""Lambda\$?\d*/0x[0-9a-f]+""", "Lambda")
+      .replaceAll("""@[0-9a-f]+\b""", "@<hash>")
+    Seq("""#(\d+)""", """plan_id=(\d+)""", """QueryStage (\d+)""",
+        """\*\((\d+)\)""").foldLeft(masked) { (text, pattern) =>
+      val ids = mutable.Map.empty[String, Int]
+      pattern.r.replaceAllIn(text, m => Regex.quoteReplacement(
+        text.substring(m.start, m.start(1)) +
+          ids.getOrElseUpdate(m.group(1), ids.size + 1) +
+          text.substring(m.end(1), m.end)))
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the session time zone is printed in some plans: pin it, not the JVM's
+    val spark = Harness.session(8, "spark.sql.session.timeZone" -> "UTC")
     val picks = Seq(
       "j1_knn_cosine" -> "exact kNN: broadcast queries x streamed corpus, ObjectHashAggregate top-k",
       "a1_smooth_chamfer_topk" -> "fullscan rerank: one chamfer shuffle + one top-k shuffle",
@@ -66,8 +93,8 @@ object PlanDump {
     picks.foreach { case (name, note) =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE
-      val plan = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
+      val plan = normalize(df.queryExecution.executedPlan.toString
+        .split("== Initial Plan ==")(0))
       sb.append(s"\n## $name — $note\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Harness
 
 /** Regenerates the COMMITTED trained-quantizer fixtures that back the
   * `g9_ivfpq` codes-fixture oracle (r19 verdict task 4):
@@ -31,12 +32,7 @@ object QuantizerFixture {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse("fixtures")
     val sf = new java.io.File(sfDir).getName
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(16)
     import spark.implicits._
     import graft.operators.{IvfAnn, PqAnn}
 
@@ -48,18 +44,7 @@ object QuantizerFixture {
 
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     def commit(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-      // one sorted file so the committed artifact is byte-stable
-      // across regenerations (the MmExpected discipline)
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_quantfix_").toString
-      df.orderBy(df.columns.map(col).toIndexedSeq: _*)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(tmp))
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().orElseThrow()
-      java.nio.file.Files.copy(part,
-        java.nio.file.Paths.get(s"$outDir/$name"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      MmExpected.writeSorted(df, s"$outDir/$name")
       println(s"$name <- ${df.count()} rows")
     }
 

@@ -3,10 +3,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.index.{BuildParams, Generations, ShardedIndex}
-import graft.queries.IndexQueries
-import graft.sources.Sinks
+import graft.queries.Fixtures
 
 /** Wall-clock cost of the three maintenance folds a grown sharded
   * index can run — the number the maintenance-loop sizing needs
@@ -30,7 +29,7 @@ import graft.sources.Sinks
   * little extra and the maintenance loop should fold growth and
   * re-stripe in the same flip.
   *
-  * Usage: `runMain graft.tools.ReshardCost [sfDir] [nShards] [outDir]
+  * Usage: `runMain graft.tools.ReshardCost [sfDir] [nShards] [out.tsv]
   * [params]` — defaults /tmp/graft_sf1, 4, stdout-only, `fixture`.
   * Committed artifact: SWEEP_RESHARD.tsv.
   */
@@ -39,29 +38,15 @@ object ReshardCost {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val nShards = args.lift(1).map(_.toInt).getOrElse(4)
-    val outDir = args.lift(2).filter(_.nonEmpty)
-    val params = args.lift(3).getOrElse("fixture") match {
-      case "ref" => IndexQueries.FixtureParams.copy(
-        mSq = 100, mPjbp = 35, lPjpq = 100)
-      case _ => IndexQueries.FixtureParams
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graft.index.residentShards", nShards.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val rows = run(spark, sfDir, nShards, params)
-    println("op\tshards_from\tshards_to\trows\tsec")
-    rows.foreach { case (op, f, t, n, sec) =>
-      println(f"$op\t$f\t$t\t$n\t$sec%.1f") }
-    outDir.foreach { dir =>
-      import spark.implicits._
-      Sinks.writeTsv(rows.toDF("op", "shards_from", "shards_to", "rows",
-        "sec"), dir)
-    }
+    val out = args.lift(2).filter(_.nonEmpty)
+    val params = Harness.buildParams(args.lift(3))
+    val spark = Harness.session(
+      "spark.graft.index.residentShards" -> nShards.toString)
+    val table = new Harness.Table("op", "shards_from", "shards_to", "rows",
+      "sec")
+    run(spark, sfDir, nShards, params).foreach { case (op, f, t, n, sec) =>
+      table.add(op, f, t, n, f"$sec%.1f") }
+    out.foreach(table.write)
     spark.stop()
   }
 
@@ -72,39 +57,33 @@ object ReshardCost {
     val n = emb.count()
     val cut = n * 4 / 5
     def grownIndex(tag: String): String = {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_reshard_$tag").toString
+      val root = Fixtures.tempDir(s"graft_reshard_$tag")
       ShardedIndex.buildVersioned(spark,
         emb.filter(col("vec_id") < cut), params, nShards, root)
       ShardedIndex.appendVersioned(spark,
         emb.filter(col("vec_id") >= cut), root, params)
       root
     }
-    def timed(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
     // the re-shard target: per-shard rows that make autoShards ask for
     // DOUBLE the current count over the grown corpus
     val target = math.max(1L, n / (2L * nShards))
     val inplaceRoot = grownIndex("inplace")
-    val inplaceSec = timed {
+    val (_, inplaceSec) = Harness.timed {
       ShardedIndex.compact(spark,
         ShardedIndex.resolveVersioned(spark, inplaceRoot, params.metric),
         params)
       // the in-place fold mutated gen0 under quiescence; no flip
     }
     val versionedRoot = grownIndex("versioned")
-    val versionedSec = timed {
+    val (_, versionedSec) = Harness.timed {
       ShardedIndex.compactVersioned(spark, versionedRoot, params)
     }
     val reshardRoot = grownIndex("reshard")
-    var reshardTo = nShards
-    val reshardSec = timed {
-      reshardTo = ShardedIndex.compactVersioned(spark, reshardRoot, params,
-        targetShardRows = target).nShards
+    val (resharded, reshardSec) = Harness.timed {
+      ShardedIndex.compactVersioned(spark, reshardRoot, params,
+        targetShardRows = target)
     }
+    val reshardTo = resharded.nShards
     require(reshardTo != nShards,
       s"re-shard point did not change the shard count (still $reshardTo)")
     require(Generations.live(spark, reshardRoot).contains("gen1"),

@@ -5,11 +5,10 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Harness, Tables}
 import graft.index.{BuildParams, ShardedIndex}
 import graft.operators.{KnnJoin, Recall, TopK}
-import graft.queries.{IndexQueries, VectorQueries}
-import graft.sources.Sinks
+import graft.queries.{Fixtures, VectorQueries}
 
 /** Serve-through-compaction MEASUREMENT — the latency/recall evidence
   * behind the [[graft.index.Generations]] manifest design: a reader
@@ -35,7 +34,7 @@ import graft.sources.Sinks
   * the before-phase floor with the deltas folded and the mask retired.
   *
   * Usage: `runMain graft.tools.ServeThroughCompact [sfDir] [nShards]
-  * [outDir] [params] [minBatches]` — defaults /tmp/graft_sf1, 2,
+  * [out.tsv] [params] [minBatches]` — defaults /tmp/graft_sf1, 2,
   * stdout-only, `fixture` knobs (`ref` = 100/35/100), 3 batches per
   * steady phase. Committed artifact: SWEEP_SERVE_COMPACT.tsv.
   */
@@ -45,12 +44,8 @@ object ServeThroughCompact {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/tmp/graft_sf1")
     val nShards = args.lift(1).map(_.toInt).getOrElse(2)
-    val outDir = args.lift(2).filter(_.nonEmpty)
-    val params = args.lift(3).getOrElse("fixture") match {
-      case "ref" => IndexQueries.FixtureParams.copy(
-        mSq = 100, mPjbp = 35, lPjpq = 100)
-      case _ => IndexQueries.FixtureParams
-    }
+    val out = args.lift(2).filter(_.nonEmpty)
+    val params = Harness.buildParams(args.lift(3))
     val minBatches = args.lift(4).map(_.toInt).getOrElse(3)
     // "seq", "par", or "both": whether the reader's per-shard search
     // jobs run through the sequential loop, a submitter pool sized to
@@ -60,29 +55,20 @@ object ServeThroughCompact {
       case "par" => Seq(true)
       case _ => Seq(false, true)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.graft.index.residentShards", nShards.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val rows = modes.flatMap { par =>
+    val spark = Harness.session(
+      "spark.graft.index.residentShards" -> nShards.toString)
+    val table = new Harness.Table("mode", "phase", "batch", "latency_sec",
+      "qps", "recall")
+    modes.foreach { par =>
       spark.conf.set("spark.graft.index.parallelShardSearch",
-        if (par) math.min(nShards, cpus.toInt).toString else "1")
-      val tag = if (par) "par" else "seq"
+        if (par) math.min(nShards, Harness.cpus).toString else "1")
       run(spark, sfDir, nShards, params, minBatches)
-        .map { case (ph, i, lat, qps, rec) => (tag, ph, i, lat, qps, rec) }
+        .foreach { case (ph, i, lat, qps, rec) =>
+          table.add(if (par) "par" else "seq", ph, i, f"$lat%.3f",
+            f"$qps%.1f", f"$rec%.4f")
+        }
     }
-    println("mode\tphase\tbatch\tlatency_sec\tqps\trecall")
-    rows.foreach { case (m, ph, i, lat, qps, rec) =>
-      println(f"$m\t$ph\t$i\t$lat%.3f\t$qps%.1f\t$rec%.4f") }
-    outDir.foreach { dir =>
-      import spark.implicits._
-      Sinks.writeTsv(rows.toDF("mode", "phase", "batch", "latency_sec",
-        "qps", "recall"), dir)
-    }
+    out.foreach(table.write)
     spark.stop()
   }
 
@@ -96,8 +82,7 @@ object ServeThroughCompact {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_serve_compact_").toString
+    val root = Fixtures.tempDir("graft_serve_compact_")
     ShardedIndex.buildVersioned(spark, emb, params, nShards, root)
     val victimCond = col("vec_id") % 10 === 3
     require(ShardedIndex.deleteVersioned(spark, root,
@@ -135,15 +120,13 @@ object ServeThroughCompact {
       var i = 0
       try while (!stop.get()) {
         val ph = phase.get()
-        val t0 = System.nanoTime()
         // resolve + search under a reader lease: the batch's
         // generation survives the concurrent flip despite keepGens=0
-        val hits = ShardedIndex.withReaderLease(spark, root,
-            params.metric) { ref =>
+        val (hits, lat) = Harness.timed(ShardedIndex.withReaderLease(spark,
+            root, params.metric) { ref =>
           ShardedIndex.searchSingleDf(spark, queries, ref,
             l = 80, k = 4 * K).localCheckpoint(true)
-        }
-        val lat = (System.nanoTime() - t0) / 1e9
+        })
         val res = TopK.perGroupAgg(hits, Seq(col("q_id")), col("score"),
             col("d_id"), K, idName = "d_id")
           .groupBy(col("q_id").as("query_id"))

@@ -2,10 +2,10 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{ScaleSmoke, Tables}
+import graft.{Harness, Tables}
 import graft.index.{BeamSearch, GraphBuild, ShardedIndex, ShardedIndexRef}
 import graft.operators.{Recall, Rerank}
 import graft.queries.{IndexQueries, VarcQueries, VectorQueries}
@@ -32,15 +32,15 @@ import graft.queries.{IndexQueries, VarcQueries, VectorQueries}
   *    is priced out at 100×, exactly why the sharded tier exists);
   *  - `varc_sharded`  — the 100 TB posture: per-shard ragged search,
   *    bounded merge, same rerank. The persisted index is built once
-  *    per factor under the work dir and REUSED across runs.
+  *    per factor under [[Harness.workRoot]] (`x<f>/sharded<n>`, next
+  *    to the scaled corpus) and REUSED across runs.
   *
   * Per row: arm, factor, n (corpus vectors), qsets (ragged sets),
   * budget (per-shard beam budget; 0 for the fullscan GT arm),
   * build_sec (0 = reused/none), search_sec, rerank_sec, recall@10 vs
   * the fullscan GT, qps. Output MERGES with an existing TSV by
-  * (arm, factor, budget), like the other sweep tools — the ladder
-  * accretes one expensive point at a time; legacy 9-column rows are
-  * migrated in place (their budget was the then-fixed 120).
+  * (arm, factor, budget), like BuildSweep — the ladder accretes one
+  * expensive point at a time.
   *
   * The sharded arm runs a BUDGET LADDER per factor (r19 verdict task
   * 5: the fixed-c face has SWEEP_SF10_POLICY.tsv, varc had only the
@@ -57,30 +57,25 @@ object VarcSweep {
 
   private val QSets = 100 // ragged query sets (cards 1..5 → ~300 vectors)
 
+  private[graft] val Columns = Seq("arm", "factor", "n", "qsets", "budget",
+    "build_sec", "search_sec", "rerank_sec", "recall", "qps")
+  private val ArmOrder = Seq("varc_fullscan", "varc_roar", "varc_sharded")
+
+  /** Merge key: a re-run (arm, factor, budget) replaces its row; rows
+    * sort factor-major, then by arm, then by budget. */
+  private[graft] def mergeKey(c: String => String): (Int, Int, Int) =
+    (c("factor").toInt, ArmOrder.indexOf(c("arm")), c("budget").toInt)
+
   def main(args: Array[String]): Unit = {
     val srcDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factors = args.lift(1).getOrElse("1,10,100")
       .split(",").map(_.trim.toInt).toSeq
     val out = args.lift(2).getOrElse("SWEEP_VARC.tsv")
-    val workDir = sys.env.getOrElse("SPARK_GRAFT_VARC_WORK",
-      "/tmp/graft_varcsweep")
     val roarMax = sys.env.getOrElse("SPARK_GRAFT_VARC_ROAR_MAX", "10").toInt
     val budgets = sys.env.getOrElse("SPARK_GRAFT_VARC_BUDGETS",
       "120,240,480,960").split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed[T](body: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = body
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
+    val spark = Harness.session()
+    import Harness.timed
 
     def idsOf(df: DataFrame): DataFrame =
       df.groupBy(col("qset_id").as("query_id"))
@@ -92,19 +87,10 @@ object VarcSweep {
     GraphBuild.build(spark, Tables.embeddings(spark, srcDir),
       Tables.embeddings(spark, srcDir), IndexQueries.FixtureParams)
 
-    val header = "arm\tfactor\tn\tqsets\tbudget\tbuild_sec\tsearch_sec" +
-      "\trerank_sec\trecall\tqps"
-    val rows = new scala.collection.mutable.ArrayBuffer[String]
+    val table = new Harness.Table(Columns: _*)
 
     factors.foreach { f =>
-      val dir =
-        if (f == 1) srcDir
-        else {
-          val d = s"$workDir/x$f"
-          if (!Files.exists(Paths.get(d, "embeddings.parquet")))
-            ScaleSmoke.scaleTables(spark, srcDir, d, f)
-          d
-        }
+      val dir = Harness.scaledDir(spark, srcDir, f)
       val e = Tables.embeddings(spark, dir)
       val n = e.count()
       val params = IndexQueries.FixtureParams
@@ -131,9 +117,8 @@ object VarcSweep {
           .localCheckpoint(true))
       val gt = idsOf(gtRanked)
         .withColumnRenamed("ids", "gt_ids").localCheckpoint(true)
-      rows += f"varc_fullscan\t$f\t$n\t$nQ\t0\t0.0\t$tGt%.1f\t0.0\t1.0000" +
-        f"\t${nQ / tGt}%.1f"
-      println(rows.last)
+      table.add("varc_fullscan", f, n, nQ, 0, "0.0", f"$tGt%.1f", "0.0",
+        "1.0000", f"${nQ / tGt}%.1f")
 
       def evalArm(arm: String, buildSec: Double, budget: Int,
                   search: => DataFrame): Double = {
@@ -144,9 +129,8 @@ object VarcSweep {
             .localCheckpoint(true))
         val rec = Recall.atK(idsOf(ranked), gt, K)
           .agg(avg(col("recall"))).head().getDouble(0)
-        rows += f"$arm\t$f\t$n\t$nQ\t$budget\t$buildSec%.1f\t$tS%.1f" +
-          f"\t$tR%.1f\t$rec%.4f\t${nQ / (tS + tR)}%.1f"
-        println(rows.last)
+        table.add(arm, f, n, nQ, budget, f"$buildSec%.1f", f"$tS%.1f",
+          f"$tR%.1f", f"$rec%.4f", f"${nQ / (tS + tR)}%.1f")
         rec
       }
 
@@ -167,7 +151,7 @@ object VarcSweep {
       // ---- varc_sharded: the 100 TB posture, index reused on disk,
       // one row per budget-ladder point until recall recovers 0.9 ----
       val nShards = math.max(2, math.ceil(n / 5000.0).toInt)
-      val shardPath = s"$workDir/x$f/sharded$nShards"
+      val shardPath = s"${Harness.workRoot}/x$f/sharded$nShards"
       val (ref, tSh) =
         if (Files.exists(Paths.get(shardPath, "shard0")))
           (ShardedIndex.discover(spark,
@@ -190,32 +174,7 @@ object VarcSweep {
           "SPARK_GRAFT_VARC_BUDGETS")
     }
 
-    // merge with an existing ladder by (arm, factor, budget); legacy
-    // 9-column rows (pre-budget schema) carried the then-fixed 120
-    val armOrder = Seq("varc_fullscan", "varc_roar", "varc_sharded")
-    def migrate(line: String): String = {
-      val c = line.split("\t")
-      if (c.length == 9) // arm factor n qsets build search rerank rec qps
-        (c.take(4) :+ (if (c(0) == "varc_fullscan") "0" else "120"))
-          .mkString("\t") + "\t" + c.drop(4).mkString("\t")
-      else line
-    }
-    def key(line: String): (String, Int, Int) = {
-      val c = line.split("\t"); (c(0), c(1).toInt, c(4).toInt)
-    }
-    val existing =
-      if (Files.exists(Paths.get(out)))
-        scala.io.Source.fromFile(out).getLines().drop(1)
-          .filter(_.nonEmpty).map(migrate).toSeq
-      else Seq.empty
-    val fresh = rows.map(r => key(r) -> r).toMap
-    val merged = (existing.filterNot(l => fresh.contains(key(l))) ++ rows)
-      .sortBy { l =>
-        val (a, f, b) = key(l); (f, armOrder.indexOf(a), b)
-      }
-    Files.write(Paths.get(out),
-      ((header +: merged).mkString("\n") + "\n").getBytes("UTF-8"))
-    println(s"wrote $out (${merged.size} rows)")
+    table.merge(out)(mergeKey)
     spark.stop()
   }
 }

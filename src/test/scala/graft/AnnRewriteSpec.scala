@@ -1107,8 +1107,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     sets.write.mode("overwrite").parquet(dir)
     val corpus = spark.read.parquet(dir)
     corpus.createOrReplaceTempView("mv_sets_sh")
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_mv_sharded_").toString
+    val idxPath = TempDir("graft_mv_sharded_")
     import graft.index.ShardedIndex
     val base = ShardedIndex.buildPersisted(spark,
       e.filter(col("vec_id") < 400), IndexQueries.FixtureParams, 2, idxPath)
@@ -1630,8 +1629,7 @@ class AnnRewriteSpec extends AnyFunSuite {
         (r.getLong(0), math.rint(r.getDouble(1) * 1e6) / 1e6)).toSeq
     }
     // versioned sharded index: build gen0, tombstone a tranche
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ann_vroot_").toString
+    val root = TempDir("graft_ann_vroot_")
     ShardedIndex.resetResidencyTracking()
     ShardedIndex.buildVersioned(spark,
       corpus.select(col("vrid").as("vec_id"), col("vrvec").as("embedding")),
@@ -1675,8 +1673,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     val sample = IvfAnn.collectSample(d2, 2000, 42L)
     val centroids = IvfAnn.trainCentroids(sample, 16, seed = 42L)
     val cbs = PqAnn.trainCodebooks(sample, nSub = 8, ncode = 32, seed = 42L)
-    val root2 = java.nio.file.Files
-      .createTempDirectory("graft_ann_vroot_ivf_").toString
+    val root2 = TempDir("graft_ann_vroot_ivf_")
     IvfPq.buildVersioned(spark, d2, root2, centroids, cbs)
     assert(IvfPq.deleteVersioned(spark, root2,
       corpus2.filter(col("ivid") % 9 === 0)
@@ -1714,8 +1711,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     val corpus3 = spark.read.parquet(dir3)
     corpus3.createOrReplaceTempView("vroot3_corpus")
     val d3 = corpus3.select(col("svid").as("d_id"), col("svvec").as("d_vec"))
-    val root3 = java.nio.file.Files
-      .createTempDirectory("graft_ann_vroot_sq8_").toString
+    val root3 = TempDir("graft_ann_vroot_sq8_")
     val (_, bounds3) = Sq8Ann.buildVersioned(spark, d3, root3)
     assert(Sq8Ann.deleteVersioned(spark, root3,
       corpus3.filter(col("svid") % 9 === 0)
@@ -1829,8 +1825,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     val corpus = spark.read.parquet(dir)
     corpus.createOrReplaceTempView("sharded_corpus")
     val emb = corpus.select(col("vid3").as("vec_id"), col("vec3").as("embedding"))
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_ann_sharded_").toString
+    val idxPath = TempDir("graft_ann_sharded_")
     val base = ShardedIndex.buildPersisted(spark,
       emb.filter(col("vec_id") < 400), IndexQueries.FixtureParams, 2, idxPath)
     val ref = ShardedIndex.appendDelta(spark,
@@ -2098,8 +2093,7 @@ class AnnRewriteSpec extends AnyFunSuite {
     val corpus = spark.read.parquet(dir)
     corpus.createOrReplaceTempView("sv_sh_corpus")
     val emb = corpus.select(col("vid4").as("vec_id"), col("vec4").as("embedding"))
-    val idxPath = java.nio.file.Files
-      .createTempDirectory("graft_ann_sv_sharded_").toString
+    val idxPath = TempDir("graft_ann_sv_sharded_")
     val ref = ShardedIndex.buildPersisted(spark, emb,
       IndexQueries.FixtureParams, 2, idxPath)
     AnnIndexRegistry.registerSharded(corpus, "vid4", "vec4", ref,

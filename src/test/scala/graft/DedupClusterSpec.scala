@@ -129,8 +129,7 @@ class DedupClusterSpec extends AnyFunSuite {
   }
 
   test("reliable-checkpoint mode produces identical labels") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_cc_ckpt_").toString
+    val dir = TempDir("graft_cc_ckpt_")
     val conf = "spark.graft.cc.checkpointDir"
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (30L, 11L))
     val local = ConnectedComponents.components(pairsDf(edges))

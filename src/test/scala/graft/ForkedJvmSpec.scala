@@ -68,8 +68,7 @@ class ForkedJvmSpec extends AnyFunSuite {
   }
 
   test("query-pack fixture temp dirs are deleted when their JVM exits") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_tempdir_").toString
+    val dir = TempDir("graft_fork_tempdir_")
     val r = s"$dir/r"
     val p = launch(dir, "tempdir", r)
     try {
@@ -84,8 +83,7 @@ class ForkedJvmSpec extends AnyFunSuite {
   }
 
   test("seqlog CAS across processes: two JVMs race one log slot; exactly one conditional put wins") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_cas_").toString
+    val dir = TempDir("graft_fork_cas_")
     val root = s"$dir/root"
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$root/gen0"))
@@ -109,8 +107,7 @@ class ForkedJvmSpec extends AnyFunSuite {
   }
 
   test("writer lease across processes: a second JVM is excluded loudly while held, acquires after release") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_wlease_").toString
+    val dir = TempDir("graft_fork_wlease_")
     val root = s"$dir/root"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
     var blocked: String = null
@@ -143,8 +140,7 @@ class ForkedJvmSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import graft.index.ShardedIndex
     import graft.queries.IndexQueries
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_serve_").toString
+    val dir = TempDir("graft_fork_serve_")
     val root = s"$dir/root"
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 250)
     ShardedIndex.resetResidencyTracking()
@@ -191,8 +187,7 @@ class ForkedJvmSpec extends AnyFunSuite {
   // the dead process's committed flip instead of losing it.
   for (committer <- Seq("rename", "seqlog"))
     test(s"kill -9 mid-publish ($committer): dead holder's committed flip survives, lease times out, next publish recovers") {
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_fork_kill9_${committer}_").toString
+      val dir = TempDir(s"graft_fork_kill9_${committer}_")
       val root = s"$dir/root"
       def mkGen(n: String): Unit = java.nio.file.Files
         .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
@@ -269,8 +264,7 @@ class ForkedJvmSpec extends AnyFunSuite {
     // generation (a dead reader must not wedge storage reclamation
     // forever) and (c) delete the leaked lease file — no unbounded
     // lease-file accumulation from crashed readers.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_kill9_reader_").toString
+    val dir = TempDir("graft_fork_kill9_reader_")
     val root = s"$dir/root"
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
@@ -322,8 +316,7 @@ class ForkedJvmSpec extends AnyFunSuite {
     import graft.index.{ShardedIndex, ShardedIndexRef}
     import graft.queries.IndexQueries
     import graft.streaming.StreamingIngest
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_kill9_ingest_").toString
+    val dir = TempDir("graft_fork_kill9_ingest_")
     val root = s"$dir/root"
     val (nBase, batchEnd) = (200L, 250L)
     val e = Tables.embeddings(spark, sfDir)
@@ -379,8 +372,7 @@ class ForkedJvmSpec extends AnyFunSuite {
     import graft.operators.InvertedIndex
     import graft.queries.IndexQueries
     import graft.streaming.StreamingIngest
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_kill9_takedown_").toString
+    val dir = TempDir("graft_fork_kill9_takedown_")
     val shardedPath = s"$dir/sharded"
     val invPath = s"$dir/inv"
     val e = Tables.embeddings(spark, sfDir)
@@ -429,8 +421,7 @@ class ForkedJvmSpec extends AnyFunSuite {
   }
 
   test("reader lease across processes: a generation pinned by another JVM survives keepGens=0 publishes here") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_fork_rlease_").toString
+    val dir = TempDir("graft_fork_rlease_")
     val root = s"$dir/root"
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))

@@ -28,8 +28,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   private def manifestPointerBody(): Unit = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_manifest_").toString
+    val root = TempDir("graft_gen_manifest_")
     assert(Generations.live(spark, root + "/nope").isEmpty)
     assert(Generations.next(spark, root) === (("gen0", s"$root/gen0")))
     // publish refuses a generation that does not exist
@@ -84,8 +83,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("manifest cache: zero reads within the TTL; own flips instant; a foreign flip lands within the TTL") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_mcache_").toString
+    val root = TempDir("graft_gen_mcache_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     mkGen("gen0"); Generations.publish(spark, root, "gen0")
@@ -126,8 +124,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("manifest grace depth: keepGens retains N predecessors; a slow reader survives two publishes") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_keep_").toString
+    val root = TempDir("graft_gen_keep_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     def exists(n: String) = java.nio.file.Files
@@ -157,8 +154,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("reader lease: a leased generation survives any number of publishes; expiry and release retire it") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_rlease_").toString
+    val root = TempDir("graft_gen_rlease_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     def exists(n: String) = java.nio.file.Files
@@ -224,8 +220,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("writer lease: a second writer fails loudly; the index stays serveable; stale leases break") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_lease_").toString
+    val root = TempDir("graft_gen_lease_")
     java.nio.file.Files.createDirectories(
       java.nio.file.Paths.get(s"$root/gen0"))
     Generations.withWriterLease(spark, root, "test.build") {
@@ -282,8 +277,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("object-store guard: writer entry points fail loudly on a scheme without atomic rename") {
-    val local = java.nio.file.Files
-      .createTempDirectory("graft_gen_scheme_").toString
+    val local = TempDir("graft_gen_scheme_")
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mock.impl", classOf[NonAtomicMockFs].getName)
     val root = s"mock://${local}"
@@ -322,8 +316,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   private def seqlogBody(): Unit = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_seqlog_").toString
+    val root = TempDir("graft_gen_seqlog_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     def exists(n: String) = java.nio.file.Files
@@ -375,8 +368,7 @@ class GenerationSpec extends AnyFunSuite {
   test("seqlog committer: the conditional put refuses a claimed slot; racing writers never lose an update") {
     spark.conf.set("spark.graft.gen.committer", "seqlog")
     try {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_gen_cas_").toString
+      val root = TempDir("graft_gen_cas_")
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(s"$root/gen0"))
       val f = new org.apache.hadoop.fs.Path(root)
@@ -467,8 +459,7 @@ class GenerationSpec extends AnyFunSuite {
     // stale for a full TTL, breaking the lease paths'
     // invalidate-then-resolve guarantee. The test hook injects exactly
     // that interleaving.
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_epochrace_").toString
+    val root = TempDir("graft_gen_epochrace_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     spark.conf.set("spark.graft.gen.manifestCacheMs", "60000")
@@ -512,8 +503,7 @@ class GenerationSpec extends AnyFunSuite {
   test("rename publish: garbage seqlog debris is cleaned, a genuinely migrated root still refuses") {
     spark.conf.set("spark.graft.gen.manifestCacheMs", "0")
     try {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_gen_seqdebris_").toString
+      val root = TempDir("graft_gen_seqdebris_")
       def mkGen(n: String): Unit = java.nio.file.Files
         .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
       mkGen("gen0"); Generations.publish(spark, root, "gen0")
@@ -556,8 +546,7 @@ class GenerationSpec extends AnyFunSuite {
     // lock was released between the exists probe and the read, the
     // refresh must SKIP — re-creating it would wedge the next writer
     // until leaseTimeoutMs behind a lock nobody holds
-    val local = java.nio.file.Files
-      .createTempDirectory("graft_gen_norevive_").toString
+    val local = TempDir("graft_gen_norevive_")
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mock.impl", classOf[NonAtomicMockFs].getName)
     val root = s"mock://${local}"
@@ -579,8 +568,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   private def seqlogRetireBody(): Unit = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_seqretire_").toString
+    val root = TempDir("graft_gen_seqretire_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     def exists(n: String) = java.nio.file.Files
@@ -643,8 +631,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("writer lease entry drops the cached manifest: a foreign flip inside the TTL cannot misroute a versioned write") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_wfresh_").toString
+    val root = TempDir("graft_gen_wfresh_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     spark.conf.set("spark.graft.gen.manifestCacheMs", "60000")
@@ -673,8 +660,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("reader lease acquisition re-checks membership uncached: a raced flip cannot hand out a dir mid-retirement") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_rfresh_").toString
+    val root = TempDir("graft_gen_rfresh_")
     def mkGen(n: String): Unit = java.nio.file.Files
       .createDirectories(java.nio.file.Paths.get(s"$root/$n"))
     spark.conf.set("spark.graft.gen.manifestCacheMs", "60000")
@@ -701,8 +687,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("stale-break re-verifies on the moved lock: a fresh lock is restored, a genuinely stale one breaks") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_break_").toString
+    val root = TempDir("graft_gen_break_")
     val f = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val lockP = java.nio.file.Paths.get(s"$root/_writer.lock")
@@ -729,8 +714,7 @@ class GenerationSpec extends AnyFunSuite {
     // object stores (the casSchemes/seqlog posture) have immutable
     // mtimes — setTimes is a silent no-op — so proof-of-life there
     // must re-put the lock object, preserving the holder identity
-    val local = java.nio.file.Files
-      .createTempDirectory("graft_gen_refresh_").toString
+    val local = TempDir("graft_gen_refresh_")
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mock.impl", classOf[NonAtomicMockFs].getName)
     val root = s"mock://${local}"
@@ -754,8 +738,7 @@ class GenerationSpec extends AnyFunSuite {
     // permanent maintenance wedge). On those schemes the break trusts
     // the caller's staleness read of the ORIGINAL lock (kept
     // meaningful by the rewrite-based proof-of-life) and deletes.
-    val local = java.nio.file.Files
-      .createTempDirectory("graft_gen_osbreak_").toString
+    val local = TempDir("graft_gen_osbreak_")
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mock.impl", classOf[NonAtomicMockFs].getName)
     val root = s"mock://${local}"
@@ -780,8 +763,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("object-store guard: seqlog requires only the conditional put, gated by casSchemes") {
-    val local = java.nio.file.Files
-      .createTempDirectory("graft_gen_casscheme_").toString
+    val local = TempDir("graft_gen_casscheme_")
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.mock.impl", classOf[NonAtomicMockFs].getName)
     val root = s"mock://${local}"
@@ -823,8 +805,7 @@ class GenerationSpec extends AnyFunSuite {
 
   test("sharded face: a pre-compact reader serves through a concurrent compaction") {
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 300)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_sharded_").toString
+    val root = TempDir("graft_gen_sharded_")
     ShardedIndex.resetResidencyTracking()
     ShardedIndex.buildVersioned(spark, emb.filter(col("vec_id") < 250),
       IndexQueries.FixtureParams, nShards = 2, root)
@@ -912,8 +893,7 @@ class GenerationSpec extends AnyFunSuite {
     // batch, including any in flight across the flip, must answer the
     // identical survivor set with zero errors.
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 250)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_leasedserve_").toString
+    val root = TempDir("graft_gen_leasedserve_")
     ShardedIndex.resetResidencyTracking()
     ShardedIndex.buildVersioned(spark, emb, IndexQueries.FixtureParams,
       nShards = 2, root)
@@ -974,8 +954,7 @@ class GenerationSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 300)
     ShardedIndex.resetResidencyTracking()
     def lifecycle(tag: String): String = {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_gen_dist_$tag").toString
+      val root = TempDir(s"graft_gen_dist_$tag")
       ShardedIndex.buildVersioned(spark, emb,
         IndexQueries.FixtureParams, nShards = 2, root)
       // purge 1: a mass tranche (every third gid)
@@ -1019,8 +998,7 @@ class GenerationSpec extends AnyFunSuite {
     // per-shard job loop binds a many-shard batch) must be a pure
     // scheduling change — same candidates, same scores, same order
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 300)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_parshard_").toString
+    val root = TempDir("graft_gen_parshard_")
     ShardedIndex.resetResidencyTracking()
     ShardedIndex.buildVersioned(spark, emb.filter(col("vec_id") < 250),
       IndexQueries.FixtureParams, nShards = 4, root)
@@ -1054,8 +1032,7 @@ class GenerationSpec extends AnyFunSuite {
     // dead set re-maps to the new (shard, local) split, readers hold
     // the grace generation.
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 400)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_reshard_").toString
+    val root = TempDir("graft_gen_reshard_")
     ShardedIndex.resetResidencyTracking()
     ShardedIndex.buildVersioned(spark, emb.filter(col("vec_id") < 200),
       IndexQueries.FixtureParams, nShards = 2, root)
@@ -1098,8 +1075,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("inverted face: a pre-compact reader serves through a concurrent compaction") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_gen_inv_").toString
+    val root = TempDir("graft_gen_inv_")
     val docs = (1L to 40L).map(i =>
       (i, s"term${i % 7} term${i % 5} shared filler${i % 3}"))
       .toDF("doc_id", "text")

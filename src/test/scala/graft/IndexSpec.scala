@@ -226,8 +226,7 @@ class IndexSpec extends AnyFunSuite {
   test("persisted sharded tier holds at most ONE shard resident end-to-end") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sharded_lifecycle_").toString
+    val path = TempDir("graft_sharded_lifecycle_")
     ShardedIndex.resetResidencyTracking()
     val ref = ShardedIndex.buildPersisted(spark, emb,
       IndexQueries.FixtureParams, nShards = 3, path)
@@ -256,8 +255,7 @@ class IndexSpec extends AnyFunSuite {
   test("resident-shard cache: peak <= conf, re-search does zero new loads") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sharded_cache_").toString
+    val path = TempDir("graft_sharded_cache_")
     val conf = "spark.graft.index.residentShards"
     spark.conf.set(conf, "2")
     try {
@@ -291,8 +289,7 @@ class IndexSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sharded_delta_").toString
+    val path = TempDir("graft_sharded_delta_")
     ShardedIndex.resetResidencyTracking()
     val ref0 = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2, path)
@@ -375,8 +372,7 @@ class IndexSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sharded_del_").toString
+    val path = TempDir("graft_sharded_del_")
     ShardedIndex.resetResidencyTracking()
     val ref0 = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2, path)
@@ -466,8 +462,7 @@ class IndexSpec extends AnyFunSuite {
     // crash window: a FIRST delete that died before its job committed
     // leaves an uncommitted dir (only _temporary) — reads must treat it
     // as "no tombstones", not fail; a re-run delete then commits
-    val path2 = java.nio.file.Files
-      .createTempDirectory("graft_sharded_del2_").toString
+    val path2 = TempDir("graft_sharded_del2_")
     val ref3 = ShardedIndex.buildPersisted(spark,
       emb.filter(col("vec_id") < 100), IndexQueries.FixtureParams, 2, path2)
     java.nio.file.Files.createDirectories(
@@ -484,8 +479,7 @@ class IndexSpec extends AnyFunSuite {
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") < 400)
     val delta = emb.filter(col("vec_id") >= 400 && col("vec_id") < 450)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_compact_crash_").toString
+    val path = TempDir("graft_compact_crash_")
     val ref0 = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2, path)
     ShardedIndex.appendDelta(spark, delta, ref0, IndexQueries.FixtureParams)
@@ -659,8 +653,7 @@ class IndexSpec extends AnyFunSuite {
     // discovery: deltas appear from disk; a PARTIAL delta (no ids dir —
     // crash mid-append) is invisible, and a gap truncates the sequence
     val emb = Tables.embeddings(spark, sfDir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_discover_").toString
+    val path = TempDir("graft_discover_")
     val ref0 = ShardedIndex.buildPersisted(spark,
       emb.filter(col("vec_id") < 200), IndexQueries.FixtureParams,
       nShards = 1, path)
@@ -909,8 +902,7 @@ class IndexSpec extends AnyFunSuite {
     // in-place overwrite whose crash window would lose prior erased ids.
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 200)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_dead_swap_").toString
+    val path = TempDir("graft_dead_swap_")
     ShardedIndex.resetResidencyTracking()
     val ref = ShardedIndex.buildPersisted(spark, emb,
       IndexQueries.FixtureParams, nShards = 2, path)
@@ -984,8 +976,7 @@ class IndexSpec extends AnyFunSuite {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") < 100)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_append_guard_").toString
+    val path = TempDir("graft_append_guard_")
     val ref = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2, path)
     base.select(col("vec_id"), col("embedding"))
@@ -1006,8 +997,7 @@ class IndexSpec extends AnyFunSuite {
   test("compact early return clears a stranded erased-set snapshot") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 100)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_snap_clear_").toString
+    val path = TempDir("graft_snap_clear_")
     val ref = ShardedIndex.buildPersisted(spark, emb,
       IndexQueries.FixtureParams, nShards = 2, path)
     // the state a crash between compact's two trailing deleteDirs
@@ -1024,8 +1014,7 @@ class IndexSpec extends AnyFunSuite {
   test("per-shard deleted fraction exposes a skewed takedown wave") {
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 200)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_skew_frac_").toString
+    val path = TempDir("graft_skew_frac_")
     ShardedIndex.resetResidencyTracking()
     val ref = ShardedIndex.buildPersisted(spark, emb,
       IndexQueries.FixtureParams, nShards = 4, path)

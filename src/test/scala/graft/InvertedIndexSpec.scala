@@ -13,8 +13,7 @@ class InvertedIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshIndex(): String = {
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_invidx_spec_").toString
+    val idx = TempDir("graft_invidx_spec_")
     InvertedIndex.append(spark,
       Seq((1L, "aa bb cc"), (2L, "bb cc dd"), (3L, ""))
         .toDF("doc_id", "text"), idx)

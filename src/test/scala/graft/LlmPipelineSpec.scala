@@ -288,7 +288,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 120)
     def shingles(pred: org.apache.spark.sql.Column) =
       TextQueries.shingleHashes(docs.filter(pred))
-    val idx = java.nio.file.Files.createTempDirectory("graft_bandidx_t_").toString
+    val idx = TempDir("graft_bandidx_t_")
     MinHashLsh.writeBandIndex(
       MinHashLsh.bandKeys(shingles(col("doc_id") % 3 === 0), 8, 2), idx)
     val b1 = MinHashLsh.bandKeys(shingles(col("doc_id") % 3 === 1), 8, 2)
@@ -310,8 +310,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 120)
     def shingles(pred: org.apache.spark.sql.Column) =
       TextQueries.shingleHashes(docs.filter(pred))
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_bandidx_del_t_").toString
+    val idx = TempDir("graft_bandidx_del_t_")
     MinHashLsh.writeBandIndex(
       MinHashLsh.bandKeys(shingles(col("doc_id") % 3 =!= 0), 8, 2), idx)
     val victims = docs
@@ -904,8 +903,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val sample = IvfAnn.collectSample(d, 2000, 42L)
     val centroids = IvfAnn.trainCentroids(sample, 16, seed = 42L)
     val cbs = PqAnn.trainCodebooks(sample, nSub = 8, ncode = 32, seed = 42L)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_test_").toString
+    val path = TempDir("graft_ivfpq_test_")
     IvfPq.writeIndex(spark, d, path, centroids, cbs)
     // the index is codes-only: no vector column in the scanned files
     val idx = spark.read.parquet(path)
@@ -937,8 +935,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val centroids = IvfAnn.seededCentroids(d, 16)
     val cbs = PqAnn.seededCodebooks(d, nSub = 8, ncode = 16)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_seed_test_").toString
+    val path = TempDir("graft_ivfpq_seed_test_")
     IvfPq.writeIndexSeeded(spark, d, path, centroids, cbs)
     val idx = spark.read.parquet(path)
     assert(idx.columns.toSet === Set("d_id", "codes", "cell"))
@@ -993,8 +990,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     // derived from the full corpus here so both sides share them
     val centroids = IvfAnn.seededCentroids(d, 16)
     val cbs = PqAnn.seededCodebooks(d, nSub = 8, ncode = 16)
-    def tmp(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft_ivfpq_$tag").toString
+    def tmp(tag: String) = TempDir(s"graft_ivfpq_$tag")
     val full = tmp("full_")
     IvfPq.writeIndexSeeded(spark, d, full, centroids, cbs)
     val incr = tmp("incr_")
@@ -1026,8 +1022,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val n = d.count().toInt
     val centroids = IvfAnn.seededCentroids(d, 16)
     val cbs = PqAnn.seededCodebooks(d, nSub = 8, ncode = 16)
-    def tmp(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft_ivfpq_$tag").toString
+    def tmp(tag: String) = TempDir(s"graft_ivfpq_$tag")
     val full = tmp("del_")
     IvfPq.writeIndexSeeded(spark, d, full, centroids, cbs)
     // saturating nCand + every cell probed => the search is EXACT, so
@@ -1071,8 +1066,7 @@ class LlmPipelineSpec extends AnyFunSuite {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val n = d.count().toInt
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sq8_del_").toString
+    val path = TempDir("graft_sq8_del_")
     val bounds = Sq8Ann.writeIndex(d, path)
     def searchKey(codes: org.apache.spark.sql.DataFrame) =
       Sq8Ann.searchEncodedBlocked(q, codes, d, bounds, k = 10,
@@ -1109,8 +1103,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
     val centroids = IvfAnn.seededCentroids(d, 16)
     val cbs = PqAnn.seededCodebooks(d, nSub = 8, ncode = 16)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_blk_").toString
+    val path = TempDir("graft_ivfpq_blk_")
     IvfPq.writeIndexSeeded(spark, d, path, centroids, cbs)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
@@ -1125,8 +1118,7 @@ class LlmPipelineSpec extends AnyFunSuite {
       IvfAnn.collectSample(d, 2000, 42L), 16, seed = 42L)
     val tCbs = PqAnn.trainCodebooks(
       IvfAnn.collectSample(d, 2000, 42L), nSub = 8, ncode = 32, seed = 42L)
-    val tPath = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_blk_t_").toString
+    val tPath = TempDir("graft_ivfpq_blk_t_")
     IvfPq.writeIndex(spark, d, tPath, tCentroids, tCbs)
     val tSingle = key(IvfPq.knnOverIndex(spark, q, tPath, d, tCentroids,
       tCbs, k = 10, excludeSelf = true))

@@ -125,8 +125,7 @@ class RobustnessSpec extends AnyFunSuite {
     assert(r.count() === 0L)
     // empty query batch over a seeded IVF-PQ index: empty ranked output
     val cbs = PqAnn.seededCodebooks(d, 8, 16)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_edge_").toString
+    val path = TempDir("graft_ivfpq_edge_")
     IvfPq.writeIndexSeeded(spark, d, path, seeds, cbs)
     val out = IvfPq.knnSeededOverIndex(spark,
       d.filter(col("d_id") < 0)

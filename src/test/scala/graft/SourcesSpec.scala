@@ -17,8 +17,7 @@ class SourcesSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import graft.operators.Watermark
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_wm_").toString + "/idx"
+    val dir = TempDir("graft_wm_") + "/idx"
     // no index at all -> None
     assert(Watermark.read(spark, dir, "id") === None)
     // legacy index (no sidecar) -> falls back to a column-pruned scan

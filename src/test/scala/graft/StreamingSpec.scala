@@ -230,8 +230,7 @@ class StreamingSpec extends AnyFunSuite {
     // Structured Streaming driving ShardedIndex.appendDelta end-to-end
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") < 440)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_delta_").toString
+    val path = TempDir("graft_stream_delta_")
     var ref = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2, path)
     val input = MemoryStream[(Long, Seq[Float])](spark)
@@ -272,8 +271,7 @@ class StreamingSpec extends AnyFunSuite {
     // deltas into the strided base when their fraction passes compactAt
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") < 400)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_lifecycle_").toString
+    val path = TempDir("graft_stream_lifecycle_")
     var ref = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2, path)
     val actions = scala.collection.mutable.ArrayBuffer[String]()
@@ -326,7 +324,7 @@ class StreamingSpec extends AnyFunSuite {
     val base = emb.filter(col("vec_id") < 400)
     def freshIndex(tag: String) = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2,
-      java.nio.file.Files.createTempDirectory(tag).toString)
+      TempDir(tag))
     val crashed = freshIndex("graft_ingest_crash_")
     val twin = freshIndex("graft_ingest_twin_")
     val batch = emb.filter(col("vec_id") >= 400 && col("vec_id") < 450)
@@ -376,8 +374,7 @@ class StreamingSpec extends AnyFunSuite {
     // permanently wedged stream.
     val emb = Tables.embeddings(spark, sfDir)
     val base = emb.filter(col("vec_id") < 400)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ingest_stage_").toString
+    val path = TempDir("graft_ingest_stage_")
     val ref0 = ShardedIndex.buildPersisted(spark, base,
       IndexQueries.FixtureParams, nShards = 2, path)
     val rows = emb.filter(col("vec_id") >= 400).collect()
@@ -434,8 +431,7 @@ class StreamingSpec extends AnyFunSuite {
     // builds a fresh successor (monotone numbering never reuses the
     // debris) and its publish retires the debris dir.
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 300)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ver_crash_").toString
+    val root = TempDir("graft_ver_crash_")
     ShardedIndex.resetResidencyTracking()
     ShardedIndex.buildVersioned(spark, emb, IndexQueries.FixtureParams,
       nShards = 2, root)
@@ -526,8 +522,7 @@ class StreamingSpec extends AnyFunSuite {
     // the parquet-index face of streaming near-dup (vs the state-store
     // face streamingBandCollisions): each micro-batch dedups against
     // everything before it, then joins the resident side
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_sdedup_").toString
+    val dir = TempDir("graft_sdedup_")
     val idx = s"$dir/index"
     val pairsOut = s"$dir/pairs"
     val g1 = Seq("aa bb cc", "bb cc dd", "cc dd ee")
@@ -592,8 +587,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming incremental semdedup: micro-batch marks equal the batch operator") {
     import graft.operators.{IvfAnn, SemDedup}
     import graft.queries.AnnQueries
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_semdedup_stream_").toString
+    val dir = TempDir("graft_semdedup_stream_")
     val idx = s"$dir/cells"
     val marksOut = s"$dir/marks"
     val base = Tables.embeddings(spark, sfDir)
@@ -644,8 +638,7 @@ class StreamingSpec extends AnyFunSuite {
   test("cell-index deletion: tombstoned residents stop marking; compaction erases them physically") {
     import graft.operators.{IvfAnn, SemDedup}
     import graft.queries.AnnQueries
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_semdedup_del_").toString
+    val dir = TempDir("graft_semdedup_del_")
     val idxA = s"$dir/cellsA"
     val idxB = s"$dir/cellsB"
     val base = Tables.embeddings(spark, sfDir)
@@ -693,8 +686,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.index.ShardedIndex
     import graft.operators.{InvertedIndex, MinHashLsh}
     import graft.queries.{IndexQueries, TextQueries}
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_takedown_stream_").toString
+    val dir = TempDir("graft_takedown_stream_")
     val inv = s"$dir/inv"
     val band = s"$dir/band"
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 120)
@@ -773,8 +765,7 @@ class StreamingSpec extends AnyFunSuite {
     // redelivery converges. This test drives that contract end to end:
     // crash after face 2 of 4, observe the divergence, replay, assert
     // all four faces agree on the survivor set.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_takedown_crash_").toString
+    val dir = TempDir("graft_takedown_crash_")
     val inv = s"$dir/inv"; val band = s"$dir/band"
     val invRoot = s"$dir/inv_v"; val bandRoot = s"$dir/band_v"
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 80)
@@ -905,8 +896,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming inverted-index ingest: BM25 from the index equals inline batch BM25") {
     import graft.operators.InvertedIndex
     import graft.queries.TextQueries
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_invidx_stream_").toString
+    val dir = TempDir("graft_invidx_stream_")
     val idx = s"$dir/index"
     val d = Tables.documents(spark, sfDir).select("doc_id", "text")
     val half = d.agg(max(col("doc_id"))).first().getLong(0) / 2
@@ -951,8 +941,7 @@ class StreamingSpec extends AnyFunSuite {
     // serving micro-batches — hit-for-hit parity with the exact
     // survivor ranking at every step, replay converging to zero.
     val emb = Tables.embeddings(spark, sfDir)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_combined_").toString
+    val path = TempDir("graft_stream_combined_")
     var ref = ShardedIndex.buildPersisted(spark,
       emb.filter(col("vec_id") < 400), IndexQueries.FixtureParams,
       nShards = 2, path)

@@ -249,8 +249,7 @@ class SweepSpec extends AnyFunSuite {
     }.toDF("qset_id", "q_sub", "q_vec")
     val nQ = 40
     val K = 10
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sweepspec_varc_").toString
+    val path = TempDir("graft_sweepspec_varc_")
     ShardedIndex.resetResidencyTracking()
     val params = graft.queries.IndexQueries.FixtureParams
       .copy(mSq = 50, mPjbp = 35, lPjpq = 100)

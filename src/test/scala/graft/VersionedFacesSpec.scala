@@ -42,8 +42,7 @@ class VersionedFacesSpec extends AnyFunSuite {
     val d = emb.select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
     val centroids = IvfAnn.seededCentroids(d, 8)
     val cbs = PqAnn.seededCodebooks(d, nSub = 8, ncode = 16)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ver_ivfpq_").toString
+    val root = TempDir("graft_ver_ivfpq_")
     IvfPq.buildVersioned(spark, d.filter(col("d_id") < 250), root,
       centroids, cbs, seeded = true)
     IvfPq.appendVersioned(spark, d.filter(col("d_id") >= 250), root,
@@ -98,8 +97,7 @@ class VersionedFacesSpec extends AnyFunSuite {
   test("SQ8 face: a pre-compact reader serves through a concurrent compaction") {
     val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 300)
     val d = emb.select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ver_sq8_").toString
+    val root = TempDir("graft_ver_sq8_")
     // bounds train on the BASE batch only; appends clamp to them
     Sq8Ann.buildVersioned(spark, d.filter(col("d_id") < 250), root)
     Sq8Ann.appendVersioned(spark, root, d.filter(col("d_id") >= 250))
@@ -157,8 +155,7 @@ class VersionedFacesSpec extends AnyFunSuite {
         s"theta${i % 9} iota kappa"))
       .toDF("doc_id", "text")
     val sh = TextQueries.shingleHashes(docs)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ver_band_").toString
+    val root = TempDir("graft_ver_band_")
     MinHashLsh.buildVersioned(
       MinHashLsh.bandKeys(sh.filter(col("doc_id") <= 40), 8, 2), root)
     MinHashLsh.appendVersioned(
@@ -256,8 +253,7 @@ class VersionedFacesSpec extends AnyFunSuite {
     batchKeys.count()
     def bandLifecycle(mode: String): Set[(Long, Long, Long)] =
       withCommitter(mode) {
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_proto_band_$mode").toString
+        val root = TempDir(s"graft_proto_band_$mode")
         MinHashLsh.buildVersioned(
           MinHashLsh.bandKeys(sh.filter(col("doc_id") <= 35), 8, 2), root)
         MinHashLsh.appendVersioned(
@@ -282,8 +278,7 @@ class VersionedFacesSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def invLifecycle(mode: String): Seq[(Long, Double)] =
       withCommitter(mode) {
-        val root = java.nio.file.Files
-          .createTempDirectory(s"graft_proto_inv_$mode").toString
+        val root = TempDir(s"graft_proto_inv_$mode")
         graft.operators.InvertedIndex.buildVersioned(spark, corpus, root)
         assert(graft.operators.InvertedIndex
           .deleteVersioned(spark, root, Seq(3L, 15L)) === 2L)
@@ -320,8 +315,7 @@ class VersionedFacesSpec extends AnyFunSuite {
       (i, s"alpha beta gamma delta${i % 5} eps${i % 3}"))
       .toDF("doc_id", "text"))
     // conf untouched (default rename); the param alone lands a CAS log
-    val r1 = java.nio.file.Files
-      .createTempDirectory("graft_param_seqlog_").toString
+    val r1 = TempDir("graft_param_seqlog_")
     MinHashLsh.buildVersioned(MinHashLsh.bandKeys(sh, 8, 2), r1,
       committer = "seqlog")
     assert(MinHashLsh.compactVersioned(spark, r1, committer = "seqlog")
@@ -335,8 +329,7 @@ class VersionedFacesSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     spark.conf.set("spark.graft.gen.committer", "seqlog")
     try {
-      val r2 = java.nio.file.Files
-        .createTempDirectory("graft_param_rename_").toString
+      val r2 = TempDir("graft_param_rename_")
       graft.operators.InvertedIndex.buildVersioned(spark, corpus, r2,
         committer = "rename")
       val n2 = names(r2)
@@ -370,8 +363,7 @@ class VersionedFacesSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.gen.casSchemes", "casonly")
     try {
       // ----- sharded face: the g8 certificate shape -----
-      val local = java.nio.file.Files
-        .createTempDirectory("graft_casonly_sharded_").toString
+      val local = TempDir("graft_casonly_sharded_")
       val root = s"casonly://$local"
       val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 300)
       ShardedIndex.resetResidencyTracking()
@@ -433,8 +425,7 @@ class VersionedFacesSpec extends AnyFunSuite {
         "the second fold diverged from mask semantics")
 
       // ----- inverted face: BM25 through the same protocol -----
-      val ilocal = java.nio.file.Files
-        .createTempDirectory("graft_casonly_inv_").toString
+      val ilocal = TempDir("graft_casonly_inv_")
       val iroot = s"casonly://$ilocal"
       val docs = (1L to 40L).map(i =>
         (i, s"term${i % 7} term${i % 5} shared filler${i % 3}"))
@@ -470,8 +461,7 @@ class VersionedFacesSpec extends AnyFunSuite {
     val sh = TextQueries.shingleHashes(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     sh.count()
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ver_bandkey_").toString
+    val root = TempDir("graft_ver_bandkey_")
     // build 1: 8 hashes / 2 rows per band = 4 bands per doc
     MinHashLsh.buildVersioned(MinHashLsh.bandKeys(sh, 8, 2), root)
     assert(MinHashLsh.deleteVersioned(spark, root, Seq(1L, 2L)) === 2L)
@@ -495,8 +485,7 @@ class VersionedFacesSpec extends AnyFunSuite {
     val d = emb.select(col("vec_id").as("d_id"), col("embedding").as("d_vec"))
     val centroids = IvfAnn.seededCentroids(d, 4)
     val cbs = PqAnn.seededCodebooks(d, nSub = 8, ncode = 16)
-    def tmp(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft_ver_feed_$tag").toString
+    def tmp(tag: String) = TempDir(s"graft_ver_feed_$tag")
     val (ivfRoot, sq8Root, bandRoot, cellRoot) =
       (tmp("ivf"), tmp("sq8"), tmp("band"), tmp("cell"))
     IvfPq.buildVersioned(spark, d, ivfRoot, centroids, cbs, seeded = true)
@@ -550,8 +539,7 @@ class VersionedFacesSpec extends AnyFunSuite {
     val corpus = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
     val centroids = IvfAnn.seededCentroids(
       corpus.select(col("id").as("d_id"), col("vec").as("d_vec")), 8)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ver_cell_").toString
+    val root = TempDir("graft_ver_cell_")
     SemDedup.buildVersioned(corpus.filter(col("id") < 250), centroids, root)
     SemDedup.appendVersioned(corpus.filter(col("id") >= 250), centroids, root)
     // victims: resident docs whose identical twins arrive in the batch
