@@ -6,14 +6,14 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet, Descending, ExprId, Expression, GenericInternalRow, LessThan, LessThanOrEqual, Literal, NamedExpression, RowNumber, SortDirection, SortOrder, UnsafeProjection, WindowExpression, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet, BoundReference, Descending, ExprId, Expression, GenericInternalRow, JoinedRow, LessThan, LessThanOrEqual, Literal, NamedExpression, RowNumber, SortDirection, SortOrder, UnsafeArrayData, UnsafeProjection, WindowExpression, WindowSpecDefinition}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
-import org.apache.spark.sql.functions.{broadcast, col, expr, lit, row_number, typedlit}
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
 
@@ -140,6 +140,13 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
   private[plans] def relationExact(s: SparkSession): Boolean =
     s.conf.getOption("spark.graft.ann.relation.exact").exists(_.toBoolean)
 
+  /** The saturating certificate modes (`relation.exact`,
+    * `filtered.exact`): their coarse-stage times reflect saturation, not
+    * production probes, so they never feed a measured cost. */
+  private[plans] def saturating(s: SparkSession): Boolean =
+    relationExact(s) ||
+      s.conf.getOption("spark.graft.ann.filtered.exact").exists(_.toBoolean)
+
   /** A query batch as the (`q_id`, `q_vec`) frame the generators read. */
   private def queryFrame(s: SparkSession,
                          qs: Seq[(Long, Array[Float])]): DataFrame = {
@@ -245,7 +252,7 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
 
   /** MEASURED coarse-stage cost of a registered candidate tier: EWMA
     * of observed seconds-per-query for the tier's generator, recorded by
-    * the instrumented wrappers [[registerTier]] installs. The static
+    * [[AnnTopKExec]] where it materializes the candidates. The static
     * [[CandidateTierEntry.costHint]] is an a-priori bytes-fraction
     * estimate; once every open competitor for a key has real
     * measurements the chooser prefers those (same units, honestly
@@ -340,40 +347,15 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
     * until then. A path-backed tier seeds its measured cost from its
     * persisted sidecar unless this session already measured one.
     *
-    * The generator functions are INSTRUMENTED here: each invocation
-    * eagerly materializes the (bounded, output-sized) candidate set via
-    * localCheckpoint and records wall seconds per query — the coarse
-    * stage is exactly what the tiers compete on, while the rescoring
-    * join is shared by every route. */
+    * The routed exec TIMES the generator where it collects the
+    * candidate ids (the coarse stage is exactly what the tiers compete
+    * on; the rescoring pass is shared by every route) and records wall
+    * seconds per query here through [[recordMeasuredCost]]. */
   def registerTier(corpus: org.apache.spark.sql.DataFrame, idCol: String,
                    vecCol: String, entry: CandidateTierEntry): Unit = {
     require(entry.name != "graph", "tier name 'graph' is the broadcast graph's")
-    val fp = corpusFingerprint(corpus)
-    def saturating(s: SparkSession): Boolean =
-      relationExact(s) ||
-      s.conf.getOption("spark.graft.ann.filtered.exact")
-        .exists(_.toBoolean)
-    def timed(s: SparkSession, nQueries: Int)(
-        body: => org.apache.spark.sql.DataFrame)
-        : org.apache.spark.sql.DataFrame =
-      if (saturating(s)) body
-      else {
-        val t0 = System.nanoTime()
-        val df = body.localCheckpoint(true)
-        recordMeasuredCost(idCol, vecCol, entry.metricName, fp, entry.name,
-          (System.nanoTime() - t0) / 1e9 / math.max(nQueries, 1))
-        df
-      }
-    val instrumented = entry.copy(
-      candidates =
-        if (entry.candidates == null) null
-        else (s, qv, k) => timed(s, 1)(entry.candidates(s, qv, k)),
-      candidatesBatch =
-        if (entry.candidatesBatch == null) null
-        else (s, qs, k) =>
-          timed(s, qs.size)(entry.candidatesBatch(s, qs, k)))
-    put((idCol, vecCol, entry.metricName, fp, entry.name), instrumented,
-      entry.costSidecar,
+    put((idCol, vecCol, entry.metricName, corpusFingerprint(corpus),
+        entry.name), entry, entry.costSidecar,
       readCostSidecar(corpus.sparkSession, entry.costSidecar))
   }
 
@@ -754,7 +736,8 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
         * carries exactly one query set (a set literal, or a query
         * relation with one row) searches in the driver's own thread
         * with no Spark job: a one-set batch runs on a single kernel task
-        * anyway, and a job costs more than the ~1 ms kernel. Null for
+        * anyway, and a job costs more than the ~1 ms kernel. The
+        * statement then runs one Spark job, its rescoring scan. Null for
         * tiers whose search must run on executors. */
       driverCandidates: Array[Array[Float]] => Array[Long] = null)
       extends Routable {
@@ -805,7 +788,8 @@ object AnnIndexRegistry extends org.apache.spark.internal.Logging {
     * statement with ONE query set searches on the driver
     * ([[MvEntry.driverCandidates]]) off the broadcast values the
     * driver already holds, with the same kernel call
-    * (`BeamSearch.searchSet`) and queue bounds. */
+    * (`BeamSearch.searchSet`) and queue bounds, and then runs one Spark
+    * job: the rescoring scan. */
   def registerMvRoar(corpusSets: org.apache.spark.sql.DataFrame,
                      idCol: String, vecCol: String,
                      graphB: Broadcast[CsrGraph],
@@ -1319,29 +1303,31 @@ object AnnRewrite {
   *     plan does with them.
   *  2. Re-resolve the planned tier and prove it still serves the planned
   *     corpus relation.
-  *  3. Generate candidates. A literal query on the graph tier searches
-  *     inside ONE task off the broadcast graph; a query relation runs ONE
-  *     distributed batched search for every query (graph
-  *     `searchSingleDf`, or the tier's registered batch generator); a
-  *     candidate or multivector tier runs its registered generator.
-  *     ONE query set on a multivector tier with a driver-side search
-  *     (the broadcast RoarGraph tier) is searched here on the driver,
-  *     and a single id-filtered, column-pruned scan rescores it: the
-  *     statement runs two Spark jobs, that scan and the emit.
-  *     Escalation happens only when a filter is carried (below).
-  *  4. Rescore the bounded candidates EXACTLY with the query's own
-  *     expression — off the broadcast RAW store on the graph tier (zero
-  *     corpus reads), otherwise against the registered full-precision
-  *     relation (candidates broadcast; the corpus read once, never
-  *     shuffled, never resident). Scores equal the exhaustive plan's
-  *     bit-for-bit; only the candidate SET is approximate.
-  *  5. Keep the top k per query — ties on the corpus id ASC, exactly the
-  *     matched ORDER BY — and emit them.
+  *  3. Generate candidates. The graph tier searches its broadcast graph
+  *     inside the scoring tasks. A candidate or multivector tier runs its
+  *     generator (for a relation, ONE batched job) and its ids are
+  *     collected per query, bounded by fetch × queries: the one place
+  *     candidates materialize, timed as the tier's measured coarse cost.
+  *     ONE query set on a tier with a driver-side search is searched
+  *     here, on the driver, with no job.
+  *  4. Rescore EXACTLY with the query's own expression: off the broadcast
+  *     RAW store on the graph tier, else in ONE pass over the live corpus
+  *     — (id, vec) only, IN-filtered to the candidate ids (Parquet
+  *     pushdown, up to `IsinMax`), each (query, candidate) pair scored by
+  *     the scorer's Catalyst expression over a `JoinedRow`. Scores equal
+  *     the exhaustive plan's bit-for-bit; only the candidate SET is
+  *     approximate.
+  *  5. Keep the top k per query — the matched ORDER BY, ties on the
+  *     corpus id ASC — in bounded heaps merged in one partition, like
+  *     `TakeOrderedAndProjectExec`. That RDD is this node's output: the
+  *     statement's own collect runs the scan (no inner query past the
+  *     corpus source, no driver collect, no emit job).
   *
   * NULL-scored corpus rows are dropped by the relation and filtered
   * shapes: the exhaustive sort orders them last, so they only matter
   * when non-null rows run out, which a candidate route cannot reproduce
-  * anyway. The literal shapes keep them, ordered last.
+  * anyway. The literal shapes keep them where the sort direction puts
+  * them: last under DESC, first under ASC (l2).
   *
   * FILTERED shape — escalating post-filter. Before any search, a bounded
   * probe (`limit(preFilterMax+1).count()` on the pushed-down filtered
@@ -1352,12 +1338,11 @@ object AnnRewrite {
   * brute-force-when-selective strategy. Otherwise each round fetches a
   * candidate stream of target size `c` from the routed tier (graph beam
   * with l=c, or the registered generator; initial c =
-  * `spark.graft.ann.filtered.overfetch`·k, default 8), re-executes the
-  * carried `Filter(pred, scan)` subplan CONSTRAINED to those candidate
-  * ids (an IN filter that reaches the parquet scan for bounded id sets,
-  * a broadcast-candidates join above that), rescores survivors, and
-  * answers when k survivors exist. No k survivors → `c` quadruples and
-  * the round repeats; when the tier SATURATES (the beam exhausted the
+  * `spark.graft.ann.filtered.overfetch`·k, default 8), runs step 4's
+  * pass over the carried `Filter(pred, scan)` subplan constrained to
+  * those ids, COLLECTED (the one shape that must count its survivors),
+  * and answers when k survive. Otherwise `c` quadruples and the round
+  * repeats; when the tier SATURATES (the beam exhausted the
   * reachable set, or the generator returned fewer than asked) the answer
   * is exact over everything the tier can reach and escalation stops.
   * Tier REACHABILITY is not corpus coverage — a generator tier (IVF-PQ,
@@ -1406,23 +1391,21 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     val queries = collectQueries()
     metrics("numQueries").add(queries.size)
     val rows =
-      if (queries.isEmpty) answer(Array.empty)
+      if (queries.isEmpty) sparkContext.emptyRDD[ScoredRow]
       else {
         val tier = resolveTier()
         for ((qid, vs) <- queries; v <- vs)
           require(v.length == tier.dim,
             s"query $qid dim ${v.length} != corpus dim ${tier.dim}")
         (tier, node.filter) match {
-          case (_, Some(f)) => answer(filteredTopK(tier, queries.head, f.plan))
-          case (GraphTier(e), None) if node.literal => graphTask(e, queries.head)
-          case (GraphTier(e), None) => answer(topK(graphRescored(e, queries)))
-          case (g: Generator, None)
-              if g.driverSearch != null && queries.lengthCompare(1) == 0 =>
-            answer(driverSearched(g, queries.head))
-          case (g: Generator, None) => answer(topK(generatorRescored(g, queries)))
+          case (_, Some(f)) => sparkContext.parallelize(
+            filteredTopK(tier, queries.head, f.plan).toIndexedSeq, 1)
+          case (GraphTier(e), None) => graphSearched(e, queries)
+          case (g: Generator, None) => rescored(g.live(), g.idCol, g.vecCol,
+            queries, candidateSets(g, queries, node.k))
         }
       }
-    emit(rows, node.output, node.queryId.exprId)
+    emit(rows, node.output, node.queryId.exprId, metrics("numSurvivors"))
   }
 
   /** Step 1: the collected, validated query side — (id, vectors); a
@@ -1461,10 +1444,10 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
         }
       (r.getLong(qIdx), vecs)
     }
-    // the rescore keys queries by id (broadcast map / join): duplicate
-    // ids would silently collapse or merge — fail loudly instead (the
-    // exhaustive plan ranks duplicate rows independently, which a keyed
-    // candidate route cannot reproduce)
+    // candidates are keyed by query id: duplicate ids would silently
+    // collapse or merge — fail loudly instead (the exhaustive plan ranks
+    // duplicate rows independently, which a keyed candidate route cannot
+    // reproduce)
     require(queries.map(_._1).distinct.lengthCompare(queries.length) == 0,
       s"duplicate ${node.queryId.name} in the query relation: the routed " +
         "plan keys candidates by query id — run with " +
@@ -1485,164 +1468,90 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
         s"${node.vecName}) over the planned relation vanished")
     }
 
-  /** Literal query on the graph tier: beam search and exact rescore run
-    * inside ONE task off the broadcast graph. */
-  private def graphTask(e: AnnIndexRegistry.Entry,
-                        query: (Long, Array[Array[Float]]))
-      : RDD[ScoredRow] = {
-    val (qid, qv) = (query._1, query._2.head)
-    val (k, kind) = (node.k, node.scorer)
-    val candidates = metrics("numCandidates")
-    val survivors = metrics("numSurvivors")
-    sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
-      val queue = beam(e, qv, math.max(e.searchL, 4 * k))
-      candidates.add(queue.size)
-      val raw = e.rawVecsB.value
-      val top = Array.tabulate(queue.size)(i => queue.id(i))
-        .map(id => (id.toLong, exactScore(kind, raw, id, qv)))
-        .sortBy { case (id, s) => (if (kind == "l2") s else -s, id) }
-        .take(k)
-      survivors.add(top.length)
-      top.iterator.map { case (id, s) => (qid, id, Double.box(s)) }
-    }
-  }
-
-  /** Query relation on the graph tier: ONE distributed `searchSingleDf`
-    * job for every query vector, exact rescore off the broadcast RAW
-    * store. `spark.graft.ann.relation.exact=true` saturates the beam
-    * (l = 2n — the g9_sql_saturated regime), making the answer exact
-    * end-to-end: the certificate mode g8_sql_saturated hash-proves. */
-  private def graphRescored(e: AnnIndexRegistry.Entry,
+  /** Graph tier: beam search and exact rescore off the broadcast graph
+    * and RAW store inside the tasks — ONE task for a literal query, one
+    * per slice of a query relation, each query whole in one task so its
+    * heap is final there. `spark.graft.ann.relation.exact=true`
+    * saturates a relation's beam (l = 2n — the g9_sql_saturated regime),
+    * making the answer exact end-to-end: the certificate mode
+    * g8_sql_saturated hash-proves. */
+  private def graphSearched(e: AnnIndexRegistry.Entry,
                             queries: Seq[(Long, Array[Array[Float]])])
-      : DataFrame = {
-    val spark = SparkSession.active
-    import spark.implicits._
+      : RDD[ScoredRow] = {
     val n = e.graphB.value.n
     val l =
-      if (AnnIndexRegistry.relationExact(spark)) 2 * n
+      if (node.literal) math.max(e.searchL, 4 * node.k)
+      else if (AnnIndexRegistry.relationExact(SparkSession.active)) 2 * n
       else math.min(math.max(e.searchL, 4 * node.k), 2 * n)
-    val vecs = queries.map { case (id, vs) => (id, vs.head) }
-    val hits = BeamSearch.searchSingleDf(spark,
-      vecs.map { case (id, v) => (id, v.toSeq) }.toDF("q_id", "q_vec"),
-      e.graphB, e.searchVecsB, e.metricName, l, k = l)
-    val rawB = e.rawVecsB
-    val qMapB = spark.sparkContext.broadcast(vecs.toMap)
-    val kind = node.scorer
+    val (k, kind) = (node.k, node.scorer)
     val candidates = metrics("numCandidates")
-    hits.select(col("q_id"), col("d_id")).as[(Long, Long)]
+    sparkContext.parallelize(queries.map { case (id, vs) => (id, vs.head) },
+        math.min(queries.size, sparkContext.defaultParallelism))
       .mapPartitions { it =>
-        val raw = rawB.value
-        val qm = qMapB.value
-        it.map { case (qid, did) =>
-          candidates.add(1)
-          (qid, did, exactScore(kind, raw, did.toInt, qm(qid)))
+        val raw = e.rawVecsB.value
+        val visited = new VisitedSet(n)
+        val top = new TopK(k, kind == "l2")
+        it.foreach { case (qid, qv) =>
+          val queue = beam(e, qv, l, visited)
+          candidates.add(queue.size)
+          for (i <- 0 until queue.size) top.add((qid, queue.id(i).toLong,
+            Double.box(exactScore(kind, raw, queue.id(i), qv))))
         }
-      }.toDF("__graft_qid", "__graft_did", "__graft_score")
+        top.rows
+      }
   }
 
-  /** Candidate or multivector tier: the generator's bounded candidates
-    * (one query's, or the whole relation's in ONE batched job) joined
-    * against the full-precision corpus and scored with the query's own
-    * expression. */
-  private def generatorRescored(g: Generator,
-                                queries: Seq[(Long, Array[Array[Float]])])
-      : DataFrame = {
+  /** Step 3 on a candidate or multivector tier: each query's distinct
+    * candidate ids, collected. ONE query on a tier with a driver-side
+    * search is searched here, in the driver's thread. A candidate tier's
+    * wall seconds per query for this are its measured coarse cost, never
+    * recorded in the saturating certificate modes. */
+  private def candidateSets(g: Generator,
+                            queries: Seq[(Long, Array[Array[Float]])],
+                            n: Int): Map[Long, Array[Long]] = {
     val spark = SparkSession.active
-    import spark.implicits._
-    val did = col(g.idCol).cast("long").as("__graft_did")
-    val corpusVec = col(g.vecCol)
-    def scored(df: DataFrame, qidCol: org.apache.spark.sql.Column,
-               query: org.apache.spark.sql.Column) =
-      df.select(qidCol, did, scoreOf(query, corpusVec).cast("double")
-        .as("__graft_score"))
-    if (node.literal) {
-      val (qid, vs) = queries.head
-      val cands = g.one(spark, vs, node.k)
-      scored(g.live().join(broadcast(cands),
-          col(g.idCol) === col("__graft_cand_id")),
-        lit(qid).as("__graft_qid"), queryLiteral(vs))
-    } else {
-      val cands = g.batch(spark, queries, node.k)
-      val qdf =
-        if (node.setScorer)
-          queries.map { case (id, vs) => (id, vs.map(_.toSeq).toSeq) }
-            .toDF("__graft_qid", "__graft_query")
-        else
-          queries.map { case (id, vs) => (id, vs.head.toSeq) }
-            .toDF("__graft_qid", "__graft_query")
-      scored(g.live()
-          .join(broadcast(cands), col(g.idCol) === col("__graft_cand_id"))
-          .join(broadcast(qdf), Seq("__graft_qid")),
-        col("__graft_qid"), col("__graft_query"))
+    val (sets, secs) = graft.Harness.timed {
+      if (g.driverSearch != null && queries.lengthCompare(1) == 0) {
+        metrics("numDriverSearches").add(1)
+        Map(queries.head._1 -> g.driverSearch(queries.head._2))
+      } else if (node.literal)
+        Map(queries.head._1 -> g.one(spark, queries.head._2, n))
+      else g.batch(spark, queries, n).groupMap(_._1)(_._2)
     }
+    if (g.timedAs != null && !AnnIndexRegistry.saturating(spark))
+      AnnIndexRegistry.recordMeasuredCost(node.idName, node.vecName,
+        g.timedAs._1, node.fingerprint, g.timedAs._2, secs / queries.size)
+    sets.map { case (q, ids) => q -> ids.distinct }
   }
 
-  /** One query set on a tier that searches on the driver
-    * ([[AnnIndexRegistry.MvEntry.driverCandidates]]): its distinct
-    * candidate sets come from the kernel run in this thread, and ONE scan
-    * of the live corpus — filtered to those ids, column-pruned — scores
-    * them with the query's own expression. The top k is an order-by +
-    * limit (a TakeOrderedAndProject: no exchange); the relation shape
-    * first drops NULL scores as its multi-set path does, the literal
-    * shape keeps them, ordered last like the exhaustive plan. */
-  private def driverSearched(g: Generator, query: (Long, Array[Array[Float]]))
-      : Array[ScoredRow] = {
-    val (qid, vs) = query
-    val ids = g.driverSearch(vs)
-    metrics("numDriverSearches").add(1)
-    metrics("numCandidates").add(ids.length)
-    val scored = g.live().where(col(g.idCol).isInCollection(ids))
-      .select(lit(qid).as("__graft_qid"), col(g.idCol).cast("long").as("__graft_did"),
-        scoreOf(queryLiteral(vs), col(g.vecCol)).cast("double").as("__graft_score"))
-    topK(if (node.literal) scored else scored.filter(col("__graft_score").isNotNull),
-      oneQuery = true)
-  }
-
-  /** The literal route's query as a typed literal column. */
-  private def queryLiteral(vs: Array[Array[Float]]): org.apache.spark.sql.Column =
-    if (node.setScorer) typedlit(vs.map(_.toSeq).toSeq) else typedlit(vs.head)
-
-  /** The routed query's OWN scoring expression, query operand first. */
-  private def scoreOf(query: org.apache.spark.sql.Column,
-                      corpus: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column = {
-    import graft.functions.VectorFunctions._
-    node.scorer match {
-      case "l2" => vecL2Sq(query, corpus)
-      case "cos" => vecCosine(query, corpus)
-      case "chamfer" => chamferScore(query, corpus)
-      case "maxsim" => maxSimScore(query, corpus)
-      case _ => vecDot(query, corpus)
-    }
-  }
-
-  /** Step 5: the k best rows of a (`__graft_qid`, `__graft_did`,
-    * `__graft_score`) frame per query — one TakeOrdered for a frame of
-    * one query (a literal query by default); for a relation, the
-    * bounded-heap aggregator (set scorers) or a rank window
-    * (single-vector scorers). */
-  private def topK(scored: DataFrame, oneQuery: Boolean = node.literal)
-      : Array[ScoredRow] = {
-    val spark = scored.sparkSession
-    import spark.implicits._
-    val (qid, did, score) =
-      (col("__graft_qid"), col("__graft_did"), col("__graft_score"))
-    val order = Seq(if (node.scorer == "l2") score.asc else score.desc,
-      did.asc)
-    val top =
-      if (oneQuery) scored.orderBy(order: _*).limit(node.k)
-      else if (node.setScorer)
-        graft.operators.TopK.perGroupAgg(scored.filter(score.isNotNull),
-            Seq(qid), score, did, node.k, idName = "__graft_did")
-          .select(qid, did, col("score"))
-      else
-        scored.filter(score.isNotNull)
-          .withColumn("__graft_rnk", row_number().over(
-            org.apache.spark.sql.expressions.Window.partitionBy(qid)
-              .orderBy(order: _*)))
-          .filter(col("__graft_rnk") <= node.k)
-          .select(qid, did, score)
-    top.as[ScoredRow].collect()
+  /** Steps 4 and 5 over a corpus `source`: its (`idCol`, `vecCol`) rows
+    * that are a candidate of some query (`sets`: query id → candidate
+    * ids; null = every row for every query) scored and kept in the per-
+    * query heaps, merged in one partition. */
+  private def rescored(source: DataFrame, idCol: String, vecCol: String,
+                       queries: Seq[(Long, Array[Array[Float]])],
+                       sets: Map[Long, Array[Long]]): RDD[ScoredRow] = {
+    val byId: Map[Long, Array[Int]] =
+      if (sets == null) null
+      else queries.indices
+        .flatMap(i => sets.getOrElse(queries(i)._1, Array.empty[Long]).map(_ -> i))
+        .groupMap(_._1)(_._2).map { case (id, qs) => id -> qs.toArray }
+    if (byId != null)
+      metrics("numCandidates").add(byId.valuesIterator.map(_.length).sum)
+    val constrained =
+      if (byId != null && byId.size <= IsinMax)
+        source.where(col(idCol).isInCollection(byId.keys))
+      else source
+    val pruned = constrained.select(col(idCol).cast(LongType), col(vecCol))
+    val qType =
+      if (node.setScorer) ArrayType(ArrayType(FloatType, false), false)
+      else ArrayType(FloatType, false)
+    scoredPass(pruned.queryExecution.toRdd,
+      scorer(node.scorer, BoundReference(0, qType, nullable = false),
+        BoundReference(2, pruned.schema(1).dataType, nullable = true)),
+      queries.map(_._1).toArray, queries.map(_._2).toArray, node.setScorer,
+      byId, node.k, node.scorer == "l2",
+      keepNulls = node.literal && node.filter.isEmpty)
   }
 
   /** FILTERED shape (see the class doc): pre-filter probe, then
@@ -1651,7 +1560,6 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
   private def filteredTopK(tier: Tier, query: (Long, Array[Array[Float]]),
                            plan: LogicalPlan): Array[ScoredRow] = {
     val spark = SparkSession.active
-    import spark.implicits._
     def conf(key: String, dflt: String): String =
       spark.conf.getOption(key).getOrElse(dflt)
     val exact = conf("spark.graft.ann.filtered.exact", "false").toBoolean
@@ -1662,22 +1570,12 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
       Int.MaxValue.toLong - 1) // the probe limit below must fit an Int
     val (qid, qv) = (query._1, query._2.head)
     val filtered = org.apache.spark.sql.GraftColumnBridge.ofRows(spark, plan)
-    val id = col(node.idName)
 
     /** Top-k among `ids` that survive the carried predicate (`ids` null
       * = every filtered row scores). */
-    def survivors(ids: Array[Long]): Array[ScoredRow] = {
-      val constrained =
-        if (ids == null) filtered
-        else if (ids.length <= IsinMax) filtered.where(id.isInCollection(ids.toSeq))
-        else filtered.join(broadcast(ids.toSeq.toDF("__graft_cand_id")),
-          id === col("__graft_cand_id"))
-      topK(constrained
-        .select(lit(qid).as("__graft_qid"), id.cast("long").as("__graft_did"),
-          scoreOf(queryLiteral(query._2), col(node.vecName)).cast("double")
-            .as("__graft_score"))
-        .filter(col("__graft_score").isNotNull))
-    }
+    def survivors(ids: Array[Long]): Array[ScoredRow] =
+      rescored(filtered, node.idName, node.vecName, Seq(query),
+        if (ids == null) null else Map(qid -> ids)).collect()
 
     /** One candidate fetch of target size `c` → (ids, saturated). */
     def fetch(c: Int): (Array[Long], Boolean) = tier match {
@@ -1686,13 +1584,11 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
         // (the same regime g9_sql_saturated certifies for the mv route)
         val n = e.graphB.value.n
         val l = math.min(math.max(c.toLong, e.searchL.toLong), 2L * n).toInt
-        val queue = beam(e, qv, l)
+        val queue = beam(e, qv, l, new VisitedSet(n))
         (Array.tabulate(queue.size)(i => queue.id(i).toLong),
           l >= n || queue.size < l)
       case g: Generator =>
-        val ids = g.one(spark, query._2, c)
-          .select(col("__graft_cand_id").cast("long")).distinct()
-          .as[Long].collect()
+        val ids = candidateSets(g, Seq(query), c)(qid)
         (ids, ids.length < c)
     }
 
@@ -1701,7 +1597,8 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     // the predicate is permissive
     val probeCnt =
       if (preFilterMax <= 0) Long.MaxValue
-      else filtered.select(id).limit((preFilterMax + 1).toInt).count()
+      else filtered.select(col(node.idName)).limit((preFilterMax + 1).toInt)
+        .count()
     var rows: Array[ScoredRow] = Array.empty
     var round = 0
     if (probeCnt <= preFilterMax || (exact && node.tier != "graph")) {
@@ -1721,7 +1618,6 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
       while (!done) {
         round += 1
         val (ids, saturated) = fetch(c)
-        metrics("numCandidates").add(ids.length)
         rows = survivors(ids)
         done = rows.length >= node.k || saturated || round >= MaxRounds ||
           c >= maxC
@@ -1739,24 +1635,18 @@ case class AnnTopKExec(node: AnnTopKNode, child: SparkPlan)
     metrics("numRounds").add(round)
     rows
   }
-
-  /** A collected answer as the one-partition RDD the emitter reads. */
-  private def answer(rows: Array[ScoredRow]): RDD[ScoredRow] = {
-    metrics("numSurvivors").add(rows.length)
-    sparkContext.parallelize(rows.toIndexedSeq, 1)
-  }
 }
 
 object AnnTopKExec {
-  /** Filtered shape: candidate-id sets up to this size constrain the
-    * re-executed scan with an IN filter (which reaches the parquet scan);
-    * larger ones with a broadcast-candidates join. */
+  /** Candidate-id sets up to this size constrain the rescoring scan with
+    * an IN filter (which reaches the parquet scan); larger ones are
+    * filtered in the scan's tasks only. */
   private val IsinMax = 100000
   /** Filtered shape: escalation rounds before the exhaustive backstop. */
   private val MaxRounds = 6
 
   /** One answer row: (query id, corpus id, score). The score is boxed:
-    * a literal shape keeps NULL scores, ordered last. */
+    * a literal shape keeps NULL scores. */
   private type ScoredRow = (Long, Long, java.lang.Double)
 
   /** A resolved routed tier; `dim` is the corpus (sub-)vector dimension. */
@@ -1766,51 +1656,148 @@ object AnnTopKExec {
     def dim: Int = e.rawVecsB.value.dim
   }
 
-  /** A candidate or multivector tier, normalized: `one` yields a single
-    * query's candidate ids under `__graft_cand_id`; `batch` the
-    * (`__graft_qid`, `__graft_cand_id`) pairs of a whole query relation
-    * in one distributed job; `driverSearch` (null unless the tier has
-    * one) a single query's distinct candidate ids, searched on the
-    * driver. All are rescored against `live()`, the (possibly refreshed)
-    * full-precision corpus. */
+  /** A candidate or multivector tier, normalized to collected ids: `one`
+    * a single query's candidate ids; `batch` the (query id, candidate
+    * id) pairs of a whole query relation, from ONE distributed job;
+    * `driverSearch` (null unless the tier has one) a single query's
+    * distinct candidate ids, searched on the driver. All are rescored
+    * against `live()`, the (possibly refreshed) full-precision corpus.
+    * `timedAs` is the (metric, tier name) a candidate tier's coarse cost
+    * is recorded under; null for a multivector tier. */
   private final case class Generator(
       live: () => DataFrame, idCol: String, vecCol: String, dim: Int,
-      one: (SparkSession, Array[Array[Float]], Int) => DataFrame,
-      batch: (SparkSession, Seq[(Long, Array[Array[Float]])], Int) => DataFrame,
-      driverSearch: Array[Array[Float]] => Array[Long] = null)
+      one: (SparkSession, Array[Array[Float]], Int) => Array[Long],
+      batch: (SparkSession, Seq[(Long, Array[Array[Float]])], Int) => Array[(Long, Long)],
+      driverSearch: Array[Array[Float]] => Array[Long] = null,
+      timedAs: (String, String) = null)
       extends Tier
 
   private object Generator {
     def of(e: AnnIndexRegistry.CandidateTierEntry): Generator =
       Generator(() => e.liveData, e.dataIdCol, e.dataVecCol, e.dim,
-        (s, q, n) => e.candidates(s, q.head, n)
-          .select(col("d_id").as("__graft_cand_id")),
+        (s, q, n) => longs(e.candidates(s, q.head, n), "d_id").map(_(0)),
         (s, qs, k) => {
           require(e.candidatesBatch != null,
             s"tier '${e.name}' has no batch generator")
-          e.candidatesBatch(s, qs.map { case (id, vs) => (id, vs.head) }, k)
-            .select(col("q_id").as("__graft_qid"),
-              col("d_id").as("__graft_cand_id"))
-        })
+          longs(e.candidatesBatch(s, qs.map { case (id, vs) => (id, vs.head) }, k),
+            "q_id", "d_id").map(p => (p(0), p(1)))
+        },
+        timedAs = (e.metricName, e.name))
 
     def of(e: AnnIndexRegistry.MvEntry): Generator =
       Generator(() => e.liveData, e.dataIdCol, e.dataVecCol, e.dim,
-        (s, q, n) => e.candidatesBatch(s, Seq((0L, q)), n)
-          .select(col("dset_id").as("__graft_cand_id")),
-        (s, qs, k) => e.candidatesBatch(s, qs, k)
-          .select(col("qset_id").as("__graft_qid"),
-            col("dset_id").as("__graft_cand_id")),
+        (s, q, n) => longs(e.candidatesBatch(s, Seq((0L, q)), n), "dset_id")
+          .map(_(0)),
+        (s, qs, k) => longs(e.candidatesBatch(s, qs, k), "qset_id", "dset_id")
+          .map(p => (p(0), p(1))),
         e.driverCandidates)
   }
 
+  /** The collected values of a generator's columns `names` as longs, one
+    * array per row; rows with a NULL among them are dropped. */
+  private def longs(df: DataFrame, names: String*): Array[Array[Long]] = {
+    val idx = names.map(df.schema.fieldIndex).toArray
+    df.collect().collect {
+      case r if idx.forall(!r.isNullAt(_)) =>
+        idx.map(r.getAs[Number](_).longValue)
+    }
+  }
+
+  /** The routed scorer's own expression, query operand first. */
+  private def scorer(kind: String, query: Expression,
+                     corpus: Expression): Expression = kind match {
+    case "l2" => VecL2SqExpr(query, corpus)
+    case "cos" => VecCosineExpr(query, corpus)
+    case "chamfer" => VecChamferExpr(query, corpus)
+    case "maxsim" => VecMaxSimExpr(query, corpus)
+    case _ => VecDotExpr(query, corpus)
+  }
+
+  /** The rescoring pass over `rows` of (bigint id, vector): each row
+    * that is a candidate of some query (`byId`: corpus id → query
+    * indexes; null = every query) scored by `score`, which reads the
+    * query at ordinal 0 and the row after it. A NULL score is kept only
+    * when `keepNulls`. Each task keeps per-query heaps; one final
+    * partition merges them. */
+  private def scoredPass(rows: RDD[InternalRow], score: Expression,
+                         qids: Array[Long], qvecs: Array[Array[Array[Float]]],
+                         setScorer: Boolean, byId: Map[Long, Array[Int]],
+                         k: Int, asc: Boolean,
+                         keepNulls: Boolean): RDD[ScoredRow] = {
+    val every = qids.indices.toArray
+    val local = rows.mapPartitions { it =>
+      val proj = UnsafeProjection.create(Seq(score))
+      val queryRows = qvecs.map { vs =>
+        InternalRow(
+          if (setScorer) new GenericArrayData(
+            vs.map(v => UnsafeArrayData.fromPrimitiveArray(v): Any))
+          else UnsafeArrayData.fromPrimitiveArray(vs.head))
+      }
+      val joined = new JoinedRow
+      val top = new TopK(k, asc)
+      it.foreach { row =>
+        if (!row.isNullAt(0)) {
+          val id = row.getLong(0)
+          val qs = if (byId == null) every else byId.getOrElse(id, null)
+          if (qs != null) qs.foreach { q =>
+            val s = proj(joined(queryRows(q), row))
+            if (!s.isNullAt(0)) top.add((qids(q), id, Double.box(s.getDouble(0))))
+            else if (keepNulls) top.add((qids(q), id, null))
+          }
+        }
+      }
+      top.rows
+    }
+    val one =
+      if (local.getNumPartitions == 1) local else local.coalesce(1, shuffle = true)
+    one.mapPartitions { it =>
+      val top = new TopK(k, asc)
+      it.foreach(top.add)
+      top.rows
+    }
+  }
+
+  /** The k best rows per query in the matched ORDER BY's order: score
+    * DESC (ASC when `asc`, the l2 shape), then corpus id ASC. Scores
+    * compare as Spark's sort compares doubles, and a NULL score sorts as
+    * the smallest value, as Spark's default null ordering does: last
+    * under DESC, first under ASC. */
+  private final class TopK(k: Int, asc: Boolean) {
+    private val order: Ordering[ScoredRow] = { (a, b) =>
+      val c = (a._3, b._3) match {
+        case (null, null) => 0
+        case (null, _) => -1
+        case (_, null) => 1
+        case (x, y) => SQLOrderingUtil.compareDoubles(x, y)
+      }
+      val byScore = if (asc) c else -c
+      if (byScore != 0) byScore else java.lang.Long.compare(a._2, b._2)
+    }
+    // per query, the kept rows with the worst at the head
+    private val heaps =
+      scala.collection.mutable.HashMap.empty[Long, java.util.PriorityQueue[ScoredRow]]
+
+    def add(r: ScoredRow): Unit = if (k > 0) {
+      val h = heaps.getOrElseUpdate(r._1,
+        new java.util.PriorityQueue[ScoredRow](order.reverse))
+      if (h.size < k) h.add(r)
+      else if (order.lt(r, h.peek)) { h.poll(); h.add(r) }
+    }
+
+    /** Each query's rows in order, queries by id. */
+    def rows: Iterator[ScoredRow] =
+      heaps.keys.toArray.sorted.iterator.flatMap { q =>
+        heaps(q).toArray(new Array[ScoredRow](0)).sorted(order)
+      }
+  }
+
   /** One beam search of `q` over a graph entry (driver- or task-side). */
-  private def beam(e: AnnIndexRegistry.Entry, q: Array[Float],
-                   l: Int): BeamQueue = {
-    val graph = e.graphB.value
+  private def beam(e: AnnIndexRegistry.Entry, q: Array[Float], l: Int,
+                   visited: VisitedSet): BeamQueue = {
     val metric = Metrics(e.metricName)
-    BeamSearch.searchSingle(graph, e.searchVecsB.value, metric,
+    BeamSearch.searchSingle(e.graphB.value, e.searchVecsB.value, metric,
       if (metric.normalizeAtLoad) VectorStore.normalized(q) else q, l,
-      new VisitedSet(graph.n))._1
+      visited)._1
   }
 
   /** Exact dot / cosine / l2² of corpus row `id` against `q` over the RAW
@@ -1849,12 +1836,12 @@ object AnnTopKExec {
 
   /** Step 5's single emitter: (query id, corpus id, score) triples as
     * rows of `output` — the query id where the node emits it, the bigint
-    * corpus id, the double score (the only types the rule routes). It
-    * lives here, not on the exec, so the task closure captures only the
-    * slot map and the schema, never the exec and the logical subplans
-    * its node carries. */
+    * corpus id, the double score (the only types the rule routes) —
+    * counted into `survivors`. It lives here, not on the exec, so the
+    * task closure captures only the slot map and the schema, never the
+    * exec and the logical subplans its node carries. */
   private def emit(rows: RDD[ScoredRow], output: Seq[Attribute],
-                   queryId: ExprId): RDD[InternalRow] = {
+                   queryId: ExprId, survivors: SQLMetric): RDD[InternalRow] = {
     val slots = output.map(a =>
       if (a.exprId == queryId) 0 else if (a.dataType == LongType) 1 else 2)
       .toArray
@@ -1862,6 +1849,7 @@ object AnnTopKExec {
     rows.mapPartitions { it =>
       val proj = UnsafeProjection.create(schema)
       it.map { case (q, d, s) =>
+        survivors.add(1)
         val v = Array[Any](q, d, s)
         proj(new GenericInternalRow(slots.map(v)))
       }

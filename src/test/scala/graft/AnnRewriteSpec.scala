@@ -964,6 +964,10 @@ class AnnRewriteSpec extends AnyFunSuite {
       assert(routedTier(df) === Seq("randproj"), "custom tier not routed")
       val approx = df.collect().map(r => (r.getLong(0), r.getDouble(1)))
       assert(approx.length === 10)
+      val exec = df.queryExecution.executedPlan.collectFirst {
+        case e: graft.plans.AnnTopKExec => e
+      }.getOrElse(fail("AnnSearch not in plan"))
+      assert(exec.metrics("numCandidates").value > 0L)
       val exactById = exact.toMap
       approx.foreach { case (id, s) =>
         exactById.get(id).foreach(es => assert(es === s, s"score drift for $id"))
@@ -1990,6 +1994,7 @@ class AnnRewriteSpec extends AnyFunSuite {
       assert(mexec.metrics("numSurvivors").value === mrows.length.toLong)
       // several query sets search in one distributed job
       assert(mexec.metrics("numDriverSearches").value === 0L)
+      assert(mexec.metrics("numCandidates").value > 0L)
       // one query set searches on the driver, in either spelling; its
       // distinct candidate sets are what the rescoring scan reads
       val qLit = sets.filter(col("dset_id") === 1L).select("vec_set").first()
@@ -2079,6 +2084,16 @@ class AnnRewriteSpec extends AnyFunSuite {
       }
       assert(recalls.sum / recalls.size >= 0.9,
         s"ivfpq batch relation mean recall ${recalls.sum / recalls.size}")
+      // a production statement feeds the tier's measured cost; the
+      // saturating certificate mode never does
+      val fp = AnnIndexRegistry.registeredFp("vid", "vec", "l2", "ivfpq").get
+      def cost = AnnIndexRegistry.measuredCost("vid", "vec", "l2", fp, "ivfpq")
+      assert(cost.isDefined, "a routed relation statement recorded no cost")
+      AnnIndexRegistry.clearMeasuredCosts()
+      spark.conf.set("spark.graft.ann.relation.exact", "true")
+      try spark.sql(relSql).collect()
+      finally spark.conf.unset("spark.graft.ann.relation.exact")
+      assert(cost.isEmpty, s"relation.exact recorded a measured cost: $cost")
     } finally spark.conf.set("spark.graft.ann.rewrite", "false")
   }
 
@@ -2302,5 +2317,72 @@ class AnnRewriteSpec extends AnyFunSuite {
     assert(without.size === 1, s"expected exactly one warning: $without")
     assert(without.head.contains("registerSharded"), without.head)
     assert(warnings(withRefresh = true).isEmpty)
+  }
+
+  test("NULL scores on the single-vector shapes: literal routes place them like the exhaustive sort, the relation route drops them") {
+    setup
+    // a small corpus with one NULL-vector row, served by a custom tier
+    // whose generators return every id: the candidate set is the whole
+    // corpus, so the routed answers can equal the exhaustive plan's
+    val dir = "target/tmp/ann_null_corpus"
+    val emb = Tables.embeddings(spark, sfDir)
+    emb.filter(col("vec_id") < 30)
+      .select(col("vec_id").as("nvid"), col("embedding").as("nvec"))
+      .union(spark.sql("SELECT 1000000L AS nvid, CAST(NULL AS array<float>) AS nvec"))
+      .write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    corpus.createOrReplaceTempView("null_corpus")
+    val dim = emb.select("embedding").first().getSeq[Float](0).length
+    for (metric <- Seq("l2", "ip"))
+      AnnIndexRegistry.registerTier(corpus, "nvid", "nvec",
+        AnnIndexRegistry.CandidateTierEntry(s"every_$metric", corpus, "nvid",
+          "nvec", metric, dim,
+          candidates = (_, _, _) => corpus.select(col("nvid").as("d_id")),
+          candidatesBatch = (s, qs, _) => {
+            import s.implicits._
+            qs.map(_._1).toDF("q_id")
+              .crossJoin(corpus.select(col("nvid").as("d_id")))
+          }))
+    val q = corpus.filter(col("nvid") === 7).select("nvec").first()
+      .getSeq[Float](0).map(x => s"${x}F").mkString("array(", ", ", ")")
+    def rows(sqlText: String, routed: Boolean): Seq[Seq[Any]] = {
+      spark.conf.set("spark.graft.ann.rewrite", routed.toString)
+      try {
+        val df = spark.sql(sqlText)
+        assert(routedTier(df).nonEmpty === routed, sqlText)
+        df.collect().map(_.toSeq).toSeq
+      } finally spark.conf.set("spark.graft.ann.rewrite", "false")
+    }
+    val l2Sql = s"""SELECT nvid, graft_vec_l2sq(nvec, $q) AS score
+                   |FROM null_corpus ORDER BY score ASC LIMIT 10""".stripMargin
+    val l2 = rows(l2Sql, routed = true)
+    assert(l2 === rows(l2Sql, routed = false))
+    assert(l2.head === Seq(1000000L, null), "ASC puts the NULL score first")
+    // k past the corpus size: every row, the NULL one last
+    val dotSql = s"""SELECT nvid, graft_vec_dot(nvec, $q) AS score
+                    |FROM null_corpus ORDER BY score DESC LIMIT 40""".stripMargin
+    val dot = rows(dotSql, routed = true)
+    assert(dot === rows(dotSql, routed = false))
+    assert(dot.length === 31)
+    assert(dot.last === Seq(1000000L, null), "DESC puts the NULL score last")
+    corpus.filter(col("nvid") < 3)
+      .select(col("nvid").as("q_id"), col("nvec").as("q_vec"))
+      .createOrReplaceTempView("null_queries")
+    val relSql =
+      """SELECT q_id, nvid, score FROM (
+        |  SELECT q.q_id, d.nvid,
+        |         graft_vec_dot(q.q_vec, d.nvec) AS score,
+        |         row_number() OVER (PARTITION BY q.q_id
+        |           ORDER BY graft_vec_dot(q.q_vec, d.nvec) DESC,
+        |                    d.nvid ASC) AS rnk
+        |  FROM null_queries q CROSS JOIN null_corpus d) t
+        |WHERE rnk <= 40""".stripMargin
+    val exhaustive = rows(relSql, routed = false)
+    assert(exhaustive.count(_(2) == null) === 3)
+    assert(rows(relSql, routed = true).sortBy(r => (r(0).asInstanceOf[Long],
+        r(1).asInstanceOf[Long])) ===
+      exhaustive.filter(_(2) != null).sortBy(r => (r(0).asInstanceOf[Long],
+        r(1).asInstanceOf[Long])),
+      "the relation route drops NULL scores")
   }
 }

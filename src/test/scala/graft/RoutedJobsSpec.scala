@@ -9,8 +9,9 @@ import graft.index.{GraphBuild, Metrics, VectorStore}
 import graft.plans.{AnnIndexRegistry, AnnStrategy, AnnTopKRule}
 import graft.queries.IndexQueries
 
-/** Exact Spark-job counts per routed SQL statement, one per routed
-  * shape, and task counts for the multivector shapes. These counts do
+/** Exact Spark job, stage and task counts per routed SQL statement, one
+  * per routed shape, plus the exhaustive plans of the two multivector
+  * flagship statements. These counts do
   * not depend on host load, so they gate the routed operator's Spark
   * work exactly the way `PlanSpec` gates plan shapes: a refactor that
   * adds a collect, a broadcast or a shuffle stage to a shape changes its
@@ -91,22 +92,21 @@ class RoutedJobsSpec extends AnyFunSuite {
     spark.table(table).filter(col(idCol) === id).select(vecCol).first()
       .getSeq[Float](0).map(x => s"${x}F").mkString("array(", ", ", ")")
 
-  /** Spark work of one routed statement (planning + collect), after one
-    * unmeasured warm run; asserts the statement actually routed. */
-  private def countsOf(sqlText: String, shape: String): JobCounter.Counts = {
+  /** Spark work of one statement (planning + collect) as (jobs, stages,
+    * tasks), after one unmeasured warm run; asserts the warm run planned
+    * `shape`, or, for "exhaustive", no routed node at all. */
+  private def pinOf(sqlText: String, shape: String): (Int, Int, Int) = {
     def run(): DataFrame = { val df = spark.sql(sqlText); df.collect(); df }
-    val warm = run()
-    val plan = warm.queryExecution.executedPlan.toString
-    assert(plan.contains(shape), s"statement not routed to $shape:\n$plan")
+    val plan = run().queryExecution.executedPlan.toString
+    if (shape == "exhaustive")
+      assert(!plan.contains("AnnSearch") && !plan.contains("JoinTopK"),
+        s"statement routed with the rewrite off:\n$plan")
+    else assert(plan.contains(shape), s"statement not routed to $shape:\n$plan")
     val counter = new JobCounter(spark)
-    val counts = try counter.measure(run())._2 finally counter.close()
-    info(s"$shape: ${counts.jobs} jobs, ${counts.stages} stages, " +
-      s"${counts.tasks} tasks")
-    counts
+    val n = try counter.measure(run())._2 finally counter.close()
+    info(s"$shape: ${n.jobs} jobs, ${n.stages} stages, ${n.tasks} tasks")
+    (n.jobs, n.stages, n.tasks)
   }
-
-  private def jobsOf(sqlText: String, shape: String): Int =
-    countsOf(sqlText, shape).jobs
 
   private def routed[T](confs: (String, String)*)(body: => T): T = {
     spark.conf.set("spark.graft.ann.rewrite", "true")
@@ -122,42 +122,46 @@ class RoutedJobsSpec extends AnyFunSuite {
     fixture
     val q = vecLit("jobs_graph", "jvid", "jvec", 7)
     routed() {
-      assert(jobsOf(
+      assert(pinOf(
         s"""SELECT jvid, graft_vec_dot(jvec, $q) AS score
            |FROM jobs_graph ORDER BY score DESC LIMIT 10""".stripMargin,
-        "AnnSearch") === 1)
+        "AnnSearch") === (1, 1, 1))
     }
   }
 
-  test("literal candidate-tier route: generator, rescore and emit jobs") {
+  test("literal candidate-tier route: generator jobs, one scan") {
     fixture
     val q = vecLit("jobs_tier", "jtid", "jtvec", 7)
     routed() {
-      assert(jobsOf(
+      assert(pinOf(
         s"""SELECT jtid, graft_vec_cosine(jtvec, $q) AS score
            |FROM jobs_tier ORDER BY score DESC LIMIT 10""".stripMargin,
-        "AnnSearch") === 6)
+        "AnnSearch") === (4, 4, 4))
     }
   }
 
-  test("literal multivector route: batched search, chamfer rescore, emit") {
-    fixture
+  private lazy val mvLiteralSql: String = {
     val qLit = spark.table("jobs_graph")
       .filter(col("jvid") >= C && col("jvid") < 2 * C)
       .orderBy("jvid").select("jvec").collect()
       .map(_.getSeq[Float](0).map(x => s"${x}F").mkString("array(", ", ", ")"))
       .mkString("array(", ", ", ")")
+    s"""SELECT jsid, graft_chamfer_score($qLit, jset) AS score
+       |FROM jobs_sets ORDER BY score DESC LIMIT 10""".stripMargin
+  }
+
+  test("literal multivector route: driver search, one rescoring scan") {
+    fixture
     routed() {
-      val n = countsOf(
-        s"""SELECT jsid, graft_chamfer_score($qLit, jset) AS score
-           |FROM jobs_sets ORDER BY score DESC LIMIT 10""".stripMargin,
-        "AnnSearch")
-      // the one query set is searched on the driver: one scan of the set
-      // corpus rescores its candidates, one job emits the answer
-      assert(n.jobs === 2)
-      assert(n.stages === 2)
-      assert(n.tasks === 2)
+      // the one query set is searched on the driver: the statement's one
+      // job is the scan of the set corpus that rescores its candidates
+      assert(pinOf(mvLiteralSql, "AnnSearch") === (1, 1, 1))
     }
+  }
+
+  test("literal multivector statement, exhaustive plan") {
+    fixture
+    assert(pinOf(mvLiteralSql, "exhaustive") === (1, 1, 1))
   }
 
   private def filteredSql(pred: String, k: Int): String = {
@@ -170,23 +174,23 @@ class RoutedJobsSpec extends AnyFunSuite {
   test("filtered route, selective predicate: probe + exact pre-filter scan") {
     fixture
     routed() {
-      assert(jobsOf(filteredSql("jvid % 50 = 3 AND jvid < 500", 20),
-        "AnnFilteredTopK") === 4)
+      assert(pinOf(filteredSql("jvid % 50 = 3 AND jvid < 500", 20),
+        "AnnFilteredTopK") === (4, 4, 4))
     }
   }
 
   test("filtered route, escalation: driver-side beam rounds, one scan each") {
     fixture
     routed("spark.graft.ann.filtered.preFilterMax" -> "0") {
-      assert(jobsOf(filteredSql("jvid % 50 = 3 AND jvid < 500", 20),
-        "AnnFilteredTopK") === 4)
+      assert(pinOf(filteredSql("jvid % 50 = 3 AND jvid < 500", 20),
+        "AnnFilteredTopK") === (4, 4, 4))
     }
   }
 
   test("single-vector relation route on the graph tier") {
     fixture
     routed() {
-      assert(jobsOf(
+      assert(pinOf(
         """SELECT q_id, jvid, score FROM (
           |  SELECT q.q_id, d.jvid,
           |         graft_vec_cosine(q.q_vec, d.jvec) AS score,
@@ -195,9 +199,35 @@ class RoutedJobsSpec extends AnyFunSuite {
           |                    d.jvid ASC) AS rnk
           |  FROM jobs_sv_queries q CROSS JOIN jobs_graph d) t
           |WHERE rnk <= 10""".stripMargin,
-        "SvJoinTopK") === 4)
+        "SvJoinTopK") === (2, 2, 5))
     }
   }
+
+  test("single-vector relation route on a candidate tier") {
+    fixture
+    routed() {
+      assert(pinOf(
+        """SELECT q_id, jtid, score FROM (
+          |  SELECT q.q_id, d.jtid,
+          |         graft_vec_cosine(q.q_vec, d.jtvec) AS score,
+          |         row_number() OVER (PARTITION BY q.q_id
+          |           ORDER BY graft_vec_cosine(q.q_vec, d.jtvec) DESC,
+          |                    d.jtid ASC) AS rnk
+          |  FROM jobs_sv_queries q CROSS JOIN jobs_tier d) t
+          |WHERE rnk <= 10""".stripMargin,
+        "SvJoinTopK") === (5, 5, 8))
+    }
+  }
+
+  private def mvRelationSql(queries: String): String =
+    s"""SELECT qset_id, jsid, score FROM (
+       |  SELECT q.qset_id, d.jsid,
+       |         graft_chamfer_score(q.jset, d.jset) AS score,
+       |         row_number() OVER (PARTITION BY q.qset_id
+       |           ORDER BY graft_chamfer_score(q.jset, d.jset) DESC,
+       |                    d.jsid ASC) AS rnk
+       |  FROM $queries q CROSS JOIN jobs_sets d) t
+       |WHERE rnk <= 10""".stripMargin
 
   test("multivector relation route, one local query set: the interactive client's statement") {
     fixture
@@ -208,41 +238,25 @@ class RoutedJobsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getSeq[scala.collection.Seq[Float]](1).map(_.toSeq)))
       .toSeq.toDF("qset_id", "jset").createOrReplaceTempView("jobs_mv_one_query")
     routed() {
-      val n = countsOf(
-        """SELECT qset_id, jsid, score FROM (
-          |  SELECT q.qset_id, d.jsid,
-          |         graft_chamfer_score(q.jset, d.jset) AS score,
-          |         row_number() OVER (PARTITION BY q.qset_id
-          |           ORDER BY graft_chamfer_score(q.jset, d.jset) DESC,
-          |                    d.jsid ASC) AS rnk
-          |  FROM jobs_mv_one_query q CROSS JOIN jobs_sets d) t
-          |WHERE rnk <= 10""".stripMargin,
-        "MvJoinTopK")
       // read without a job, searched on the driver, then the literal
-      // shape's two jobs
-      assert(n.jobs === 2)
-      assert(n.stages === 2)
-      assert(n.tasks === 2)
+      // shape's one rescoring scan
+      assert(pinOf(mvRelationSql("jobs_mv_one_query"), "MvJoinTopK") ===
+        (1, 1, 1))
     }
   }
 
   test("multivector relation route: one batched search for every query set") {
     fixture
     routed() {
-      val n = countsOf(
-        """SELECT qset_id, jsid, score FROM (
-          |  SELECT q.qset_id, d.jsid,
-          |         graft_chamfer_score(q.jset, d.jset) AS score,
-          |         row_number() OVER (PARTITION BY q.qset_id
-          |           ORDER BY graft_chamfer_score(q.jset, d.jset) DESC,
-          |                    d.jsid ASC) AS rnk
-          |  FROM jobs_mv_queries q CROSS JOIN jobs_sets d) t
-          |WHERE rnk <= 10""".stripMargin,
-        "MvJoinTopK")
-      assert(n.jobs === 9)
-      assert(n.stages === 9)
       // the three query sets are searched by three kernel tasks
-      assert(n.tasks === 16)
+      assert(pinOf(mvRelationSql("jobs_mv_queries"), "MvJoinTopK") ===
+        (6, 6, 11))
     }
+  }
+
+  test("multivector relation statement over three query sets, exhaustive plan") {
+    fixture
+    assert(pinOf(mvRelationSql("jobs_mv_queries"), "exhaustive") ===
+      (3, 3, 3))
   }
 }
