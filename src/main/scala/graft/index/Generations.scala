@@ -3,16 +3,21 @@ package graft.index
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Generation-pointer MANIFEST — serve-through-compaction isolation
-  * for the persisted index faces.
+/** The directory lifecycle of every persisted index face (sharded
+  * graph, IVF-PQ, SQ8, inverted, band and cell indexes), written once:
+  * the in-place staging swap with its crash recovery ([[swap]],
+  * [[recoverSwap]]), the generation-pointer MANIFEST, and the versioned
+  * writer shell ([[Face]]) that wraps each face's layout code in the
+  * writer lease, live resolution and next/publish.
   *
-  * The in-place compactions ([[ShardedIndex.compact]],
-  * [[graft.operators.InvertedIndex.compactPostings]]) rebuild the live
-  * directories under a single-writer QUIESCENCE contract that also
-  * excludes READERS: a query listing the live dir mid-swap can fail.
-  * That is fine for a batch pipeline and impossible for a serving
-  * tier — a real 100 TB deployment compacts WHILE serving. (The
-  * reference never faces this: it is a single-process RAM engine,
+  * The in-place compactions (`compactIndex`, `compactCodes`,
+  * `compactBandIndex`, `compactCellIndex`, `compactPostings`, and the
+  * sharded tier's tombstone retirement) rewrite a live directory
+  * through [[swap]] under a single-writer QUIESCENCE contract that
+  * also excludes READERS: a query listing the live dir mid-swap can
+  * fail. That is fine for a batch pipeline and impossible for a
+  * serving tier — a real 100 TB deployment compacts WHILE serving.
+  * (The reference never faces this: it is a single-process RAM engine,
   * `/root/reference/src/index_bipartite.cpp` builds offline and serves
   * from memory.)
   *
@@ -60,7 +65,7 @@ import org.apache.spark.sql.SparkSession
   * delete landing mid-compaction would mask ids in the generation
   * about to be retired). That contract is ENFORCED, best-effort, by
   * [[withWriterLease]]: a create-if-absent `_writer.lock` under the
-  * root, taken by every versioned writer face around its whole
+  * root, taken by [[Face.writing]] around every versioned writer
   * operation, released on completion, breakable after
   * `spark.graft.gen.leaseTimeoutMs` (default 10 min) so a crashed
   * holder cannot wedge maintenance forever. A second writer fails
@@ -779,8 +784,8 @@ object Generations {
   }
 
   /** Run `body` holding the root's writer lease — the loud-failure
-    * enforcement of the single-writer contract every versioned face's
-    * append/delete/compact wraps itself in. Best-effort by design
+    * enforcement of the single-writer contract [[Face.writing]] wraps
+    * every versioned build/append/delete/compact in. Best-effort by design
     * (create-if-absent is the strongest primitive a plain filesystem
     * offers): a misconfigured second maintenance loop, or an ingest
     * stream racing a compaction, now fails AT ENTRY with the holder's
@@ -950,5 +955,149 @@ object Generations {
           try out.write(content.getBytes("UTF-8")) finally out.close()
       }
     } catch { case scala.util.control.NonFatal(_) => () }
+  }
+
+  // ===== In-place staging swap =====
+
+  /** Rewrite the directory `live` in place: `write` fills
+    * `<live>__compact_staging`, the live dir (when present) is parked
+    * as `<live>__compact_old`, staging is promoted, old is dropped. A
+    * crash between the renames leaves old parked with no live dir,
+    * which [[recoverSwap]] rolls back; a crash before them leaves only
+    * staging debris. Single-writer and QUIESCENT: a reader listing
+    * `live` between the two renames finds nothing. */
+  def swap(spark: SparkSession, live: String)(write: String => Unit): Unit = {
+    val f = fs(spark, live)
+    val staging = s"${live}__compact_staging"
+    write(staging)
+    val lp = new Path(live)
+    val old = new Path(s"${live}__compact_old")
+    if (f.exists(lp))
+      require(f.rename(lp, old), s"compact: cannot move $live aside")
+    require(f.rename(new Path(staging), lp),
+      s"compact: cannot promote staging for $live")
+    f.delete(old, true)
+  }
+
+  /** Roll back a [[swap]] that crashed between its renames: a parked
+    * `__compact_old` with no live dir is restored, one beside a live
+    * dir (crash after promote) is dropped, and staging (never live) is
+    * dropped. Readers call this before every read, so two of them can
+    * observe the stranded state and race the restoring rename; rename
+    * is atomic, so the loser finds `live` restored by the winner and
+    * goes on instead of failing its query on a healthy index. */
+  def recoverSwap(spark: SparkSession, live: String): Unit = {
+    val f = fs(spark, live)
+    val lp = new Path(live)
+    val old = new Path(s"${live}__compact_old")
+    if (f.exists(old)) {
+      if (!f.exists(lp)) {
+        if (!f.rename(old, lp))
+          require(f.exists(lp), s"recover: cannot restore $live")
+      } else f.delete(old, true)
+    }
+    val staging = new Path(s"${live}__compact_staging")
+    if (f.exists(staging)) f.delete(staging, true)
+  }
+
+  /** Parquet data files under `dir` (recursively; `_`/`.`-prefixed
+    * sidecars such as `_tombstones` skipped) and the number of distinct
+    * top-level `k=v` partition dirs they sit in — the small-file
+    * pressure every face's `maybeCompactVersioned` triggers on.
+    * (0, 0) when `dir` is absent. */
+  def dataFiles(spark: SparkSession, dir: String): (Int, Int) = {
+    val f = fs(spark, dir)
+    // one entry per data file: the top-level dir it sits under ("" for
+    // files directly in `dir`)
+    def walk(p: Path, top: String): Iterator[String] =
+      f.listStatus(p).iterator.flatMap { st =>
+        val nm = st.getPath.getName
+        if (nm.startsWith("_") || nm.startsWith(".")) Iterator.empty
+        else if (st.isDirectory) walk(st.getPath, if (top.isEmpty) nm else top)
+        else if (nm.endsWith(".parquet")) Iterator.single(top)
+        else Iterator.empty
+      }
+    val p = new Path(dir)
+    if (!f.exists(p)) (0, 0)
+    else {
+      val tops = walk(p, "").toSeq
+      (tops.size, tops.filter(_.contains("=")).distinct.size)
+    }
+  }
+
+  // ===== The versioned shell =====
+  //
+  // Every persisted face has a generation-versioned twin that serves
+  // THROUGH compaction: each generation `<root>/gen<k>` is an ordinary
+  // index of that face (its own layout, sidecars and tombstones),
+  // immutable once published. Readers resolve the live generation once
+  // ([[Face.resolve]]) and touch only that snapshot; appends and
+  // deletes land in the live generation under the writer lease; a
+  // build writes generation 0 and a compaction writes the folded
+  // successor reading the live one strictly read-only, then one atomic
+  // manifest flip retires what falls out of grace. The faces supply
+  // only their layout code — what to write, append, tombstone or fold;
+  // lease, resolution, generation allocation, debris cleanup and
+  // publish happen here, so each lifecycle operation (build, append,
+  // delete, compact, generation flip) has exactly one place to observe.
+  // `committer` is per-call on every operation, append and delete
+  // included: the lease's store check derives from it, so a seqlog
+  // lifecycle on a CAS-only store never needs the session-global conf.
+
+  /** The versioned lifecycle shell of one face: `kind` names it in the
+    * "no published … generation" error ("" for the sharded tier),
+    * `face` prefixes its writer-lease labels (`<face>.<op>`). */
+  final class Face(kind: String, face: String) {
+
+    private val noun = if (kind.isEmpty) "generation" else s"$kind generation"
+
+    /** The live generation dir; fails before the first publish. */
+    def resolve(spark: SparkSession, root: String): String =
+      liveDir(spark, root).getOrElse(
+        sys.error(s"no published $noun at $root"))
+
+    /** One writer operation on `root`, holding its writer lease. */
+    final class Writer private[Face] (spark: SparkSession, root: String,
+                                      committer: String) {
+      /** The live generation dir, resolved inside the lease. */
+      def live: String = resolve(spark, root)
+
+      /** Allocate the next generation, clear any debris a crashed
+        * attempt left there, run `write` on its dir, then publish it. A
+        * crash before publish leaves the old pointer serving; the
+        * partial successor is retired by the next successful publish. */
+      def publishNext[T](write: String => T): T = {
+        val (gen, dir) = next(spark, root)
+        fs(spark, root).delete(new Path(dir), true)
+        val out = write(dir)
+        publish(spark, root, gen, committer = committer)
+        out
+      }
+    }
+
+    /** `body` under the root's writer lease, labelled `<face>.<op>`. */
+    def writing[T](spark: SparkSession, root: String, op: String,
+                   committer: String)(body: Writer => T): T =
+      withWriterLease(spark, root, s"$face.$op", committer)(
+        body(new Writer(spark, root, committer)))
+
+    /** Write generation 0 (or a fresh successor) and publish it. */
+    def build[T](spark: SparkSession, root: String, committer: String)(
+        write: String => T): T =
+      writing(spark, root, "build", committer)(_.publishNext(write))
+
+    /** Append to / tombstone in the live generation dir. */
+    def update[T](spark: SparkSession, root: String, op: String,
+                  committer: String)(body: String => T): T =
+      writing(spark, root, op, committer)(w => body(w.live))
+
+    /** Fold the live generation (first argument, read-only) into the
+      * next one (second argument) and publish it. */
+    def fold[T](spark: SparkSession, root: String, committer: String)(
+        write: (String, String) => T): T =
+      writing(spark, root, "compact", committer) { w =>
+        val live = w.live
+        w.publishNext(write(live, _))
+      }
   }
 }

@@ -337,23 +337,27 @@ object GraphBuild {
     * compact over a bounded slice, is ~10–20 Spark jobs of scheduling
     * for microseconds of per-node work; below this threshold the whole
     * phase pipeline is cheaper as plain loops over the already-collected
-    * [[VectorStore]]. Conf `spark.graft.index.driverBuildMaxRows`
-    * overrides (0 disables). Production-sized shard builds stay
-    * distributed — at the default 512 the O(n²) exact-kNN work is
-    * ~8 ms-scale on one core. */
-  val DriverBuildMaxRowsDefault = 512
+    * [[VectorStore]]. Production-sized shard builds stay distributed —
+    * at 512 the O(n²) exact-kNN work is ~8 ms-scale on one core. */
+  val DriverBuildMaxRows = 512
 
   /** Full G1/G2 build. `base` and `train`: (vec_id, embedding). */
   def build(spark: SparkSession, base: DataFrame, train: DataFrame,
             params: BuildParams): RoarIndex = {
-    import spark.implicits._
     val metric = Metrics(params.metric)
     val vecs = VectorStore.fromDf(base, "vec_id", "embedding", metric)
-    val maxLocal = spark.conf.getOption(
-        "spark.graft.index.driverBuildMaxRows")
-      .map(_.toInt).getOrElse(DriverBuildMaxRowsDefault)
-    if (params.knnSource == "exact" && vecs.n <= maxLocal)
-      return buildLocal(spark, vecs, train, params, metric)
+    if (params.knnSource == "exact" && vecs.n <= DriverBuildMaxRows)
+      buildLocal(spark, vecs, train, params, metric)
+    else buildDistributed(spark, base, train, params, vecs)
+  }
+
+  /** The distributed phase pipeline behind [[build]] (the reference
+    * path every size takes past [[DriverBuildMaxRows]]). */
+  private[graft] def buildDistributed(spark: SparkSession, base: DataFrame,
+                                      train: DataFrame, params: BuildParams,
+                                      vecs: VectorStore): RoarIndex = {
+    import spark.implicits._
+    val metric = Metrics(params.metric)
     val vecsB = spark.sparkContext.broadcast(vecs)
     val ep = medoid(vecs, metric)
     val n = vecs.n

@@ -157,7 +157,7 @@ object ShardedIndex {
         val deadB = {
           val dp = new org.apache.hadoop.fs.Path(s"$dir/dead/_SUCCESS")
           val dfs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          recoverDeadSwap(dfs, dir) // a purge crashed mid-swap must not read as "no dead set"
+          recoverDeadSwap(spark, dir) // a purge crashed mid-swap must not read as "no dead set"
           if (!dfs.exists(dp)) null
           else {
             val bs = new java.util.BitSet(g.n)
@@ -297,8 +297,8 @@ object ShardedIndex {
     // old shards for liveRowCount/discovery to miscount).
     if (clearTombstones) {
       deleteDir(spark, s"$path/$TombstoneDir")
-      deleteDir(spark, tombOld(path))
-      deleteDir(spark, tombStaging(path))
+      deleteDir(spark, s"${tombLive(path)}__compact_old")
+      deleteDir(spark, s"${tombLive(path)}__compact_staging")
       deleteDir(spark, s"$path/_tombstones_erased")
       deleteDir(spark, s"$path/compact_tombstones_keep")
       val p = new org.apache.hadoop.fs.Path(path)
@@ -503,32 +503,15 @@ object ShardedIndex {
   private val TombstoneDir = "_tombstones"
 
   private def tombLive(path: String) = s"$path/$TombstoneDir"
-  private def tombOld(path: String) = s"$path/${TombstoneDir}__compact_old"
-  private def tombStaging(path: String) =
-    s"$path/${TombstoneDir}__compact_staging"
 
   /** Recover a tombstone-retirement swap ([[compact]]) that crashed
-    * between its renames — called from every tombstone READ and from
-    * [[deleteFromIndex]] (a delete landing on the stranded state would
-    * otherwise start a fresh sidecar that the eventual recovery then
-    * clobbers). Same posture as
-    * [[graft.operators.InvertedIndex.recoverCompact]], including the
-    * lost-race tolerance between two concurrent recoverers. */
+    * between its renames ([[Generations.recoverSwap]]) — called from
+    * every tombstone READ and from [[deleteFromIndex]] (a delete
+    * landing on the stranded state would otherwise start a fresh
+    * sidecar that the eventual recovery then clobbers). */
   private def recoverTombstoneSwap(spark: SparkSession,
-                                   path: String): Unit = {
-    val live = new org.apache.hadoop.fs.Path(tombLive(path))
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(tombOld(path))
-    if (fs.exists(old)) {
-      if (!fs.exists(live)) {
-        if (!fs.rename(old, live))
-          require(fs.exists(live),
-            s"recover: cannot restore ${live.toString}")
-      } else fs.delete(old, true)
-    }
-    val staging = new org.apache.hadoop.fs.Path(tombStaging(path))
-    if (fs.exists(staging)) fs.delete(staging, true)
-  }
+                                   path: String): Unit =
+    Generations.recoverSwap(spark, tombLive(path))
 
   /** Distinct UN-ERASED tombstoned global ids (the per-query mask), or
     * None when none are pending. Disk is the truth (read per search,
@@ -624,11 +607,8 @@ object ShardedIndex {
   /** [[deleteFromIndex]] for a literal takedown list. */
   def deleteFromIndex(spark: SparkSession, path: String,
                       gids: Seq[Long]): Long =
-    if (gids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteFromIndex(spark, path, gids.distinct.toDF("gid"))
-    }
+    graft.operators.Tombstones.ofIds(spark, gids, "gid")(
+      deleteFromIndex(spark, path, _))
 
   /** UN-ERASED deleted ids as a fraction of indexed rows — the compact
     * trigger on the deletion side (footer count + one tiny scan).
@@ -970,45 +950,32 @@ object ShardedIndex {
     rebuilt
   }
 
-  // Dead-sidecar swap dirs: after the first purge the `dead` sidecar is
-  // the ONLY coverage for previously erased ids (they were retired from
-  // `_tombstones`), so it must never be rewritten in place — Spark's
-  // overwrite deletes the target before writing, and a crash in that
-  // window would lose prior erased ids permanently. Same staging+rename
-  // discipline as the tombstone retirement swap.
+  // The dead sidecar: after the first purge it is the ONLY coverage for
+  // previously erased ids (they were retired from `_tombstones`), so it
+  // must never be rewritten in place — Spark's overwrite deletes the
+  // target before writing, and a crash in that window would lose prior
+  // erased ids permanently. It is installed through [[Generations.swap]].
   private def deadLive(shardDir: String) = s"$shardDir/dead"
-  private def deadOld(shardDir: String) = s"$shardDir/dead__compact_old"
-  private def deadStaging(shardDir: String) =
-    s"$shardDir/dead__compact_staging"
 
   /** Recover a dead-sidecar swap that crashed between its renames —
     * called before every sidecar READ (shard load) and WRITE (purge).
-    * A COMMITTED staging is the newer superset (old ∪ this purge), so
-    * it wins when the live dir is gone; a parked `old` with no live
-    * dir is restored; leftovers are cleared. Every intermediate state
-    * keeps at least one complete copy of the prior erased set on disk,
-    * and the window between park and promote is additionally covered
-    * by `_tombstones` (retirement runs strictly AFTER the sidecars). */
-  private def recoverDeadSwap(fs: org.apache.hadoop.fs.FileSystem,
-                              shardDir: String): Unit = {
+    * Unlike [[Generations.recoverSwap]]'s roll-back, a COMMITTED staging
+    * rolls FORWARD when the live dir is gone: it is the newer superset
+    * (old ∪ this purge). Otherwise the shared roll-back runs. Every
+    * intermediate state keeps at least one complete copy of the prior
+    * erased set on disk, and the window between park and promote is
+    * additionally covered by `_tombstones` (retirement runs strictly
+    * AFTER the sidecars). */
+  private def recoverDeadSwap(spark: SparkSession, shardDir: String): Unit = {
     import org.apache.hadoop.fs.Path
     val live = new Path(deadLive(shardDir))
-    val stg = new Path(deadStaging(shardDir))
-    val old = new Path(deadOld(shardDir))
-    if (fs.exists(new Path(s"${deadStaging(shardDir)}/_SUCCESS")) &&
-        !fs.exists(live)) {
-      if (!fs.rename(stg, live))
-        require(fs.exists(live),
-          s"recoverDeadSwap: cannot promote ${stg.toString}")
-    }
-    if (fs.exists(stg)) fs.delete(stg, true)
-    if (fs.exists(old)) {
-      if (!fs.exists(live)) {
-        if (!fs.rename(old, live))
-          require(fs.exists(live),
-            s"recoverDeadSwap: cannot restore ${old.toString}")
-      } else fs.delete(old, true)
-    }
+    val stg = new Path(s"${deadLive(shardDir)}__compact_staging")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new Path(stg, "_SUCCESS")) && !fs.exists(live) &&
+        !fs.rename(stg, live))
+      require(fs.exists(live),
+        s"recoverDeadSwap: cannot promote ${stg.toString}")
+    Generations.recoverSwap(spark, deadLive(shardDir))
   }
 
   /** Driver-side id budget for the dead-sidecar merge and the flip's
@@ -1050,7 +1017,7 @@ object ShardedIndex {
         val sd = shardDir(ref, s)
         val fs = new Path(sd)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverDeadSwap(fs, sd)
+        recoverDeadSwap(spark, sd)
         val haveOld = fs.exists(new Path(s"${deadLive(sd)}/_SUCCESS"))
         if (driverSide) {
           val old: Array[Long] =
@@ -1061,7 +1028,7 @@ object ShardedIndex {
               .filter(_ % ref.nShards == s).map(_ / ref.nShards))
             .distinct.sorted
           if (merged.nonEmpty)
-            installDeadSidecar(fs, sd,
+            installDeadSidecar(spark, sd,
               merged.toSeq.toDF("vec_id").coalesce(1))
         } else {
           // distributive twin: same (shard, local) split as the driver
@@ -1079,7 +1046,7 @@ object ShardedIndex {
             (n / math.max(ref.nShards, 1) + (8L << 20) - 1) / (8L << 20))
           // parts == 1: coalesce writes the identical single sorted
           // file without the range partitioner's bounds-sampling job
-          installDeadSidecar(fs, sd,
+          installDeadSidecar(spark, sd,
             (if (parts == 1L) merged.coalesce(1)
              else merged.repartitionByRange(parts.toInt, col("vec_id")))
             .sortWithinPartitions("vec_id"))
@@ -1088,19 +1055,11 @@ object ShardedIndex {
     } finally snapDf.unpersist(false)
   }
 
-  /** One sidecar staging+rename swap (shared by both writer paths). */
-  private def installDeadSidecar(fs: org.apache.hadoop.fs.FileSystem,
-                                 sd: String, merged: DataFrame): Unit = {
-    import org.apache.hadoop.fs.Path
-    merged.write.mode("overwrite").parquet(deadStaging(sd))
-    val live = new Path(deadLive(sd))
-    if (fs.exists(live))
-      require(fs.rename(live, new Path(deadOld(sd))),
-        s"writeDeadSidecars: cannot move ${deadLive(sd)} aside")
-    require(fs.rename(new Path(deadStaging(sd)), live),
-      s"writeDeadSidecars: cannot promote staging for ${deadLive(sd)}")
-    fs.delete(new Path(deadOld(sd)), true)
-  }
+  /** One sidecar swap (shared by both writer paths). */
+  private def installDeadSidecar(spark: SparkSession, sd: String,
+                                 merged: DataFrame): Unit =
+    Generations.swap(spark, deadLive(sd))(
+      merged.write.mode("overwrite").parquet(_))
 
   /** Retire the erased snapshot from the per-query mask: swap
     * `_tombstones` for (current − snapshot) — deletes that landed
@@ -1115,19 +1074,8 @@ object ShardedIndex {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         if (rest.count() == 0) deleteDir(spark, tombLive(path))
-        else {
-          rest.coalesce(1).write.mode("overwrite")
-            .parquet(tombStaging(path))
-          val fs = new org.apache.hadoop.fs.Path(path)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          require(fs.rename(new org.apache.hadoop.fs.Path(tombLive(path)),
-            new org.apache.hadoop.fs.Path(tombOld(path))),
-            s"retire: cannot move ${tombLive(path)} aside")
-          require(fs.rename(new org.apache.hadoop.fs.Path(tombStaging(path)),
-            new org.apache.hadoop.fs.Path(tombLive(path))),
-            s"retire: cannot promote staging for ${tombLive(path)}")
-          fs.delete(new org.apache.hadoop.fs.Path(tombOld(path)), true)
-        }
+        else Generations.swap(spark, tombLive(path))(
+          rest.coalesce(1).write.mode("overwrite").parquet(_))
       } finally rest.unpersist(false)
     }
 
@@ -1168,16 +1116,9 @@ object ShardedIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
   }
 
-  // ===== Generation-versioned serving (serve-through-compaction) =====
-  //
-  // The in-place [[compact]] requires quiescence INCLUDING readers — a
-  // query listing the live dirs mid-swap can fail. The versioned face
-  // lifts exactly that restriction via [[Generations]]: every
-  // generation is an ordinary sharded index that is IMMUTABLE once
-  // published, a reader resolves the manifest once and then only
-  // touches that snapshot, and a compaction builds the successor
-  // generation reading the live one strictly read-only before one
-  // atomic pointer flip. Writers stay single-writer among themselves.
+  // The generation-versioned face: every generation is an ordinary
+  // sharded index (see [[Generations]]' versioned shell).
+  private val Versioned = new Generations.Face("", "sharded")
 
   /** Build the first generation of a versioned index under `root` and
     * publish the manifest. `committer` selects the manifest commit
@@ -1187,12 +1128,8 @@ object ShardedIndex {
   def buildVersioned(spark: SparkSession, emb: DataFrame,
                      params: BuildParams, nShards: Int,
                      root: String, committer: String = ""): ShardedIndexRef =
-    Generations.withWriterLease(spark, root, "sharded.build", committer) {
-      val (gen, dir) = Generations.next(spark, root)
-      val ref = buildPersisted(spark, emb, params, nShards, dir)
-      Generations.publish(spark, root, gen, committer = committer)
-      ref
-    }
+    Versioned.build(spark, root, committer)(
+      buildPersisted(spark, emb, params, nShards, _))
 
   /** Resolve the live generation into an ordinary ref (delta discovery
     * included). The ref names an immutable PUBLISHED snapshot:
@@ -1201,11 +1138,8 @@ object ShardedIndex {
     * publishes its successor (grace = one generation — see
     * [[Generations]]). */
   def resolveVersioned(spark: SparkSession, root: String,
-                       metric: String): ShardedIndexRef = {
-    val dir = Generations.liveDir(spark, root).getOrElse(
-      sys.error(s"no published generation at $root"))
-    refOfGenerationDir(spark, dir, metric)
-  }
+                       metric: String): ShardedIndexRef =
+    refOfGenerationDir(spark, Versioned.resolve(spark, root), metric)
 
   private def refOfGenerationDir(spark: SparkSession, dir: String,
                                  metric: String): ShardedIndexRef = {
@@ -1232,43 +1166,34 @@ object ShardedIndex {
       body(refOfGenerationDir(spark, dir, metric))
     }
 
-  /** [[appendDelta]] against the live generation (writer face —
-    * single-writer contract unchanged). `committer` is per-call on
-    * EVERY mutating face, not just build/compact: the lease's store
-    * check derives from the committer mode, so on a CAS-only store a
-    * seqlog lifecycle would otherwise fail loudly at its first
-    * append/delete unless the session-global conf were also set —
-    * contradicting the "conf is only the default" contract. */
+  /** [[appendDelta]] against the live generation (writer face). */
   def appendVersioned(spark: SparkSession, delta: DataFrame, root: String,
                       params: BuildParams,
                       committer: String = ""): ShardedIndexRef =
-    Generations.withWriterLease(spark, root, "sharded.append", committer) {
-      appendDelta(spark, delta,
-        resolveVersioned(spark, root, params.metric), params)
-    }
+    Versioned.update(spark, root, "append", committer)(live =>
+      appendDelta(spark, delta, refOfGenerationDir(spark, live, params.metric),
+        params))
 
-  /** [[deleteFromIndex]] against the live generation (writer face).
-    * Explicit overload pair (not a default argument): Scala allows
-    * default arguments on only ONE overloaded alternative, and the
-    * DataFrame variant holds it. */
+  /** [[deleteFromIndex]] against the live generation (writer face); 0
+    * on a root with no published generation. Explicit overload pair
+    * (not a default argument): Scala allows default arguments on only
+    * ONE overloaded alternative, and the DataFrame variant holds it. */
   def deleteVersioned(spark: SparkSession, root: String,
                       gids: Seq[Long]): Long =
     deleteVersioned(spark, root, gids, "")
 
   def deleteVersioned(spark: SparkSession, root: String,
                       gids: Seq[Long], committer: String): Long =
-    Generations.withWriterLease(spark, root, "sharded.delete", committer) {
+    Versioned.writing(spark, root, "delete", committer)(_ =>
       Generations.liveDir(spark, root)
-        .map(deleteFromIndex(spark, _, gids)).getOrElse(0L)
-    }
+        .map(deleteFromIndex(spark, _, gids)).getOrElse(0L))
 
   /** [[deleteVersioned]] for an id RELATION (`gid` column). */
   def deleteVersioned(spark: SparkSession, root: String,
                       idsDf: DataFrame, committer: String = ""): Long =
-    Generations.withWriterLease(spark, root, "sharded.delete", committer) {
+    Versioned.writing(spark, root, "delete", committer)(_ =>
       Generations.liveDir(spark, root)
-        .map(deleteFromIndex(spark, _, idsDf)).getOrElse(0L)
-    }
+        .map(deleteFromIndex(spark, _, idsDf)).getOrElse(0L))
 
   /** [[maybeCompact]]'s versioned twin: compact into a new generation
     * iff the LIVE generation's deltas or (global / per-shard) deleted
@@ -1320,24 +1245,25 @@ object ShardedIndex {
                        params: BuildParams,
                        targetShardRows: Long = 0,
                        committer: String = ""): ShardedIndexRef =
-    Generations.withWriterLease(spark, root, "sharded.compact", committer) {
-      compactVersionedLocked(spark, root, params, targetShardRows, committer)
+    Versioned.writing(spark, root, "compact", committer) { w =>
+      val live = refOfGenerationDir(spark, w.live, params.metric)
+      val tomb = tombstonesDf(spark, live.path)
+      val nShardsNew =
+        if (targetShardRows > 0)
+          autoShards(totalRows(spark, live), targetShardRows)
+        else live.nShards
+      if (live.nDeltas == 0 && tomb.isEmpty && nShardsNew == live.nShards)
+        live
+      else w.publishNext(foldInto(spark, live, tomb, params, nShardsNew, _))
     }
 
-  private def compactVersionedLocked(spark: SparkSession, root: String,
-                                     params: BuildParams,
-                                     targetShardRows: Long,
-                                     committer: String): ShardedIndexRef = {
-    import spark.implicits._
-    val live = resolveVersioned(spark, root, params.metric)
-    val tomb = tombstonesDf(spark, live.path)
-    val nShardsNew =
-      if (targetShardRows > 0)
-        autoShards(totalRows(spark, live), targetShardRows)
-      else live.nShards
-    if (live.nDeltas == 0 && tomb.isEmpty && nShardsNew == live.nShards)
-      return live
-    val (gen, newDir) = Generations.next(spark, root)
+  /** The versioned purge's successor: `live`'s base ∪ deltas with the
+    * tombstoned payloads zeroed, re-striped into `nShards` shards at
+    * `newDir`, every erased id (prior sidecars ∪ `tomb`) in its dead
+    * sidecars. */
+  private def foldInto(spark: SparkSession, live: ShardedIndexRef,
+                       tomb: Option[DataFrame], params: BuildParams,
+                       nShards: Int, newDir: String): ShardedIndexRef = {
     val base = (0 until live.nShards).map { s =>
       spark.read.parquet(s"${shardDir(live, s)}/vectors")
         .select((col("vec_id") * live.nShards + s).as("vec_id"),
@@ -1369,7 +1295,7 @@ object ShardedIndex {
             when(col("_dead"), transform(col("embedding"), _ => lit(0.0f)))
               .otherwise(col("embedding")).as("embedding"))
     }
-    val newRef = buildPersistedImpl(spark, zeroed, params, nShardsNew,
+    val newRef = buildPersistedImpl(spark, zeroed, params, nShards,
       newDir, clearTombstones = true)
     // the successor's dead set = every prior generation's sidecars
     // (carried forward — their payloads are already zeroed in the live
@@ -1378,7 +1304,7 @@ object ShardedIndex {
       val sd = shardDir(live, s)
       val f = new org.apache.hadoop.fs.Path(sd)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      recoverDeadSwap(f, sd)
+      recoverDeadSwap(spark, sd)
       if (!f.exists(new org.apache.hadoop.fs.Path(
           s"${deadLive(sd)}/_SUCCESS"))) None
       else Some(spark.read.parquet(deadLive(sd))
@@ -1398,7 +1324,6 @@ object ShardedIndex {
         .contains("true"))
       throw new IllegalStateException(
         "compactVersioned: injected crash before publish")
-    Generations.publish(spark, root, gen, committer = committer)
     newRef
   }
 }

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.index.Generations
+
 /** Persisted, incrementally-appendable INVERTED INDEX with BM25
   * serving — the lexical mirror of the incremental band/cell/vector
   * indexes: a retrieval corpus is ingested batch by batch, each batch
@@ -286,34 +288,6 @@ object InvertedIndex {
     Tombstones.appendNew(spark, s"$path/tombstones", "doc_id", live)
   }
 
-  /** Fold append-accumulated small files — and any replay-duplicated
-    * rows (stale-watermark re-appends) — back into ONE sorted file per
-    * bucket, keeping the bucket-partitioned layout so queries stay
-    * partition-pruned. After compaction the read-time `max(tf)` fold
-    * in [[bm25Query]] is a no-op and small-file pressure is gone; at
-    * 100 TB this is the standard background postings merge. Each
-    * bucket's rows hash to one task (`repartition(bucket)`), so
-    * `partitionBy` writes a single sorted file per bucket dir.
-    *
-    * Tombstoned docs are ERASED PHYSICALLY here (their postings and
-    * doclens rows are dropped — the GDPR "content gone on the next
-    * merge" posture); the tombstone rows themselves fold to one
-    * single distinct sorted file and persist, because the gross
-    * `_stats` is never rewritten and live constants subtract them
-    * forever (16 B of id+length per deleted doc, no content).
-    *
-    * Staging-swap with the [[graft.operators.SemDedup.compactCellIndex]]
-    * crash posture: staging written first, two renames, old dropped
-    * last; [[recoverCompact]] (called here and cheap from any startup
-    * path) restores a stranded old dir or drops a stale one. Each of
-    * the three dirs swaps INDEPENDENTLY — serving derives constants by
-    * subtraction, so every mixed pre/post-swap state reads exactly
-    * (the doclens ∪ tombstones distinct union in [[readStats]] is what
-    * keeps the rebuild gross-exact on either side of the doclens
-    * swap). Requires QUIESCENCE — no concurrent query or append during
-    * the swap. The `_stats` sidecar is untouched: compaction changes
-    * no doc's membership, so the gross constants and watermark remain
-    * exact. */
   /** The postings FOLD both compaction faces share: drop dead docs'
     * rows, fold replay-duplicated rows, and return rows clustered and
     * sorted for the partitionBy("bucket") writer. bucket must LEAD the
@@ -384,105 +358,111 @@ object InvertedIndex {
     foldedPostings(spark.read.parquet(s"$path/postings"),
       tombstonesOf(spark, path).map(_.select(col("doc_id"))))
 
+  /** Fold append-accumulated small files — and any replay-duplicated
+    * rows (stale-watermark re-appends) — back into ONE sorted file per
+    * bucket, keeping the bucket-partitioned layout so queries stay
+    * partition-pruned. After compaction the read-time `max(tf)` fold
+    * in [[bm25Query]] is a no-op and small-file pressure is gone; at
+    * 100 TB this is the standard background postings merge. Each
+    * bucket's rows hash to one task (`repartition(bucket)`), so
+    * `partitionBy` writes a single sorted file per bucket dir.
+    *
+    * Tombstoned docs are ERASED PHYSICALLY here (their postings and
+    * doclens rows are dropped — the GDPR "content gone on the next
+    * merge" posture); the tombstone rows themselves fold to one
+    * single distinct sorted file and persist, because the gross
+    * `_stats` is never rewritten and live constants subtract them
+    * forever (16 B of id+length per deleted doc, no content).
+    *
+    * One [[Generations.swap]] per dir; [[recoverCompact]] (called here
+    * and cheap from any startup path) restores a stranded old dir or
+    * drops a stale one. Each of the three dirs swaps INDEPENDENTLY —
+    * serving derives constants by subtraction, so every mixed
+    * pre/post-swap state reads exactly (the doclens ∪ tombstones
+    * distinct union in [[readStats]] is what keeps the rebuild
+    * gross-exact on either side of the doclens swap). Requires
+    * QUIESCENCE — no concurrent query or append during the swap. The
+    * `_stats` sidecar is untouched: compaction changes no doc's
+    * membership, so the gross constants and watermark remain exact. */
   def compactPostings(spark: SparkSession, path: String): Unit = {
     recoverCompact(spark, path)
-    val f = fs(spark, path)
-    val tombIds = tombstonesOf(spark, path).map(_.select(col("doc_id")))
-    def dropDead(df: DataFrame): DataFrame =
-      tombIds.map(t => df.join(t, Seq("doc_id"), "left_anti")).getOrElse(df)
-    val live = new Path(s"$path/postings")
-    if (f.exists(live))
-      swapDir(spark, path, "postings") { staging =>
-        foldedPostings(spark.read.parquet(live.toString), tombIds)
-          .write.partitionBy("bucket").mode("overwrite")
-          .parquet(staging.toString)
+    foldDirs(spark, path, inPlace = true)(sub =>
+      Generations.swap(spark, s"$path/$sub"))
+  }
+
+  /** The fold both compaction faces share: each of `src`'s three dirs
+    * that needs it is rewritten through `into(sub)(write)`, where
+    * `write` fills the directory it is handed — the sub's staging dir
+    * in place, the successor generation's sub dir when versioned.
+    * Postings fold per [[foldedPostings]]; doclens drop dead rows into
+    * row-sized sorted files (the in-place fold skips a clean, still
+    * few-file doclens — a rewrite would be a pure no-op job; a new
+    * generation always needs its own); tombstones fold to one distinct
+    * sorted file. The in-place fold swaps tombstones last, so the
+    * postings and doclens folds erase exactly the set `tombIds` lists. */
+  private def foldDirs(spark: SparkSession, src: String, inPlace: Boolean)(
+      into: String => (String => Unit) => Unit): Unit = {
+    val f = fs(spark, src)
+    val tombIds = tombstonesOf(spark, src).map(_.select(col("doc_id")))
+    if (f.exists(new Path(s"$src/postings")))
+      into("postings") { dst =>
+        foldedPostings(spark.read.parquet(s"$src/postings"), tombIds)
+          .write.partitionBy("bucket").mode("overwrite").parquet(dst)
       }
-    val doclens = new Path(s"$path/doclens")
-    // the doclens fold exists to erase dead rows and bound file count;
-    // with nothing to erase and the per-batch files still few, a
-    // rewrite would be a pure no-op job
-    def doclensFiles() = f.listStatus(doclens)
-      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (f.exists(new Path(doclens, "_SUCCESS")) &&
-        (tombIds.isDefined || doclensFiles() > 16))
-      swapDir(spark, path, "doclens") { staging =>
+    val doclens = s"$src/doclens"
+    if (f.exists(new Path(doclens, "_SUCCESS")) && (!inPlace ||
+        tombIds.isDefined || Generations.dataFiles(spark, doclens)._1 > 16))
+      into("doclens") { dst =>
         // output file count sized by ROWS (~8M 16-byte rows per file),
         // not spark.sql.shuffle.partitions: a default-width fold would
         // write >16 files and permanently re-trigger the files-guard
-        // above on every later compact. The row count comes from the
-        // GROSS `_stats` sidecar (one tiny file read) — an upper bound
-        // on the folded table (deletions only shrink it), so the fold
-        // never pays a count job + a persisted double pass just to
-        // size its own output files.
+        // above on every later compact, and a coalesce(1) would
+        // serialize the whole corpus doc-length table through ONE task
+        // at the 100 TB posture. The row count comes from the GROSS
+        // `_stats` sidecar (one tiny file read) — an upper bound on the
+        // folded table (deletions only shrink it), so the fold never
+        // pays a count job + a persisted double pass just to size its
+        // own output files.
         // getOrElse: readStats already rebuilds a missing sidecar from
         // doclens/postings, so None means a truly empty index — but if
         // that invariant ever breaks (a legacy layout readStats cannot
         // rebuild), sizing from the doclens dir's file bytes (~16 B/row)
         // keeps the fold from collapsing to ONE partition.
-        val grossDocs = readStats(spark, path).map(_._2).getOrElse(
-          math.max(1L, f.getContentSummary(doclens).getLength / 16L))
+        val grossDocs = readStats(spark, src).map(_._2).getOrElse(
+          math.max(1L, f.getContentSummary(new Path(doclens)).getLength / 16L))
         val parts = math.max(1L,
           (grossDocs + (8L << 20) - 1) / (8L << 20)).toInt
-        val folded = dropDead(spark.read.parquet(doclens.toString)
-          .select(col("doc_id"), col("dl")).distinct())
+        val folded = spark.read.parquet(doclens)
+          .select(col("doc_id"), col("dl")).distinct()
+        val live = tombIds
+          .map(t => folded.join(t, Seq("doc_id"), "left_anti"))
+          .getOrElse(folded)
         // parts == 1 (≤8M docs): coalesce(1) produces the identical
         // single sorted file WITHOUT repartitionByRange's sampling pass
         // (the range partitioner runs one extra job just to pick bounds
         // it won't use for one partition)
-        (if (parts == 1) folded.coalesce(1)
-         else folded.repartitionByRange(parts, col("doc_id"))) // range-prunable
+        (if (parts == 1) live.coalesce(1)
+         else live.repartitionByRange(parts, col("doc_id"))) // range-prunable
           .sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(staging.toString)
+          .write.mode("overwrite").parquet(dst)
       }
-    if (f.exists(new Path(s"$path/tombstones/_SUCCESS")))
-      swapDir(spark, path, "tombstones") { staging =>
-        spark.read.parquet(s"$path/tombstones")
+    if (f.exists(new Path(s"$src/tombstones/_SUCCESS")))
+      into("tombstones") { dst =>
+        spark.read.parquet(s"$src/tombstones")
           .select(col("doc_id"), col("dl")).distinct()
           .coalesce(1).sortWithinPartitions("doc_id")
-          .write.mode("overwrite").parquet(staging.toString)
+          .write.mode("overwrite").parquet(dst)
       }
-  }
-
-  /** One staging-swap: write `<sub>__compact_staging`, move live
-    * aside, promote staging, drop old. */
-  private def swapDir(spark: SparkSession, path: String, sub: String)(
-      write: Path => Unit): Unit = {
-    val f = fs(spark, path)
-    val live = new Path(s"$path/$sub")
-    val staging = new Path(s"$path/${sub}__compact_staging")
-    write(staging)
-    val old = new Path(s"$path/${sub}__compact_old")
-    require(f.rename(live, old), s"compact: cannot move $live aside")
-    require(f.rename(staging, live),
-      s"compact: cannot promote staging for $live")
-    f.delete(old, true)
   }
 
   /** Recover a [[compactPostings]] that crashed between the renames of
-    * any of its three dirs: stranded old with no live dir → restore;
-    * both present (crash after promote) → drop old; stranded staging →
-    * drop (never live). Runs on every query/delete/append entry, so two
-    * CONCURRENT readers can both observe the stranded state and race
-    * the restoring rename — the loser must tolerate the lost race (the
-    * winner already restored `live`), not fail its query on an index
-    * that is in fact healthy. */
-  def recoverCompact(spark: SparkSession, path: String): Unit = {
-    val f = fs(spark, path)
-    Seq("postings", "doclens", "tombstones").foreach { sub =>
-      val live = new Path(s"$path/$sub")
-      val old = new Path(s"$path/${sub}__compact_old")
-      if (f.exists(old)) {
-        if (!f.exists(live)) {
-          // rename is atomic, so a failure here means a concurrent
-          // recoverer consumed `old` first — correct iff live now exists
-          if (!f.rename(old, live))
-            require(f.exists(live), s"recover: cannot restore $live")
-        } else f.delete(old, true)
-      }
-      val staging = new Path(s"$path/${sub}__compact_staging")
-      if (f.exists(staging)) f.delete(staging, true)
-    }
-  }
+    * any of its three dirs ([[Generations.recoverSwap]] per dir). Runs
+    * on every query/delete/append entry, so two CONCURRENT readers can
+    * both observe the stranded state and race the restoring rename —
+    * the loser tolerates the lost race. */
+  def recoverCompact(spark: SparkSession, path: String): Unit =
+    Seq("postings", "doclens", "tombstones").foreach(sub =>
+      Generations.recoverSwap(spark, s"$path/$sub"))
 
   /** BM25 top-k for `terms` served FROM the index: the postings scan
     * prunes to the terms' buckets (partition pruning) and pushes the
@@ -532,29 +512,16 @@ object InvertedIndex {
     TextQueries.bm25Rank(tf, stats, k)
   }
 
-  // ===== Generation-versioned serving (serve-through-compaction) =====
-  //
-  // [[compactPostings]] swaps the live dirs in place and therefore
-  // excludes READERS for the swap window. The versioned face lifts
-  // exactly that restriction via [[graft.index.Generations]]: each
-  // generation is an ordinary inverted index, immutable once
-  // published; a compaction writes the folded postings/doclens/
-  // tombstones into the SUCCESSOR generation reading the live one
-  // strictly read-only, then flips the pointer atomically. A reader
-  // that resolved the manifest pre-flip finishes its query against the
-  // intact predecessor (grace = one generation). Writers stay
-  // single-writer among themselves.
+  // The generation-versioned face: each generation is an ordinary
+  // inverted index (see [[Generations]]' versioned shell).
+  private val Versioned = new Generations.Face("inverted-index", "inv")
 
   /** Ingest the first batch as generation 0 under `root` and publish
     * the manifest. Returns the live generation dir. */
   def buildVersioned(spark: SparkSession, docsDf: DataFrame,
                      root: String, committer: String = ""): String =
-    graft.index.Generations.withWriterLease(spark, root, "inv.build",
-        committer) {
-      val (gen, dir) = graft.index.Generations.next(spark, root)
+    Versioned.build(spark, root, committer) { dir =>
       append(spark, docsDf, dir)
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
       dir
     }
 
@@ -563,20 +530,14 @@ object InvertedIndex {
     * completes correctly while [[compactVersioned]] publishes a
     * successor. */
   def resolveVersioned(spark: SparkSession, root: String): String =
-    graft.index.Generations.liveDir(spark, root).getOrElse(
-      sys.error(s"no published inverted-index generation at $root"))
+    Versioned.resolve(spark, root)
 
   /** [[append]] / [[deleteDocs]] / [[bm25Query]] against the live
-    * generation (writer faces keep the single-writer contract).
-    * `committer` is per-call on every mutating face (the lease's store
-    * check derives from it — a CAS-only store needs it on append/delete
-    * too, not just build/compact). */
+    * generation. */
   def appendVersioned(spark: SparkSession, docsDf: DataFrame,
                       root: String, committer: String = ""): Unit =
-    graft.index.Generations.withWriterLease(spark, root, "inv.append",
-        committer) {
-      append(spark, docsDf, resolveVersioned(spark, root))
-    }
+    Versioned.update(spark, root, "append", committer)(
+      append(spark, docsDf, _))
 
   // explicit overload pair (not a default argument): Scala allows
   // default arguments on only ONE overloaded alternative, and the
@@ -587,19 +548,15 @@ object InvertedIndex {
 
   def deleteVersioned(spark: SparkSession, root: String,
                       ids: Seq[Long], committer: String): Long =
-    graft.index.Generations.withWriterLease(spark, root, "inv.delete",
-        committer) {
-      deleteDocs(spark, resolveVersioned(spark, root), ids)
-    }
+    Versioned.update(spark, root, "delete", committer)(
+      deleteDocs(spark, _, ids))
 
   /** [[deleteVersioned]] for an id RELATION (`doc_id` column) — the
     * takedown-feed shape. */
   def deleteVersioned(spark: SparkSession, root: String,
                       idsDf: DataFrame, committer: String = ""): Long =
-    graft.index.Generations.withWriterLease(spark, root, "inv.delete",
-        committer) {
-      deleteDocs(spark, resolveVersioned(spark, root), idsDf)
-    }
+    Versioned.update(spark, root, "delete", committer)(
+      deleteDocs(spark, _, idsDf))
 
   def bm25QueryVersioned(spark: SparkSession, root: String,
                          terms: Seq[String], k: Int = 20): DataFrame =
@@ -608,7 +565,7 @@ object InvertedIndex {
   /** UN-ERASED deleted-doc fraction of the LIVE generation — the
     * versioned maintenance trigger's input. The numerator counts only
     * tombstones whose doclens rows still EXIST (a semi-join against
-    * the doclens table): [[compactVersionedLocked]] carries the
+    * the doclens table): [[compactVersioned]] carries the
     * tombstone set forward (the gross `_stats` is never rewritten, so
     * live constants subtract them forever) while dropping the dead
     * docs' doclens rows, so a raw `tombstones.count / nGross` would be
@@ -649,21 +606,9 @@ object InvertedIndex {
                             maxPostingsFiles: Int = 4 * NumBuckets,
                             committer: String = ""): String = {
     val liveDir = resolveVersioned(spark, root)
-    val f = fs(spark, root)
-    def postingsFiles(): Int = {
-      val p = new Path(s"$liveDir/postings")
-      if (!f.exists(p)) 0
-      else {
-        val it = f.listFiles(p, true)
-        var n = 0
-        while (it.hasNext) {
-          if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-        }
-        n
-      }
-    }
     if (deletedFractionVersioned(spark, root) > maxDeletedFrac ||
-        postingsFiles() > maxPostingsFiles)
+        Generations.dataFiles(spark, s"$liveDir/postings")._1 >
+          maxPostingsFiles)
       compactVersioned(spark, root, committer)
     else liveDir
   }
@@ -673,63 +618,16 @@ object InvertedIndex {
     * per bucket), folded doclens, distinct tombstones, and the
     * unchanged gross `_stats` into a NEW generation; publish; retire
     * out-of-grace generations. The live generation is strictly
-    * read-only input — a crash before publish leaves the old pointer
-    * serving and the partial successor is retired by the eventual
-    * successful publish. Query results are identical before and after
+    * read-only input. Query results are identical before and after
     * (compaction only erases content the tombstone anti-join already
     * hides). */
   def compactVersioned(spark: SparkSession, root: String,
                        committer: String = ""): String =
-    graft.index.Generations.withWriterLease(spark, root, "inv.compact",
-        committer) {
-      compactVersionedLocked(spark, root, committer)
+    Versioned.fold(spark, root, committer) { (live, dir) =>
+      foldDirs(spark, live, inPlace = false)(sub => _(s"$dir/$sub"))
+      readStats(spark, live).foreach { case (wm, n, s) =>
+        writeStats(spark, dir, wm, n, s)
+      }
+      dir
     }
-
-  private def compactVersionedLocked(spark: SparkSession, root: String,
-                                     committer: String = ""): String = {
-    val liveDir = resolveVersioned(spark, root)
-    val (gen, newDir) = graft.index.Generations.next(spark, root)
-    val f = fs(spark, root)
-    f.delete(new Path(newDir), true) // debris from a crashed attempt
-    val tombIds = tombstonesOf(spark, liveDir).map(_.select(col("doc_id")))
-    def dropDead(df: DataFrame): DataFrame =
-      tombIds.map(t => df.join(t, Seq("doc_id"), "left_anti")).getOrElse(df)
-    if (f.exists(new Path(s"$liveDir/postings")))
-      foldedPostings(spark.read.parquet(s"$liveDir/postings"), tombIds)
-        .write.partitionBy("bucket").mode("overwrite")
-        .parquet(s"$newDir/postings")
-    if (f.exists(new Path(s"$liveDir/doclens/_SUCCESS"))) {
-      // row-sized output file count (~8M 16-byte rows per file), the
-      // in-place compactPostings discipline: a coalesce(1) here would
-      // serialize the whole corpus doc-length table through ONE task
-      // at the 100 TB posture. Sized from the gross `_stats` sidecar
-      // (an upper bound — deletions only shrink the fold), not a count
-      // job over a persisted double pass.
-      // same sizing fallback as the in-place fold: never a 1-partition
-      // corpus fold just because the stats sidecar was unreadable
-      val grossDocs = readStats(spark, liveDir).map(_._2).getOrElse(
-        math.max(1L, f.getContentSummary(
-          new Path(s"$liveDir/doclens")).getLength / 16L))
-      val parts = math.max(1L,
-        (grossDocs + (8L << 20) - 1) / (8L << 20)).toInt
-      val folded = dropDead(spark.read.parquet(s"$liveDir/doclens")
-        .select(col("doc_id"), col("dl")).distinct())
-      // parts == 1: skip the range partitioner's sampling job (same
-      // single sorted file either way — see compactPostings)
-      (if (parts == 1) folded.coalesce(1)
-       else folded.repartitionByRange(parts, col("doc_id")))
-        .sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$newDir/doclens")
-    }
-    if (f.exists(new Path(s"$liveDir/tombstones/_SUCCESS")))
-      spark.read.parquet(s"$liveDir/tombstones")
-        .select(col("doc_id"), col("dl")).distinct()
-        .coalesce(1).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(s"$newDir/tombstones")
-    readStats(spark, liveDir).foreach { case (wm, n, s) =>
-      writeStats(spark, newDir, wm, n, s)
-    }
-    graft.index.Generations.publish(spark, root, gen, committer = committer)
-    newDir
-  }
 }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.index.Generations
 
 /** IVF-PQ — the composed 100 TB ANN index: [[IvfAnn]]'s coarse quantizer
   * prunes WHICH files a probe reads (one parquet partition directory per
@@ -76,7 +77,7 @@ object IvfPq {
     // an append may have recreated the live dir and the recovery
     // would misread the state as crash-after-promote and delete the
     // full historical index
-    SemDedup.recoverCompact(spark, path)
+    Generations.recoverSwap(spark, path)
     Tombstones.mask(spark, s"$path/$TombstoneDir", "d_id",
       spark.read.parquet(path))
   }
@@ -90,7 +91,7 @@ object IvfPq {
     * harmless. Returns the newly tombstoned count. */
   def deleteFromIndex(spark: SparkSession, path: String,
                       idsDf: DataFrame): Long = {
-    SemDedup.recoverCompact(spark, path)
+    Generations.recoverSwap(spark, path)
     Tombstones.appendNew(spark, s"$path/$TombstoneDir", "d_id",
       idsDf.select(col("d_id")))
   }
@@ -98,11 +99,7 @@ object IvfPq {
   /** [[deleteFromIndex]] for a literal takedown list. */
   def deleteFromIndex(spark: SparkSession, path: String,
                       ids: Seq[Long]): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteFromIndex(spark, path, ids.distinct.toDF("d_id"))
-    }
+    Tombstones.ofIds(spark, ids, "d_id")(deleteFromIndex(spark, path, _))
 
   /** Fold append-accumulated small files back into one sorted file per
     * cell — the background codes merge [[appendIndex]] earns after
@@ -114,23 +111,21 @@ object IvfPq {
     * tier has no corpus constants, so once the rows are gone the
     * tombstones have nothing left to mask. Requires QUIESCENCE; a
     * crash between the renames is recovered by
-    * [[SemDedup.recoverCompact]] at the next compact entry. */
+    * [[Generations.recoverSwap]] at the next entry. */
   def compactIndex(spark: SparkSession, path: String): Unit = {
-    SemDedup.recoverCompact(spark, path)
-    val staging = s"${path}__compact_staging"
-    readIndex(spark, path)
+    Generations.recoverSwap(spark, path)
+    Generations.swap(spark, path)(foldInto(spark, path, _))
+  }
+
+  /** The codes fold both compactions share: `src`'s live rows, replay
+    * duplicates dropped and tombstoned rows erased, one sorted file per
+    * cell at `dst`. */
+  private def foldInto(spark: SparkSession, src: String, dst: String): Unit =
+    readIndex(spark, src)
       .dropDuplicates("d_id")
       .repartition(col("cell"))
       .sortWithinPartitions("d_id")
-      .write.partitionBy("cell").mode("overwrite").parquet(staging)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"${path}__compact_old")
-    require(fs.rename(hp, old), s"compact: cannot move $path aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), hp),
-      s"compact: cannot promote staging for $path")
-    fs.delete(old, true)
-  }
+      .write.partitionBy("cell").mode("overwrite").parquet(dst)
 
   /** assign + encode fused into ONE corpus pass: encoding off the
     * assigned rows directly — a join to re-attach the cell column would
@@ -143,7 +138,7 @@ object IvfPq {
     // recreate the live dir and make the NEXT compact's recovery
     // delete the stranded old (= the whole pre-crash index); restore
     // first, so the append lands on the restored history
-    SemDedup.recoverCompact(spark, path)
+    Generations.recoverSwap(spark, path)
     import spark.implicits._
     val cbB = spark.sparkContext.broadcast(codebooks)
     IvfAnn.assign(spark, data, "d_id", "d_vec", centroids)
@@ -205,7 +200,7 @@ object IvfPq {
                               path: String, centroids: Array[Array[Float]],
                               codebooks: PqAnn.Codebooks,
                               mode: String): Unit = {
-    SemDedup.recoverCompact(spark, path) // see writeRows
+    Generations.recoverSwap(spark, path) // see writeRows
     import spark.implicits._
     val sB = spark.sparkContext.broadcast(IvfAnn.seedNorms(centroids))
     val cbB = spark.sparkContext.broadcast(codebooks)
@@ -323,20 +318,9 @@ object IvfPq {
       knnSeededOverIndex(spark, slice, path, data, centroids, codebooks,
         k, nProbe, nCand, excludeSelf))
 
-  // ===== Generation-versioned serving (serve-through-compaction) =====
-  //
-  // [[compactIndex]] swaps the live codes dir in place and therefore
-  // excludes READERS for its rename window — acceptable for a batch
-  // pipeline, not for the compressed serving tier, which is the NORMAL
-  // serving path once a corpus passes the broadcast ceiling. The
-  // versioned face lifts exactly that restriction via
-  // [[graft.index.Generations]]: each generation is an ordinary
-  // [[writeIndex]] layout (cell-partitioned codes + `_tombstones`
-  // sidecar), immutable once published; a compaction writes the folded,
-  // dead-row-erased codes into the SUCCESSOR generation reading the
-  // live one strictly read-only, then flips the manifest atomically.
-  // Probe/search paths take [[resolveVersioned]]'s dir wherever an
-  // index `path` goes today. Writer faces hold the root's writer lease.
+  // The generation-versioned face: each generation is an ordinary
+  // [[writeIndex]] layout (see [[Generations]]' versioned shell).
+  private val Versioned = new Generations.Face("IVF-PQ", "ivfpq")
 
   /** Encode the first corpus as generation 0 under `root` (trained or
     * seeded layout per `seeded`) and publish. Returns the live dir. */
@@ -345,13 +329,9 @@ object IvfPq {
                      codebooks: PqAnn.Codebooks,
                      seeded: Boolean = false,
                      committer: String = ""): String =
-    graft.index.Generations.withWriterLease(spark, root, "ivfpq.build",
-        committer) {
-      val (gen, dir) = graft.index.Generations.next(spark, root)
+    Versioned.build(spark, root, committer) { dir =>
       if (seeded) writeIndexSeeded(spark, data, dir, centroids, codebooks)
       else writeIndex(spark, data, dir, centroids, codebooks)
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
       dir
     }
 
@@ -360,34 +340,25 @@ object IvfPq {
     * immutable, so a query against this dir completes correctly while
     * [[compactVersioned]] publishes a successor. */
   def resolveVersioned(spark: SparkSession, root: String): String =
-    graft.index.Generations.liveDir(spark, root).getOrElse(
-      sys.error(s"no published IVF-PQ generation at $root"))
+    Versioned.resolve(spark, root)
 
   /** [[appendIndex]] against the live generation (delta files only;
-    * the frozen-quantizer contract unchanged). `committer` is per-call
-    * on every mutating face (the lease's store check derives from it —
-    * a CAS-only store needs it on append/delete too, not just
-    * build/compact). */
+    * the frozen-quantizer contract unchanged). */
   def appendVersioned(spark: SparkSession, delta: DataFrame, root: String,
                       centroids: Array[Array[Float]],
                       codebooks: PqAnn.Codebooks,
                       seeded: Boolean = false,
                       committer: String = ""): Unit =
-    graft.index.Generations.withWriterLease(spark, root, "ivfpq.append",
-        committer) {
-      if (seeded) appendIndexSeeded(spark, delta,
-        resolveVersioned(spark, root), centroids, codebooks)
-      else appendIndex(spark, delta,
-        resolveVersioned(spark, root), centroids, codebooks)
+    Versioned.update(spark, root, "append", committer) { live =>
+      if (seeded) appendIndexSeeded(spark, delta, live, centroids, codebooks)
+      else appendIndex(spark, delta, live, centroids, codebooks)
     }
 
   /** [[deleteFromIndex]] against the live generation. */
   def deleteVersioned(spark: SparkSession, root: String,
                       idsDf: DataFrame, committer: String = ""): Long =
-    graft.index.Generations.withWriterLease(spark, root, "ivfpq.delete",
-        committer) {
-      deleteFromIndex(spark, resolveVersioned(spark, root), idsDf)
-    }
+    Versioned.update(spark, root, "delete", committer)(
+      deleteFromIndex(spark, _, idsDf))
 
   /** [[deleteVersioned]] for a literal takedown list. Explicit overload
     * pair (not a default argument): Scala allows default arguments on
@@ -399,11 +370,8 @@ object IvfPq {
 
   def deleteVersioned(spark: SparkSession, root: String,
                       ids: Seq[Long], committer: String): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteVersioned(spark, root, ids.distinct.toDF("d_id"), committer)
-    }
+    Tombstones.ofIds(spark, ids, "d_id")(
+      deleteVersioned(spark, root, _, committer))
 
   /** Tombstoned fraction of the live generation's physical rows — the
     * versioned maintenance trigger's deletion input. Cheap: footer
@@ -419,27 +387,6 @@ object IvfPq {
       .map(_.count().toDouble / gross).getOrElse(0.0)
   }
 
-  /** Parquet data files of the live generation (appends accumulate
-    * small per-batch files per cell — the small-file pressure input). */
-  private def liveFiles(spark: SparkSession, liveDir: String): Int = {
-    val p = new Path(liveDir)
-    val f = fs(spark, liveDir)
-    if (!f.exists(p)) return 0
-    val it = f.listFiles(p, true)
-    var n = 0
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.toString.contains(s"/$TombstoneDir/")) n += 1
-    }
-    n
-  }
-
-  /** Cell partition dirs of the live generation. */
-  private def liveCells(spark: SparkSession, liveDir: String): Int =
-    fs(spark, liveDir).listStatus(new Path(liveDir))
-      .count(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-
   /** The maintenance-loop trigger: fold into a new generation iff the
     * live generation's tombstoned fraction crosses `maxDeletedFrac` OR
     * its appends have accumulated more than `maxFilesPerCell` data
@@ -450,37 +397,23 @@ object IvfPq {
                             maxFilesPerCell: Double = 4.0,
                             committer: String = ""): String = {
     val live = resolveVersioned(spark, root)
-    val cells = math.max(liveCells(spark, live), 1)
+    lazy val (files, cells) = Generations.dataFiles(spark, live)
     if (deletedFractionVersioned(spark, root) > maxDeletedFrac ||
-        liveFiles(spark, live) > maxFilesPerCell * cells)
+        files > maxFilesPerCell * math.max(cells, 1))
       compactVersioned(spark, root, committer)
     else live
   }
 
-  /** Serve-through-compaction fold: write the folded codes — replay
-    * duplicates dropped, tombstoned rows ERASED physically, one sorted
-    * file per cell — into a NEW generation; publish; retire
-    * out-of-grace generations. The live generation is strictly
-    * read-only input; a crash before publish leaves the old pointer
-    * serving. The successor starts tombstone-free (nothing left to
-    * mask once the rows are gone), so the deletion trigger re-arms. */
+  /** Serve-through-compaction fold: the [[compactIndex]] layout
+    * (replay duplicates dropped, tombstoned rows ERASED physically,
+    * one sorted file per cell) written into a NEW generation; publish;
+    * retire out-of-grace generations. The successor starts
+    * tombstone-free (nothing left to mask once the rows are gone), so
+    * the deletion trigger re-arms. */
   def compactVersioned(spark: SparkSession, root: String,
                        committer: String = ""): String =
-    graft.index.Generations.withWriterLease(spark, root, "ivfpq.compact",
-        committer) {
-      val liveDir = resolveVersioned(spark, root)
-      val (gen, newDir) = graft.index.Generations.next(spark, root)
-      fs(spark, root).delete(new Path(newDir), true) // crashed debris
-      readIndex(spark, liveDir)
-        .dropDuplicates("d_id")
-        .repartition(col("cell"))
-        .sortWithinPartitions("d_id")
-        .write.partitionBy("cell").mode("overwrite").parquet(newDir)
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
-      newDir
+    Versioned.fold(spark, root, committer) { (live, dir) =>
+      foldInto(spark, live, dir)
+      dir
     }
-
-  private def fs(spark: SparkSession, path: String) =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 }

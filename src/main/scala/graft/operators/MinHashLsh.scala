@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.index.Generations
+
 /** MinHash-LSH candidate-pair generation, extracted from the
   * `dedup_minhash_pairs` query so the hot-band skew behavior is testable
   * on synthetic fixtures. Semantics are EXACTLY the oracle-checked
@@ -162,11 +164,7 @@ object MinHashLsh {
   /** [[deleteFromBandIndex]] for a literal takedown list. */
   def deleteFromBandIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String, ids: Seq[Long]): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteFromBandIndex(spark, path, ids.distinct.toDF("doc_id"))
-    }
+    Tombstones.ofIds(spark, ids, "doc_id")(deleteFromBandIndex(spark, path, _))
 
   /** Append a batch's band keys to the resident index (delta-only write;
     * resident files untouched — same lifecycle posture as
@@ -206,94 +204,70 @@ object MinHashLsh {
     * loses its mask early.
     *
     * Concurrency contract: compaction requires QUIESCENCE — no
-    * concurrent probe or ingest; the two-rename swap has a window with
-    * no live index at `path`. A compact that crashed between its
-    * renames is recovered at the start of the next one (same posture
-    * as [[SemDedup.recoverCompact]]). */
+    * concurrent probe or ingest ([[Generations.swap]]). A compact that
+    * crashed between its renames is recovered at the start of the next
+    * one ([[Generations.recoverSwap]]). */
   def compactBandIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String, numFiles: Int = 0): Unit = {
-    SemDedup.recoverCompact(spark, path)
+    Generations.recoverSwap(spark, path)
+    Generations.swap(spark, path)(foldInto(spark, path, _, numFiles))
+  }
+
+  /** The band fold both compactions share: `src`'s live key rows,
+    * replay duplicates dropped and tombstoned docs erased,
+    * key-range-partitioned into `numFiles` sorted files at `dst` (0 =
+    * default parallelism), the gross watermark carried over. */
+  private def foldInto(spark: org.apache.spark.sql.SparkSession,
+                       src: String, dst: String, numFiles: Int): Unit = {
     val n = if (numFiles > 0) numFiles
             else spark.sparkContext.defaultParallelism
-    val staging = s"${path}__compact_staging"
-    val wm = Watermark.read(spark, path, "doc_id")
-    readBandIndex(spark, path)
+    val wm = Watermark.read(spark, src, "doc_id")
+    readBandIndex(spark, src)
       .dropDuplicates("doc_id", "band", "key")
       .repartitionByRange(n, col("key"), col("band"))
       .sortWithinPartitions("key", "band")
-      .write.mode("overwrite").parquet(staging)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"${path}__compact_old")
-    require(fs.rename(hp, old), s"compact: cannot move $path aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), hp),
-      s"compact: cannot promote staging for $path")
-    fs.delete(old, true)
-    wm.foreach(Watermark.write(spark, path, _))
+      .write.mode("overwrite").parquet(dst)
+    wm.foreach(Watermark.write(spark, dst, _))
   }
 
-  // ===== Generation-versioned serving (serve-through-compaction) =====
-  //
-  // [[compactBandIndex]] swaps the live index dir in place — its
-  // rename window excludes readers, so a CONTINUOUS incremental-dedup
-  // deployment (every ingest wave probes the index) could never
-  // compact without pausing the pipeline. The versioned face lifts
-  // that via [[graft.index.Generations]]: each generation is an
-  // ordinary band-key index (key rows + `_watermark` + `_tombstones`),
-  // immutable once published; the compactor folds into the successor
-  // reading the live generation strictly read-only, then flips the
-  // manifest. Probes read [[readVersioned]]; writer faces hold the
-  // root's writer lease.
+  // The generation-versioned face: each generation is an ordinary
+  // band-key index (see [[Generations]]' versioned shell). Probes read
+  // [[readVersioned]].
+  private val Versioned = new Generations.Face("band-index", "band")
 
   /** Persist the first corpus's band keys as generation 0 under `root`
     * and publish. Returns the live generation dir. */
   def buildVersioned(keys: DataFrame, root: String,
-                     committer: String = ""): String = {
-    val spark = keys.sparkSession
-    graft.index.Generations.withWriterLease(spark, root, "band.build",
-        committer) {
-      val (gen, dir) = graft.index.Generations.next(spark, root)
+                     committer: String = ""): String =
+    Versioned.build(keys.sparkSession, root, committer) { dir =>
       writeBandIndex(keys, dir)
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
       dir
     }
-  }
 
   /** The live generation dir — the `path` readers hand to
     * [[readBandIndex]] (or writers poll for the watermark). Immutable
     * once published. */
   def resolveVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String): String =
-    graft.index.Generations.liveDir(spark, root).getOrElse(
-      sys.error(s"no published band-index generation at $root"))
+    Versioned.resolve(spark, root)
 
   /** [[readBandIndex]] against the live generation — the probe face. */
   def readVersioned(spark: org.apache.spark.sql.SparkSession,
                     root: String): DataFrame =
     readBandIndex(spark, resolveVersioned(spark, root))
 
-  /** [[appendBandIndex]] against the live generation. `committer` is
-    * per-call on every mutating face (the lease's store check derives
-    * from it — a CAS-only store needs it on append/delete too, not just
-    * build/compact). */
+  /** [[appendBandIndex]] against the live generation. */
   def appendVersioned(keys: DataFrame, root: String,
-                      committer: String = ""): Unit = {
-    val spark = keys.sparkSession
-    graft.index.Generations.withWriterLease(spark, root, "band.append",
-        committer) {
-      appendBandIndex(keys, resolveVersioned(spark, root))
-    }
-  }
+                      committer: String = ""): Unit =
+    Versioned.update(keys.sparkSession, root, "append", committer)(
+      appendBandIndex(keys, _))
 
   /** [[deleteFromBandIndex]] against the live generation. */
   def deleteVersioned(spark: org.apache.spark.sql.SparkSession,
                       root: String, idsDf: DataFrame,
                       committer: String = ""): Long =
-    graft.index.Generations.withWriterLease(spark, root, "band.delete",
-        committer) {
-      deleteFromBandIndex(spark, resolveVersioned(spark, root), idsDf)
-    }
+    Versioned.update(spark, root, "delete", committer)(
+      deleteFromBandIndex(spark, _, idsDf))
 
   /** [[deleteVersioned]] for a literal takedown list. Explicit overload
     * pair (not a default argument): Scala allows default arguments on
@@ -306,11 +280,8 @@ object MinHashLsh {
   def deleteVersioned(spark: org.apache.spark.sql.SparkSession,
                       root: String, ids: Seq[Long],
                       committer: String): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteVersioned(spark, root, ids.distinct.toDF("doc_id"), committer)
-    }
+    Tombstones.ofIds(spark, ids, "doc_id")(
+      deleteVersioned(spark, root, _, committer))
 
   /** Band count per doc, cached per live GENERATION dir — immutable
     * once published, so the cache can never go stale (a root deleted
@@ -362,12 +333,8 @@ object MinHashLsh {
                             maxFiles: Int = 64,
                             committer: String = ""): String = {
     val live = resolveVersioned(spark, root)
-    val p = new org.apache.hadoop.fs.Path(live)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def keyFiles(): Int = f.listStatus(p).count(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
     if (deletedFractionVersioned(spark, root) > maxDeletedFrac ||
-        keyFiles() > maxFiles)
+        Generations.dataFiles(spark, live)._1 > maxFiles)
       compactVersioned(spark, root, committer = committer)
     else live
   }
@@ -380,25 +347,9 @@ object MinHashLsh {
   def compactVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String, numFiles: Int = 0,
                        committer: String = ""): String =
-    graft.index.Generations.withWriterLease(spark, root, "band.compact",
-        committer) {
-      val liveDir = resolveVersioned(spark, root)
-      val (gen, newDir) = graft.index.Generations.next(spark, root)
-      val f = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      f.delete(new org.apache.hadoop.fs.Path(newDir), true)
-      val n = if (numFiles > 0) numFiles
-              else spark.sparkContext.defaultParallelism
-      val wm = Watermark.read(spark, liveDir, "doc_id")
-      readBandIndex(spark, liveDir)
-        .dropDuplicates("doc_id", "band", "key")
-        .repartitionByRange(n, col("key"), col("band"))
-        .sortWithinPartitions("key", "band")
-        .write.mode("overwrite").parquet(newDir)
-      wm.foreach(Watermark.write(spark, newDir, _))
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
-      newDir
+    Versioned.fold(spark, root, committer) { (live, dir) =>
+      foldInto(spark, live, dir, numFiles)
+      dir
     }
 
   /** Incremental near-dup candidates: all banded pairs of resident ∪

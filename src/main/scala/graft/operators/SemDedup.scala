@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.index.Generations
+
 /** Semantic deduplication (SemDeDup — Abbas et al., "SemDeDup: Data-
   * efficient learning at web-scale through semantic deduplication",
   * 2023): cluster the embedding space, then mark near-duplicates ONLY
@@ -97,10 +99,6 @@ object SemDedup {
         coalesce(col("_dup"), lit(0L)).as("is_dup"))
   }
 
-  private def fsFor(spark: org.apache.spark.sql.SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   /** Max-id [[Watermark]] sidecar over the cell index, keyed on `id`.
     * [[incrementalMark]]'s monotone-ingest check reads THIS, not a
     * full-index `max(id)` scan. A stale watermark (crash between data
@@ -180,11 +178,7 @@ object SemDedup {
   /** [[deleteFromCellIndex]] for a literal takedown list. */
   def deleteFromCellIndex(spark: org.apache.spark.sql.SparkSession,
                           path: String, ids: Seq[Long]): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteFromCellIndex(spark, path, ids.distinct.toDF("id"))
-    }
+    Tombstones.ofIds(spark, ids, "id")(deleteFromCellIndex(spark, path, _))
 
   /** Fold append-accumulated small files back into one file per cell
     * (each cell's rows hash to one task, so `partitionBy` writes a
@@ -200,51 +194,35 @@ object SemDedup {
     * replay detection is unaffected.
     *
     * Concurrency contract: compaction requires QUIESCENCE — no
-    * concurrent probe or ingest. The two-rename swap has a window where
-    * no index exists at `path`, and a reader racing it would fail or
-    * bootstrap empty. Crash recovery is handled at the START of the
-    * next compact (and is cheap to call from any startup path): a
-    * stranded `__compact_old` with no live `path` is renamed back; a
-    * stranded old WITH a live path (crash after promote, before
-    * cleanup) is deleted. */
+    * concurrent probe or ingest ([[Generations.swap]]). Crash recovery
+    * runs at the START of the next compact ([[recoverCompact]]). */
   def compactCellIndex(spark: org.apache.spark.sql.SparkSession,
                        path: String): Unit = {
     recoverCompact(spark, path)
-    val staging = s"${path}__compact_staging"
-    val wm = readWatermark(spark, path)
-    readCellIndex(spark, path)
+    Generations.swap(spark, path)(foldInto(spark, path, _))
+  }
+
+  /** The cell fold both compactions share: `src`'s live rows, replay
+    * duplicates dropped and tombstoned ids erased, one sorted file per
+    * cell at `dst`, the gross watermark carried over. */
+  private def foldInto(spark: org.apache.spark.sql.SparkSession,
+                       src: String, dst: String): Unit = {
+    val wm = readWatermark(spark, src)
+    readCellIndex(spark, src)
       .dropDuplicates("id")
       .repartition(col("cell"))
       .sortWithinPartitions("id")
-      .write.partitionBy("cell").mode("overwrite").parquet(staging)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"${path}__compact_old")
-    require(fs.rename(hp, old), s"compact: cannot move $path aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), hp),
-      s"compact: cannot promote staging for $path")
-    fs.delete(old, true)
-    wm.foreach(writeWatermark(spark, path, _))
+      .write.partitionBy("cell").mode("overwrite").parquet(dst)
+    wm.foreach(writeWatermark(spark, dst, _))
   }
 
-  /** Recover from a compact that crashed between its two renames: if
-    * `__compact_old` is stranded with nothing live at `path`, restore
-    * it; if both exist (crash after promote), drop the old copy. No-op
-    * when there is nothing to recover. */
+  /** Recover from a compact that crashed between its two renames
+    * ([[Generations.recoverSwap]]): a stranded `__compact_old` with
+    * nothing live at `path` is restored, one beside a live path is
+    * dropped. No-op when there is nothing to recover. */
   def recoverCompact(spark: org.apache.spark.sql.SparkSession,
-                     path: String): Unit = {
-    val fs = fsFor(spark, path)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(s"${path}__compact_old")
-    if (fs.exists(old)) {
-      if (!fs.exists(hp))
-        require(fs.rename(old, hp), s"recover: cannot restore $path")
-      else fs.delete(old, true)
-    }
-    // a stranded staging dir is always safe to drop — it was never live
-    val staging = new org.apache.hadoop.fs.Path(s"${path}__compact_staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-  }
+                     path: String): Unit =
+    Generations.recoverSwap(spark, path)
 
   /** INCREMENTAL marking: mark only the batch's rows against the
     * resident index + the batch itself, reading just the cell
@@ -308,39 +286,24 @@ object SemDedup {
         coalesce(col("_dup"), lit(0L)).as("is_dup"))
   }
 
-  // ===== Generation-versioned serving (serve-through-compaction) =====
-  //
-  // [[compactCellIndex]] swaps the live cell layout in place — its
-  // rename window excludes readers, so a continuous incremental-dedup
-  // pipeline (every ingest wave probes via [[incrementalMark]]) could
-  // never compact without pausing ingest. The versioned face lifts
-  // that via [[graft.index.Generations]]: each generation is an
-  // ordinary cell index (cell-partitioned rows + `_watermark` +
-  // `_tombstones`), immutable once published; the compactor folds into
-  // the successor reading the live generation strictly read-only, then
-  // flips the manifest. Probes go through [[incrementalMarkVersioned]]
-  // / [[readVersioned]]; writer faces hold the root's writer lease.
+  // The generation-versioned face: each generation is an ordinary
+  // cell index (see [[Generations]]' versioned shell). Probes go
+  // through [[incrementalMarkVersioned]] / [[readVersioned]].
+  private val Versioned = new Generations.Face("cell-index", "cell")
 
   /** Persist the first corpus as generation 0 under `root` and
     * publish. Returns the live generation dir. */
   def buildVersioned(corpus: DataFrame, centroids: Array[Array[Float]],
-                     root: String, committer: String = ""): String = {
-    val spark = corpus.sparkSession
-    graft.index.Generations.withWriterLease(spark, root, "cell.build",
-        committer) {
-      val (gen, dir) = graft.index.Generations.next(spark, root)
+                     root: String, committer: String = ""): String =
+    Versioned.build(corpus.sparkSession, root, committer) { dir =>
       writeCellIndex(corpus, centroids, dir)
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
       dir
     }
-  }
 
   /** The live generation dir. Immutable once published. */
   def resolveVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String): String =
-    graft.index.Generations.liveDir(spark, root).getOrElse(
-      sys.error(s"no published cell-index generation at $root"))
+    Versioned.resolve(spark, root)
 
   /** [[readCellIndex]] against the live generation — the probe face. */
   def readVersioned(spark: org.apache.spark.sql.SparkSession,
@@ -358,27 +321,18 @@ object SemDedup {
     incrementalMark(spark, resolveVersioned(spark, root), centroids,
       batch, tau)
 
-  /** [[appendCellIndex]] against the live generation. `committer` is
-    * per-call on every mutating face (the lease's store check derives
-    * from it — a CAS-only store needs it on append/delete too, not just
-    * build/compact). */
+  /** [[appendCellIndex]] against the live generation. */
   def appendVersioned(batch: DataFrame, centroids: Array[Array[Float]],
-                      root: String, committer: String = ""): Unit = {
-    val spark = batch.sparkSession
-    graft.index.Generations.withWriterLease(spark, root, "cell.append",
-        committer) {
-      appendCellIndex(batch, centroids, resolveVersioned(spark, root))
-    }
-  }
+                      root: String, committer: String = ""): Unit =
+    Versioned.update(batch.sparkSession, root, "append", committer)(
+      appendCellIndex(batch, centroids, _))
 
   /** [[deleteFromCellIndex]] against the live generation. */
   def deleteVersioned(spark: org.apache.spark.sql.SparkSession,
                       root: String, idsDf: DataFrame,
                       committer: String = ""): Long =
-    graft.index.Generations.withWriterLease(spark, root, "cell.delete",
-        committer) {
-      deleteFromCellIndex(spark, resolveVersioned(spark, root), idsDf)
-    }
+    Versioned.update(spark, root, "delete", committer)(
+      deleteFromCellIndex(spark, _, idsDf))
 
   /** [[deleteVersioned]] for a literal takedown list. Explicit overload
     * pair (not a default argument): Scala allows default arguments on
@@ -391,11 +345,8 @@ object SemDedup {
   def deleteVersioned(spark: org.apache.spark.sql.SparkSession,
                       root: String, ids: Seq[Long],
                       committer: String): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteVersioned(spark, root, ids.distinct.toDF("id"), committer)
-    }
+    Tombstones.ofIds(spark, ids, "id")(
+      deleteVersioned(spark, root, _, committer))
 
   /** Tombstoned fraction of the live generation (one row per doc, so
     * footer counts are the exact denominator). Re-arms after a fold —
@@ -418,22 +369,9 @@ object SemDedup {
                             maxFilesPerCell: Double = 4.0,
                             committer: String = ""): String = {
     val live = resolveVersioned(spark, root)
-    val p = new org.apache.hadoop.fs.Path(live)
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cells = math.max(f.listStatus(p).count(st =>
-      st.isDirectory && st.getPath.getName.startsWith("cell=")), 1)
-    def dataFiles(): Int = {
-      val it = f.listFiles(p, true)
-      var n = 0
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet") &&
-            !st.getPath.toString.contains(s"/$TombstoneDir/")) n += 1
-      }
-      n
-    }
+    lazy val (files, cells) = Generations.dataFiles(spark, live)
     if (deletedFractionVersioned(spark, root) > maxDeletedFrac ||
-        dataFiles() > maxFilesPerCell * cells)
+        files > maxFilesPerCell * math.max(cells, 1))
       compactVersioned(spark, root, committer)
     else live
   }
@@ -445,22 +383,9 @@ object SemDedup {
     * generations. Live generation strictly read-only. */
   def compactVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String, committer: String = ""): String =
-    graft.index.Generations.withWriterLease(spark, root, "cell.compact",
-        committer) {
-      val liveDir = resolveVersioned(spark, root)
-      val (gen, newDir) = graft.index.Generations.next(spark, root)
-      fsFor(spark, root).delete(
-        new org.apache.hadoop.fs.Path(newDir), true)
-      val wm = readWatermark(spark, liveDir)
-      readCellIndex(spark, liveDir)
-        .dropDuplicates("id")
-        .repartition(col("cell"))
-        .sortWithinPartitions("id")
-        .write.partitionBy("cell").mode("overwrite").parquet(newDir)
-      wm.foreach(writeWatermark(spark, newDir, _))
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
-      newDir
+    Versioned.fold(spark, root, committer) { (live, dir) =>
+      foldInto(spark, live, dir)
+      dir
     }
 
   /** [[mark]] with corpus-seeded centroids (md5-ranked rows — the

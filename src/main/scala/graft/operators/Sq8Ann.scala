@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{ScoredId, TopKAggregator}
+import graft.index.Generations
 
 /** Scalar (int8) quantization ANN — the third compression geometry of
   * the 100 TB tier family: each dimension is affinely mapped onto one
@@ -287,7 +288,7 @@ object Sq8Ann {
     // restore a compact that crashed between its renames before
     // reading (the codes dir would otherwise be missing until the
     // next compactCodes ran)
-    SemDedup.recoverCompact(spark, s"$path/codes")
+    Generations.recoverSwap(spark, s"$path/codes")
     Tombstones.mask(spark, s"$path/_tombstones", "d_id",
       spark.read.parquet(s"$path/codes"))
   }
@@ -298,7 +299,7 @@ object Sq8Ann {
     * Idempotent by construction; returns the newly tombstoned count. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String, idsDf: DataFrame): Long = {
-    SemDedup.recoverCompact(spark, s"$path/codes")
+    Generations.recoverSwap(spark, s"$path/codes")
     Tombstones.appendNew(spark, s"$path/_tombstones", "d_id",
       idsDf.select(col("d_id")))
   }
@@ -306,38 +307,34 @@ object Sq8Ann {
   /** [[deleteFromIndex]] for a literal takedown list. */
   def deleteFromIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String, ids: Seq[Long]): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteFromIndex(spark, path, ids.distinct.toDF("d_id"))
-    }
+    Tombstones.ofIds(spark, ids, "d_id")(deleteFromIndex(spark, path, _))
 
   /** Fold append-accumulated codes files and ERASE tombstoned rows
     * physically (the staging read goes through [[readCodes]]); the
     * tombstone sidecar dies with the old codes dir — no constants to
     * maintain, so nothing is left to mask once the rows are gone.
     * Requires QUIESCENCE; crash recovery via
-    * [[SemDedup.recoverCompact]] on the codes dir at entry. */
+    * [[Generations.recoverSwap]] on the codes dir at entry. */
   def compactCodes(spark: org.apache.spark.sql.SparkSession,
                    path: String): Unit = {
     val codes = s"$path/codes"
-    SemDedup.recoverCompact(spark, codes)
-    val staging = s"${codes}__compact_staging"
+    Generations.recoverSwap(spark, codes)
+    Generations.swap(spark, codes)(foldCodes(spark, path, _))
+    val tombP = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
+    tombP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(tombP, true)
+  }
+
+  /** The codes fold both compactions share: `path`'s live code rows,
+    * replay duplicates dropped and tombstoned rows erased, sorted into
+    * `dst`. */
+  private def foldCodes(spark: org.apache.spark.sql.SparkSession,
+                        path: String, dst: String): Unit =
     readCodes(spark, path)
       .dropDuplicates("d_id")
       .repartition(spark.sparkContext.defaultParallelism)
       .sortWithinPartitions("d_id")
-      .write.mode("overwrite").parquet(staging)
-    val hp = new org.apache.hadoop.fs.Path(codes)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val old = new org.apache.hadoop.fs.Path(s"${codes}__compact_old")
-    require(fs.rename(hp, old), s"compact: cannot move $codes aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(staging), hp),
-      s"compact: cannot promote staging for $codes")
-    fs.delete(old, true)
-    val tombP = new org.apache.hadoop.fs.Path(s"$path/_tombstones")
-    if (fs.exists(tombP)) fs.delete(tombP, true)
-  }
+      .write.mode("overwrite").parquet(dst)
 
   /** Incremental append: encode ONLY the delta rows with the frozen
     * bounds and add them to the codes layout — resident files untouched
@@ -363,32 +360,18 @@ object Sq8Ann {
       excludeSelf)
   }
 
-  // ===== Generation-versioned serving (serve-through-compaction) =====
-  //
-  // [[compactCodes]] swaps the live codes dir in place — readers are
-  // excluded for its rename window. The versioned face lifts that via
-  // [[graft.index.Generations]]: each generation is an ordinary
-  // [[writeIndex]] layout (`codes/` + `bounds/` + `_tombstones`),
-  // immutable once published; the compactor folds into the successor
-  // generation reading the live one strictly read-only, then flips the
-  // manifest. Readers hand [[resolveVersioned]]'s dir to [[loadIndex]]
-  // / [[readCodes]]. Writer faces hold the root's writer lease. The
+  // The generation-versioned face: each generation is an ordinary
+  // [[writeIndex]] layout (see [[Generations]]' versioned shell). The
   // per-dimension bounds are part of the FROZEN quantizer and are
   // copied verbatim into every successor — a fold never re-trains.
+  private val Versioned = new Generations.Face("SQ8", "sq8")
 
   /** Train + encode the first corpus as generation 0 under `root` and
     * publish. Returns (live generation dir, trained bounds). */
   def buildVersioned(spark: org.apache.spark.sql.SparkSession,
                      data: DataFrame, root: String,
                      committer: String = ""): (String, Bounds) =
-    graft.index.Generations.withWriterLease(spark, root, "sq8.build",
-        committer) {
-      val (gen, dir) = graft.index.Generations.next(spark, root)
-      val b = writeIndex(data, dir)
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
-      (dir, b)
-    }
+    Versioned.build(spark, root, committer)(dir => (dir, writeIndex(data, dir)))
 
   /** The live generation dir — the `path` readers hand to
     * [[loadIndex]] / [[readCodes]]. Immutable once published, so a
@@ -396,29 +379,21 @@ object Sq8Ann {
     * [[compactVersioned]]. */
   def resolveVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String): String =
-    graft.index.Generations.liveDir(spark, root).getOrElse(
-      sys.error(s"no published SQ8 generation at $root"))
+    Versioned.resolve(spark, root)
 
-  /** [[appendIndex]] against the live generation (frozen bounds).
-    * `committer` is per-call on every mutating face (the lease's store
-    * check derives from it — a CAS-only store needs it on append/delete
-    * too, not just build/compact). */
+  /** [[appendIndex]] against the live generation (frozen bounds). */
   def appendVersioned(spark: org.apache.spark.sql.SparkSession,
                       root: String, delta: DataFrame,
                       committer: String = ""): Unit =
-    graft.index.Generations.withWriterLease(spark, root, "sq8.append",
-        committer) {
-      appendIndex(spark, resolveVersioned(spark, root), delta)
-    }
+    Versioned.update(spark, root, "append", committer)(
+      appendIndex(spark, _, delta))
 
   /** [[deleteFromIndex]] against the live generation. */
   def deleteVersioned(spark: org.apache.spark.sql.SparkSession,
                       root: String, idsDf: DataFrame,
                       committer: String = ""): Long =
-    graft.index.Generations.withWriterLease(spark, root, "sq8.delete",
-        committer) {
-      deleteFromIndex(spark, resolveVersioned(spark, root), idsDf)
-    }
+    Versioned.update(spark, root, "delete", committer)(
+      deleteFromIndex(spark, _, idsDf))
 
   /** [[deleteVersioned]] for a literal takedown list. Explicit overload
     * pair (not a default argument): Scala allows default arguments on
@@ -431,11 +406,8 @@ object Sq8Ann {
   def deleteVersioned(spark: org.apache.spark.sql.SparkSession,
                       root: String, ids: Seq[Long],
                       committer: String): Long =
-    if (ids.isEmpty) 0L
-    else {
-      import spark.implicits._
-      deleteVersioned(spark, root, ids.distinct.toDF("d_id"), committer)
-    }
+    Tombstones.ofIds(spark, ids, "d_id")(
+      deleteVersioned(spark, root, _, committer))
 
   /** Tombstoned fraction of the live generation's physical code rows —
     * re-arms after a fold (the successor erases the rows and starts
@@ -458,14 +430,8 @@ object Sq8Ann {
                             maxCodesFiles: Int = 64,
                             committer: String = ""): String = {
     val live = resolveVersioned(spark, root)
-    val codes = new org.apache.hadoop.fs.Path(s"$live/codes")
-    val f = codes.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def codesFiles(): Int =
-      if (!f.exists(codes)) 0
-      else f.listStatus(codes).count(st =>
-        st.isFile && st.getPath.getName.endsWith(".parquet"))
     if (deletedFractionVersioned(spark, root) > maxDeletedFrac ||
-        codesFiles() > maxCodesFiles)
+        Generations.dataFiles(spark, s"$live/codes")._1 > maxCodesFiles)
       compactVersioned(spark, root, committer)
     else live
   }
@@ -476,22 +442,10 @@ object Sq8Ann {
     * out-of-grace generations. Live generation strictly read-only. */
   def compactVersioned(spark: org.apache.spark.sql.SparkSession,
                        root: String, committer: String = ""): String =
-    graft.index.Generations.withWriterLease(spark, root, "sq8.compact",
-        committer) {
-      val liveDir = resolveVersioned(spark, root)
-      val (gen, newDir) = graft.index.Generations.next(spark, root)
-      val f = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      f.delete(new org.apache.hadoop.fs.Path(newDir), true)
-      readCodes(spark, liveDir)
-        .dropDuplicates("d_id")
-        .repartition(spark.sparkContext.defaultParallelism)
-        .sortWithinPartitions("d_id")
-        .write.mode("overwrite").parquet(s"$newDir/codes")
-      spark.read.parquet(s"$liveDir/bounds")
-        .coalesce(1).write.mode("overwrite").parquet(s"$newDir/bounds")
-      graft.index.Generations.publish(spark, root, gen,
-        committer = committer)
-      newDir
+    Versioned.fold(spark, root, committer) { (live, dir) =>
+      foldCodes(spark, live, s"$dir/codes")
+      spark.read.parquet(s"$live/bounds")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/bounds")
+      dir
     }
 }

@@ -27,33 +27,28 @@ import org.apache.spark.sql.functions.col
   * when/whether compaction retires the sidecar.
   *
   * ==The compaction concurrency contract (all six faces)==
-  * Every compaction here is SINGLE-WRITER and requires QUIESCENCE:
-  * exactly one process may compact a given index path at a time, and
-  * no query, append, or delete may run against that path while its
-  * compaction's staging-swap renames are in flight — a reader that
-  * lists the live dir between rename(live→old) and
-  * rename(staging→live) sees a missing path and fails. Writer-side
-  * crash recovery is complete (each face recovers a crashed compact
-  * at its next entry, and [[graft.operators.InvertedIndex
-  * .recoverCompact]]-style recovery tolerates the lost rename race
-  * between two concurrent RECOVERERS), but reader-vs-compactor
-  * concurrency is out of contract FOR THE IN-PLACE FACES: a batch
-  * pipeline runs these compactions in the maintenance window or
-  * against a quiesced replica, the same discipline as any
-  * segment-merging index. A deployment that must SERVE THROUGH a
-  * compaction uses the generation-versioned faces instead
-  * ([[graft.index.Generations]]) — ALL SIX persisted faces have one:
-  * `ShardedIndex.compactVersioned`, `InvertedIndex.compactVersioned`,
-  * `IvfPq.compactVersioned`, `Sq8Ann.compactVersioned`,
-  * `MinHashLsh.compactVersioned`, `SemDedup.compactVersioned`.
-  * Published generations are immutable, the compactor builds the
+  * Every in-place compaction here is SINGLE-WRITER and requires
+  * QUIESCENCE: exactly one process may compact a given index path at a
+  * time, and no query, append, or delete may run against that path
+  * while its staging swap ([[graft.index.Generations.swap]]) is in
+  * flight — a reader that lists the live dir between rename(live→old)
+  * and rename(staging→live) sees a missing path and fails. Writer-side
+  * crash recovery is complete ([[graft.index.Generations.recoverSwap]]
+  * at each face's next entry, tolerant of the lost rename race between
+  * two concurrent RECOVERERS), but reader-vs-compactor concurrency is
+  * out of contract FOR THE IN-PLACE FACES: a batch pipeline runs these
+  * compactions in the maintenance window or against a quiesced
+  * replica, the same discipline as any segment-merging index. A
+  * deployment that must SERVE THROUGH a compaction uses the
+  * generation-versioned faces instead (every face's
+  * `compactVersioned`, all on [[graft.index.Generations.Face]]):
+  * published generations are immutable, the compactor builds the
   * successor read-only and flips a MANIFEST pointer atomically, and
   * grace-window retirement keeps `keepGens` predecessors on disk
   * (default 1) — readers need no coordination at all. Writers stay
   * single-writer among themselves in both postures, and on versioned
-  * roots that contract is ENFORCED by the best-effort writer lease
-  * ([[graft.index.Generations.withWriterLease]]): a second
-  * append/delete/compact fails loudly at entry. */
+  * roots that contract is ENFORCED by the best-effort writer lease: a
+  * second append/delete/compact fails loudly at entry. */
 object Tombstones {
 
   private def hp(dir: String) = new org.apache.hadoop.fs.Path(dir)
@@ -85,6 +80,17 @@ object Tombstones {
       case None => base
       case Some(t) => base.join(t, Seq(idCol), "left_anti")
         .select(base.columns.map(col).toIndexedSeq: _*)
+    }
+
+  /** A literal takedown list as a one-column id relation for `delete`;
+    * an empty list deletes nothing and never calls it (no lease, no
+    * job). */
+  def ofIds(spark: SparkSession, ids: Seq[Long], idCol: String)(
+      delete: DataFrame => Long): Long =
+    if (ids.isEmpty) 0L
+    else {
+      import spark.implicits._
+      delete(ids.distinct.toDF(idCol))
     }
 
   /** Append the not-yet-tombstoned `candidates` rows (id + optional

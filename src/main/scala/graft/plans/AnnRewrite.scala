@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType}
 
 import graft.functions.expressions.{VecChamferExpr, VecCosineExpr, VecDotExpr, VecL2SqExpr, VecMaxSimExpr}
 import graft.index.{BeamQueue, BeamSearch, CsrGraph, Metrics, VectorStore, VisitedSet}
@@ -954,15 +954,21 @@ object AnnTopKRule extends Rule[LogicalPlan] {
     true
   }
 
+  /** A routed answer places NULL scores where the direction's default
+    * null ordering does (first ascending, last descending); an explicit
+    * `NULLS FIRST`/`NULLS LAST` against that default stays exhaustive. */
+  private def defaultNulls(o: SortOrder): Boolean =
+    o.nullOrdering == o.direction.defaultNullOrdering
+
+  /** Float query literals only: an `array<double>` literal is scored in
+    * double by the exhaustive expressions, which the float index tiers
+    * cannot reproduce, so it stays exhaustive. */
   private def asFloatArray(l: Literal): Option[Array[Float]] =
     if (l.value == null) None
     else l.dataType match {
       case ArrayType(FloatType, _) =>
         Some(l.value.asInstanceOf[ArrayData]).filter(noNulls)
           .map(_.toFloatArray())
-      case ArrayType(DoubleType, _) =>
-        Some(l.value.asInstanceOf[ArrayData]).filter(noNulls)
-          .map(_.toDoubleArray().map(_.toFloat))
       case _ => None
     }
 
@@ -974,11 +980,6 @@ object AnnTopKRule extends Rule[LogicalPlan] {
           .map(_.toArray[ArrayData](et))
           .filter(_.forall(noNulls))
           .map(_.map(_.toFloatArray()))
-      case ArrayType(et @ ArrayType(DoubleType, _), _) =>
-        Some(l.value.asInstanceOf[ArrayData]).filter(noNulls)
-          .map(_.toArray[ArrayData](et))
-          .filter(_.forall(noNulls))
-          .map(_.map(_.toDoubleArray().map(_.toFloat)))
       case _ => None
     }
 
@@ -1119,6 +1120,7 @@ object AnnTopKRule extends Rule[LogicalPlan] {
               j.condition.isEmpty => Some((pl, j))
         case _ => None
       }
+      if orderSpec.forall(defaultNulls)
       w0Pair <- orderSpec.headOption.collect {
         case SortOrder(a: AttributeReference, d @ (Descending | Ascending),
             _, _) => (a, d)
@@ -1253,8 +1255,9 @@ object AnnTopKRule extends Rule[LogicalPlan] {
         }
         unwrapped.flatMap {
           case (wrapper,
-              Sort(Seq(SortOrder(sortKey: AttributeReference, dir, _, _)), true,
-                Project(projList, projChild), _)) if projList.length == 2 =>
+              Sort(Seq(o @ SortOrder(sortKey: AttributeReference, dir, _, _)),
+                true, Project(projList, projChild), _))
+              if projList.length == 2 && defaultNulls(o) =>
             rewriteLiteral(k, sortKey, dir, projList, projChild)
               .map(n => wrapper.map(w => w.copy(child = n): LogicalPlan)
                 .getOrElse(n))

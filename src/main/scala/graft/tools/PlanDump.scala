@@ -69,16 +69,16 @@ object PlanDump {
       "hybrid_rrf" -> "hybrid retrieval: BM25 + sparse-cosine arms in one DAG; fusion = union + ONE hash aggregate of the two bounded lists (a FULL OUTER join could only sort-merge)",
       "w1_topk_diverse" -> "cap-diversified top-k: bounded heap per (query, label), window over the <= labels*m survivors per query",
       "topk_mmr" -> "MMR re-rank: bounded candidate-pair fan-out keyed by query, greedy selection in mapGroups (executors, not driver)",
-      "g8_sql_sharded_saturated" -> "sharded tier through the relation route at saturation: per-shard beams via the resident-LRU lifecycle, broadcast-candidates rescore, rank window — the certificate plan",
+      "g8_sql_sharded_saturated" -> "sharded tier through the relation route at saturation: one routed node over the query scan — per-shard beams via the resident-LRU lifecycle, candidates rescored and ranked inside it — the certificate plan",
       "g9_sql_sharded_saturated" -> "the FLAGSHIP from the sharded mv tier at per-shard saturating budget: every shard's beam saturates its sub-corpus, broadcast candidate union, exact chamfer rescore — the past-the-broadcast-ceiling certificate plan",
-      "g8_sql_ivfpq_saturated" -> "IVF-PQ tier through the relation route at saturation: every cell probed (partition-pruned scan degenerates to full), ADC candidates, exact rescore join",
+      "g8_sql_ivfpq_saturated" -> "IVF-PQ tier through the relation route at saturation: one routed node over the query scan — every cell probed (partition-pruned scan degenerates to full), ADC candidates rescored exactly inside it",
       "text_bm25_indexed" -> "index-served BM25 after postings compaction: bucket-pruned postings scan (PartitionFilters), stats from the sidecar, shared bm25Rank tail",
       "text_bm25_deleted" -> "deletion lifecycle serving: bucket-pruned postings scan, broadcast tombstone anti-join, gross-stats-minus-tombstones constants, shared bm25Rank tail",
       "knn_sql_filtered_sharded_exact" -> "filtered route on the sharded tier in exact mode: the exactness backstop scores the FULL filtered scan (pushed predicate, no generator candidates can claim saturation), exact by construction",
       "takedown_lifecycle" -> "streaming-face takedown: delta-ingested sharded index, broadcast tombstone anti-join after the per-shard union, exact survivor ranking (broadcast queries x survivor scan, bounded heap)",
       "pack_sequences" -> "two-level packing cumsum: per-bucket window (parallel), broadcast 256-row offset table, no global window until the recursion's tiny top",
-      "g8_sql_versioned_live" -> "serve-through-compaction, post-flip: the freshly published generation through the routed relation shape — per-shard beams, dead-sidecar emission filter, exact rescore, rank window",
-      "g8_sql_ivfpq_versioned" -> "serve-through-compaction on the COMPRESSED tier, post-flip: the published successor's cell-partitioned codes (dead rows physically erased), full-probe ADC at the certificate regime, exact rescore, rank window",
+      "g8_sql_versioned_live" -> "serve-through-compaction, post-flip: the freshly published generation through the routed relation shape — per-shard beams, dead-sidecar emission filter, exact rescore and top-k inside the routed node",
+      "g8_sql_ivfpq_versioned" -> "serve-through-compaction on the COMPRESSED tier, post-flip: the published successor's cell-partitioned codes (dead rows physically erased), full-probe ADC at the certificate regime, exact rescore and top-k inside the routed node",
       "g8_sql_versioned_seqlog" -> "the versioned lifecycle committed through the SEQLOG (conditional-put) protocol: the served plan is identical to the rename-mode versioned face — the commit protocol is manifest-resolution-side only, invisible to the query DAG",
       "g9_sql_versioned_grace" -> "the mv flagship answered by the GRACE generation (pre-flip ref on a grown index): per-shard beams over gen0+delta, exact chamfer rescore — what a reader holding the old manifest runs mid-compaction",
       "text_bm25_versioned" -> "the lexical face's serve-through-compaction certificate: grace-generation postings scan (bucket-pruned), broadcast tombstone anti-join, gross-minus-tombstone constants, shared bm25Rank tail — the fixture's build/append/delete/compact jobs run before this plan",

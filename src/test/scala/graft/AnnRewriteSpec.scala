@@ -2385,4 +2385,114 @@ class AnnRewriteSpec extends AnyFunSuite {
         r(1).asInstanceOf[Long])),
       "the relation route drops NULL scores")
   }
+
+  test("explicit NULLS FIRST/LAST against the direction's default stays exhaustive and answers like it") {
+    setup
+    // 30 vectors plus one NULL-vector row, served by tiers whose
+    // generators return every id: a routed answer would see the whole
+    // corpus, so any difference from the exhaustive plan is the null
+    // ordering alone
+    val dir = "target/tmp/ann_nullorder_corpus"
+    val emb = Tables.embeddings(spark, sfDir)
+    emb.filter(col("vec_id") < 30)
+      .select(col("vec_id").as("ovid"), col("embedding").as("ovec"))
+      .union(spark.sql("SELECT 1000000L AS ovid, CAST(NULL AS array<float>) AS ovec"))
+      .write.mode("overwrite").parquet(dir)
+    val corpus = spark.read.parquet(dir)
+    corpus.createOrReplaceTempView("nullorder_corpus")
+    val dim = emb.select("embedding").first().getSeq[Float](0).length
+    for (metric <- Seq("l2", "ip"))
+      AnnIndexRegistry.registerTier(corpus, "ovid", "ovec",
+        AnnIndexRegistry.CandidateTierEntry(s"every_order_$metric", corpus,
+          "ovid", "ovec", metric, dim,
+          candidates = (_, _, _) => corpus.select(col("ovid").as("d_id")),
+          candidatesBatch = (s, qs, _) => {
+            import s.implicits._
+            qs.map(_._1).toDF("q_id")
+              .crossJoin(corpus.select(col("ovid").as("d_id")))
+          }))
+    val q = corpus.filter(col("ovid") === 7).select("ovec").first()
+      .getSeq[Float](0).map(x => s"${x}F").mkString("array(", ", ", ")")
+    corpus.filter(col("ovid") < 3)
+      .select(col("ovid").as("q_id"), col("ovec").as("q_vec"))
+      .createOrReplaceTempView("nullorder_queries")
+    def rows(sqlText: String, rewrite: Boolean): Seq[Seq[Any]] = {
+      spark.conf.set("spark.graft.ann.rewrite", rewrite.toString)
+      try {
+        val df = spark.sql(sqlText)
+        assert(routedTier(df).isEmpty, s"routed: $sqlText")
+        df.collect().map(_.toSeq).toSeq
+      } finally spark.conf.set("spark.graft.ann.rewrite", "false")
+    }
+    val dotFirst = s"""SELECT ovid, graft_vec_dot(ovec, $q) AS score
+                      |FROM nullorder_corpus
+                      |ORDER BY score DESC NULLS FIRST LIMIT 3""".stripMargin
+    val exhaustive = rows(dotFirst, rewrite = false)
+    assert(exhaustive.head === Seq(1000000L, null))
+    assert(rows(dotFirst, rewrite = true) === exhaustive)
+    val l2Last = s"""SELECT ovid, graft_vec_l2sq(ovec, $q) AS score
+                    |FROM nullorder_corpus
+                    |ORDER BY score ASC NULLS LAST LIMIT 3""".stripMargin
+    assert(rows(l2Last, rewrite = true) === rows(l2Last, rewrite = false))
+    val relFirst =
+      """SELECT q_id, ovid, score FROM (
+        |  SELECT q.q_id, d.ovid,
+        |         graft_vec_dot(q.q_vec, d.ovec) AS score,
+        |         row_number() OVER (PARTITION BY q.q_id
+        |           ORDER BY graft_vec_dot(q.q_vec, d.ovec) DESC NULLS FIRST,
+        |                    d.ovid ASC) AS rnk
+        |  FROM nullorder_queries q CROSS JOIN nullorder_corpus d) t
+        |WHERE rnk <= 2""".stripMargin
+    val relExhaustive = rows(relFirst, rewrite = false)
+    assert(relExhaustive.count(_(2) == null) === 3)
+    assert(rows(relFirst, rewrite = true) === relExhaustive)
+  }
+
+  test("double query literals stay exhaustive: answers bit-identical with the rewrite on and off") {
+    setup
+    val e = Tables.embeddings(spark, sfDir)
+    // a double spelling of vector 7 (each float's decimal string read as
+    // a double, so narrowing it back to float would change the values)
+    val qv = e.filter(col("vec_id") === 7).select("embedding").first()
+      .getSeq[Float](0)
+    val qDouble = qv.map(x => s"${x}D").mkString("array(", ", ", ")")
+    // a 4-set corpus of the first 200 vectors on a registered mv tier
+    val C = 4
+    val small = e.filter(col("vec_id") < 200)
+    val dir = "target/tmp/ann_mv_sets_double"
+    small.select((col("vec_id") / C).cast("long").as("dset_id"),
+        (col("vec_id") % C).cast("int").as("d_sub"), col("embedding"))
+      .groupBy("dset_id")
+      .agg(transform(
+        array_sort(collect_list(struct(col("d_sub"), col("embedding")))),
+        x => x.getField("embedding")).as("vec_set"))
+      .write.mode("overwrite").parquet(dir)
+    val sets = spark.read.parquet(dir)
+    sets.createOrReplaceTempView("mv_sets_double")
+    val idx = GraphBuild.build(spark, small, small, IndexQueries.FixtureParams)
+    AnnIndexRegistry.registerMvRoar(sets, "dset_id", "vec_set",
+      spark.sparkContext.broadcast(idx.graph),
+      spark.sparkContext.broadcast(idx.vecs),
+      idx.params.metric, C, idx.vecs.dim)
+    val setDouble = e.filter(col("vec_id") >= C && col("vec_id") < 2 * C)
+      .orderBy("vec_id").select("embedding").collect()
+      .map(_.getSeq[Float](0).map(x => s"${x}D")
+        .mkString("array(", ", ", ")"))
+      .mkString("array(", ", ", ")")
+    def rows(sqlText: String, rewrite: Boolean): Seq[Seq[Any]] = {
+      spark.conf.set("spark.graft.ann.rewrite", rewrite.toString)
+      try {
+        val df = spark.sql(sqlText)
+        assert(routedTier(df).isEmpty, s"routed: $sqlText")
+        df.collect().map(_.toSeq).toSeq
+      } finally spark.conf.set("spark.graft.ann.rewrite", "false")
+    }
+    for (sqlText <- Seq(sql(qDouble),
+        s"""SELECT dset_id, graft_chamfer_score($setDouble, vec_set) AS score
+           |FROM mv_sets_double ORDER BY score DESC LIMIT 10""".stripMargin)) {
+      val exhaustive = rows(sqlText, rewrite = false)
+      assert(exhaustive.length === 10)
+      assert(rows(sqlText, rewrite = true) === exhaustive)
+    }
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.index.{BuildParams, GraphBuild}
+import graft.index.{BuildParams, GraphBuild, Metrics, VectorStore}
 
 /** The driver-side small-build fast path must be INVISIBLE: for the
   * same input it must produce the bit-identical graph the distributed
@@ -33,10 +33,8 @@ class GraphBuildLocalSpec extends AnyFunSuite {
         .filter(col("vec_id") < slice)
         .select(col("vec_id"), col("embedding"))
       val local = GraphBuild.build(spark, e, e, params) // n <= 512 → local
-      spark.conf.set("spark.graft.index.driverBuildMaxRows", "0")
-      val dist =
-        try GraphBuild.build(spark, e, e, params)
-        finally spark.conf.unset("spark.graft.index.driverBuildMaxRows")
+      val dist = GraphBuild.buildDistributed(spark, e, e, params,
+        VectorStore.fromDf(e, "vec_id", "embedding", Metrics(params.metric)))
       assert(local.graph.n === dist.graph.n, s"n (slice $slice)")
       assert(local.graph.entryPoint === dist.graph.entryPoint,
         s"entry point (slice $slice)")
