@@ -60,7 +60,16 @@ object BeamSearch {
     * until no unexpanded node remains within the first `l` entries.
     * Returns (cmps, hops) deltas. `visitLog` (G12 instrumentation,
     * `TestOverlap_SearchMultivectorOnRoarGraph`,
-    * `index_bipartite.cpp:2546-2666`) records every newly-visited node. */
+    * `index_bipartite.cpp:2546-2666`) records every newly-visited node.
+    *
+    * Each hop gathers the expanded node's unvisited neighbours (marking
+    * them visited), scores them in one loop with nothing else in it, then
+    * inserts and logs them in neighbour order. A 64-d distance is bound by
+    * loading its row, and a loop of distances alone lets those loads
+    * overlap (hnswlib prefetches a node's neighbour rows for the same
+    * reason). An insert never changes which neighbours are unvisited, so
+    * the inserts, logs, `cmps` and `hops` equal those of scoring and
+    * inserting one neighbour at a time. */
   private def expandLoop(graph: CsrGraph, vecs: VectorStore, metric: VectorMetric,
                          q: Array[Float], queue: BeamQueue, l: Int,
                          visited: VisitedSet,
@@ -69,24 +78,43 @@ object BeamSearch {
     var cmps = 0
     var hops = 0
     val dim = vecs.dim
+    var batch = new Array[Int](64)
+    var dists = new Array[Float](64)
     while (queue.hasUnexpandedInK(l)) {
-      val idx = queue.closestUnexpanded()
-      val node = queue.id(idx)
+      val node = queue.id(queue.closestUnexpanded())
       hops += 1
-      var o = graph.nbrStart(node)
+      val start = graph.nbrStart(node)
       val end = graph.nbrEnd(node)
+      if (end - start > batch.length) {
+        batch = new Array[Int](end - start)
+        dists = new Array[Float](end - start)
+      }
+      var m = 0
+      var o = start
       while (o < end) {
         val nbr = graph.nbrs(o)
         if (!visited.visited(nbr)) {
           visited.visit(nbr)
-          if (visitLog != null) visitLog += nbr
-          val d = metric.dist(vecs.data, vecs.offset(nbr), q, 0, dim)
-          cmps += 1
-          if (scoreLog != null) scoreLog += ((nbr, d))
-          queue.insert(nbr, d)
+          batch(m) = nbr
+          m += 1
         }
         o += 1
       }
+      var j = 0
+      while (j < m) {
+        dists(j) = metric.dist(vecs.data, vecs.offset(batch(j)), q, 0, dim)
+        j += 1
+      }
+      j = 0
+      while (j < m) {
+        val nbr = batch(j)
+        val d = dists(j)
+        if (visitLog != null) visitLog += nbr
+        if (scoreLog != null) scoreLog += ((nbr, d))
+        queue.insert(nbr, d)
+        j += 1
+      }
+      cmps += m
     }
     (cmps, hops)
   }

@@ -9,9 +9,14 @@ package graft.index
   * negate at the boundary.
   *
   * Kernels take flat (array, offset) pairs so the hot loop runs over the
-  * packed [[VectorStore]] with no per-call allocation. Plain scalar loops:
-  * the JVM's SuperWord auto-vectorization covers what the reference's
-  * AVX-512 intrinsics do explicitly.
+  * packed [[VectorStore]] with no per-call allocation. Plain scalar loops,
+  * one sequential float accumulator: C2 keeps the `+=` reduction's
+  * rounding order, so it does not vectorize it, and at 64-d that is not
+  * what bounds a search. The distance is bound by loading the row: four
+  * independent accumulators, which change the result bits, moved
+  * `BeamSearch.kernel_ns_per_dist_eval` at 64-d by a few percent either
+  * way (119 → 115 ns and 115 → 122 ns in two measurements; 78.8 → 79.6
+  * and 84.8 → 87.8 ns with the beam search's batched neighbour scoring).
   */
 trait VectorMetric extends Serializable {
   def name: String

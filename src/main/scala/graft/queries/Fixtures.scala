@@ -7,8 +7,8 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.SparkSession
 
 /** The query packs' fixture lifecycle: one memo for everything built once
-  * per JVM (indexes, broadcasts, child sessions), the temp dirs those
-  * fixtures live in, and the child sessions routed statements run in. */
+  * per JVM (indexes, broadcasts), the temp dirs those fixtures live in,
+  * and the child sessions routed statements run in. */
 private[graft] object Fixtures {
 
   /** A memoized value, built by its first reader outside any map lock —
@@ -56,6 +56,14 @@ private[graft] object Fixtures {
     d.toString
   }
 
+  /** Child sessions by parent and confs. The parent is a weak key (a
+    * `SparkSession` is compared by identity) and no child refers to its
+    * parent, so a child lives only while its parent does and the memo
+    * keeps no parent it has seen alive. */
+  private val children = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[Map[String, String], SparkSession]]())
+
   /** The child of `parent` with `confs` set, one per (parent, confs): it
     * shares the SparkContext (broadcasts, cached blocks) but owns its
     * SQLConf, so the confs live only there and the parent's conf is never
@@ -63,11 +71,12 @@ private[graft] object Fixtures {
     * and gets the routing rules installed once, at creation. */
   def childSession(parent: SparkSession,
                    confs: (String, String)*): SparkSession =
-    memo("session", "", (parent, confs.toMap)) {
-      val child = parent.newSession()
-      confs.foreach { case (k, v) => child.conf.set(k, v) }
-      if (confs.contains("spark.graft.ann.rewrite" -> "true"))
-        graft.plans.AnnRewrite.install(child)
-      child
-    }
+    children.computeIfAbsent(parent, _ => new ConcurrentHashMap())
+      .computeIfAbsent(confs.toMap, _ => {
+        val child = parent.newSession()
+        confs.foreach { case (k, v) => child.conf.set(k, v) }
+        if (confs.contains("spark.graft.ann.rewrite" -> "true"))
+          graft.plans.AnnRewrite.install(child)
+        child
+      })
 }

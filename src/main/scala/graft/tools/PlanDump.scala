@@ -15,16 +15,13 @@ import graft.Harness
 object PlanDump {
 
   /** `plan` with its run-varying tokens made stable. Masked: fixture temp
-    * dirs (`<tmp>/graft_<prefix>*`, with no tail where Spark cut the path
-    * at `spark.sql.maxMetadataStringLength`, since where it cuts depends
-    * on the random suffix's length), `@<hex>` object hashes and lambda
+    * dirs (`<tmp>/graft_<prefix>*`), `@<hex>` object hashes and lambda
     * class names. Renumbered in order of first appearance: exprIds,
     * `plan_id`s, AQE query-stage ids and codegen-stage ids (they number in
     * the order the JVM or AQE happened to create them). */
   def normalize(plan: String): String = {
     val masked = plan
       .replaceAll("""[^\s\[\](),=]*/(graft_\w*?)\d{6,}\b""", "<tmp>/$1*")
-      .replaceAll("""(<tmp>/graft_\w*\*)[^\s,\]]*?\.\.\.""", "$1...")
       .replaceAll("""Lambda\$?\d*/0x[0-9a-f]+""", "Lambda")
       .replaceAll("""@[0-9a-f]+\b""", "@<hash>")
     Seq("""#(\d+)""", """plan_id=(\d+)""", """QueryStage (\d+)""",
@@ -40,8 +37,12 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = args.lift(1).getOrElse("docs/PLANS.md")
-    // the session time zone is printed in some plans: pin it, not the JVM's
-    val spark = Harness.session(8, "spark.sql.session.timeZone" -> "UTC")
+    // the session time zone is printed in some plans: pin it, not the JVM's.
+    // Spark cuts scan metadata (a Location's paths) at
+    // maxMetadataStringLength, and where a temp path gets cut depends on
+    // java.io.tmpdir: print it whole, so normalize masks whole paths
+    val spark = Harness.session(8, "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.maxMetadataStringLength" -> Int.MaxValue.toString)
     val picks = Seq(
       "j1_knn_cosine" -> "exact kNN: broadcast queries x streamed corpus, ObjectHashAggregate top-k",
       "a1_smooth_chamfer_topk" -> "fullscan rerank: one chamfer shuffle + one top-k shuffle",

@@ -18,8 +18,10 @@ import graft.operators.{Rerank, SetSim, TopK}
 
 /** The flagship batch (`BeamSearch.searchMultiDf` + `Rerank.chamferTopK`)
   * pinned three ways: digests of the beam kernels' exact outputs over a
-  * parameter grid, the rerank's rows against the sim-triple formulation
-  * it is defined by, and the number of tasks a batch's kernel runs on. */
+  * parameter grid (with the single-vector and bipartite searches, exact
+  * kNN and a driver-side graph build, which share the beam queue), the
+  * rerank's rows against the sim-triple formulation it is defined by, and
+  * the number of tasks a batch's kernel runs on. */
 class FlagshipBatchSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -107,6 +109,106 @@ class FlagshipBatchSpec extends AnyFunSuite {
       }
     }
     assert(d === "5a4b2525caeac342")
+  }
+
+  private def writeQueue(out: DataOutputStream, q: BeamQueue): Unit = {
+    out.writeInt(q.size)
+    (0 until q.size).foreach { i =>
+      out.writeInt(q.id(i))
+      out.writeInt(java.lang.Float.floatToIntBits(q.dist(i)))
+    }
+  }
+
+  test("searchSingle beams and scored logs digest over an l grid") {
+    val (graph, vecs, queries) = kernelFixture
+    val visited = new VisitedSet(graph.n)
+    val d = digest { out =>
+      for (l <- Seq(1, 5, 20, 80, 600); q <- queries) {
+        val scored = new scala.collection.mutable.ArrayBuffer[(Int, Float)]
+        val (queue, cmps, hops) = BeamSearch.searchSingle(graph, vecs,
+          Metrics.Cosine, VectorStore.normalized(q), l, visited, scored)
+        writeQueue(out, queue)
+        out.writeInt(cmps); out.writeInt(hops)
+        out.writeInt(scored.length)
+        scored.foreach { case (id, dist) =>
+          out.writeInt(id); out.writeInt(java.lang.Float.floatToIntBits(dist))
+        }
+      }
+    }
+    assert(d === "9ea2fcb02556eec4")
+  }
+
+  /** The kernel fixture's noisy queries as (q_id, q_vec) rows. */
+  private def queriesDf: DataFrame = {
+    import spark.implicits._
+    kernelFixture._3.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
+      .toSeq.toDF("q_id", "q_vec")
+  }
+
+  /** The kernel fixture's corpus as (id, vec) rows under `idName`/`vecName`. */
+  private def corpusDf(idName: String, vecName: String, rows: Int): DataFrame =
+    ClusteredFixture.df(spark, nClusters = 20, perCluster = 30, dim = Dim)
+      .filter(col("vec_id") < rows)
+      .select(col("vec_id").as(idName), col("embedding").as(vecName))
+
+  test("GraphBuild.exactKnn digest (queries and self-excluding corpus rows, k grid)") {
+    import spark.implicits._
+    val (_, vecs, _) = kernelFixture
+    val vB = spark.sparkContext.broadcast(vecs)
+    val d = try digest { out =>
+      for ((train, excludeSelf) <- Seq((queriesDf, false),
+             (corpusDf("q_id", "q_vec", 600), true)); k <- Seq(1, 10, 50)) {
+        GraphBuild.exactKnn(spark, train, k, vB, "cosine", excludeSelf)
+          .as[(Long, Seq[Long])].collect().sortBy(_._1)
+          .foreach { case (q, nbrs) =>
+            out.writeLong(q); out.writeInt(nbrs.length)
+            nbrs.foreach(out.writeLong)
+          }
+      }
+    } finally vB.destroy()
+    assert(d === "1e6eee703333ae7c")
+  }
+
+  test("searchBipartite digest over the queries' bipartite graph") {
+    import spark.implicits._
+    val (_, vecs, queries) = kernelFixture
+    val nd = vecs.n
+    val vB = spark.sparkContext.broadcast(vecs)
+    val bip = try {
+      val knn = GraphBuild.exactKnn(spark, queriesDf, 8, vB, "cosine",
+        excludeSelf = false)
+      CsrGraph.collect(GraphBuild.bipartiteAdjacency(knn, nd, 8),
+        nd + queries.length, 0)
+    } finally vB.destroy()
+    val visited = new VisitedSet(bip.n)
+    val d = digest { out =>
+      for (l <- Seq(1, 5, 20, 80); s <- 0 until 48) {
+        val q = VectorStore.normalized(queries((s * 7) % queries.length))
+        val (queue, cmps) = BeamSearch.searchBipartite(bip, nd, vecs,
+          Metrics.Cosine, q, l, visited, seed = s * 41L)
+        writeQueue(out, queue)
+        out.writeInt(cmps)
+      }
+    }
+    assert(d === "7b3d05f81e13eba6")
+  }
+
+  test("driver-side GraphBuild CSR digest over the kernel fixture") {
+    import spark.implicits._
+    val base = corpusDf("vec_id", "embedding", 480)
+    val offsetQueries = kernelFixture._3.zipWithIndex
+      .map { case (v, i) => (100000L + i, v.toSeq) }.toSeq
+      .toDF("vec_id", "embedding")
+    val params = BuildParams(mSq = 20, mPjbp = 8, lPjpq = 40, metric = "cosine")
+    val d = digest { out =>
+      for (train <- Seq(base, offsetQueries)) {
+        val g = GraphBuild.build(spark, base, train, params).graph // n <= 512: driver-side
+        out.writeInt(g.n); out.writeInt(g.entryPoint)
+        g.offsets.foreach(out.writeInt)
+        g.nbrs.foreach(out.writeInt)
+      }
+    }
+    assert(d === "cdf9af04ace773d3")
   }
 
   private def querySetsDf(n: Int, c: Int): DataFrame = {

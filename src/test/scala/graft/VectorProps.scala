@@ -68,6 +68,62 @@ object VectorProps extends Properties("graft.vector") {
         (0 until q.size).map(i => (q.dist(i), q.id(i))) == expect
     }
 
+  /** One call on a beam queue: an insert, a `hasUnexpandedInK(k)` probe,
+    * or an expansion (`closestUnexpanded` after a true probe at `k`). */
+  private sealed trait QueueOp
+  private case class Insert(id: Int, d: Float) extends QueueOp
+  private case class Probe(k: Int) extends QueueOp
+  private case class Expand(k: Int) extends QueueOp
+
+  /** Finite distances of both signs, few enough distinct values that
+    * ties (the id tie-break) and the two zeros (−0.0 beside +0.0) recur. */
+  private val distGen: Gen[Float] = Gen.frequency(
+    4 -> Gen.chooseNum(-100.0f, 100.0f),
+    3 -> Gen.oneOf(-2.5f, -1.0f, -0.0f, 0.0f, 1.0f, 2.5f),
+    1 -> Gen.oneOf(Float.MinPositiveValue, -Float.MinPositiveValue,
+      Float.MaxValue, -Float.MaxValue))
+
+  private val opsGen: Gen[List[QueueOp]] = Gen.listOf(Gen.frequency(
+    6 -> (for (id <- Gen.chooseNum(0, 40); d <- distGen) yield Insert(id, d)),
+    1 -> Gen.chooseNum(1, 20).map(Probe(_)),
+    3 -> Gen.chooseNum(1, 20).map(Expand(_))))
+
+  property("BeamQueue equals the three-array queue entry by entry") =
+    forAll(opsGen, Gen.frequency(1 -> Gen.const(1), 4 -> Gen.chooseNum(1, 16))) {
+      (ops, cap) =>
+        val q = new BeamQueue(cap)
+        val model = new ThreeArrayBeamQueue(cap)
+        def sameEntries: Boolean = q.size == model.size &&
+          (0 until q.size).forall { i =>
+            q.id(i) == model.id(i) && q.expanded(i) == model.expanded(i) &&
+              java.lang.Float.floatToRawIntBits(q.dist(i)) ==
+                java.lang.Float.floatToRawIntBits(model.dist(i))
+          }
+        ops.forall {
+          case Insert(id, d) => q.insert(id, d); model.insert(id, d); sameEntries
+          case Probe(k) => q.hasUnexpandedInK(k) == model.hasUnexpandedInK(k)
+          case Expand(k) =>
+            val open = q.hasUnexpandedInK(k)
+            open == model.hasUnexpandedInK(k) &&
+              (!open || q.closestUnexpanded() == model.closestUnexpanded()) &&
+              sameEntries
+        }
+    }
+
+  property("BeamQueue sorts NaN distances after +Inf, by id among themselves") =
+    forAll(Gen.listOf(Gen.frequency(1 -> Gen.const(Float.NaN),
+        1 -> Gen.const(Float.PositiveInfinity), 3 -> distGen))) { dists =>
+      val q = new BeamQueue(math.max(1, dists.length))
+      dists.zipWithIndex.foreach { case (d, id) => q.insert(id, d) }
+      def rank(d: Float): Int = if (d.isNaN) 1 else 0
+      val expect = dists.zipWithIndex.sortWith { case ((a, i), (b, j)) =>
+        if (rank(a) != rank(b)) rank(a) < rank(b)
+        else if (a.isNaN || a == b) i < j
+        else a < b
+      }.map(_._2)
+      (0 until q.size).map(q.id) == expect
+    }
+
   property("occlusionPrune: bounded, duplicate-free subset led by nearest") =
     forAll(Gen.chooseNum(2, 40), Gen.chooseNum(1, 10), Gen.long) { (nc, m, seed) =>
       val rnd = new scala.util.Random(seed)
