@@ -29,6 +29,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDirArg) = args
+    // the oracle SQL written after the dump reads committed fixtures:
+    // resolve them first, so a run outside the checkout fails before
+    // the first query rather than after the last
+    queries.AnnQueries.fixturesDir
     val spark = Harness.session("spark.sql.session.timeZone" -> "UTC")
     // SPARK_GRAFT_VERIFY_ONLY=a,b,c → dump + oracle just those queries
     // (fast single-query oracle iteration, the Bench BENCH_ONLY twin);

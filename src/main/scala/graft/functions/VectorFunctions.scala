@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.functions._
 
-import graft.functions.expressions.{VecChamferExpr, VecChamferPairExpr, VecCosineExpr, VecDotExpr, VecL2SqExpr, VecLshBandKeysExpr, VecMaxSimExpr, VecNormExpr, VecProjectExpr}
+import graft.functions.expressions.{Round9Expr, VecChamferExpr, VecChamferPairExpr, VecCosineExpr, VecDotExpr, VecL2SqExpr, VecLshBandKeysExpr, VecMaxSimExpr, VecNormExpr, VecProjectExpr}
 
 /** Column-level vector kernels over `array<float>` columns.
   *
@@ -106,6 +106,11 @@ object VectorFunctions {
     * query set's own. */
   def chamferPair(q: Column, d: Column, cQ: Int): Column =
     expr2(VecChamferPairExpr(_, _, cQ))(q, d)
+
+  /** `round(x, 9)` of a double column, bit for bit, through the shared
+    * [[Round9]] quantizer ([[Round9Expr]], native codegen). */
+  def round9(x: Column): Column =
+    GraftColumnBridge.column(Round9Expr(GraftColumnBridge.expression(x)))
 
   /** Summed-max similarity (MaxSim) of two vector sets — the fused
     * [[VecMaxSimExpr]] (SQL: `graft_maxsim_score`); query set first. */

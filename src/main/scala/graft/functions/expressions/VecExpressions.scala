@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-import graft.functions.ChamferAggregator
+import graft.functions.{ChamferAggregator, Round9}
 
 /** Native Catalyst expressions for the hot vector kernels — the codegen
   * tier of SURVEY §7.4's ledger (the reference's AVX-512 kernels,
@@ -368,9 +369,9 @@ case class VecLshBandKeysExpr(vec: Expression, planesFlat: Seq[Double],
   * The direction matrix is baked in flat row-major at plan time (the
   * [[VecLshBandKeysExpr]] convention: Seq field for by-value equality /
   * canonicalization, flat array for the hot loop); row norms are
-  * derived once per plan. The 9-decimal HALF_UP quantization runs
-  * through the same BigDecimal helper as the kernels, so generated code
-  * calls [[projectOne]] on the referenced expression object rather than
+  * derived once per plan. The 9-decimal HALF_UP quantization is the
+  * kernels' shared [[graft.functions.Round9]], so generated code calls
+  * [[projectOne]] on the referenced expression object rather than
   * re-deriving the rounding in Java — one virtual call per row, loop
   * JIT-compiled, still inside the codegen stage.
   */
@@ -401,9 +402,6 @@ case class VecProjectExpr(vec: Expression, seedsFlat: Seq[Double], dim: Int)
     }
   }
 
-  private def round9(x: Double): Double =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Public for generated code (referenced via addReferenceObj). */
   def projectOne(x: ArrayData): ArrayData = {
     val et = elemType(vec.dataType)
@@ -420,7 +418,7 @@ case class VecProjectExpr(vec: Expression, seedsFlat: Seq[Double], dim: Int)
       var dot = 0.0
       var k = 0
       while (k < dim) { dot += seedsArr(off + k) * v(k); k += 1 }
-      out(j) = round9(dot / rowNorms(j)).toFloat
+      out(j) = Round9(dot / rowNorms(j)).toFloat
       j += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -636,6 +634,35 @@ case class VecChamferPairExpr(left: Expression, right: Expression, cQ: Int)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VecChamferPairExpr =
     copy(left = l, right = r)
+}
+
+/** `round(x, 9)` of a double through [[graft.functions.Round9]]: the
+  * same bits as Spark's `Round(x, 9)` for every input (NaN and ±∞ pass
+  * through unchanged, as `Round` passes them), without building a
+  * decimal unless the rounding decision is a near tie. The rerank ranks
+  * on it once per scored pair. */
+case class Round9Expr(child: Expression) extends UnaryExpression {
+
+  override def nullIntolerant: Boolean = true
+  override def dataType: DataType = DoubleType
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"round9 expects a double, got ${child.dataType.catalogString}")
+
+  override protected def nullSafeEval(a: Any): Any = {
+    val x = a.asInstanceOf[Double]
+    if (x.isNaN || x.isInfinite) x else Round9(x)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x =>
+      s"""${ev.value} = (Double.isNaN($x) || Double.isInfinite($x)) ? $x
+         |  : graft.functions.Round9.apply($x);""".stripMargin)
+
+  override protected def withNewChildInternal(c: Expression): Round9Expr =
+    copy(child = c)
 }
 
 /** Summed-max similarity (ColBERT MaxSim) between two VECTOR SETS —

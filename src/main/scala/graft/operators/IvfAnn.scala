@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Round9
 import graft.index.{Metrics, VectorStore}
 
 /** IVF (inverted-file) approximate kNN — the brief's named scale path
@@ -187,9 +188,6 @@ object IvfAnn {
         math.sqrt(v.foldLeft(0.0)((s, x) => s + x.toDouble * x.toDouble)))
     }
 
-  private def round9(x: Double): Double =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-
   /** Best `take` cells for `v` against the seeded centers: cosine in
     * DOUBLE, HALF_UP-quantized to 9 decimals before the argmax (the
     * [[PairKernel]] parity recipe), ties (score desc, cell asc) — the
@@ -204,7 +202,7 @@ object IvfAnn {
       var dot = 0.0
       var j = 0
       while (j < sv.length) { dot += sv(j).toDouble * v(j).toDouble; j += 1 }
-      (-round9(dot / (snorm * norm)), cell)
+      (-Round9(dot / (snorm * norm)), cell)
     }.sorted.take(take).map(_._2)
   }
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ScoredId, TopKAggregator}
+import graft.functions.{Round9, ScoredId, TopKAggregator}
 
 /** Kernel-tier brute-force kNN join — the blocked-scan shape of
   * `RankAllVectorsBySequentialScan`
@@ -60,8 +60,7 @@ object KnnKernel {
               var j = 0
               while (j < n) { dot += qv(j).toDouble * dVec(j).toDouble; j += 1 }
               // same quantization as the relational path: round half-up, 9 dp
-              val sim = BigDecimal(dot / (norms(qi) * dNorm))
-                .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+              val sim = Round9(dot / (norms(qi) * dNorm))
               agg.reduce(bufs(qi), ScoredId(sim, dId))
             }
             qi += 1

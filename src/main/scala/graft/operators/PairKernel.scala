@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.functions.Round9
+
 /** Blocked exact global-top-N similar-pairs kernel — the embedding-cosine
   * near-dup primitive in its EXACT form. Same shape as the reference's
   * exhaustive scan (`RankAllVectorsBySequentialScan`,
@@ -109,8 +111,7 @@ object PairKernel {
               var j = 0
               val n = va.length
               while (j < n) { dot += va(j).toDouble * vecB(j).toDouble; j += 1 }
-              val cos = BigDecimal(dot / (norms(i) * nB))
-                .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+              val cos = Round9(dot / (norms(i) * nB))
               heap.offer(Pair(cos, ids(i), idB))
               i += 1
             }

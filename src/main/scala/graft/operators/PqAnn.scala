@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ScoredId, TopKAggregator}
+import graft.functions.{Round9, ScoredId, TopKAggregator}
 
 /** Product-quantization ANN — the compression tier of similarity search
   * at 100 TB: each vector is stored as `nSub` small codebook indices
@@ -47,9 +47,6 @@ object PqAnn {
 
   /** codebooks(m)(j) = centroid j of subspace m (length dim/nSub). */
   type Codebooks = Array[Array[Array[Float]]]
-
-  private def round9(x: Double): Double =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Subspace L2²: diff-then-square summed in index order from 0 —
     * the exact accumulation the DuckDB oracle's nested lambda performs. */
@@ -145,7 +142,7 @@ object PqAnn {
       var bestD = Double.MaxValue
       var j = 0
       while (j < cb.length) {
-        val d = round9(subDist(v, off, cb(j)))
+        val d = Round9(subDist(v, off, cb(j)))
         if (d < bestD) { bestD = d; best = j } // strict < : ties keep lower j
         j += 1
       }
@@ -244,7 +241,7 @@ object PqAnn {
               m += 1
             }
             // smaller distance = better: negate for the (desc, id asc) heap
-            agg.reduce(bufs(qi), ScoredId(-round9(adc), dId))
+            agg.reduce(bufs(qi), ScoredId(-Round9(adc), dId))
           }
           qi += 1
         }

@@ -24,11 +24,20 @@ import graft.functions.VectorFunctions._
   * The pair exchange has an explicit partition count (the session's
   * default parallelism), which AQE's byte-based coalescing leaves alone:
   * with a coalesced exchange the scoring of a whole batch ran in one
-  * task. AQE broadcasts the smaller side of the member join. When that
-  * is the gathered corpus (a large batch), the scoring joins and the
-  * top-k keep the pairs' partitioning, so the batch is scored and ranked
-  * on every core with no further exchange; a batch smaller than the
-  * corpus broadcasts its pairs and streams the corpus instead. */
+  * task. The member join's build side is chosen when the plan is made,
+  * by Spark's own size test: the gathered corpus is broadcast when its
+  * plan-time size estimate is within `spark.sql.autoBroadcastJoinThreshold`.
+  * Its broadcast is then built while the candidates are still being
+  * searched, and the scoring joins and the top-k keep the pairs'
+  * partitioning, so the batch is scored and ranked on every core with
+  * no further exchange. Left to AQE, the choice would wait for the pair
+  * exchange's runtime size, and the corpus broadcast would start only
+  * after the kernel stage. Above the threshold the join is left to
+  * Spark's runtime choice.
+  *
+  * Ranking quantizes each score to 9 decimals with
+  * [[graft.functions.Round9]]: the bits of Spark's `round(score, 9)`
+  * without a decimal per pair. */
 object Rerank {
 
   /** @param emb        corpus (vec_id, embedding), fixed cardinality `c`
@@ -69,11 +78,18 @@ object Rerank {
         col("embedding"))).as("d_set"))
     val qSets = querySets.groupBy(col("qset_id"))
       .agg(collect_list(member(col("q_sub"), col("q_vec"))).as("q_set"))
+    val qe = candSets.queryExecution
+    val corpusBytes = qe.optimizedPlan.stats.sizeInBytes
+    val corpus =
+      if (corpusBytes >= 0 &&
+          corpusBytes <= qe.sparkSession.sessionState.conf.autoBroadcastJoinThreshold)
+        broadcast(candSets)
+      else candSets
     val scored = pairs
-      .join(candSets, Seq("dset_id"))
+      .join(corpus, Seq("dset_id"))
       .join(broadcast(qSets), Seq("qset_id"))
       .select(col("qset_id"), col("dset_id"),
-        round(chamferPair(col("q_set"), col("d_set"), cQ), 9).as("score"))
+        round9(chamferPair(col("q_set"), col("d_set"), cQ)).as("score"))
     TopK.perGroupAgg(scored, Seq(col("qset_id")),
         col("score"), col("dset_id"), k, idName = "dset_id")
       .select(col("qset_id"), col("rank"), col("dset_id"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{ScoredId, TopKAggregator}
+import graft.functions.{Round9, ScoredId, TopKAggregator}
 import graft.index.Generations
 
 /** Scalar (int8) quantization ANN — the third compression geometry of
@@ -52,9 +52,6 @@ object Sq8Ann {
     require(mins.length == maxs.length)
     def dim: Int = mins.length
   }
-
-  private def round9(x: Double): Double =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** HALF_UP integer round — on non-negative inputs identical to
     * DuckDB's `round(x, 0)` (half away from zero). */
@@ -189,7 +186,7 @@ object Sq8Ann {
                   while (i < qv.length) {
                     val d = qv(i) - dec(i); l2 += d * d; i += 1
                   }
-                  -round9(l2)
+                  -Round9(l2)
                 } else if (dNorm == 0.0 || qns(qi) == 0.0) {
                   // a zero (or zero-dequantized) row OR a zero-norm query
                   // has no direction: rank it last instead of feeding NaN
@@ -199,7 +196,7 @@ object Sq8Ann {
                   var dot = 0.0
                   var i = 0
                   while (i < qv.length) { dot += qv(i) * dec(i); i += 1 }
-                  round9(dot / (qns(qi) * dNorm))
+                  Round9(dot / (qns(qi) * dNorm))
                 }
               agg.reduce(bufs(qi), ScoredId(score, dId))
             }

@@ -2140,7 +2140,7 @@ object AnnQueries extends QueryPack {
     * SQL interpolates the checkout's own copy wherever Verify runs
     * (a hardcoded /root/repo would silently read a STALE fixture on
     * any other checkout). Fails loudly when no fixtures dir exists. */
-  private lazy val fixturesDir: String = {
+  private[graft] lazy val fixturesDir: String = {
     val cands = sys.props.get("graft.fixtures.dir").toSeq ++ {
       val cwd = java.nio.file.Paths.get(
         sys.props.getOrElse("user.dir", ".")).toAbsolutePath

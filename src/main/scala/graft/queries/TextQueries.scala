@@ -227,8 +227,6 @@ object TextQueries extends QueryPack {
         col("score"))
   }
 
-  /** Tokenized postings `(doc_id, dl, term, tf)` + 1-row batch stats —
-    * the append-side input of the persisted inverted index. */
   /** (doc_id, toks, dl) — the tokenized projection both the postings
     * shape and the corpus stats derive from. Callers that need both
     * (the inverted-index append) persist THIS so the tokenizer — the
@@ -238,21 +236,16 @@ object TextQueries extends QueryPack {
       .withColumn("dl",
         org.apache.spark.sql.functions.size(col("toks")).cast("long"))
 
-  private[graft] def postingsOf(docsDf: DataFrame): DataFrame =
-    postingsOfTokenized(tokenizedOf(docsDf))
-
+  /** Tokenized postings `(doc_id, dl, term, tf)` — the append-side input
+    * of the persisted inverted index. */
   private[graft] def postingsOfTokenized(t: DataFrame): DataFrame =
     t.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).cast("long").as("tf"))
 
-  /** (n_docs, sum_dl, min_id, max_id) of a docs frame — one aggregate,
-    * zero-token docs included (they carry dl=0 into the corpus stats
-    * exactly as the inline bm25 counts them). */
-  private[graft] def corpusStatsOf(docsDf: DataFrame)
-      : (Long, Long, Long, Long) =
-    corpusStatsOfTokenized(tokenizedOf(docsDf))
-
+  /** (n_docs, sum_dl, min_id, max_id) of a tokenized docs frame — one
+    * aggregate, zero-token docs included (they carry dl=0 into the corpus
+    * stats exactly as the inline bm25 counts them). */
   private[graft] def corpusStatsOfTokenized(t: DataFrame)
       : (Long, Long, Long, Long) = {
     val r = t.agg(count(lit(1)).cast("long"), sum(col("dl")),

@@ -9,6 +9,12 @@ import scala.util.Random
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -388,5 +394,63 @@ class FlagshipBatchSpec extends AnyFunSuite {
     val (emb, qs, cands) = rerankFixture
     assertSameRows(Rerank.chamferTopKVarc(emb, qs, cands, C, K),
       tripleTopK(emb, qs, cands, None))
+  }
+
+  /** `body` with `spark.sql.autoBroadcastJoinThreshold` set to `t`. */
+  private def withThreshold[T](t: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, t)
+    try body finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The rerank's physical plan as first made, before AQE re-plans it. */
+  private def initialPlan(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+
+  private def shufflesOutsideBroadcasts(p: SparkPlan): Seq[ShuffleExchangeExec] = p match {
+    case _: BroadcastExchangeExec => Nil
+    case sh: ShuffleExchangeExec => sh +: sh.children.flatMap(shufflesOutsideBroadcasts)
+    case other => other.children.flatMap(shufflesOutsideBroadcasts)
+  }
+
+  private def hashedOn(sh: ShuffleExchangeExec): Seq[String] = sh.outputPartitioning match {
+    case HashPartitioning(es, _) => es.flatMap(_.references.map(_.name))
+    case _ => Nil
+  }
+
+  private def corpusBroadcast(p: SparkPlan): Boolean = p.exists {
+    case j: BroadcastHashJoinExec => j.buildSide == BuildRight && j.right.output.exists(_.name == "d_set")
+    case _ => false
+  }
+
+  test("chamferTopK under the broadcast threshold: the first plan broadcasts the gathered corpus and the top-k has no exchange") {
+    val (emb, qs, cands) = rerankFixture
+    val p = withThreshold("10MB")(initialPlan(Rerank.chamferTopK(emb, qs, cands, C, K)))
+    assert(corpusBroadcast(p), s"gathered corpus is not the broadcast side:\n$p")
+    assert(p.collectFirst { case j: SortMergeJoinExec => j }.isEmpty, s"$p")
+    // the pairs' qset_id exchange is the only one outside the broadcasts:
+    // scoring and top-k run in its partitions
+    val sh = shufflesOutsideBroadcasts(p)
+    assert(sh.map(hashedOn) === Seq(Seq("qset_id")), s"$p")
+  }
+
+  test("chamferTopK with broadcasts off keeps the shuffled member join, with the same rows") {
+    val (emb, qs, cands) = rerankFixture
+    val (p, rows) = withThreshold("-1") {
+      val df = Rerank.chamferTopK(emb, qs, cands, C, K)
+      (initialPlan(df), rowsOf(df))
+    }
+    assert(!corpusBroadcast(p), s"$p")
+    assert(p.collectFirst { case j: SortMergeJoinExec => j }.nonEmpty, s"$p")
+    // the top-k re-partitions the scored pairs by query set
+    assert(shufflesOutsideBroadcasts(p).exists(sh => hashedOn(sh) == Seq("qset_id") &&
+      sh.exists(_.isInstanceOf[SortMergeJoinExec])), s"$p")
+    val want = withThreshold("10MB")(rowsOf(Rerank.chamferTopK(emb, qs, cands, C, K)))
+    assert(rows.map(r => r.copy(_4 = java.lang.Double.doubleToLongBits(r._4))) ===
+      want.map(r => r.copy(_4 = java.lang.Double.doubleToLongBits(r._4))))
   }
 }

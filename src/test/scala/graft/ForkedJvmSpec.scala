@@ -82,6 +82,37 @@ class ForkedJvmSpec extends AnyFunSuite {
     } finally p.destroyForcibly()
   }
 
+  test("graft.Verify started outside a checkout fails on the missing fixtures/ before the first query") {
+    // fixtures/ is searched in the working directory and its three
+    // parents: start four levels down in a fresh temp dir
+    val dir = TempDir("graft_fork_verify_")
+    val cwd = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir, "a", "b", "c", "d"))
+    val out = s"$dir/out"
+    val javaBin = s"${System.getProperty("java.home")}/bin/java"
+    val pb = new ProcessBuilder((Seq(javaBin) ++ childJvmArgs ++ Seq("-cp",
+      System.getProperty("java.class.path"), "graft.Verify", sfDir, out)): _*)
+    pb.directory(cwd.toFile)
+    pb.redirectErrorStream(true)
+    val log = new java.io.File(s"$dir/verify.log")
+    pb.redirectOutput(log)
+    val t0 = System.nanoTime()
+    val p = pb.start()
+    try {
+      assert(p.waitFor(120, java.util.concurrent.TimeUnit.SECONDS),
+        "Verify did not exit")
+      val secs = (System.nanoTime() - t0) / 1e9
+      val text = new String(java.nio.file.Files.readAllBytes(log.toPath), "UTF-8")
+      assert(p.exitValue() !== 0, text)
+      assert(text.contains("fixtures/ directory not found"), text)
+      // no Spark session, no query, no dump: it stopped at the check
+      assert(!text.contains("[verify]"), text)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(out)),
+        "Verify wrote its output dir before resolving fixtures/")
+      assert(secs < 60, f"early failure took $secs%.1f s")
+    } finally p.destroyForcibly()
+  }
+
   test("seqlog CAS across processes: two JVMs race one log slot; exactly one conditional put wins") {
     val dir = TempDir("graft_fork_cas_")
     val root = s"$dir/root"
