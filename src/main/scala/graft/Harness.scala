@@ -48,6 +48,19 @@ object Harness {
     case _ => IndexQueries.FixtureParams
   }
 
+  /** Runs `body` with `confs` set on `spark`, then puts each key back as
+    * it was before (its prior value, or unset), however `body` ends — so
+    * one run's confs never leak into the next run on the same session. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prior = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** `body`'s result and its wall-clock seconds. */
   def timed[T](body: => T): (T, Double) = {
     val t0 = System.nanoTime()

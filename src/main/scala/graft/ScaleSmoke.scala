@@ -116,7 +116,7 @@ object ScaleSmoke {
     * similarity-breaking Caesar shift (replica r shifts letters by r —
     * disjoint shingle/term spaces per replica, length preserved).
     * Extracted from [[scaleTables]] so text-face scale tools
-    * ([[graft.tools.HybridServeCompact]]) can scale JUST the corpus
+    * ([[graft.tools.LifecycleSweep]]'s `hybrid` arm) can scale JUST the corpus
     * they read instead of paying for all nine tables. */
   def scaleDocuments(spark: SparkSession, src: String, dst: String,
                      factor: Int): Unit = {

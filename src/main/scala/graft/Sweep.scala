@@ -155,10 +155,7 @@ object Sweep {
     // fullscan chamfer GT (W3 role): ids for recall, scores for rderr
     val gtRanked = VectorQueries.queries("a1_smooth_chamfer_topk")(spark, sfDir)
       .cache()
-    val gt = gtRanked
-      .groupBy(col("qset_id").as("query_id"))
-      .agg(transform(array_sort(collect_list(struct(col("rank"), col("dset_id")))),
-        x => x.getField("dset_id")).as("gt_ids"))
+    val gt = Recall.topIdArrays(gtRanked, "qset_id", "dset_id", "gt_ids")
       .cache()
     gt.count()
     // negated-similarity distance convention (the reference's IP branch)
@@ -172,9 +169,7 @@ object Sweep {
       val (cands, searchSec) = Harness.timed(cands0.localCheckpoint(true))
       val ((reranked, recalls), rerankSec) = Harness.timed {
         val reranked = Rerank.chamferTopK(emb, querySets, cands, C, K).cache()
-        val res = reranked.groupBy(col("qset_id").as("query_id"))
-          .agg(transform(array_sort(collect_list(struct(col("rank"), col("dset_id")))),
-            x => x.getField("dset_id")).as("ids"))
+        val res = Recall.topIdArrays(reranked, "qset_id", "dset_id", "ids")
         (reranked, Recall.atK(res, gt, K).collect())
       }
       val resLong = reranked.select(col("qset_id").as("query_id"), col("rank"),

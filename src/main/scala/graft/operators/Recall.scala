@@ -16,6 +16,19 @@ object Recall {
     results.join(gt, "query_id")
       .select(col("query_id"), atKCol(col("ids"), col("gt_ids"), k).as("recall"))
 
+  /** Mean [[atK]] over the queries `results` answers. */
+  def meanAtK(results: DataFrame, gt: DataFrame, k: Int): Double =
+    atK(results, gt, k).agg(avg(col("recall"))).first().getDouble(0)
+
+  /** (query_id, `outCol`) best-first id arrays from a (`group`, rank, `id`)
+    * ranking — the `ids` / `gt_ids` shape [[atK]] reads. */
+  def topIdArrays(ranked: DataFrame, group: String, id: String,
+                  outCol: String): DataFrame =
+    ranked.groupBy(col(group).as("query_id"))
+      .agg(transform(
+        array_sort(collect_list(struct(col("rank"), col(id)))),
+        x => x.getField(id)).as(outCol))
+
   /** Column form of [[atK]] for when results and GT already share a row
     * (e.g. both rankings computed in one aggregation) — same semantics,
     * no join. */

@@ -27,14 +27,6 @@ import graft.operators.Recall
 object EvalQueries extends QueryPack {
   import VectorQueries.{C, NQ, K}
 
-  /** (query_id, ids) best-first arrays from a (group, rank, id) ranking. */
-  private def topIdArrays(df: DataFrame, group: String, id: String,
-                          outCol: String): DataFrame =
-    df.groupBy(col(group).as("query_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("rank"), col(id)))),
-        x => x.getField(id)).as(outCol))
-
   /** ONE plan for the whole eval family: a single cross-join pass scores
     * BOTH set metrics per (qset, dset) (ChamferAggregator +
     * MaxSimAggregator in one groupBy), then a single per-qset aggregation
@@ -83,7 +75,7 @@ object EvalQueries extends QueryPack {
     // [i, i+1) (the fixture's 1:1 pairing; COCO uses 1:5,
     // test_dive_emb_pair_recall.cpp:101-108).
     "j4_paired_recall" -> ((s, dir) => {
-      val res = topIdArrays(a2Top(s, dir), "qset_id", "dset_id", "ids")
+      val res = Recall.topIdArrays(a2Top(s, dir), "qset_id", "dset_id", "ids")
       val pairs = res.select(col("query_id"),
         col("query_id").as("paired_start"), lit(1L).as("paired_count"))
       Recall.paired(res, pairs, K)

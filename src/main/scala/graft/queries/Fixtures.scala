@@ -1,14 +1,15 @@
 package graft.queries
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.SparkSession
 
 /** The query packs' fixture lifecycle: one memo for everything built once
-  * per JVM (indexes, broadcasts), the temp dirs those fixtures live in,
-  * and the child sessions routed statements run in. */
+  * per JVM (indexes, broadcasts), the temp dirs those fixtures live in
+  * and the copies a caller mutates, and the child sessions routed
+  * statements run in. */
 private[graft] object Fixtures {
 
   /** A memoized value, built by its first reader outside any map lock —
@@ -54,6 +55,19 @@ private[graft] object Fixtures {
     val d = Files.createTempDirectory(prefix)
     reaped.add(d)
     d.toString
+  }
+
+  /** Copies the tree at `src` into `dst` (files overwritten), so a
+    * memoized base index can be mutated through a private copy. */
+  def copyDir(src: String, dst: String): Unit = {
+    val s0 = Paths.get(src)
+    val d0 = Paths.get(dst)
+    val walk = Files.walk(s0)
+    try walk.forEach { p: Path =>
+      val t = d0.resolve(s0.relativize(p))
+      if (Files.isDirectory(p)) Files.createDirectories(t)
+      else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
+    } finally walk.close()
   }
 
   /** Child sessions by parent and confs. The parent is a weak key (a

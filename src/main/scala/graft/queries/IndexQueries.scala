@@ -614,7 +614,7 @@ object IndexQueries extends QueryPack {
       val b1End = nBase + (n - nBase) / 2
       val basePath = lifecycleBase(ls, dir, nBase)
       val path = Fixtures.tempDir("graft_lifecycle_")
-      copyDir(basePath, path)
+      Fixtures.copyDir(basePath, path)
       var ref = ShardedIndexRef(path, 1, FixtureParams.metric)
       val out = scala.collection.mutable.ArrayBuffer[(Long, String, Long, Long)]()
       def run(stage: Long, batch: DataFrame): Unit = {
@@ -656,7 +656,7 @@ object IndexQueries extends QueryPack {
       val b1End = nBase + (n - nBase) / 2
       val basePath = lifecycleBase(ls, dir, nBase)
       val path = Fixtures.tempDir("graft_takedown_")
-      copyDir(basePath, path)
+      Fixtures.copyDir(basePath, path)
       val ref0 = ShardedIndexRef(path, 1, FixtureParams.metric)
       // stage 1: one streaming ingest batch (below the compact trigger)
       val (ref, a1) = StreamingIngest.ingestVectorBatch(ls,
@@ -752,18 +752,6 @@ object IndexQueries extends QueryPack {
         emb(s, dir).filter(col("vec_id") < nBase), FixtureParams, 1, path)
       path
     }
-
-  private def copyDir(src: String, dst: String): Unit = {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-    val s0 = Paths.get(src)
-    val d0 = Paths.get(dst)
-    val walk = Files.walk(s0)
-    try walk.forEach { p: Path =>
-      val t = d0.resolve(s0.relativize(p))
-      if (Files.isDirectory(p)) Files.createDirectories(t)
-      else Files.copy(p, t, StandardCopyOption.REPLACE_EXISTING)
-    } finally walk.close()
-  }
 
   private def dotSqlAB(a: String, b: String) =
     s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"

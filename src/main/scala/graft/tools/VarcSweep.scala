@@ -77,12 +77,6 @@ object VarcSweep {
     val spark = Harness.session()
     import Harness.timed
 
-    def idsOf(df: DataFrame): DataFrame =
-      df.groupBy(col("qset_id").as("query_id"))
-        .agg(transform(
-          array_sort(collect_list(struct(col("rank"), col("dset_id")))),
-          x => x.getField("dset_id")).as("ids"))
-
     // untimed warmup (JIT/codegen/shuffle paths) on the base corpus
     GraphBuild.build(spark, Tables.embeddings(spark, srcDir),
       Tables.embeddings(spark, srcDir), IndexQueries.FixtureParams)
@@ -115,8 +109,8 @@ object VarcSweep {
       val (gtRanked, tGt) = timed(
         Rerank.chamferTopKVarc(e, querySets, allCands, C, K)
           .localCheckpoint(true))
-      val gt = idsOf(gtRanked)
-        .withColumnRenamed("ids", "gt_ids").localCheckpoint(true)
+      val gt = Recall.topIdArrays(gtRanked, "qset_id", "dset_id", "gt_ids")
+        .localCheckpoint(true)
       table.add("varc_fullscan", f, n, nQ, 0, "0.0", f"$tGt%.1f", "0.0",
         "1.0000", f"${nQ / tGt}%.1f")
 
@@ -127,8 +121,8 @@ object VarcSweep {
         val (ranked, tR) = timed(
           Rerank.chamferTopKVarc(e, querySets, cands, C, K)
             .localCheckpoint(true))
-        val rec = Recall.atK(idsOf(ranked), gt, K)
-          .agg(avg(col("recall"))).head().getDouble(0)
+        val rec = Recall.meanAtK(
+          Recall.topIdArrays(ranked, "qset_id", "dset_id", "ids"), gt, K)
         table.add(arm, f, n, nQ, budget, f"$buildSec%.1f", f"$tS%.1f",
           f"$tR%.1f", f"$rec%.4f", f"${nQ / (tS + tR)}%.1f")
         rec

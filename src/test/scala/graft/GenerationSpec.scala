@@ -886,7 +886,7 @@ class GenerationSpec extends AnyFunSuite {
   }
 
   test("sharded face: leased batches serve through a concurrent compaction at keepGens=0") {
-    // the production caller path (ServeThroughCompact's reader loop):
+    // the production caller path (LifecycleSweep's phased reader loop):
     // each batch resolves AND searches under ShardedIndex
     // .withReaderLease, with NO grace window — the flip retires the
     // predecessor immediately unless a live lease pins it. Every

@@ -601,7 +601,7 @@ class IndexSpec extends AnyFunSuite {
     // rebuild over the survivors, and must not droop below the
     // broadcast tier's own bar. The full curve (10/30/50%, three
     // stages, 20k rows) is SWEEP_DELETION.tsv.
-    val rows = graft.tools.DeletionSweep.run(spark, sfDir,
+    val rows = graft.tools.LifecycleSweep.deletion(spark, sfDir,
       fractions = Seq(0.3), budgets = Seq(60),
       IndexQueries.FixtureParams, nShards = 2)
     val byStage = rows.map { case (_, st, _, r, _) => st -> r }.toMap
@@ -624,7 +624,7 @@ class IndexSpec extends AnyFunSuite {
     // and deleted fraction both look healthy — the measured motivation
     // for maybeCompact's per-shard trigger. Post-compact, the hot
     // shard must recover to within ε of the fresh-rebuild bound.
-    val rows = graft.tools.DeletionSweep.runSkewed(spark, sfDir,
+    val rows = graft.tools.LifecycleSweep.deletionSkew(spark, sfDir,
       hotFractions = Seq(0.8), budgets = Seq(60),
       IndexQueries.FixtureParams, nShards = 2)
     val byStage = rows.map { case (_, _, st, _, r, rh, _) =>
